@@ -67,8 +67,23 @@ object Augment {
     * Scale shape: 4 aggregations + 2 windows, each hash-partitioned on
     * author_id; the coauthor count is the one 2-hop join (authorship ⋈
     * authorship on article_id) and shuffles on article_id then author_id —
-    * no driver-side loops anywhere. */
+    * no driver-side loops anywhere. The four ranks are built from the
+    * unranked stats frame in one [[GroupOps.pandasAvgRanksDesc]] call. */
   def authorReady(author: DataFrame, authorshipReady: DataFrame,
+      articleReady: DataFrame, namesGenders: DataFrame): DataFrame =
+    GroupOps.pandasAvgRanksDesc(
+      authorStats(author, authorshipReady, articleReady, namesGenders), Seq(
+        "total_pubs" -> "rank_total_pubs",
+        "total_cites" -> "rank_total_cites",
+        "avg_cites" -> "rank_avg_cites",
+        "hindex" -> "rank_hindex"))
+      .select("author_id", "last_name", "first_name", "middle_name",
+        "gender", "total_pubs", "total_cites", "avg_cites", "med_coauthors",
+        "n_unique_coauthors", "hindex", "rank_total_pubs", "rank_total_cites",
+        "rank_avg_cites", "rank_hindex")
+
+  /** [[authorReady]] before the ranks: names, gender and the stats. */
+  private[arxiv] def authorStats(author: DataFrame, authorshipReady: DataFrame,
       articleReady: DataFrame, namesGenders: DataFrame): DataFrame = {
     // only authors present in the surviving authorship set
     val base = author
@@ -101,7 +116,7 @@ object Augment {
       .groupBy("author_id")
       .agg((countDistinct("coauthor_id") - lit(1)).cast("int").as("n_unique_coauthors"))
 
-    val ranked = base
+    base
       .join(pubs, Seq("author_id"))
       .join(perAuthor, Seq("author_id"))
       // left + coalesce: hIndex drops NULL citation counts, so an author
@@ -110,16 +125,6 @@ object Augment {
       .join(hidx, Seq("author_id"), "left")
       .withColumn("hindex", coalesce(col("hindex"), lit(0)))
       .join(coauth, Seq("author_id"))
-    val withRanks = Seq(
-      ("total_pubs", "rank_total_pubs"),
-      ("total_cites", "rank_total_cites"),
-      ("avg_cites", "rank_avg_cites"),
-      ("hindex", "rank_hindex"))
-      .foldLeft(ranked) { case (df, (m, out)) => GroupOps.pandasAvgRankDesc(df, m, out) }
-    withRanks.select("author_id", "last_name", "first_name", "middle_name",
-      "gender", "total_pubs", "total_cites", "avg_cites", "med_coauthors",
-      "n_unique_coauthors", "hindex", "rank_total_pubs", "rank_total_cites",
-      "rank_avg_cites", "rank_hindex")
   }
 
   /** Referential closure of the two remaining tables

@@ -56,6 +56,13 @@ object GraphMirror {
     edges.filter(col("label") === "COAUTHORS" &&
       (col("src") === authorId || col("dst") === authorId))
 
+  /** The MERGE'd AUTHORED edges as distinct (article_id, author_id)
+    * pairs — the reference's authorship PK. Two authors of one article can
+    * share a synthesized author id, so the authorship table may repeat a
+    * pair; the G3 builders read these pairs, as their Cypher twins do. */
+  private def authoredPairs(t: ArxivTables): DataFrame =
+    t.authorship.select("article_id", "author_id").distinct()
+
   /** G3 (analytical_queries.ipynb cells 57-59): 2-hop ego network via
     * AUTHORED, literal Cypher orientation — for each of the ego's
     * articles, the collected coauthors. `withEgo=false` is cell 59's
@@ -65,9 +72,10 @@ object GraphMirror {
     * by filtering before the groupBy). */
   def egoArticleCoauthors(t: ArxivTables, authorId: String,
       withEgo: Boolean = true): DataFrame = {
-    val egoArticles = t.authorship.filter(col("author_id") === authorId)
+    val authored = authoredPairs(t)
+    val egoArticles = authored.filter(col("author_id") === authorId)
       .select("article_id")
-    val hop2 = t.authorship
+    val hop2 = authored
       .join(egoArticles, Seq("article_id"), "left_semi")
     val filtered = if (withEgo) hop2 else hop2.filter(col("author_id") =!= authorId)
     filtered
@@ -82,9 +90,10 @@ object GraphMirror {
     * "which coauthors share the most articles with the ego"): coauthor →
     * collect_list(struct(article)) + shared count, strongest ties first. */
   def egoCoauthorArticles(t: ArxivTables, authorId: String): DataFrame = {
-    val egoArticles = t.authorship.filter(col("author_id") === authorId)
+    val authored = authoredPairs(t)
+    val egoArticles = authored.filter(col("author_id") === authorId)
       .select("article_id")
-    t.authorship
+    authored
       .join(egoArticles, Seq("article_id"), "left_semi")
       .filter(col("author_id") =!= authorId)
       .join(t.article.select("article_id", "title", "year"), Seq("article_id"))

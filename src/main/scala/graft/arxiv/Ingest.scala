@@ -108,9 +108,17 @@ object Ingest {
   /** Full silver build from a bronze frame. */
   def silver(bronzeDf: DataFrame): ArxivTables = {
     val f = filterArticles(bronzeDf)
-    val ar = authorshipRaw(f)
-    val (art, auth, au) = consistent(article(f), authorship(ar), author(ar))
-    val ac = articleCategory(f)
+    silverFrom(f, authorshipRaw(f))
+  }
+
+  /** The silver tables from the filtered articles and their
+    * [[authorshipRaw]] explode — the one definition both [[silver]] and
+    * [[ArxivPipeline.run]] (which persists the two inputs) build from. */
+  private[arxiv] def silverFrom(filtered: DataFrame, authorshipRaw: DataFrame)
+      : ArxivTables = {
+    val (art, auth, au) = consistent(article(filtered), authorship(authorshipRaw),
+      author(authorshipRaw))
+    val ac = articleCategory(filtered)
     ArxivTables(art, au, auth, ac, category(ac), journal = null)
   }
 }

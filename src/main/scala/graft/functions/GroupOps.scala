@@ -63,8 +63,15 @@ object GroupOps {
   }
 
   /** pandas `rank(ascending=False, method='average').astype(int)` parity
-    * (reference: dags/scripts/final_tables.py:161-164): min-rank plus half
-    * the tie-group size, truncated.
+    * (reference: dags/scripts/final_tables.py:161-164) for one metric: the
+    * one-pair case of [[pandasAvgRanksDesc]]. */
+  def pandasAvgRankDesc(df: DataFrame, metric: String, out: String): DataFrame =
+    pandasAvgRanksDesc(df, Seq(metric -> out))
+
+  /** pandas `rank(ascending=False, method='average').astype(int)` parity
+    * for several `(metric, out)` pairs at once: per metric, min-rank plus
+    * half the tie-group size, truncated. Appends the `out` columns in
+    * pair order.
     *
     * Formulated over DISTINCT metric values: aggregate counts per value,
     * running-sum them in value order, join the tiny rank table back
@@ -73,18 +80,24 @@ object GroupOps {
     * narrow (value, count) pairs instead of every full-width row — for
     * count-like metrics orders of magnitude smaller — and the join back
     * is an AQE-broadcastable equi-join. (Round-2 verdict flagged the old
-    * full-row global window, 4x repeated in the author build.) */
-  def pandasAvgRankDesc(df: DataFrame, metric: String, out: String): DataFrame = {
-    val byVal = df.groupBy(metric).agg(count(lit(1)).as("__n"))
-    val w = Window.orderBy(col(metric).desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranks = byVal
-      .withColumn("__before", coalesce(sum(col("__n")).over(w), lit(0L)))
-      .withColumn(out,
-        floor(col("__before") + 1 + (col("__n") - 1) / lit(2.0)).cast("int"))
-      .select(col(metric).as("__mv"), col(out))
-    df.join(ranks, col(metric) <=> col("__mv"), "left").drop("__mv")
-  }
+    * full-row global window, 4x repeated in the author build.)
+    *
+    * Every rank table is built from the unranked `df` and all of them are
+    * joined onto it, so the plan holds 1 + pairs copies of `df`. Chaining
+    * single-metric calls instead builds each table from the frame the
+    * previous call ranked: 2^pairs copies. */
+  def pandasAvgRanksDesc(df: DataFrame, ranks: Seq[(String, String)]): DataFrame =
+    ranks.foldLeft(df) { case (acc, (metric, out)) =>
+      val byVal = df.groupBy(metric).agg(count(lit(1)).as("__n"))
+      val w = Window.orderBy(col(metric).desc)
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val table = byVal
+        .withColumn("__before", coalesce(sum(col("__n")).over(w), lit(0L)))
+        .withColumn(out,
+          floor(col("__before") + 1 + (col("__n") - 1) / lit(2.0)).cast("int"))
+        .select(col(metric).as("__mv"), col(out))
+      acc.join(table, col(metric) <=> col("__mv"), "left").drop("__mv")
+    }
 
   /** ORDER BY + LIMIT round(pct * count) — the reference's
     * `LIMIT 0.01 * (SELECT COUNT(*) …) / 100` (README.md:188). Postgres

@@ -121,6 +121,50 @@ class ArxivPipelineSpec extends SparkSpec {
     assert(t2.article.count() == c1)
   }
 
+  test("a stage directory without _SUCCESS (killed mid-write) is rebuilt, not read") {
+    val dir = s"$tmp/stages-killed"
+    val partial = s"$dir/silver_article.parquet"
+    Ingest.silver(Ingest.bronze(spark, jsonl)).article.limit(1)
+      .write.parquet(partial)
+    Files.delete(java.nio.file.Paths.get(partial, "_SUCCESS"))
+    val t = new ArxivPipeline(spark, dir)
+      .run(jsonl, new Augment.FixtureEnricher(crossref), cwts, genders)
+    assert(spark.read.parquet(partial).select("article_id").as[String].collect().toSet ==
+      Set("a1", "a2", "a7"))
+    assert(Files.exists(java.nio.file.Paths.get(partial, "_SUCCESS")))
+    assert(t.article.select("article_id").as[String].collect().toSet == Set("a1", "a2"))
+  }
+
+  test("run leaves no persisted RDDs, on success and when the enricher throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def leaked = sc.getPersistentRDDs.keySet -- before
+    new ArxivPipeline(spark, s"$tmp/stages-pins")
+      .run(jsonl, new Augment.FixtureEnricher(crossref), cwts, genders)
+    assert(leaked.isEmpty)
+    val failing = new Augment.Enricher {
+      def lookup(dois: org.apache.spark.sql.DataFrame) =
+        throw new IllegalStateException("enrichment outage")
+    }
+    intercept[IllegalStateException] {
+      new ArxivPipeline(spark, s"$tmp/stages-pins-fail").run(jsonl, failing, cwts, genders)
+    }
+    assert(new java.io.File(s"$tmp/stages-pins-fail/silver_category.parquet/_SUCCESS").isFile,
+      "the enricher must fail after the silver stages ran")
+    assert(leaked.isEmpty)
+  }
+
+  test("author ranks add at most one copy of the unranked frame per rank") {
+    val g = gold
+    val author0 = spark.read.parquet(s"$tmp/stages/silver_author.parquet")
+    def leaves(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectLeaves().size
+    val unranked = Augment.authorStats(author0, g.authorship, g.article, genders)
+    val ranked = Augment.authorReady(author0, g.authorship, g.article, genders)
+    assert(leaves(ranked) <= (1 + 4) * leaves(unranked),
+      s"${leaves(ranked)} leaves vs ${leaves(unranked)} unranked")
+  }
+
   test("DWH queries run and argmax keeps ties") {
     // pct tuned up so the 2-author corpus yields rows: use direct builders
     val q2 = ArxivQueries.q2TopJournalShare(gold.author, gold.authorship,

@@ -24,10 +24,18 @@ class GraphSqlSpec extends SparkSpec {
         issn, "journal-article", rnd.nextInt(150), 2016 + rnd.nextInt(6))
     }.toDF("article_id", "title", "doi", "n_authors", "journal_issn",
       "type", "n_cites", "year")
-    val authorship = (1 to 120).flatMap { a =>
+    val pairs = (1 to 120).flatMap { a =>
       val k = 1 + rnd.nextInt(3) // solo articles exist -> withEgo=false drops them
       rnd.shuffle((1 to nAuthors).toList).take(k).map(u => (s"art$a", s"author$u"))
-    }.toDF("article_id", "author_id")
+    }
+    // Two authors of one article whose synthesized ids collide: repeat a
+    // coauthor's row on one of the ego's (see `ego`) coauthored articles.
+    // The AUTHORED edges are distinct, so the G3 builders must be too.
+    val egoId = pairs.groupBy(_._2).toSeq.map { case (u, ps) => (-ps.size, u) }.min._2
+    val shared = pairs.collect { case (a, `egoId`) => a }
+      .find(a => pairs.count(_._1 == a) > 1).get
+    val repeated = pairs.find(p => p._1 == shared && p._2 != egoId).get
+    val authorship = (pairs :+ repeated).toDF("article_id", "author_id")
     val author = (1 to nAuthors).map(u => (s"author$u", s"Last$u"))
       .toDF("author_id", "last_name")
     val category = Seq(

@@ -67,6 +67,27 @@ class GroupOpsSpec extends SparkSpec {
     assert(got == Map(1 -> 1, 2 -> 2, 3 -> 2, 4 -> 4))
   }
 
+  test("pandasAvgRanksDesc equals chained single-metric calls, with ties and NULLs") {
+    val rnd = new scala.util.Random(11)
+    def opt[A](a: => A): Option[A] = if (rnd.nextInt(6) == 0) None else Some(a)
+    val df = (1 to 200).map { id =>
+      (id, opt(rnd.nextInt(8)), opt(rnd.nextInt(30).toLong), opt(rnd.nextInt(5) / 2.0),
+        opt(rnd.nextInt(3)))
+    }.toDF("id", "a", "b", "c", "d")
+    val pairs = Seq("a" -> "ra", "b" -> "rb", "c" -> "rc", "d" -> "rd")
+    val chained = pairs.foldLeft(df) { case (acc, (m, out)) =>
+      GroupOps.pandasAvgRankDesc(acc, m, out) }
+    val once = GroupOps.pandasAvgRanksDesc(df, pairs)
+    assert(once.columns.toSeq == chained.columns.toSeq)
+    val want = chained.orderBy("id").collect().toSeq
+    assert(once.orderBy("id").collect().toSeq == want)
+    // the fixture has ties and NULLs in every metric
+    pairs.foreach { case (m, _) =>
+      assert(df.filter(col(m).isNull).count() > 0)
+      assert(df.groupBy(m).count().filter(col("count") > 1).count() > 0)
+    }
+  }
+
   test("topPercent rounds the computed limit like Postgres") {
     // 29 rows at 10% → round(2.9) = 3
     val df = (1 to 29).map(i => (i, i * 1.0)).toDF("id", "m")
