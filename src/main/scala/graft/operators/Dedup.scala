@@ -41,9 +41,11 @@ object Dedup {
     * family's lineage for a set-identity no-op). The old distinct's
     * exchange was also the reuse point for multi-consumer plans
     * (ngramJaccard reads sh three times + the hot-df aggregate); that
-    * role is now explicit — [[shingleFrame]]'s forms, default "pin"
-    * (one shared localCheckpoint, measured round 12), with this
-    * rescan form as the disk-bound-depth arm. */
+    * role is now explicit — [[shingleFrame]]'s forms, default
+    * "rescan" (this frame as-is, re-derived per consumer;
+    * [[DefaultShingleForm]], measured round 13), with "pin" (one shared
+    * localCheckpoint) as the explicit dial for corpora whose shingle
+    * frame is expensive to rebuild. */
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxDocFreq: Long): DataFrame = {
     val sh = docs
@@ -194,14 +196,6 @@ object Dedup {
     * pre-flip "before" plans; nothing in main mutates it. */
   @volatile private[graft] var DefaultShingleForm = "rescan"
 
-  /** [[ngramJaccard]] with an explicit [[shingleFrame]] form, returning
-    * the free thunk. PRECONDITION (all forms): `idCol` values are
-    * unique. The per-row `array_distinct` forms equal the frame-level
-    * distinct ONLY then (ids unique ⇒ the global distinct (id, shingle)
-    * set is the union of each doc's own deduped set — DedupSpec pins the
-    * three-form equivalence on a corpus with in-doc repeats); a caller
-    * feeding duplicate ids would silently inflate df and n_sh instead
-    * of deduping. Every repo caller passes a primary-key doc_id. */
   /** Candidate-join form of [[ngramJaccardForm]]:
     *
     *  - `"selfjoin"` (default) — the frame joined against itself on
@@ -221,6 +215,14 @@ object Dedup {
     *    count IS n_common (DedupSpec pins it). */
   @volatile private[graft] var DefaultCandJoinForm = "selfjoin"
 
+  /** [[ngramJaccard]] with an explicit [[shingleFrame]] form, returning
+    * the free thunk. PRECONDITION (all forms): `idCol` values are
+    * unique. The per-row `array_distinct` forms equal the frame-level
+    * distinct ONLY then (ids unique ⇒ the global distinct (id, shingle)
+    * set is the union of each doc's own deduped set — DedupSpec pins the
+    * three-form equivalence on a corpus with in-doc repeats); a caller
+    * feeding duplicate ids would silently inflate df and n_sh instead
+    * of deduping. Every repo caller passes a primary-key doc_id. */
   private[graft] def ngramJaccardForm(docs: DataFrame, n: Int,
       threshold: Double, idCol: String, textCol: String, maxDocFreq: Long,
       form: String,
@@ -461,53 +463,89 @@ object Dedup {
     * candidate legs are exact-Jaccard verified ([[verifiedJaccard]]), so
     * the output is exact on the candidates found and the DuckDB oracle
     * (exact pair truth on both legs) doubles as the band recall proof —
-    * the q35/q119 pattern. */
+    * the q35/q119 pattern.
+    *
+    * This batch entry signatures both frames itself. The batch's keys
+    * are pinned in one localCheckpoint (the in-batch join reads them on
+    * both sides and the history probe a third time) and freed before
+    * returning: the returned frame reads only the `pairs` checkpoint of
+    * [[incrementalNearDupIndexed]], never the keys. */
   def incrementalNearDup(history: DataFrame, batch: DataFrame,
       threshold: Double = 0.5, k: Int = 16, bands: Int = 4, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    incrementalNearDupIndexed(
-      minhashBandKeys(history, k, bands, n, idCol, textCol)
-        .select(col("band"), col("band_hash"), col("id")),
-      history, batch, threshold, k, bands, n, idCol, textCol)
-
-  /** [[incrementalNearDup]] with the history's band keys supplied as a
-    * MATERIALIZED INDEX frame — the form the streaming ingest path
-    * ([[graft.streaming.IncrementalDedup]]) runs every micro-batch: the
-    * index (schema = [[minhashBandKeys]] output: band, band_hash, id) is
-    * computed once per doc at its own ingest and persisted, so a new
-    * batch never re-signatures the corpus. `historyDocs` is the corpus
-    * registry (id, text); only docs that actually appear as candidates
-    * are fetched from it (left-semi on candidate ids) — verification
-    * cost is bounded by the candidate set, never the corpus. Output is
-    * identical to [[incrementalNearDup]] by construction (the batch form
-    * delegates here). */
-  def incrementalNearDupIndexed(historyBands: DataFrame,
-      historyDocs: DataFrame, batch: DataFrame,
-      threshold: Double = 0.5, k: Int = 16, bands: Int = 4, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // The batch side is banded exactly ONCE (`bb`, the per-ingest batch
-    // signatures; the history side arrives pre-banded), both candidate
-    // legs join those same frames, and ONE verify pass over the union
-    // serves both legs. `bb` and `cands` are localCheckpointed
-    // (the ConnectedComponents.resolve pattern): each is referenced by
-    // 2-3 downstream joins, and a lazy plan re-derives the whole
-    // signature subtree per reference (measured in the plan audit: 32
-    // shuffles / 29 scans lazy vs 12 / 7 checkpointed). Both frames are
-    // bounded by the BATCH side (|batch|·bands key rows; candidate id
-    // pairs), never by the history — the asymmetry that makes the
-    // checkpoint safe at any corpus size.
-    val bh = historyBands
-    val bb = minhashBandKeys(batch, k, bands, n, idCol, textCol)
-      .select(col("band"), col("band_hash"), col("id"))
-      .localCheckpoint()
-    val histCands = bh.select(col("band"), col("band_hash"), col("id").as("id_a"))
-      .join(bb.select(col("band"), col("band_hash"), col("id").as("id_b")),
-        Seq("band", "band_hash"))
+    def keys(docs: DataFrame): DataFrame =
+      minhashBandKeys(docs, k, bands, n, idCol, textCol)
+        .select(col("band"), col("band_hash"), col("id"))
+    val bb = keys(batch).localCheckpoint()
+    try incrementalNearDupIndexed(keys(history), history, batch, bb,
+      threshold, n, idCol, textCol)
+    finally graft.core.Sessions.freeCheckpoint(bb)
+  }
+
+  /** [[incrementalNearDup]] with both sides' band keys supplied (schema
+    * = [[minhashBandKeys]] output: band, band_hash, id) — the form the
+    * streaming ingest path ([[graft.streaming.IncrementalDedup]]) runs
+    * every micro-batch. `historyBands` is the MATERIALIZED INDEX, computed
+    * once per doc at its own ingest and persisted, so a new batch never
+    * re-signatures the corpus. `batchBands` is the batch's own keys; the
+    * streaming path passes the index partition it just wrote for the
+    * batch, so each batch is signatured exactly once. The operator never
+    * derives keys itself, so the band scheme (k, bands) is the caller's.
+    * `historyDocs` is the corpus registry (id, text); only docs that
+    * actually appear as candidates are fetched from it (left-semi on
+    * candidate ids) — verification cost is bounded by the candidate set,
+    * never the corpus. Output is identical to [[incrementalNearDup]] by
+    * construction (the batch form delegates here).
+    *
+    * History is only ever SCANNED, never shuffled: every join with a
+    * history-sized side broadcasts its other side, which is bounded by
+    * the batch — the history probe broadcasts `batchBands`, and both
+    * verify-leg semi-joins (history registry, batch docs) broadcast the
+    * candidate ids. The hints are explicit because the candidate ids
+    * come from a localCheckpoint, which keeps the optimizer's size
+    * estimate from before it was materialized (for the candidate join,
+    * the product of its inputs' sizes): unhinted, Spark plans a
+    * sort-merge join and shuffles the whole registry's text every batch.
+    *
+    * Envelope of the broadcast side: the history candidate ids number
+    * at most |batch| × bands × (history docs per matched bucket). On a
+    * corpus of mostly singleton buckets that is about |batch|·bands; a
+    * hot bucket (one band hash shared by many history docs — templated
+    * or boilerplate pages) multiplies it by the bucket's population. A
+    * large enough one exceeds the broadcast limits and fails the call
+    * loudly (`spark.sql.maxBroadcastTableSize`, or driver memory) — it
+    * never returns different rows. Cap or drop such buckets upstream.
+    *
+    * Executor loss: `cands` and `pairs` are localCheckpoints — their
+    * blocks live only in executor storage and their lineage is cut. If
+    * an executor holding a block is lost before the returned frame is
+    * consumed, the next job reading it fails on the missing checkpoint
+    * block; nothing recomputes it, so the failure is loud and never
+    * yields different rows. Under the streaming wiring the micro-batch
+    * fails, and the restarted query replays the same batch id, which
+    * rewrites its partitions and recomputes the same verdicts. */
+  def incrementalNearDupIndexed(historyBands: DataFrame,
+      historyDocs: DataFrame, batch: DataFrame, batchBands: DataFrame,
+      threshold: Double = 0.5, n: Int = 3,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    // Both candidate legs join the same batch keys, and ONE verify pass
+    // over the union serves both legs. `cands` is localCheckpointed
+    // (the ConnectedComponents.resolve pattern): it is referenced by 3
+    // downstream joins, and a lazy plan re-derives the whole candidate
+    // subtree per reference (the plan audit measured 32 shuffles / 29
+    // scans lazy vs 12 / 7 with it and the batch keys pinned; the keys
+    // now arrive as a stable frame from the caller). It is bounded by
+    // the BATCH side (candidate id pairs), never by the history — the
+    // asymmetry that makes the checkpoint safe at any corpus size.
+    def batchKeys(id: String): DataFrame =
+      batchBands.select(col("band"), col("band_hash"), col("id").as(id))
+    val histCands = historyBands
+      .select(col("band"), col("band_hash"), col("id").as("id_a"))
+      .join(broadcast(batchKeys("id_b")), Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
       .withColumn("src", lit("hist"))
-    val batchCands = bb.select(col("band"), col("band_hash"), col("id").as("id_a"))
-      .join(bb.select(col("band"), col("band_hash"), col("id").as("id_b")),
-        Seq("band", "band_hash"))
+    val batchCands = batchKeys("id_a")
+      .join(batchKeys("id_b"), Seq("band", "band_hash"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
       .withColumn("src", lit("batch"))
@@ -519,12 +557,12 @@ object Dedup {
     // corpus registry per ingest would be a full-corpus rescan, the
     // thing this operator exists to avoid).
     val neededHist = historyDocs.join(
-      cands.filter(col("src") === "hist").select(col("id_a").as(idCol)),
+      broadcast(cands.filter(col("src") === "hist").select(col("id_a").as(idCol))),
       Seq(idCol), "left_semi")
     val (verified, verifyFree) = verifiedJaccardWithFrees(
       neededHist.unionByName(batch),
       cands.select("id_a", "id_b"), threshold, n, idCol, textCol,
-      viaCheckpoint = true)
+      viaCheckpoint = true, broadcastCandIds = true)
     val pairs = verified
       // ids are disjoint across the two frames (operator contract), so a
       // verified pair re-joins to exactly one tagged candidate row; the
@@ -533,14 +571,13 @@ object Dedup {
       // surviving pairs — the smallest frame in the operator)
       .join(cands, Seq("id_a", "id_b"))
       .localCheckpoint()
-    // bb, cands, and the verifier's pinned intermediates fed only the
-    // (eager) pairs checkpoint — free their blocks now instead of waiting
-    // for the ContextCleaner (ADVICE r8: a long-running driver otherwise
+    // cands and the verifier's pinned intermediates fed only the (eager)
+    // pairs checkpoint — free their blocks now instead of waiting for
+    // the ContextCleaner (ADVICE r8: a long-running driver otherwise
     // accumulates them per micro-batch; note Dataset.unpersist would be
     // a silent no-op on a checkpoint — see Sessions.freeCheckpoint).
     // pairs itself backs the returned frame; the streaming wiring sweeps
     // it after the verdict write.
-    graft.core.Sessions.freeCheckpoint(bb)
     graft.core.Sessions.freeCheckpoint(cands)
     verifyFree()
     val histBlame = pairs.filter(col("src") === "hist")
@@ -1292,11 +1329,18 @@ object Dedup {
     * ckpt vs 2.56-3.91 s persist; q97 6.93-7.48 ckpt vs 7.39-7.79
     * persist. The columnar cache encode costs more than the checkpoint's
     * UnsafeRow store at every shape tried, and the optimizer-visibility
-    * argument for persist never cashed out. */
+    * argument for persist never cashed out.
+    *
+    * `broadcastCandIds` broadcasts the candidate-id side of the doc
+    * restriction, for callers whose candidates are bounded by a small
+    * input while `docs` is not ([[incrementalNearDupIndexed]]: the
+    * batch). The pinned candidates never trigger a broadcast on their
+    * own — a checkpoint keeps its pre-materialization size estimate. */
   private[graft] def verifiedJaccardWithFrees(docs: DataFrame,
       candidates: DataFrame, threshold: Double, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      viaCheckpoint: Boolean = true): (DataFrame, () => Unit) = {
+      viaCheckpoint: Boolean = true,
+      broadcastCandIds: Boolean = false): (DataFrame, () => Unit) = {
     def pin(df: DataFrame): DataFrame =
       if (viaCheckpoint) df.localCheckpoint() else df.persist()
     def free(df: DataFrame): Unit =
@@ -1325,7 +1369,8 @@ object Dedup {
     val candIds = cand.select(col("id_a").as(idCol))
       .unionByName(cand.select(col("id_b").as(idCol)))
       .distinct()
-    val needed = docs.join(candIds, Seq(idCol), "left_semi")
+    val needed = docs.join(
+      if (broadcastCandIds) broadcast(candIds) else candIds, Seq(idCol), "left_semi")
     val sh = pin(docShingles(needed, idCol, textCol, n, 0L))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val common = cand

@@ -668,6 +668,27 @@ class DedupSpec extends SparkSpec {
       (2L, "kept", -1L), (3L, "dup_batch", 2L)))
   }
 
+  test("incrementalNearDup frees every checkpoint but the one backing its output") {
+    val sc = spark.sparkContext
+    val history = docs.filter(col("doc_id").isin(2L, 4L))
+    val batch = docs.filter(col("doc_id").isin(0L, 1L, 3L))
+      .unionByName(docs.filter(col("doc_id") === 3L).withColumn("doc_id", lit(5L)))
+    val before = sc.getPersistentRDDs.keySet
+    val out = Dedup.incrementalNearDup(history, batch, threshold = 0.5)
+    graft.core.Sessions.materialize(out)
+    val created = sc.getPersistentRDDs.keySet -- before
+    val backing = out.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    assert(created.nonEmpty && created.subsetOf(backing),
+      s"checkpoints left behind: ${created -- backing}")
+    // non-vacuous: both legs produced verdicts through those checkpoints
+    assert(out.orderBy("doc_id").as[(Long, String, Long)].collect().toSeq == Seq(
+      (0L, "kept", -1L), (1L, "kept", -1L),
+      (3L, "dup_history", 2L), (5L, "dup_history", 2L)))
+    created.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = false))
+  }
+
   test("prefix-filter bound holds on random corpora across thresholds") {
     // randomized trial of the SSJoin prefix theorem: on corpora designed
     // to produce borderline Jaccard values (tiny vocab, short docs), the

@@ -2,9 +2,24 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XxHash64
+import org.apache.spark.sql.catalyst.expressions.aggregate.Min
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.core.{Sessions, Tables}
@@ -18,7 +33,7 @@ case class Doc(doc_id: Long, text: String)
   * foreachBatch + persisted-band-index path against the batch operator
   * on the same document slices, plus the exactly-once replay property
   * (reprocessing a batch id yields byte-identical verdicts). */
-class IncrementalDedupStreamSpec extends SparkSpec {
+class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.01"
@@ -256,6 +271,120 @@ class IncrementalDedupStreamSpec extends SparkSpec {
         bands = 8, keptOnlyHistory = keptOnly))
       assert(r1.head._2 == expectC,
         s"keptOnlyHistory=$keptOnly: expected C=$expectC, got ${r1.head}")
+    }
+  }
+
+  /** Batch `i` of a synthetic stream of `size` docs per batch (ids
+    * [i·size, (i+1)·size), 30-49 words of a 5000-word vocabulary): id ≡ 9
+    * (mod 10) near-copies id − 9 of its own batch, and from batch 1 on
+    * id ≡ 5 (mod 10) near-copies a doc of the previous batch. Every batch
+    * after the first carries the same number of planted pairs on both
+    * legs, so between them only the size of the history differs. */
+  private def streamBatch(i: Int, size: Int): DataFrame = {
+    def words(base: Long): String = {
+      val r = new scala.util.Random(base)
+      Seq.fill(30 + r.nextInt(20))(s"w${r.nextInt(5000)}").mkString(" ")
+    }
+    (i.toLong * size until (i + 1L) * size).map { id =>
+      val base =
+        if (id % 10 == 9) id - 9
+        else if (id % 10 == 5 && i > 0) id - size - 1
+        else id
+      Doc(id, words(base) + (if (base != id) s" x$id" else ""))
+    }.toDF()
+  }
+
+  /** Shuffle bytes written by finished tasks, and the executed plan of
+    * every finished SQL execution (queries, writes, checkpoints), from
+    * `body` only. */
+  private def observed(body: => Unit): (Long, Seq[SparkPlan]) = {
+    val sc = spark.sparkContext
+    val bytes = new AtomicLong
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val tasks = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val queries = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(tasks)
+    spark.listenerManager.register(queries)
+    try {
+      body
+      ListenerBusDrain(sc)
+      (bytes.get, plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(tasks)
+      spark.listenerManager.unregister(queries)
+    }
+  }
+
+  /** processBatch plus its verdict write, the stream wiring's unit of
+    * work, then the wiring's sweep of the batch's checkpoints. */
+  private def runBatch(indexDir: String, outDir: String, i: Int,
+      docs: DataFrame): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    IncrementalDedup.processBatch(spark, docs, i.toLong, indexDir)
+      .write.mode("overwrite").parquet(s"$outDir/batch_id=$i")
+    sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = false)
+    }
+  }
+
+  test("per-batch shuffle does not grow with history, and the registry is never shuffled") {
+    val tmp = Files.createTempDirectory("incdedup_scale").toString
+    val (indexDir, outDir) = (s"$tmp/index", s"$tmp/out")
+    val docsDir = new Path(s"$indexDir/docs").toUri.getPath
+    // the history registry is read through its root (basePath) — the
+    // batch's own partition is read by its batch_id=N path
+    def scansRegistry(p: SparkPlan): Boolean = find(p) {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == docsDir)
+      case _ => false
+    }.isDefined
+    val perBatch = (0 until 5).map { i =>
+      val (bytes, plans) = observed(runBatch(indexDir, outDir, i, streamBatch(i, 300)))
+      val shuffled = plans.flatMap(p => collect(p) {
+        case e: ShuffleExchangeExec if scansRegistry(e) => e
+      })
+      assert(shuffled.isEmpty,
+        s"batch $i shuffles the history registry:\n${shuffled.headOption.map(_.treeString)}")
+      if (i > 0) assert(plans.exists(scansRegistry), s"batch $i never read its history")
+      bytes
+    }
+    // non-vacuous: both legs found their planted pairs in the last batch
+    val last = spark.read.parquet(s"$outDir/batch_id=4").groupBy("status").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(last.getOrElse("dup_history", 0L) > 0 && last.getOrElse("dup_batch", 0L) > 0, s"$last")
+    info(s"shuffle bytes written per batch: ${perBatch.mkString(", ")}")
+    // batch 0 has no history leg at all; batches 1..4 differ only in
+    // the history they are checked against (1 to 4 batches of it)
+    assert(perBatch.last <= 1.25 * perBatch(1),
+      s"shuffle bytes per batch grow with history: ${perBatch.mkString(", ")}")
+  }
+
+  test("processBatch signatures the batch once") {
+    val tmp = Files.createTempDirectory("incdedup_sigonce").toString
+    val (indexDir, outDir) = (s"$tmp/index", s"$tmp/out")
+    runBatch(indexDir, outDir, 0, streamBatch(0, 100))
+    // the MinHash signature is k min(xxhash64(...)) aggregates; no other
+    // operator in the batch's plans aggregates a min of a hash
+    def signs(p: SparkPlan): Boolean = find(p) {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(_.aggregateFunction match {
+        case Min(_: XxHash64) => true
+        case _ => false
+      })
+      case _ => false
+    }.isDefined
+    for (i <- 1 to 2) {
+      val (_, plans) = observed(runBatch(indexDir, outDir, i, streamBatch(i, 100)))
+      assert(plans.count(signs) == 1,
+        s"batch $i: ${plans.count(signs)} executed plans compute MinHash signatures")
     }
   }
 }
