@@ -116,7 +116,7 @@ object Bench {
         // cached vs 10-25 s honest pre-round-10; ~8 s after the r10
         // truncation fix). The verify family pins via
         // localCheckpoint, whose blocks live OUTSIDE the CacheManager:
-        // clearCache() does not free them (Sessions.freeCheckpoint or
+        // clearCache() does not free them (Pin.free or
         // ContextCleaner-on-GC do), and it never made them reusable
         // across runs in the first place — each run's checkpoint is a
         // fresh RDD, so the verify legs were honest all along. They DO

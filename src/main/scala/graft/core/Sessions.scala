@@ -29,25 +29,6 @@ object Sessions {
   def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Free the executor-storage blocks behind a `localCheckpoint()`ed
-    * frame NOW instead of when the ContextCleaner GCs it (ADVICE r8).
-    *
-    * `Dataset.unpersist` does NOT do this: it only uncaches cache-manager
-    * entries (`.cache()`/`.persist()`), and a checkpoint's persisted RDD
-    * lives outside the cache manager — so calling unpersist on a
-    * checkpointed frame is a silent no-op and the blocks linger until a
-    * driver GC cycle notices the RDD is unreachable. This reaches the
-    * RDD through the checkpoint's LogicalRDD node and unpersists it
-    * directly. Caller contract: nothing may execute the frame's plan
-    * afterwards — the checkpoint truncated its lineage, so re-execution
-    * would fail rather than silently recompute. */
-  def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   def local(cores: Int = 4, appName: String = "graft-test"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin
 
 /** Connected components over an undirected pair set — the resolution step
   * that turns near-dup PAIRS (Dedup.ngramJaccard / minhashLsh /
@@ -24,8 +25,9 @@ import org.apache.spark.sql.functions._
   * of component diameter — unlike min-label propagation, whose round
   * count on a 100 TB duplicate CHAIN is the chain length. `maxIter`
   * bounds the loop, a (count, hash-sum) signature detects the fixpoint,
-  * and `localCheckpoint` truncates lineage each round (the same reason
-  * GraphX checkpoints inside Pregel).
+  * and a [[graft.core.Pin]] truncates lineage each round (the same reason
+  * GraphX checkpoints inside Pregel); the pins report their real size,
+  * so a caller joining the small output against a corpus broadcasts it.
   */
 object ConnectedComponents {
 
@@ -55,14 +57,12 @@ object ConnectedComponents {
     // aggregates and candidate self-join would otherwise recompute for
     // the `nodes` frame below — measured at sf0.1 this halved q100's
     // near-dup stage. Only the two id columns are materialized.
-    val p = pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint()
+    val p = Pin(pairs.select(col(srcCol).as("a"), col(dstCol).as("b")))
     // symmetrize once; edges keep BOTH directions so Γ(u) is one groupBy
-    var edges = p.select(col("a").as("u"), col("b").as("v"))
+    var edges = Pin(p.select(col("a").as("u"), col("b").as("v"))
       .union(p.select(col("b").as("u"), col("a").as("v")))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
     def starStep(es: DataFrame, large: Boolean): DataFrame = {
       val mins = es.groupBy("u").agg(min("v").as("minv"))
@@ -95,7 +95,7 @@ object ConnectedComponents {
     var iter = 0
     while (!converged && iter < maxIter) {
       val t0 = System.nanoTime()
-      edges = starStep(starStep(edges, large = true), large = false).localCheckpoint()
+      edges = Pin(starStep(starStep(edges, large = true), large = false))
       val next = signature(edges)
       converged = next == sig
       sig = next

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin
 import graft.functions.{SimHash, TextFunctions => T, VectorFunctions => V}
 
 /** Document / embedding deduplication operators for the training-data
@@ -98,28 +99,28 @@ object Dedup {
     *
     * Returns the frame plus a free thunk (no-op except for `"pin"`,
     * where it releases the checkpoint blocks, and `"stage"`, where it
-    * deletes the staged directory — callers that materialize
-    * eagerly should invoke it; batch entries may leave it to the
-    * ContextCleaner, as [[verifiedJaccard]] documents). */
+    * deletes the staged directory). A `"pin"` caller may leave the free
+    * to the ContextCleaner, which reclaims unreachable BLOCKS, as
+    * [[verifiedJaccard]] documents; it never deletes a directory, so a
+    * `"stage"` caller must invoke the thunk once nothing reads the
+    * frame. A staging write that throws deletes its directory first.
+    *
+    * The staging write leaves its hot-df and anti-join shuffle files
+    * behind until a driver GC lets the ContextCleaner see them
+    * unreachable; library code never forces that GC, so a tool that
+    * wants them gone before the candidate join's own shuffles peak
+    * requests it after building the frame (TimeQuery's `*_stage`
+    * arms). */
   private[graft] def shingleFrame(docs: DataFrame, idCol: String,
       textCol: String, n: Int, maxDocFreq: Long,
       form: String): (DataFrame, () => Unit) = form match {
     case "rescan" => (docShingles(docs, idCol, textCol, n, maxDocFreq), () => ())
     case "pin" =>
-      val p = docShingles(docs, idCol, textCol, n, maxDocFreq).localCheckpoint()
-      (p, () => graft.core.Sessions.freeCheckpoint(p))
+      val p = Pin(docShingles(docs, idCol, textCol, n, maxDocFreq))
+      (p, () => Pin.free(p))
     case "stage" =>
       val dir = java.nio.file.Files.createTempDirectory("graft-shingle-stage")
       val path = dir.toUri.toString
-      docShingles(docs, idCol, textCol, n, maxDocFreq)
-        .write.mode("overwrite").option("compression", "zstd").parquet(path)
-      // the write job's shuffle files (hot-df aggregate + anti-join) are
-      // only deleted after a driver GC lets the ContextCleaner see their
-      // ShuffleDependency unreachable — on the disk-bound decades this
-      // form exists for, reclaiming them BEFORE the candidate join's own
-      // shuffles peak is the point (advisory; no-op under
-      // -XX:+DisableExplicitGC, and off the hot path: once per staging)
-      System.gc()
       val free = () => {
         import scala.jdk.CollectionConverters._
         val walk = java.nio.file.Files.walk(dir)
@@ -128,6 +129,9 @@ object Dedup {
         finally walk.close()
         ()
       }
+      try docShingles(docs, idCol, textCol, n, maxDocFreq)
+        .write.mode("overwrite").option("compression", "zstd").parquet(path)
+      catch { case e: Throwable => free(); throw e }
       (docs.sparkSession.read.parquet(path), free)
     case "distinct" =>
       val sh = docs
@@ -154,13 +158,23 @@ object Dedup {
     * measured 0.55 at 3.6× less wall time — and near-losslessly:
     * output-identical at 15k docs, 6217/6225 pairs (99.87%) at 50k. A
     * shingle in hundreds of documents contributes quadratic candidates
-    * but almost never decides a J >= 0.5 verdict; cap it. */
+    * but almost never decides a J >= 0.5 verdict; cap it.
+    *
+    * `shingleForm` may not be `"stage"`: this entry returns no free
+    * thunk, and nothing else deletes a staged directory. Stage through
+    * [[ngramJaccardForm]], which returns the thunk. */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.2,
       idCol: String = "doc_id", textCol: String = "text",
       maxDocFreq: Long = 0L,
-      shingleForm: String = DefaultShingleForm): DataFrame =
+      shingleForm: String = DefaultShingleForm): DataFrame = {
+    require(shingleForm != "stage", StageNeedsFree)
     ngramJaccardForm(docs, n, threshold, idCol, textCol, maxDocFreq,
       shingleForm)._1
+  }
+
+  private val StageNeedsFree = "the \"stage\" shingle form leaves a " +
+    "directory only its free thunk deletes; use ngramJaccardForm, which " +
+    "returns the thunk"
 
   /** Default [[shingleFrame]] form for the public n-gram entries.
     *
@@ -289,7 +303,7 @@ object Dedup {
       pinWindows: Boolean = false): DataFrame = {
     val w0 = docs.select(col(idCol).as("id"),
       explode(array_distinct(T.shingles(col(textCol), windowTokens))).as("w"))
-    val w = if (pinWindows) w0.localCheckpoint() else w0
+    val w = if (pinWindows) Pin(w0) else w0
     // nd = number of distinct docs containing the window ((id, w) is
     // already distinct, so a plain count is a distinct-doc count)
     val docFreq = w.groupBy("w").agg(count(lit(1)).as("nd"))
@@ -314,12 +328,14 @@ object Dedup {
     * toward 0 as the larger doc grows even when the smaller doc is
     * copied verbatim, while containment stays 1. Same candidate
     * machinery, hot-shingle bound and unique-`idCol` precondition as
-    * [[ngramJaccard]]; only the normalizer differs.
+    * [[ngramJaccard]]; only the normalizer differs, and like it this
+    * entry refuses the `"stage"` form (no free thunk to return).
     * Output: id_a < id_b, n_common, containment. */
   def ngramContainment(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
       maxDocFreq: Long = 0L,
       shingleForm: String = DefaultShingleForm): DataFrame = {
+    require(shingleForm != "stage", StageNeedsFree)
     val (sh, _) = shingleFrame(docs, idCol, textCol, n, maxDocFreq,
       shingleForm)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
@@ -363,13 +379,13 @@ object Dedup {
       pinSigs: Boolean = false): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    // pinSigs: one localCheckpoint of the (id, sig) frame — the k-hash
+    // pinSigs: one Pin of the (id, sig) frame — the k-hash
     // signature pipeline (corpus scan + shingle explode + k rehashes +
     // groupBy-min) is otherwise re-derived by every consumer of the
     // banded frame (minhashLsh reads it on both join sides). Narrow:
     // ~8(k+1) bytes/doc. Same rationale as [[DefaultPinSims]].
     val sigs0 = minhashSignatures(docs, k, n, idCol, textCol)
-    val sigs = if (pinSigs) sigs0.localCheckpoint() else sigs0
+    val sigs = if (pinSigs) Pin(sigs0) else sigs0
     sigs.select(col("id"), col("sig"),
       posexplode(array((0 until bands).map { b =>
         xxhash64(slice(col("sig"), b * rows + 1, rows))
@@ -466,7 +482,7 @@ object Dedup {
     * the q35/q119 pattern.
     *
     * This batch entry signatures both frames itself. The batch's keys
-    * are pinned in one localCheckpoint (the in-batch join reads them on
+    * are pinned once ([[graft.core.Pin]]; the in-batch join reads them on
     * both sides and the history probe a third time) and freed before
     * returning: the returned frame reads only the `pairs` checkpoint of
     * [[incrementalNearDupIndexed]], never the keys. */
@@ -476,10 +492,10 @@ object Dedup {
     def keys(docs: DataFrame): DataFrame =
       minhashBandKeys(docs, k, bands, n, idCol, textCol)
         .select(col("band"), col("band_hash"), col("id"))
-    val bb = keys(batch).localCheckpoint()
+    val bb = Pin(keys(batch))
     try incrementalNearDupIndexed(keys(history), history, batch, bb,
       threshold, n, idCol, textCol)
-    finally graft.core.Sessions.freeCheckpoint(bb)
+    finally Pin.free(bb)
   }
 
   /** [[incrementalNearDup]] with both sides' band keys supplied (schema
@@ -497,26 +513,22 @@ object Dedup {
     * never the corpus. Output is identical to [[incrementalNearDup]] by
     * construction (the batch form delegates here).
     *
-    * History is only ever SCANNED, never shuffled: every join with a
-    * history-sized side broadcasts its other side, which is bounded by
-    * the batch — the history probe broadcasts `batchBands`, and both
-    * verify-leg semi-joins (history registry, batch docs) broadcast the
-    * candidate ids. The hints are explicit because the candidate ids
-    * come from a localCheckpoint, which keeps the optimizer's size
-    * estimate from before it was materialized (for the candidate join,
-    * the product of its inputs' sizes): unhinted, Spark plans a
-    * sort-merge join and shuffles the whole registry's text every batch.
+    * History is only SCANNED, not shuffled, while the batch side is
+    * small: the history probe broadcasts `batchBands` (a parquet scan,
+    * hinted), and both verify-leg semi-joins (history registry, batch
+    * docs) join against candidate ids read from the pinned `cands`,
+    * which reports its real stored size ([[graft.core.Pin]]), so the
+    * planner broadcasts them under the session's broadcast threshold.
     *
-    * Envelope of the broadcast side: the history candidate ids number
-    * at most |batch| × bands × (history docs per matched bucket). On a
-    * corpus of mostly singleton buckets that is about |batch|·bands; a
-    * hot bucket (one band hash shared by many history docs — templated
-    * or boilerplate pages) multiplies it by the bucket's population. A
-    * large enough one exceeds the broadcast limits and fails the call
-    * loudly (`spark.sql.maxBroadcastTableSize`, or driver memory) — it
-    * never returns different rows. Cap or drop such buckets upstream.
+    * Envelope: the history candidate ids number at most |batch| × bands
+    * × (history docs per matched bucket). On a corpus of mostly
+    * singleton buckets that is about |batch|·bands; a hot bucket (one
+    * band hash shared by many history docs — templated or boilerplate
+    * pages) multiplies it by the bucket's population. Past the broadcast
+    * threshold the semi-joins plan as sort-merge joins and shuffle the
+    * registry's candidate rows: slower, same rows.
     *
-    * Executor loss: `cands` and `pairs` are localCheckpoints — their
+    * Executor loss: `cands` and `pairs` are pinned checkpoints — their
     * blocks live only in executor storage and their lineage is cut. If
     * an executor holding a block is lost before the returned frame is
     * consumed, the next job reading it fails on the missing checkpoint
@@ -529,7 +541,7 @@ object Dedup {
       threshold: Double = 0.5, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // Both candidate legs join the same batch keys, and ONE verify pass
-    // over the union serves both legs. `cands` is localCheckpointed
+    // over the union serves both legs. `cands` is pinned
     // (the ConnectedComponents.resolve pattern): it is referenced by 3
     // downstream joins, and a lazy plan re-derives the whole candidate
     // subtree per reference (the plan audit measured 32 shuffles / 29
@@ -549,7 +561,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
       .withColumn("src", lit("batch"))
-    val cands = histCands.unionByName(batchCands).localCheckpoint()
+    val cands = Pin(histCands.unionByName(batchCands))
     // Verification shingles only the docs that can appear in a verified
     // pair: every candidate's id_b is a batch doc, and the history ids
     // are exactly the hist-leg id_a values — left-semi against those
@@ -557,28 +569,25 @@ object Dedup {
     // corpus registry per ingest would be a full-corpus rescan, the
     // thing this operator exists to avoid).
     val neededHist = historyDocs.join(
-      broadcast(cands.filter(col("src") === "hist").select(col("id_a").as(idCol))),
+      cands.filter(col("src") === "hist").select(col("id_a").as(idCol)),
       Seq(idCol), "left_semi")
     val (verified, verifyFree) = verifiedJaccardWithFrees(
       neededHist.unionByName(batch),
-      cands.select("id_a", "id_b"), threshold, n, idCol, textCol,
-      viaCheckpoint = true, broadcastCandIds = true)
-    val pairs = verified
-      // ids are disjoint across the two frames (operator contract), so a
-      // verified pair re-joins to exactly one tagged candidate row; the
-      // checkpoint stops the two blame aggregates below from each
-      // re-running the whole verify subtree (its output is just the
-      // surviving pairs — the smallest frame in the operator)
-      .join(cands, Seq("id_a", "id_b"))
-      .localCheckpoint()
+      cands.select("id_a", "id_b"), threshold, n, idCol, textCol)
+    // ids are disjoint across the two frames (operator contract), so a
+    // verified pair re-joins to exactly one tagged candidate row; the
+    // pin stops the two blame aggregates below from each re-running the
+    // whole verify subtree (its output is just the surviving pairs — the
+    // smallest frame in the operator)
+    val pairs = Pin(verified.join(cands, Seq("id_a", "id_b")))
     // cands and the verifier's pinned intermediates fed only the (eager)
     // pairs checkpoint — free their blocks now instead of waiting for
     // the ContextCleaner (ADVICE r8: a long-running driver otherwise
     // accumulates them per micro-batch; note Dataset.unpersist would be
-    // a silent no-op on a checkpoint — see Sessions.freeCheckpoint).
+    // a silent no-op on a checkpoint — see Pin.free).
     // pairs itself backs the returned frame; the streaming wiring sweeps
     // it after the verdict write.
-    graft.core.Sessions.freeCheckpoint(cands)
+    Pin.free(cands)
     verifyFree()
     val histBlame = pairs.filter(col("src") === "hist")
       .groupBy(col("id_b").as(idCol)).agg(min("id_a").as("hist_dup"))
@@ -789,7 +798,7 @@ object Dedup {
   @volatile private[graft] var DefaultPruneSingletons = true
 
   private def pinnedSims(sims: DataFrame, pin: Boolean): DataFrame =
-    if (pin) sims.localCheckpoint() else sims
+    if (pin) Pin(sims) else sims
 
   /** All C(nBlocks, chooseK) block subsets in lexicographic order — the
     * table index of [[simhashComboKeys]]. Factored (and kept ordered) so
@@ -1309,7 +1318,7 @@ object Dedup {
   /** [[verifiedJaccard]] plus a cleanup that frees its two pinned
     * intermediates (candidate pairs; candidate-doc shingles), so a caller
     * that materializes the result eagerly — the streaming ingest path
-    * does, via its own localCheckpoint — can release them
+    * does, via its own pin — can release them
     * deterministically instead of waiting for the ContextCleaner
     * (ADVICE r8 hygiene). The public entry leaves the frees to the
     * ContextCleaner: its callers are batch queries whose session
@@ -1331,20 +1340,18 @@ object Dedup {
     * UnsafeRow store at every shape tried, and the optimizer-visibility
     * argument for persist never cashed out.
     *
-    * `broadcastCandIds` broadcasts the candidate-id side of the doc
-    * restriction, for callers whose candidates are bounded by a small
-    * input while `docs` is not ([[incrementalNearDupIndexed]]: the
-    * batch). The pinned candidates never trigger a broadcast on their
-    * own — a checkpoint keeps its pre-materialization size estimate. */
+    * The checkpoint form pins through [[graft.core.Pin]], so the
+    * candidate ids that restrict `docs` report their real size: when
+    * they fit under the broadcast threshold the restriction broadcasts
+    * them and `docs` (text included) is only scanned, never shuffled. */
   private[graft] def verifiedJaccardWithFrees(docs: DataFrame,
       candidates: DataFrame, threshold: Double, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      viaCheckpoint: Boolean = true,
-      broadcastCandIds: Boolean = false): (DataFrame, () => Unit) = {
+      viaCheckpoint: Boolean = true): (DataFrame, () => Unit) = {
     def pin(df: DataFrame): DataFrame =
-      if (viaCheckpoint) df.localCheckpoint() else df.persist()
+      if (viaCheckpoint) Pin(df) else df.persist()
     def free(df: DataFrame): Unit =
-      if (viaCheckpoint) graft.core.Sessions.freeCheckpoint(df)
+      if (viaCheckpoint) Pin.free(df)
       else { df.unpersist(blocking = false); () }
     // Shingle ONLY the docs that appear in a candidate pair, and only
     // ONCE (round 9). The previous shape shingled the FULL corpus and,
@@ -1369,8 +1376,7 @@ object Dedup {
     val candIds = cand.select(col("id_a").as(idCol))
       .unionByName(cand.select(col("id_b").as(idCol)))
       .distinct()
-    val needed = docs.join(
-      if (broadcastCandIds) broadcast(candIds) else candIds, Seq(idCol), "left_semi")
+    val needed = docs.join(candIds, Seq(idCol), "left_semi")
     val sh = pin(docShingles(needed, idCol, textCol, n, 0L))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val common = cand
@@ -1439,7 +1445,7 @@ object Dedup {
     // corpus-prefix-sized block store (the same trade as the shingle
     // "pin" form, so it stays a dial, not the default).
     val prefix0 = prefixKeys(docs, threshold, n, idCol, textCol)
-    val prefix = if (pinPrefix) prefix0.localCheckpoint() else prefix0
+    val prefix = if (pinPrefix) Pin(prefix0) else prefix0
     val tEff = threshold - 5e-5 // see prefixKeys' recall note
     // PPJoin positional filter (Xiao et al., WWW'08): when a pair first
     // meets at prefix positions (i, j), its overlap can't exceed

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Pin
 
 /** Fixed-iteration PageRank in pure integer arithmetic.
   *
@@ -132,7 +133,7 @@ object PageRank {
           // a LogicalRDD leaf; measured SLOWER than persist here (see
           // scaladoc A/B) and recompute-on-eviction fails — kept as the
           // measured alternative, not the default
-          ranks = ranks.localCheckpoint(true)
+          ranks = Pin(ranks)
         } else if (!eagerTrunc) {
           // LAZY truncation (round 14, VERDICT r13 #2 — fold the
           // per-iteration materialization into the next job): persist()
@@ -154,7 +155,7 @@ object PageRank {
             // one materializing job per window; resets the logical plan
             // to a LogicalRDD leaf (the r12 plan-depth lesson) and lets
             // the window's lazy cache entries go
-            ranks = ranks.localCheckpoint(true)
+            ranks = Pin(ranks)
             lazyPins.foreach(_.unpersist(false))
             lazyPins = Nil
           }
@@ -179,7 +180,7 @@ object PageRank {
             // 5-iteration path byte-identical to the measured r10 A/B
             // winner (persist, no rebase triggered) while bounding any
             // deep run's plan depth.
-            ranks = ranks.localCheckpoint(true)
+            ranks = Pin(ranks)
             prevTrunc.foreach(_.unpersist(false))
             prevTrunc = None
           }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Pin, Tables}
 import graft.functions.{TextFunctions => T}
 import graft.operators.{CoOccur, DataQuality, PageRank, Triangles}
 
@@ -293,7 +293,7 @@ object AnalyticsQueries {
       .orderBy(col("shared_keys").desc, col("item_a"), col("item_b"))
       .limit(TriEdges)
       .select(col("item_a").as("a"), col("item_b").as("b"))
-    val top = if (pinTop) top0.localCheckpoint(true) else top0
+    val top = if (pinTop) Pin(top0) else top0
     Triangles.perVertex(broadcast(top))
       .withColumnRenamed("node", "l_suppkey")
       .orderBy("l_suppkey")

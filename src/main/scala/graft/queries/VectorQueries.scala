@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Pin, Tables}
 import graft.functions.{VectorFunctions => V}
 import graft.operators.{Dedup, Similarity}
 
@@ -376,8 +376,8 @@ object VectorQueries {
   /** [[semanticClusters]] plus the checkpoint-release thunk (VERDICT
     * r12 #8 — the WithFrees pattern [[graft.operators.Dedup
     * .verifiedJaccardWithFrees]] established): the returned thunk frees
-    * the coarse assignment's localCheckpoint blocks via
-    * [[graft.core.Sessions.freeCheckpoint]] (Dataset.unpersist is a
+    * the coarse assignment's pinned checkpoint blocks via
+    * [[graft.core.Pin.free]] (Dataset.unpersist is a
     * silent no-op on checkpointed frames — the round-9 find). Call it
     * ONLY after fully materializing everything derived from the
     * assignment: the checkpoint truncates lineage, so a freed frame
@@ -446,15 +446,14 @@ object VectorQueries {
       viaVecSum: Boolean = VecSumUpdates,
       viaNc: Boolean = NcAssign): (DataFrame, () => Unit) =
     if (k1 == 1) {
-      val c = q.withColumn("ccid", lit(0)).localCheckpoint()
-      (c, () => graft.core.Sessions.freeCheckpoint(c))
+      val c = Pin(q.withColumn("ccid", lit(0)))
+      (c, () => Pin.free(c))
     } else {
       q.persist()
-      val c = assignedTo(q, lloydCentroids(q, k1, KmIters, viaVecSum, viaNc), viaNc)
-        .select(col("vec_id"), col("qv"), col("cid").as("ccid"))
-        .localCheckpoint()
+      val c = Pin(assignedTo(q, lloydCentroids(q, k1, KmIters, viaVecSum, viaNc), viaNc)
+        .select(col("vec_id"), col("qv"), col("cid").as("ccid")))
       q.unpersist(blocking = false)
-      (c, () => graft.core.Sessions.freeCheckpoint(c))
+      (c, () => Pin.free(c))
     }
 
   /** Nearest FINE centroid within each row's own coarse cell, via ONE

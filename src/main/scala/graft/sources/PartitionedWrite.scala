@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Pin
 
 /** Output-side table management: partitioned parquet layout with
   * dynamic partition overwrite, and small-file compaction.
@@ -57,11 +58,11 @@ object PartitionedWrite {
     val touched = updates.select(partitionCols.map(col): _*).distinct()
     val existing = spark.read.parquet(dir)
       .join(touched, partitionCols, "left_semi")
-    val merged = existing.join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .unionByName(updates)
-      .localCheckpoint() // materialize before replacing the files it reads
+    // materialize before replacing the files it reads
+    val merged = Pin(existing.join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
+      .unionByName(updates))
     overwritePartitions(merged, dir, partitionCols, maxRecordsPerFile)
-    merged.unpersist(false)
+    Pin.free(merged) // Dataset.unpersist is a no-op on a checkpoint
   }
 
   /** Compact one partition directory in place: read, coalesce to
@@ -75,17 +76,17 @@ object PartitionedWrite {
     require(partitionCols.length == partitionValues.length)
     val pred = partitionCols.zip(partitionValues)
       .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-    // localCheckpoint MATERIALIZES the partition before any file is
+    // the pin MATERIALIZES the partition before any file is
     // replaced — rewriting a directory from a lazy plan that still
     // reads it is a torn-read hazard (and Spark rejects the direct
     // overwrite-what-you-read form outright)
-    val part = spark.read.parquet(dir).filter(pred).localCheckpoint()
+    val part = Pin(spark.read.parquet(dir).filter(pred))
     val rows = part.count()
     if (rows > 0) {
       val nFiles = math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)
       overwritePartitions(part.coalesce(nFiles.toInt), dir, partitionCols,
         targetRecordsPerFile)
     }
-    part.unpersist(false)
+    Pin.free(part)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.Pin
 import graft.operators.Dedup
 
 /** Streaming incremental-ingest dedup — [[Dedup.incrementalNearDup]]'s
@@ -42,17 +43,18 @@ import graft.operators.Dedup
   * keys — + one probe join of those keys (|batch|·bands rows, broadcast)
   * against the index scan + the batch's internal candidate join + exact
   * verification bounded by the candidate set
-  * ([[Dedup.incrementalNearDupIndexed]]'s left-semi doc fetch, whose
-  * broadcast candidate ids number at most |batch| × bands × history
-  * bucket population — a hot bucket makes them large; see that
-  * operator's envelope). The EXECUTOR state is zero — no stateful
-  * operator, no watermark, no state store: the only state is the on-disk
-  * index. Nothing ever re-signatures history, and nothing history-sized
-  * is ever shuffled: a batch's shuffles are bounded by the batch and its
-  * candidates, however large the history (IncrementalDedupStreamSpec
-  * pins it). The per-batch
-  * terms that do grow with the corpus are the two history SCANS — the
-  * band index, and the registry's (id, text) read under the broadcast
+  * ([[Dedup.incrementalNearDupIndexed]]'s left-semi doc fetch against
+  * pinned candidate ids, which number at most |batch| × bands × history
+  * bucket population and broadcast while they fit the session's
+  * threshold — a hot bucket makes them large, and then the fetch plans a
+  * sort-merge join; see that operator's envelope). The EXECUTOR state is
+  * zero — no stateful operator, no watermark, no state store: the only
+  * state is the on-disk index. Nothing ever re-signatures history, and
+  * while the candidate ids broadcast nothing history-sized is shuffled:
+  * a batch's shuffles are bounded by the batch and its candidates,
+  * however large the history (IncrementalDedupStreamSpec pins it). The
+  * per-batch terms that do grow with the corpus are the two history
+  * SCANS — the band index, and the registry's (id, text) read under the
   * semi-join — which [[compactIndex]] keeps dense few-file reads instead
   * of one small parquet directory per micro-batch ever ingested.
   * All filesystem probing goes through the Hadoop FileSystem API
@@ -125,8 +127,8 @@ object IncrementalDedup {
     * first batch (no partition below `batchId`) takes the same single
     * call with empty history frames.
     *
-    * Executor loss: the verdicts come from the operator's `pairs`
-    * localCheckpoint (see [[Dedup.incrementalNearDupIndexed]]); losing
+    * Executor loss: the verdicts come from the operator's pinned `pairs`
+    * checkpoint (see [[Dedup.incrementalNearDupIndexed]]); losing
     * its blocks before the verdicts are written fails the write loudly,
     * and a replay of the batch id recomputes identical verdicts.
     *
@@ -181,19 +183,17 @@ object IncrementalDedup {
       // band keys linger but whose registry row is gone can surface as
       // a candidate but never as a verified pair (no shingles to
       // match), which is exactly kept-only semantics.
-      val out = verdicts.localCheckpoint()
+      val out = Pin(verdicts)
       val keptIds = out.filter(col("status") === "kept").select(col(idCol))
-      val keptDocs = pinned.join(keptIds, Seq(idCol), "left_semi")
-        .localCheckpoint()
+      val keptDocs = Pin(pinned.join(keptIds, Seq(idCol), "left_semi"))
       keptDocs.write.mode("overwrite").parquet(s"$docsDir/batch_id=$batchId")
-      val keptBands = batchBands
+      val keptBands = Pin(batchBands
         .join(keptIds.withColumnRenamed(idCol, "id"), Seq("id"), "left_semi")
-        .select(col("band"), col("band_hash"), col("id"))
-        .localCheckpoint()
+        .select(col("band"), col("band_hash"), col("id")))
       keptBands.write.mode("overwrite").parquet(s"$bandsDir/batch_id=$batchId")
       // real frees (Dataset.unpersist is a no-op on checkpoints)
-      graft.core.Sessions.freeCheckpoint(keptDocs)
-      graft.core.Sessions.freeCheckpoint(keptBands)
+      Pin.free(keptDocs)
+      Pin.free(keptBands)
       out
     }
   }
@@ -439,7 +439,7 @@ object IncrementalDedup {
           if (compactAsync) compactIndexAsync(spark, indexDir, id)
           else compactIndex(spark, indexDir, id)
         }
-        // Free this batch's localCheckpoint blocks deterministically
+        // Free this batch's pinned checkpoint blocks deterministically
         // (ADVICE r8): processBatch's intermediates (cands/pairs and
         // keptOnlyHistory's out) are otherwise reclaimed only when the
         // ContextCleaner GCs the DataFrames — on a long-running

@@ -1,0 +1,72 @@
+package graft.core
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.StorageBridge
+import graft.SparkSpec
+
+class PinSpec extends SparkSpec {
+
+  /** 100 rows cut from a 10^5 × 10^5 join: the optimizer's estimate for
+    * it is the join's (hundreds of GB), its real size a few KB. */
+  private def smallCutOfBigJoin(): DataFrame = {
+    val a = spark.range(100000).select(col("id").as("k"))
+    val b = spark.range(100000).select(col("id").as("k2"))
+    a.join(b, col("k") === col("k2")).filter(col("k") < 100).select("k")
+  }
+
+  private def semiJoinPlan(ids: DataFrame): SparkPlan =
+    spark.range(100000).select(col("id").as("k"), (col("id") * 7).as("v"))
+      .join(ids, Seq("k"), "left_semi")
+      .queryExecution.sparkPlan
+
+  private def joins(p: SparkPlan): Seq[String] = p.collect {
+    case _: BroadcastHashJoinExec => "bhj"
+    case _: SortMergeJoinExec => "smj"
+  }
+
+  test("a pinned small frame reports its stored size and plans a broadcast join") {
+    val pinned = Pin(smallCutOfBigJoin())
+    val size = pinned.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > 0 && size < 1024 * 1024, s"pinned 100-row frame reports $size bytes")
+    assert(joins(semiJoinPlan(pinned)) == Seq("bhj"))
+    assert(pinned.count() == 100)
+    Pin.free(pinned)
+  }
+
+  test("a raw localCheckpoint keeps the pre-materialization estimate (why Pin exists)") {
+    val raw = smallCutOfBigJoin().localCheckpoint()
+    val size = raw.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > (BigInt(1L) << 30), s"raw checkpoint reports $size bytes")
+    assert(joins(semiJoinPlan(raw)) == Seq("smj"))
+    Pin.free(raw)
+  }
+
+  test("an empty pinned frame reports 1 byte") {
+    val empty = Pin(spark.range(0).toDF())
+    assert(empty.queryExecution.optimizedPlan.stats.sizeInBytes == 1)
+    Pin.free(empty)
+  }
+
+  test("Pin.free leaves none of its RDDs persistent, and so does the tools' sweep") {
+    val sc = spark.sparkContext
+    def pinnedIds(body: => DataFrame): (DataFrame, Set[Int]) = {
+      val before = sc.getPersistentRDDs.keySet
+      val df = body
+      (df, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    val (freed, ids) = pinnedIds(Pin(smallCutOfBigJoin()))
+    assert(ids.nonEmpty)
+    Pin.free(freed)
+    assert(ids.intersect(sc.getPersistentRDDs.keySet).isEmpty)
+    // TimeQuery/ScaleBench/Bench sweep every persistent RDD between runs;
+    // the pinned frame's LogicalRDD is a copy over the same RDD, so the
+    // sweep reaches its blocks too
+    val (_, sweptIds) = pinnedIds(Pin(smallCutOfBigJoin()))
+    sc.getPersistentRDDs.filter { case (id, _) => sweptIds(id) }
+      .values.foreach(_.unpersist(true))
+    assert(sweptIds.forall(id => StorageBridge.storedBytes(id) == 0))
+  }
+}

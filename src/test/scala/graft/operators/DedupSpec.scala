@@ -712,4 +712,70 @@ class DedupSpec extends SparkSpec {
           s"invented ${(viaPrefix -- exact).size} pairs")
     }
   }
+
+  test("the public n-gram entries refuse the stage form, which needs its free thunk") {
+    for (run <- Seq[() => Unit](
+        () => Dedup.ngramJaccard(docs, shingleForm = "stage"),
+        () => Dedup.ngramContainment(docs, shingleForm = "stage"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("ngramJaccardForm"), e.getMessage)
+    }
+  }
+
+  test("no graft-shingle-stage dir survives a failed staging write") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stageDirs(): Set[String] =
+      Option(tmp.list()).map(_.toSet).getOrElse(Set.empty)
+        .filter(_.startsWith("graft-shingle-stage"))
+    val before = stageDirs()
+    val failing = docs.withColumn("text",
+      when(col("doc_id") === 3L, raise_error(lit("boom"))).otherwise(col("text")))
+    intercept[Exception](
+      Dedup.ngramJaccardForm(failing, 3, 0.5, "doc_id", "text", 0L, "stage"))
+    assert(stageDirs() -- before == Set.empty[String])
+  }
+
+  test("q35 and q97 never shuffle the corpus text (the pinned candidate ids broadcast)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the queries read `<dir>/documents.parquet`: the near-dup pair 2/3
+    // gives both verify legs candidates, and 300 unrelated docs make the
+    // candidate generators' size estimates large, as on a real corpus
+    val d = java.nio.file.Files.createTempDirectory("dedup-docs").toString
+    val filler = (100L until 400L).map(i =>
+      (i, (0 until 14).map(j => s"w${(i * 31 + j * 7919) % 100003}").mkString(" ")))
+    docs.unionByName(filler.toDF("doc_id", "text"))
+      .write.parquet(s"$d/documents.parquet")
+    val textShuffles = Seq(
+      "q35" -> (() => graft.queries.TextQueries.q35MinhashLsh(spark, d)),
+      "q97" -> (() => graft.queries.TextQueries.q97PrefixJoin(spark, d))
+    ).map { case (name, q) =>
+      // the verify leg's docs restriction runs inside an eager pin, so
+      // every execution of the query counts, not just the final one
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val listener = new QueryExecutionListener {
+        def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val rows = try {
+        val n = q().collect().length
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        n
+      } finally spark.listenerManager.unregister(listener)
+      assert(rows > 0, s"$name found no pairs")
+      name -> plans.asScala.toSeq.flatMap(p => helper.collect(p) {
+        case e: ShuffleExchangeExec if e.child.output.exists(_.name == "text") => e
+      })
+    }.filter(_._2.nonEmpty)
+    assert(textShuffles.isEmpty, textShuffles.map { case (name, es) =>
+      s"$name shuffles the text column:\n${es.map(_.treeString).mkString}"
+    }.mkString("\n"))
+  }
 }

@@ -196,7 +196,7 @@ class VectorQueriesSpec extends SparkSpec {
     free()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "free() must release the checkpoint blocks (Dataset.unpersist is a " +
-        "no-op on checkpointed frames — Sessions.freeCheckpoint is the real free)")
+        "no-op on checkpointed frames — Pin.free is the real free)")
   }
 
   test("codegen QuantizeExpr equals the aggregate+transform Column form") {
