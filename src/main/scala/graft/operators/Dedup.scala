@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Pin
-import graft.functions.{SimHash, TextFunctions => T, VectorFunctions => V}
+import graft.functions.{MinHashFn, SimHash, SimHashFn, TextFunctions => T,
+  VectorFunctions => V}
 
 /** Document / embedding deduplication operators for the training-data
   * pipeline: exact (hash-groupBy), n-gram Jaccard (shingle join), MinHash+
@@ -353,21 +354,36 @@ object Dedup {
       .select("id_a", "id_b", "n_common", "containment")
   }
 
-  /** MinHash signatures: k independent hashes, min over shingles.
-    * The (variable-length) shingle string is hashed ONCE; the k
-    * "permutations" re-hash the resulting fixed 8-byte value — one string
-    * pass + k word hashes per shingle instead of k string passes.
+  /** MinHash signatures: k independent hashes, min over shingles,
+    * computed in the row that carries the doc
+    * ([[graft.functions.MinHashExpr]]: no per-shingle rows, no shuffle).
+    * The (variable-length) shingle string is hashed ONCE; the k "permutations" re-hash the
+    * resulting fixed 8-byte value — one string pass + k word hashes per
+    * shingle instead of k string passes. A doc with no shingles (null
+    * text, fewer than `n` tokens) gets no row.
+    *
+    * PRECONDITION: `idCol` values are unique. The signature is per row,
+    * so two rows sharing an id get two rows here (the earlier group-by
+    * form silently merged them into one signature over both texts).
+    * Every repo caller passes a primary-key doc_id.
     * Output: id, sig array<long> of length k. */
   def minhashSignatures(docs: DataFrame, k: Int = 16, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"),
-      explode(T.shingles(col(textCol), n)).as("shingle"))
-      .withColumn("h", xxhash64(col("shingle")))
-    val mins = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i"))
-    sh.groupBy("id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    rowsWhere(docs.select(col(idCol).as("id"),
+      MinHashFn.minhash(T.shingles(col(textCol), n), k).as("sig")), col("sig").isNotNull)
+
+  /** The rows of `df` where `keep` holds, each column of `df` computed
+    * ONCE per row. A plain `filter` on a computed column is pushed below
+    * the projection that computes it (into a join condition, where there
+    * is one), with the expression substituted for the column, so every
+    * row computes it again in the filter: measured 1.9-2.0 s against
+    * 1.0-1.1 s for the MinHash signatures of 10^5 docs (sf0.1 texts ×
+    * 20), and four `array_intersect`s per candidate pair in the verify
+    * leg. A generator's output is opaque to that pushdown, so `keep`
+    * picks a one-row array or null, and `explode` of null emits no row. */
+  private def rowsWhere(df: DataFrame, keep: Column): DataFrame =
+    df.select(explode(when(keep, array(struct(df.columns.map(col): _*)))).as("row"))
+      .select("row.*")
 
   /** LSH band keys of [[minhashLsh]]'s candidate join — (id, sig, band,
     * band_hash), one row per (doc, band). Factored out so the
@@ -379,11 +395,11 @@ object Dedup {
       pinSigs: Boolean = false): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    // pinSigs: one Pin of the (id, sig) frame — the k-hash
-    // signature pipeline (corpus scan + shingle explode + k rehashes +
-    // groupBy-min) is otherwise re-derived by every consumer of the
-    // banded frame (minhashLsh reads it on both join sides). Narrow:
-    // ~8(k+1) bytes/doc. Same rationale as [[DefaultPinSims]].
+    // pinSigs: one Pin of the (id, sig) frame — the signature
+    // (corpus scan + shingling + k rehashes per shingle, all per row) is
+    // otherwise re-derived by every consumer of the banded frame
+    // (minhashLsh reads it on both join sides). Narrow: ~8(k+1)
+    // bytes/doc. Same rationale as [[DefaultPinSims]].
     val sigs0 = minhashSignatures(docs, k, n, idCol, textCol)
     val sigs = if (pinSigs) Pin(sigs0) else sigs0
     sigs.select(col("id"), col("sig"),
@@ -613,14 +629,20 @@ object Dedup {
     * within hamming 12 on token features, vs 864 within hamming 16 on
     * 3-gram shingle features (true J>=0.5 pairs sit at 0-11 on both).
     * Shingles are also exactly what [[verifiedJaccard]] checks, so the
-    * signature approximates the metric the verifier enforces. */
+    * signature approximates the metric the verifier enforces.
+    *
+    * Computed in the row ([[graft.functions.SimHashExpr]] over xxhash64
+    * features): no per-shingle rows, no shuffle. A doc with no shingles
+    * gets no row; `idCol` must be unique, as for [[minhashSignatures]]. */
   def simhashDocs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): DataFrame =
-    docs.select(col(idCol).as("id"),
-        explode(array_distinct(T.shingles(col(textCol), n))).as("tok"))
-      .select(col("id"), xxhash64(col("tok")).as("h"))
-      .groupBy("id")
-      .agg(SimHash(col("h")).as("simhash"))
+    simhashFrame(docs, idCol, textCol, n, md5 = false)
+
+  private def simhashFrame(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, md5: Boolean): DataFrame =
+    rowsWhere(docs.select(col(idCol).as("id"),
+      SimHashFn.simhash(T.shingles(col(textCol), n), md5).as("simhash")),
+      col("simhash").isNotNull)
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist. Candidates
     * via (k+1)-chunk pigeonhole equality join, verified with bit_count.
@@ -676,15 +698,11 @@ object Dedup {
     * (TextFunctions.hash60) instead of xxhash64, so a SQL engine can
     * recompute every signature bit from the same hex digits — the
     * q39/q40 recompute-the-buckets oracle pattern applied to simhash.
-    * (Bits 60-63 of the aggregated signature are structurally 0: every
-    * feature hash is < 2^60, so those counters only ever decrement.) */
+    * (Bits 60-63 of the signature are structurally 0: every feature
+    * hash is < 2^60, so those counters only ever decrement.) */
   def simhashDocsPortable(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): DataFrame =
-    docs.select(col(idCol).as("id"),
-        explode(array_distinct(T.shingles(col(textCol), n))).as("tok"))
-      .select(col("id"), T.hash60(col("tok")).as("h"))
-      .groupBy("id")
-      .agg(SimHash(col("h")).as("simhash"))
+    simhashFrame(docs, idCol, textCol, n, md5 = true)
 
   /** SimHash near-dup candidates at the Manku chunk width — the
     * MID-CORPUS dial (fine to ~10^6 docs; the at-scale simhash is
@@ -766,11 +784,14 @@ object Dedup {
     * eager localCheckpoint of the narrow (id, simhash) signature frame
     * (16 bytes/doc — ~800 MB even at 5·10⁷ docs, nothing like the
     * exploded-shingle frames the "rescan" decision was about). Without
-    * it, [[simhashKeyedJoin]]'s two join sides each re-derive the FULL
-    * signature pipeline — corpus scan, shingle explode, per-shingle md5,
-    * SimHash aggregation (2 corpus-sized shuffles) — because the sides
-    * shuffle on different keys and Spark reuses only identical Exchange
-    * subtrees. Flipped to true by r14 measurement (interleaved floors;
+    * it, [[simhashKeyedJoin]]'s two join sides each re-derive the
+    * signature — corpus scan, shingling, per-shingle feature hash — because
+    * the sides shuffle on different keys and Spark reuses only identical
+    * Exchange subtrees. The r14 numbers below were measured when the
+    * signature was an explode + SimHash aggregation (2 corpus-sized
+    * shuffles); it is now computed in the row with no shuffle, so the
+    * pin saves a narrow rescan only, and whether it still pays has not
+    * been re-measured. Flipped to true by r14 measurement (interleaved floors;
     * OPTIMIZATION_r14 §7): with pruneSingletons, q116 at g100
     * 123.5 → 101.8 s (and 449.6 → 134.7 s in the cold-cache window),
     * q123 at g100 558.7/353.4 → 331.1/241.9 s (1.69×/1.46×, both
@@ -1316,7 +1337,8 @@ object Dedup {
     verifiedJaccardWithFrees(docs, candidates, threshold, n, idCol, textCol)._1
 
   /** [[verifiedJaccard]] plus a cleanup that frees its two pinned
-    * intermediates (candidate pairs; candidate-doc shingles), so a caller
+    * intermediates (candidate pairs; each candidate doc's distinct
+    * shingles as one array row), so a caller
     * that materializes the result eagerly — the streaming ingest path
     * does, via its own pin — can release them
     * deterministically instead of waiting for the ContextCleaner
@@ -1343,7 +1365,15 @@ object Dedup {
     * The checkpoint form pins through [[graft.core.Pin]], so the
     * candidate ids that restrict `docs` report their real size: when
     * they fit under the broadcast threshold the restriction broadcasts
-    * them and `docs` (text included) is only scanned, never shuffled. */
+    * them and `docs` (text included) is only scanned, never shuffled.
+    *
+    * `n_common` is `size(array_intersect(a, b))` over the two docs'
+    * distinct shingle arrays: exact (string equality), with no
+    * (pair × shingle) rows and no pair group-by. Each pair reads its two
+    * arrays, so a doc whose row appears twice in `docs` (a history read
+    * that overlaps a compaction, see [[graft.streaming.IncrementalDedup]])
+    * duplicates the pair's output row with the SAME Jaccard instead of
+    * double-counting its shingles. */
   private[graft] def verifiedJaccardWithFrees(docs: DataFrame,
       candidates: DataFrame, threshold: Double, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1354,8 +1384,8 @@ object Dedup {
       if (viaCheckpoint) Pin.free(df)
       else { df.unpersist(blocking = false); () }
     // Shingle ONLY the docs that appear in a candidate pair, and only
-    // ONCE (round 9). The previous shape shingled the FULL corpus and,
-    // because the three consumers below partition differently (id agg,
+    // ONCE (round 9). The earlier shape shingled the FULL corpus and,
+    // because its three consumers partitioned differently (id agg,
     // id_a join, (id_b, shingle) join), Catalyst re-derived the
     // explode+distinct subtree per consumer — six corpus-sized shuffles
     // per query at the g100 decade. The per-stage wall ladder
@@ -1363,13 +1393,12 @@ object Dedup {
     // 5.9x for a 3.3x corpus against a candidate volume pinned 1.000:
     // the leg's shuffle footprint outgrew the box's fixed page cache —
     // the third fixed-local-resource trap after shuffle width and heap.
-    // Restricting to candidate docs is EXACT by construction: every
-    // consumer inner-joins on candidate ids (sizes feeds pair-id joins;
-    // the n_common joins are keyed by id_a/id_b), so non-candidate docs
-    // never influence the output — the same left-semi bound
+    // Restricting to candidate docs is EXACT by construction: both
+    // joins below are keyed by the pair's id_a / id_b, so non-candidate
+    // docs never influence the output — the same left-semi bound
     // [[incrementalNearDupIndexed]] documents for its verify pass.
     // Both pinned frames are bounded by the measured-linear candidate
-    // volume (pairs; candidate docs' shingles <= corpus shingles), and
+    // volume (pairs; one shingle array per candidate doc), and
     // they stop the candidate GENERATOR (a full LSH/simhash plan) from
     // re-running once per consumer.
     val cand = pin(candidates.select("id_a", "id_b"))
@@ -1377,20 +1406,26 @@ object Dedup {
       .unionByName(cand.select(col("id_b").as(idCol)))
       .distinct()
     val needed = docs.join(candIds, Seq(idCol), "left_semi")
-    val sh = pin(docShingles(needed, idCol, textCol, n, 0L))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = cand
-      .join(sh.select(col("id").as("id_a"), col("shingle")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_common"))
-    val out = common
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
+    // one row per candidate doc: its distinct shingle set as an array
+    // (a doc without shingles can share none, so it is dropped)
+    val sh = pin(rowsWhere(needed.select(col(idCol).as("id"),
+      array_distinct(T.shingles(col(textCol), n)).as("sh")), size(col("sh")) > 0))
+    // |A∩B| by string equality on the two arrays: exact, and no
+    // (pair × shingle) rows or pair group-by. Zero-overlap pairs are
+    // dropped: like [[ngramJaccard]], the output holds only pairs that
+    // share a shingle (this matters at threshold 0).
+    val scored = cand
+      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
+        size(col("sh_a")).cast("long").as("sa"),
+        size(col("sh_b")).cast("long").as("sb"))
       .withColumn("jaccard",
         round(col("n_common") / (col("sa") + col("sb") - col("n_common")), 4))
-      .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_common", "jaccard")
+    val out = rowsWhere(scored,
+      col("n_common") > 0 && col("jaccard") >= threshold)
     (out, () => { free(cand); free(sh) })
   }
 

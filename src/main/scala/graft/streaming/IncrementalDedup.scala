@@ -218,8 +218,11 @@ object IncrementalDedup {
     *    true history (a committed generation plus not-yet-deleted
     *    sources). Duplicate index rows are semantically inert by
     *    construction of the operator: candidate pairs are `distinct()`ed
-    *    after the band join, and verification shingles are distinct per
-    *    (id, shingle) — asserted by the duplicate-tolerance spec;
+    *    after the band join, and the verify leg reads each doc's distinct
+    *    shingles as one array per row, so a duplicated registry row
+    *    duplicates a pair's row with the same Jaccard and never
+    *    double-counts a shingle (the two verdict aggregates take a min) —
+    *    asserted by the duplicate-tolerance specs;
     *  - re-running compaction at the same `upTo` is idempotent: a
     *    committed generation skips the write and only finishes the
     *    source deletes (whose content it provably contains — sources
@@ -266,8 +269,8 @@ object IncrementalDedup {
     * run on a side thread while later micro-batches read the index
     * (sources are immutable committed partitions; a concurrent history
     * read that lists a partially-committed generation sees whole
-    * duplicate files, which the operator's distinct()s make inert —
-    * the same superset argument as the crash windows). */
+    * duplicate files, which the operator makes inert — the same
+    * superset argument as the crash windows). */
   private def compactSideWrite(spark: SparkSession, dir: String, upTo: Long,
       targetRecordsPerFile: Long): Unit = {
     val (fs, _) = fsPath(spark, dir)

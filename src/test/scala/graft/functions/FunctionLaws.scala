@@ -1,5 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Expression, Literal,
+  Md5, Substring, XxHash64}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
@@ -78,6 +81,56 @@ object FunctionLaws extends Properties("graft.functions") {
     // 1-ulp-off-the-boundary adversaries
     Gen.chooseNum(-130, 130).map(i => Math.nextDown(i + 0.5)),
     Gen.chooseNum(-130, 130).map(i => Math.nextUp(i + 0.5)))
+
+  /** Shingle arrays of `anyText` (n = 1..4), as the signature
+    * expressions receive them. */
+  private val shingled: Gen[(String, Int)] = for {
+    s <- anyText
+    n <- Gen.choose(1, 4)
+  } yield (s, n)
+
+  private def shinglesOf(s: String, n: Int): Seq[UTF8String] = {
+    val a = ShinglesUtil.shingles(UTF8String.fromString(s), n)
+    (0 until a.numElements()).map(a.getUTF8String)
+  }
+
+  private def evalLong(e: Expression): Long = e.eval().asInstanceOf[Long]
+
+  // Catalyst's own hash expressions, eval'd on literals: xxhash64(s) and
+  // xxhash64(i, h) (children fold left to right from seed 42)
+  private def xxRef(s: UTF8String): Long =
+    evalLong(new XxHash64(Seq(Literal(s, StringType))))
+
+  private def hash60Ref(s: UTF8String): Long = evalLong(Cast(
+    Conv(Substring(Md5(Literal(s.getBytes, BinaryType)), Literal(1), Literal(15)),
+      Literal(16), Literal(10)), LongType))
+
+  property("minhash equals per-component min of Catalyst xxhash64(i, xxhash64(s))") =
+    forAll(shingled, Gen.choose(1, 16)) { case ((s, n), k) =>
+      val sh = shinglesOf(s, n)
+      val got = MinHashUtil.signature(ShinglesUtil.shingles(UTF8String.fromString(s), n), k)
+      if (sh.isEmpty) Prop(got == null) :| s"empty <$s> n=$n"
+      else {
+        val want = (0 until k).map(i =>
+          sh.map(x => evalLong(new XxHash64(Seq(Literal(i), Literal(xxRef(x), LongType))))).min)
+        Prop(got.toLongArray().toSeq == want) :| s"<$s> n=$n k=$k"
+      }
+    }
+
+  property("simhash equals the sign vector of Catalyst feature hashes over distinct shingles") =
+    forAll(shingled, Gen.oneOf(false, true)) { case ((s, n), md5) =>
+      val sh = shinglesOf(s, n)
+      val got = SimHashUtil.simhash(ShinglesUtil.shingles(UTF8String.fromString(s), n), md5)
+      if (sh.isEmpty) Prop(got == null) :| s"empty <$s> n=$n"
+      else {
+        val hs = sh.distinct.map(x => if (md5) hash60Ref(x) else xxRef(x))
+        val want = (0 until SimHash.Bits).foldLeft(0L) { (acc, i) =>
+          val set = hs.count(h => ((h >>> i) & 1L) == 1L)
+          if (2 * set > hs.size) acc | (1L << i) else acc
+        }
+        Prop(got.longValue == want) :| s"<$s> n=$n md5=$md5"
+      }
+    }
 
   property("quantize rounding equals the BigDecimal HALF_UP builtin") =
     forAll(quantRange) { d =>

@@ -70,6 +70,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("verify leg on all pairs equals the frame-level distinct form, repeats and zero overlap included") {
+    // the array_intersect verify over each doc's distinct shingle array
+    // must reproduce the shingle-keyed join on the distinct frame: same
+    // pairs, n_common and jaccard. Docs 0/1 repeat their own trigrams;
+    // doc 3 shares nothing, so threshold 0 holds zero-overlap pairs
+    // among the candidates (the keyed join never emits them); doc 4 has
+    // fewer than n tokens and no shingles at all.
+    val rep = Seq(
+      (0L, "alpha beta gamma alpha beta gamma alpha beta gamma delta epsilon zeta"),
+      (1L, "alpha beta gamma alpha beta gamma alpha beta gamma delta epsilon eta"),
+      (2L, "one two three four five six one two three four five six seven"),
+      (3L, "totally unrelated words about catalyst plans and shuffle partitions"),
+      (4L, "too short"),
+      (5L, "alpha beta gamma delta epsilon zeta one two three four five six"),
+    ).toDF("doc_id", "text")
+    val allPairs = rep.select(col("doc_id").as("id_a"))
+      .crossJoin(rep.select(col("doc_id").as("id_b")))
+      .filter(col("id_a") < col("id_b"))
+    for (t <- Seq(0.0, 0.5)) {
+      val ref = Dedup.ngramJaccardForm(rep, 3, t, "doc_id", "text", 0L,
+        "distinct")._1.orderBy("id_a", "id_b").collect().toSeq
+      val got = Dedup.verifiedJaccard(rep, allPairs, t)
+        .orderBy("id_a", "id_b").collect().toSeq
+      assert(ref.nonEmpty, s"threshold $t: vacuous reference")
+      assert(got == ref, s"threshold $t")
+    }
+  }
+
   test("hot-shingle pruning keeps near-dup pairs while bounding join width") {
     // shingles of the 2/3 near-dup pair are rare; df cap removes only the
     // corpus-wide hot shingles, so the pair survives with jaccard intact

@@ -11,11 +11,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.XxHash64
-import org.apache.spark.sql.catalyst.expressions.aggregate.Min
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -23,6 +20,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.core.{Sessions, Tables}
+import graft.functions.MinHashExpr
 import graft.operators.Dedup
 
 /** Top-level so Catalyst can generate its encoder (inner classes can't
@@ -237,6 +235,27 @@ class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper 
     assert(withDups == clean, "duplicated history rows changed a verdict")
   }
 
+  test("a duplicated history row does not flip a borderline verdict") {
+    // A history read that lands after out-of-band compaction committed a
+    // generation, but before its sources are deleted, sees every history
+    // row twice. History doc 1 and batch doc 100 have 12 distinct
+    // trigrams each and share 6: J = 6/18 = 0.33 < 0.5. The hand-made
+    // band keys put doc 1 in every bucket of doc 100 (an LSH false
+    // positive), so only exact verification keeps doc 100; counting
+    // doc 1's shingles twice reads 12/24 = 0.5 and blames it.
+    val shared = (0 until 8).map(i => s"s$i")
+    val hist = Doc(1L, ((0 until 6).map(i => s"h$i") ++ shared).mkString(" "))
+    val doc = Doc(100L, (shared ++ (0 until 6).map(i => s"b$i")).mkString(" "))
+    val batchBands = (0 until 4).map(b => (b, 7L + b, 100L)).toDF("band", "band_hash", "id")
+    val histBands = batchBands.withColumn("id", lit(1L))
+    for (copies <- Seq(1, 2)) {
+      val got = sortedRows(Dedup.incrementalNearDupIndexed(
+        Seq.fill(copies)(histBands).reduce(_ unionByName _),
+        Seq.fill(copies)(hist).toDF(), Seq(doc).toDF(), batchBands))
+      assert(got == Seq((100L, "kept", -1L)), s"$copies copies of the history row")
+    }
+  }
+
   test("keptOnlyHistory gives representative-only matching (A~B~C chains)") {
     // Chain fixture: A ~ B (J >= 0.5), B ~ C, but A vs C below threshold.
     // Batch 0 = {A, B}: B is dup_batch of A and (in kept-only mode)
@@ -372,15 +391,10 @@ class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper 
     val tmp = Files.createTempDirectory("incdedup_sigonce").toString
     val (indexDir, outDir) = (s"$tmp/index", s"$tmp/out")
     runBatch(indexDir, outDir, 0, streamBatch(0, 100))
-    // the MinHash signature is k min(xxhash64(...)) aggregates; no other
-    // operator in the batch's plans aggregates a min of a hash
-    def signs(p: SparkPlan): Boolean = find(p) {
-      case a: BaseAggregateExec => a.aggregateExpressions.exists(_.aggregateFunction match {
-        case Min(_: XxHash64) => true
-        case _ => false
-      })
-      case _ => false
-    }.isDefined
+    // the MinHash signature is computed in the row by MinHashExpr; no
+    // other operator in the batch's plans evaluates it
+    def signs(p: SparkPlan): Boolean =
+      find(p)(_.expressions.exists(_.exists(_.isInstanceOf[MinHashExpr]))).isDefined
     for (i <- 1 to 2) {
       val (_, plans) = observed(runBatch(indexDir, outDir, i, streamBatch(i, 100)))
       assert(plans.count(signs) == 1,
