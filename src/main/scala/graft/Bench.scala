@@ -39,15 +39,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt, "bench")
+    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions")
     // Warm up shuffle/codegen machinery and the parquet reader path so
     // one-time infra init isn't charged to the first measured query. Each
     // warm-up is individually guarded: a missing table must not prevent
@@ -175,7 +168,7 @@ object Bench {
     // BENCH_HISTORY without them — the same blind-comparison hazard
     // ScaleBench's parts/driver_mem_gb stamps fixed.
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","harness":"noop","cache_cleared":true,"cpus":$cpus,"shuffle_partitions":$cpus,"queries":$qs,"raw":$raws,"ok":$oks,"all_ok":$allOk,"sentinel_floor":${fmt(sentFloor)},"sentinel_max":$sents,"stall_suspect":$suspectJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","harness":"noop","cache_cleared":true,"cpus":$cpus,"shuffle_partitions":$shuffleParts,"queries":$qs,"raw":$raws,"ok":$oks,"all_ok":$allOk,"sentinel_floor":${fmt(sentFloor)},"sentinel_max":$sents,"stall_suspect":$suspectJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench_out.json"), json + "\n")
     // Durable history (ADVICE r5): bench_out.json is overwritten every
     // run and the driver's archived artifact stays unparsed on rc!=0 —

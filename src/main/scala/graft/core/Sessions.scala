@@ -2,13 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory used by tests and ad-hoc mains.
-  *
-  * Verify/Bench (the driver contract) build their own sessions; this factory
-  * keeps the same settings so local test behavior matches driver runs:
-  * UTC session time zone (oracle parity), AQE on (runtime re-plan / skew
-  * handling at scale), shuffle partitions sized to the local core count
-  * rather than the 200 default.
+/** The one SparkSession factory: tests, Verify, Bench and the tool
+  * mains build their session here (GenScale, the benchmark's corpus
+  * generator, keeps its own), so tests behave like the Verify and Bench
+  * runs: UTC session time zone (oracle parity), AQE on (runtime re-plan
+  * / skew handling at scale), shuffle partitions sized to the local core
+  * count rather than the 200 default.
   */
 object Sessions {
 

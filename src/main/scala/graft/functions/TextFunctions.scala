@@ -28,27 +28,18 @@ object TextFunctions {
     regexp_extract_all(lower(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
 
   /** Token n-gram shingles ("w1 w2 w3"). Empty array for short docs
-    * (and for null text — the `when` predicate is null there, so the
-    * HOF form falls to its otherwise branch; [[ShinglesExpr]] mirrors
-    * it). Dispatches on [[UseShinglesExpr]]. */
-  def shingles(text: Column, n: Int): Column =
-    if (UseShinglesExpr) ShinglesFn.shinglesVec(text, n)
-    else shinglesViaHof(text, n)
+    * and for null text. The codegen [[ShinglesExpr]] (round 13): the
+    * HOF form below is CodegenFallback — `transform`/`slice` evaluate
+    * interpreted, a closure dispatch + slice allocation per window, at
+    * the head of the whole text-dedup family — and measured 9-25x
+    * slower (BENCH_SCALE_r13_shexpr; see Shingles.scala's scaladoc). */
+  def shingles(text: Column, n: Int): Column = ShinglesFn.shinglesVec(text, n)
 
-  /** Default shingle strategy: the codegen [[ShinglesExpr]] (round 13).
-    * The HOF form below is CodegenFallback — `transform`/`slice`
-    * evaluate interpreted, a closure dispatch + slice allocation per
-    * window, at the head of the whole text-dedup family
-    * (q34/q35/q44/q97/q100/q116/q119/q120 all shingle first; VERDICT
-    * r12 #1). Flipped by measurement — see Shingles.scala's scaladoc
-    * and the round-13 probe artifact (BENCH_SCALE_r13_shexpr). Kept as
-    * a @volatile var only for the TimeQuery A/B arms; library callers
-    * should not touch it. */
-  @volatile private[graft] var UseShinglesExpr: Boolean = true
-
-  /** The interpreted higher-order-function shingle form — the pre-r13
-    * default, kept as the measurement baseline arm. String-identical to
-    * [[ShinglesExpr]] (TextFunctionsSpec pins it). */
+  /** The interpreted higher-order-function shingle form, kept as the
+    * reference [[shingles]] is tested against: string-identical to
+    * [[ShinglesExpr]] (TextFunctionsSpec pins it). On null text the
+    * `when` predicate is null, so it falls to the otherwise branch and
+    * returns an empty array, as ShinglesExpr does. */
   private[graft] def shinglesViaHof(text: Column, n: Int): Column = {
     val t = tokens(text)
     when(size(t) >= n,

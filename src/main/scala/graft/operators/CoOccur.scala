@@ -54,18 +54,20 @@ object CoOccur {
     * and 42x on quantize. `viaExpr = true` (default) swaps the emitter
     * for the codegen [[graft.functions.PairCombosExpr]] (output
     * identical, CoOccurSpec pins all three forms frame-equal); the HOF
-    * arm is kept as the A/B baseline.
+    * emitter stays as the reference CoOccurSpec checks the codegen one
+    * against.
     *
-    * Round-13 re-measurement (TimeQuery q21_join / q21_groups_hof /
-    * q21_groups_expr, interleaved at sf0.1): the codegen emitter removes
-    * the HOF penalty entirely (groups_hof floor 6.11 s vs groups_expr
+    * Round-13 re-measurement (interleaved at sf0.1): the codegen emitter
+    * removes the HOF penalty entirely (HOF floor 6.11 s vs codegen
     * 3.56-3.67 s), but with the scale-safe pre-bound anti-join in place
     * the whole form TIES the self-join on calm floors (3.56 vs 3.35 s —
     * inside this host's noise band). On a tie the incumbent stands:
     * q21/q74 keep [[pairs]]; this form remains the measured alternative
     * for inputs that arrive already grouped (where collect_list is free)
     * or where the S² -> S(S−1)/2 candidate reduction dominates (very
-    * large S near the cap). */
+    * large S near the cap). Whether q21 should switch once singleton
+    * pruning sits in front of both forms is still open (TimeQuery's
+    * q21_join / q21_groups_expr arms). */
   def pairsViaGroups(df: DataFrame, keyCol: String, itemCol: String,
       minShared: Long = 1L, maxItemsPerKey: Long = 64L,
       viaExpr: Boolean = true): DataFrame = {

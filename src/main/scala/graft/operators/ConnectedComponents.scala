@@ -39,19 +39,10 @@ object ConnectedComponents {
     *              (nodes still chained through intermediates), which on a
     *              dedup pipeline means keeping duplicates; fail loudly
     *              instead. Pass false only for diagnostics.
-    * @param onRound diagnostic hook, called once after the initial edge
-    *              materialization (round 0: pair lineage + symmetrize +
-    *              distinct) and once per star round with (round, seconds,
-    *              edge rows) — the wall-exponent decomposition tool
-    *              ([[graft.tools.CCRounds]]) uses it to pin whether a
-    *              super-linear total comes from round COUNT or per-round
-    *              cost. No-op by default; never changes the result.
     * @return (id, component) — one row per distinct node in `pairs`,
     *         component = min node id of its connected component */
   def resolve(pairs: DataFrame, srcCol: String = "id_a", dstCol: String = "id_b",
-      maxIter: Int = 20, requireConverged: Boolean = true,
-      onRound: (Int, Double, Long) => Unit = (_, _, _) => ()): DataFrame = {
-    val tInit = System.nanoTime()
+      maxIter: Int = 20, requireConverged: Boolean = true): DataFrame = {
     // Evaluate the (possibly expensive) pair lineage exactly ONCE: the
     // callers feed ngramJaccard/minhashLsh output whose shingle-df
     // aggregates and candidate self-join would otherwise recompute for
@@ -90,17 +81,14 @@ object ConnectedComponents {
     }
 
     var sig = signature(edges)
-    onRound(0, (System.nanoTime() - tInit) / 1e9, sig._1)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
       edges = Pin(starStep(starStep(edges, large = true), large = false))
       val next = signature(edges)
       converged = next == sig
       sig = next
       iter += 1
-      onRound(iter, (System.nanoTime() - t0) / 1e9, next._1)
     }
     if (requireConverged && !converged)
       throw new IllegalStateException(

@@ -40,14 +40,9 @@ object Dedup {
     * shuffle for it (round 11: the g1000 decade's 2.65B exploded rows
     * overflowed this box's disk through exactly that shuffle; at any
     * scale it was one whole extra shuffle in the q34/q44/q97/q100
-    * family's lineage for a set-identity no-op). The old distinct's
-    * exchange was also the reuse point for multi-consumer plans
-    * (ngramJaccard reads sh three times + the hot-df aggregate); that
-    * role is now explicit — [[shingleFrame]]'s forms, default
-    * "rescan" (this frame as-is, re-derived per consumer;
-    * [[DefaultShingleForm]], measured round 13), with "pin" (one shared
-    * localCheckpoint) as the explicit dial for corpora whose shingle
-    * frame is expensive to rebuild. */
+    * family's lineage for a set-identity no-op). Each consumer of the
+    * frame re-derives this narrow scan+explode subtree; see
+    * [[shingleFrame]] for why that rescan is the default. */
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxDocFreq: Long): DataFrame = {
     val sh = docs
@@ -63,9 +58,9 @@ object Dedup {
   }
 
   /** How the (id, shingle) frame is produced and SHARED across the
-    * multi-consumer operators' reads ([[ngramJaccard]] /
-    * [[ngramContainment]] read it for the sizes aggregate plus both
-    * sides of the self-join, and the hot-df aggregate adds a fourth):
+    * multi-consumer operators' reads ([[ngramJaccardForm]] reads it for
+    * the sizes aggregate plus both sides of the self-join, and the
+    * hot-df aggregate adds a fourth):
     *
     *  - `"rescan"` — [[docShingles]] as-is: per-row `array_distinct`,
     *    nothing materialized. Each consumer re-derives the narrow
@@ -74,37 +69,26 @@ object Dedup {
     *    materialization anywhere — shuffle, cache or checkpoint — and
     *    therefore the only one that survived the g1000 decade's
     *    2.65B-row exploded corpus against this box's 62 GB of free disk
-    *    (round 11).
-    *  - `"pin"` — same per-row dedup, then ONE eager `localCheckpoint`
-    *    of the (capped) frame shared by every consumer: one scan + one
-    *    block store instead of N rescans. The mid-scale reuse point;
-    *    its stored frame is the exploded corpus (UnsafeRow,
-    *    uncompressed), so at disk-bound depth it re-creates the
-    *    materialization hazard "rescan" removed.
-    *  - `"distinct"` — the round-10 form, kept as an A/B measurement
-    *    arm only: frame-level `distinct()` whose exchange was the
-    *    implicit reuse point, at the price of shuffling the whole
-    *    exploded corpus (the r11 disk overflow).
-    *
+    *    (round 11). The default by measurement: once the codegen
+    *    [[graft.functions.ShinglesExpr]] made re-shingling near-free,
+    *    one shared localCheckpoint measured within 4% of the rescan
+    *    (BENCH_SCALE_r13_shform2: q34 sf0.1 3.00 vs 2.98 s, g10 46.71
+    *    vs 47.54 s; q44 sf0.1 4.55 vs 4.61 s, g10 45.17 vs 46.88 s), and
+    *    on a tie the form with no corpus-sized block store wins.
     *  - `"stage"` — the disk-bound-depth reuse form (r14, VERDICT r13
     *    #3): the (capped) frame is written ONCE as zstd parquet to a
     *    session-local temp directory and every consumer reads that.
-    *    Same sharing as "pin" but the store is columnar + compressed
-    *    (text shingles compress ~10×, vs pin's uncompressed UnsafeRow
-    *    block store), and reads re-stream from disk instead of pinning
+    *    The store is columnar + compressed (text shingles compress
+    *    ~10×), and reads re-stream from disk instead of pinning
     *    executor storage memory — the form aimed at the g300 regime
     *    where rescan's 3-4 concurrent corpus-sized shuffles ENOSPC'd
-    *    this box (round 13) and pin's block store is the documented
-    *    g1000 hazard. The write is an eager job at plan construction
-    *    (inside any timed window, like pin's checkpoint).
+    *    this box (round 13). The write is an eager job at plan
+    *    construction (inside any timed window).
     *
-    * Returns the frame plus a free thunk (no-op except for `"pin"`,
-    * where it releases the checkpoint blocks, and `"stage"`, where it
-    * deletes the staged directory). A `"pin"` caller may leave the free
-    * to the ContextCleaner, which reclaims unreachable BLOCKS, as
-    * [[verifiedJaccard]] documents; it never deletes a directory, so a
-    * `"stage"` caller must invoke the thunk once nothing reads the
-    * frame. A staging write that throws deletes its directory first.
+    * Returns the frame plus a free thunk: a no-op for `"rescan"`; for
+    * `"stage"` it deletes the staged directory, and nothing else does,
+    * so a `"stage"` caller must invoke it once nothing reads the frame.
+    * A staging write that throws deletes its directory first.
     *
     * The staging write leaves its hot-df and anti-join shuffle files
     * behind until a driver GC lets the ContextCleaner see them
@@ -116,9 +100,6 @@ object Dedup {
       textCol: String, n: Int, maxDocFreq: Long,
       form: String): (DataFrame, () => Unit) = form match {
     case "rescan" => (docShingles(docs, idCol, textCol, n, maxDocFreq), () => ())
-    case "pin" =>
-      val p = Pin(docShingles(docs, idCol, textCol, n, maxDocFreq))
-      (p, () => Pin.free(p))
     case "stage" =>
       val dir = java.nio.file.Files.createTempDirectory("graft-shingle-stage")
       val path = dir.toUri.toString
@@ -134,18 +115,6 @@ object Dedup {
         .write.mode("overwrite").option("compression", "zstd").parquet(path)
       catch { case e: Throwable => free(); throw e }
       (docs.sparkSession.read.parquet(path), free)
-    case "distinct" =>
-      val sh = docs
-        .select(col(idCol).as("id"), explode(T.shingles(col(textCol), n)).as("shingle"))
-        .distinct()
-      val out = if (maxDocFreq <= 0) sh
-      else {
-        val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDocFreq)
-          .select("shingle")
-        sh.join(hot, Seq("shingle"), "left_anti")
-      }
-      (out, () => ())
     case other => sys.error(s"unknown shingle form: $other")
   }
 
@@ -161,57 +130,26 @@ object Dedup {
     * shingle in hundreds of documents contributes quadratic candidates
     * but almost never decides a J >= 0.5 verdict; cap it.
     *
-    * `shingleForm` may not be `"stage"`: this entry returns no free
-    * thunk, and nothing else deletes a staged directory. Stage through
-    * [[ngramJaccardForm]], which returns the thunk. */
+    * The shingle frame is rescanned per consumer ([[shingleFrame]]);
+    * stage it through [[ngramJaccardForm]], which returns the free
+    * thunk the staged directory needs. */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.2,
       idCol: String = "doc_id", textCol: String = "text",
-      maxDocFreq: Long = 0L,
-      shingleForm: String = DefaultShingleForm): DataFrame = {
-    require(shingleForm != "stage", StageNeedsFree)
+      maxDocFreq: Long = 0L): DataFrame =
     ngramJaccardForm(docs, n, threshold, idCol, textCol, maxDocFreq,
-      shingleForm)._1
-  }
+      "rescan")._1
 
-  private val StageNeedsFree = "the \"stage\" shingle form leaves a " +
-    "directory only its free thunk deletes; use ngramJaccardForm, which " +
-    "returns the thunk"
-
-  /** Default [[shingleFrame]] form for the public n-gram entries.
+  /** [[ngramJaccard]] with an explicit [[shingleFrame]] form, returning
+    * the free thunk. PRECONDITION (all forms): `idCol` values are
+    * unique. The per-row `array_distinct` frame equals the frame-level
+    * distinct ONLY then (ids unique ⇒ the global distinct (id, shingle)
+    * set is the union of each doc's own deduped set — DedupSpec pins the
+    * forms against a frame-level distinct reference on a corpus with
+    * in-doc repeats); a caller feeding duplicate ids would silently
+    * inflate df and n_sh instead of deduping. Every repo caller passes a
+    * primary-key doc_id.
     *
-    * "rescan" by MEASUREMENT — re-opened and re-decided each time the
-    * cost of re-deriving the shingle frame changed:
-    *
-    *   - Round 12 (BENCH_SCALE_r12_shform, interpreted-HOF era):
-    *     rescan cost +25–35% over one shared localCheckpoint ("pin")
-    *     at sf0.1 AND g10, so the default was pin — the penalty was
-    *     per-consumer RE-SHINGLING under the interpreted
-    *     transform/slice/concat_ws HOF.
-    *   - Round 13 (BENCH_SCALE_r13_shform2, post-ShinglesExpr): the
-    *     codegen byte-scan shingle (9.3×/24.7× on the shingle stage,
-    *     BENCH_SCALE_r13_shexpr) made re-derivation near-free and the
-    *     penalty collapsed into the weather band — floors q34 sf0.1
-    *     pin 3.00 / rescan 2.98, g10 46.71 / 47.54; q44 sf0.1
-    *     4.55 / 4.61, g10 45.17 / 46.88 (≤4% everywhere). On a tie
-    *     the SCALE-SAFE form wins: rescan keeps no corpus-sized
-    *     checkpoint block store, so the g1000 envelope hazard pin
-    *     carried (2.65B exploded rows vs 62 GB free local disk —
-    *     ADVICE r12) is retired by default rather than documented.
-    *
-    * "pin" stays the explicit dial for corpora whose shingle frame is
-    * genuinely expensive to rebuild (very long docs, wide n); the
-    * public entries ([[ngramJaccard]] / [[ngramContainment]]) surface
-    * `shingleForm` (no silent row-count gate — that would be an eager
-    * count() job inside every caller's timed window, the q97 guard
-    * lesson). "distinct" remains the r10 exchange-reuse arm, measured
-    * losing at g10 and the original g1000 disk overflow.
-    *
-    * A `var` (house pattern, [[graft.functions.TextFunctions.UseShinglesExpr]])
-    * so plan-evidence tooling ([[graft.tools.ExplainDump]]) can build the
-    * pre-flip "before" plans; nothing in main mutates it. */
-  @volatile private[graft] var DefaultShingleForm = "rescan"
-
-  /** Candidate-join form of [[ngramJaccardForm]]:
+    * `joinForm` picks the candidate join:
     *
     *  - `"selfjoin"` (default) — the frame joined against itself on
     *    shingle: TWO corpus-sized shuffles live concurrently (each side
@@ -227,21 +165,12 @@ object Dedup {
     *    anti-join (no surviving shingle exceeds maxDocFreq docs).
     *    Output-identical: sorted ids make pairCombos emit exactly the
     *    id_a < id_b pairs, once per shared shingle, so the per-pair
-    *    count IS n_common (DedupSpec pins it). */
-  @volatile private[graft] var DefaultCandJoinForm = "selfjoin"
-
-  /** [[ngramJaccard]] with an explicit [[shingleFrame]] form, returning
-    * the free thunk. PRECONDITION (all forms): `idCol` values are
-    * unique. The per-row `array_distinct` forms equal the frame-level
-    * distinct ONLY then (ids unique ⇒ the global distinct (id, shingle)
-    * set is the union of each doc's own deduped set — DedupSpec pins the
-    * three-form equivalence on a corpus with in-doc repeats); a caller
-    * feeding duplicate ids would silently inflate df and n_sh instead
-    * of deduping. Every repo caller passes a primary-key doc_id. */
+    *    count IS n_common (DedupSpec pins it). Which form q44 should run
+    *    at depth is still open (TimeQuery's q44_groups arms). */
   private[graft] def ngramJaccardForm(docs: DataFrame, n: Int,
       threshold: Double, idCol: String, textCol: String, maxDocFreq: Long,
       form: String,
-      joinForm: String = DefaultCandJoinForm): (DataFrame, () => Unit) = {
+      joinForm: String = "selfjoin"): (DataFrame, () => Unit) = {
     val (sh, free) = shingleFrame(docs, idCol, textCol, n, maxDocFreq, form)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val common = joinForm match {
@@ -290,21 +219,15 @@ object Dedup {
     * Output: (idCol, n_windows, n_dup_windows, dup_ratio), one row per
     * input doc; docs shorter than `windowTokens` tokens report 0/0/0.0.
     *
-    * `pinWindows` (round 13, NOTES r12 #5): the window frame is read
-    * twice (df aggregate + join side) — `true` shares one eager
-    * localCheckpoint instead of re-deriving the scan+explode subtree.
-    * Measured A/B (BENCH_SCALE_r13_census, sf0.1 interleaved, 3 runs):
-    * floors rescan 1.30 s vs pin 1.31 s — a tie now that ShinglesExpr
-    * made re-shingling near-free, so the default stays the rescan (no
-    * corpus-sized block store, the disk-safe shape at depth); the dial
-    * exists for corpora whose window frame is expensive to rebuild
-    * (very long docs / wide windows). */
+    * The window frame is read twice (df aggregate + join side) and
+    * re-derived for each: one shared localCheckpoint measured a tie
+    * (BENCH_SCALE_r13_census, sf0.1 interleaved, 3 runs: floors rescan
+    * 1.30 s vs pin 1.31 s), and the rescan keeps no corpus-sized block
+    * store. */
   def spanDupStats(docs: DataFrame, windowTokens: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text",
-      pinWindows: Boolean = false): DataFrame = {
-    val w0 = docs.select(col(idCol).as("id"),
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val w = docs.select(col(idCol).as("id"),
       explode(array_distinct(T.shingles(col(textCol), windowTokens))).as("w"))
-    val w = if (pinWindows) Pin(w0) else w0
     // nd = number of distinct docs containing the window ((id, w) is
     // already distinct, so a plain count is a distinct-doc count)
     val docFreq = w.groupBy("w").agg(count(lit(1)).as("nd"))
@@ -329,16 +252,12 @@ object Dedup {
     * toward 0 as the larger doc grows even when the smaller doc is
     * copied verbatim, while containment stays 1. Same candidate
     * machinery, hot-shingle bound and unique-`idCol` precondition as
-    * [[ngramJaccard]]; only the normalizer differs, and like it this
-    * entry refuses the `"stage"` form (no free thunk to return).
+    * [[ngramJaccard]]; only the normalizer differs.
     * Output: id_a < id_b, n_common, containment. */
   def ngramContainment(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
-      maxDocFreq: Long = 0L,
-      shingleForm: String = DefaultShingleForm): DataFrame = {
-    require(shingleForm != "stage", StageNeedsFree)
-    val (sh, _) = shingleFrame(docs, idCol, textCol, n, maxDocFreq,
-      shingleForm)
+      maxDocFreq: Long = 0L): DataFrame = {
+    val sh = docShingles(docs, idCol, textCol, n, maxDocFreq)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val common = sh.select(col("shingle"), col("id").as("id_a"))
       .join(sh.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
@@ -388,18 +307,20 @@ object Dedup {
   /** LSH band keys of [[minhashLsh]]'s candidate join — (id, sig, band,
     * band_hash), one row per (doc, band). Factored out so the
     * candidate-volume diagnostic ([[graft.tools.CandVol]]) measures the
-    * EXACT join keys the operator shuffles, not a reimplementation. */
+    * EXACT join keys the operator shuffles, not a reimplementation.
+    *
+    * `pinSigs`: one Pin of the (id, sig) frame — the signature (corpus
+    * scan + shingling + k rehashes per shingle, all per row) is
+    * otherwise re-derived by every consumer of the banded frame
+    * ([[minhashLsh]] reads it on both join sides and in the singleton
+    * prune, so it pins; single-consumer callers do not). Narrow:
+    * ~8(k+1) bytes/doc. */
   private[graft] def minhashBandKeys(docs: DataFrame, k: Int = 16,
       bands: Int = 4, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
       pinSigs: Boolean = false): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    // pinSigs: one Pin of the (id, sig) frame — the signature
-    // (corpus scan + shingling + k rehashes per shingle, all per row) is
-    // otherwise re-derived by every consumer of the banded frame
-    // (minhashLsh reads it on both join sides). Narrow: ~8(k+1)
-    // bytes/doc. Same rationale as [[DefaultPinSims]].
     val sigs0 = minhashSignatures(docs, k, n, idCol, textCol)
     val sigs = if (pinSigs) Pin(sigs0) else sigs0
     sigs.select(col("id"), col("sig"),
@@ -410,23 +331,24 @@ object Dedup {
 
   /** MinHash + LSH candidate pairs: band the k-row signature into `bands`
     * groups, bucket-join on (band, bandHash), estimate similarity as the
-    * fraction of equal signature components. */
+    * fraction of equal signature components.
+    *
+    * The signature frame is pinned ([[minhashBandKeys]]' `pinSigs`) and
+    * singleton (band, band_hash) buckets are pruned before the join:
+    * a one-row bucket can't produce a candidate pair, and the band join
+    * carries BOTH 8k-byte signatures per row. Measured together in r14
+    * (OPTIMIZATION_r14 §7): q35 at g100 104.8/32.4 → 96.9/27.2 s in two
+    * paired windows. */
   def minhashLsh(docs: DataFrame, k: Int = 16, bands: Int = 4, n: Int = 3,
       minEstimate: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text",
-      pinSigs: Boolean = DefaultPinSims,
-      pruneSingletons: Boolean = DefaultPruneSingletons): DataFrame = {
-    val banded0 = minhashBandKeys(docs, k, bands, n, idCol, textCol, pinSigs)
-    // singleton (band, band_hash) buckets can't produce a candidate pair,
-    // and the band join carries BOTH 8k-byte signatures per row — prune
-    // before the join pays its fan-out (see [[DefaultPruneSingletons]])
-    val banded = if (!pruneSingletons) banded0 else {
-      val multi = banded0.groupBy("band", "band_hash")
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= 2)
-        .select("band", "band_hash")
-      banded0.join(multi, Seq("band", "band_hash"), "left_semi")
-    }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val banded0 = minhashBandKeys(docs, k, bands, n, idCol, textCol,
+      pinSigs = true)
+    val multi = banded0.groupBy("band", "band_hash")
+      .agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") >= 2)
+      .select("band", "band_hash")
+    val banded = banded0.join(multi, Seq("band", "band_hash"), "left_semi")
     val cands = banded.select(col("band"), col("band_hash"),
         col("id").as("id_a"), col("sig").as("sig_a"))
       .join(banded.select(col("band"), col("band_hash"),
@@ -435,15 +357,16 @@ object Dedup {
     // estimate BEFORE dedup (same reasoning as simhashPairs): the
     // signature comparison is per-row arithmetic on columns the join
     // already carries; distinct() then shuffles only surviving
-    // (id_a, id_b, est) triples instead of full signature pairs.
-    cands
-      // codegen agreement count (EqCountExpr) — the interpreted
-      // zip_with fold ran k lambda evals per candidate pair
-      .withColumn("est_jaccard", round(
-        graft.functions.EqCountFn.eqCount(col("sig_a"), col("sig_b"))
-          / lit(k.toDouble), 4))
-      .filter(col("est_jaccard") >= minEstimate)
-      .select("id_a", "id_b", "est_jaccard")
+    // (id_a, id_b, est) triples instead of full signature pairs. The
+    // codegen agreement count (EqCountExpr) replaced an interpreted
+    // zip_with fold of k lambda evals per candidate pair; filtering
+    // through rowsWhere keeps it to ONE count per band-join row (a plain
+    // filter is pushed into the join condition with the count
+    // substituted, which computes it twice).
+    rowsWhere(cands.select(col("id_a"), col("id_b"),
+        round(graft.functions.EqCountFn.eqCount(col("sig_a"), col("sig_b"))
+          / lit(k.toDouble), 4).as("est_jaccard")),
+      col("est_jaccard") >= minEstimate)
       .distinct()
   }
 
@@ -680,12 +603,13 @@ object Dedup {
     *    row by hash(id) mod s, side B replicates each row to all s
     *    salts, so every pair still meets exactly once while a B²-pair
     *    bucket spreads over s tasks.
-    */
+    *
+    * The (id, simhash) frame is pinned, as on every simhash pair entry:
+    * see [[simhashPairsCombinatorial]]. */
   def simhashPairs(docs: DataFrame, maxDist: Int = 8,
       idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 16, n: Int = 3,
-      pinSims: Boolean = DefaultPinSims): DataFrame =
-    simhashChunkJoin(pinnedSims(simhashDocs(docs, idCol, textCol, n), pinSims),
+      saltBuckets: Int = 16, n: Int = 3): DataFrame =
+    simhashChunkJoin(Pin(simhashDocs(docs, idCol, textCol, n)),
       maxDist, SimHash.Bits, saltBuckets)
 
   /** Signature width of the [[simhashDocsPortable]] family: 60 bits (15
@@ -724,10 +648,8 @@ object Dedup {
     * hold the volume linear at the same exact output. */
   def simhashPairsPortable(docs: DataFrame, maxDist: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 16, n: Int = 3,
-      pinSims: Boolean = DefaultPinSims): DataFrame =
-    simhashChunkJoin(pinnedSims(simhashDocsPortable(docs, idCol, textCol, n),
-        pinSims),
+      saltBuckets: Int = 16, n: Int = 3): DataFrame =
+    simhashChunkJoin(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
       maxDist, PortableSimHashBits, saltBuckets)
 
   /** SimHash candidates via Manku's BLOCK-COMBINATION tables — **the
@@ -768,58 +690,36 @@ object Dedup {
     * salt 4 read ~61-95 s, salt 2 ~50-66 s, salt 1 ~53-57 s — salt 2 is
     * the declared default: ~35% under salt 4 at depth, equal at small
     * scale, and still 2-way spread on a genuinely hot dup-cluster key;
-    * per-doc side-B fan-out 40 rows vs the chunk scheme's 64). */
+    * per-doc side-B fan-out 40 rows vs the chunk scheme's 64).
+    *
+    * Two plan decisions shared by the simhash pair entries, both
+    * invisible in the output:
+    *  - the narrow (id, simhash) signature frame is PINNED (one eager
+    *    localCheckpoint, 16 bytes/doc — ~800 MB even at 5·10⁷ docs).
+    *    Without it the keyed join's two sides each re-derive the
+    *    signature (corpus scan, shingling, per-shingle feature hash):
+    *    they shuffle on different keys, and Spark reuses only identical
+    *    Exchange subtrees.
+    *  - the table-key entries ([[simhashPairsCombinatorial]],
+    *    [[simhashPairsPermuted]]) PRUNE singleton (table, key) buckets
+    *    before the salted self-join ([[simhashKeyedJoin]]).
+    *
+    * Both were adopted together by r14 measurement (interleaved floors,
+    * OPTIMIZATION_r14 §7): q116 at g100 123.5 → 101.8 s (and 449.6 →
+    * 134.7 s in the cold-cache window), q123 at g100 558.7/353.4 →
+    * 331.1/241.9 s in both paired windows; at sf0.1 a ≤0.1 s wash.
+    * Prune without the pin measured slower at sf0.1 (the count
+    * aggregate re-derived the signature a third time). Those numbers
+    * predate the per-row signature, when the signature was an explode
+    * + aggregation with 2 corpus-sized shuffles; the pin now saves a
+    * narrow rescan. */
   def simhashPairsCombinatorial(docs: DataFrame, maxDist: Int = 3,
       nBlocks: Int = 6, idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 2, n: Int = 3,
-      pinSims: Boolean = DefaultPinSims,
-      pruneSingletons: Boolean = DefaultPruneSingletons): DataFrame =
+      saltBuckets: Int = 2, n: Int = 3): DataFrame =
     simhashKeyedJoin(
-      simhashComboKeys(pinnedSims(simhashDocsPortable(docs, idCol, textCol, n),
-          pinSims),
+      simhashComboKeys(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
         maxDist, PortableSimHashBits, nBlocks),
-      "combo_idx", "combo_key", maxDist, saltBuckets, pruneSingletons)
-
-  /** Default for the `pinSims` dial of the simhash pair entries: ONE
-    * eager localCheckpoint of the narrow (id, simhash) signature frame
-    * (16 bytes/doc — ~800 MB even at 5·10⁷ docs, nothing like the
-    * exploded-shingle frames the "rescan" decision was about). Without
-    * it, [[simhashKeyedJoin]]'s two join sides each re-derive the
-    * signature — corpus scan, shingling, per-shingle feature hash — because
-    * the sides shuffle on different keys and Spark reuses only identical
-    * Exchange subtrees. The r14 numbers below were measured when the
-    * signature was an explode + SimHash aggregation (2 corpus-sized
-    * shuffles); it is now computed in the row with no shuffle, so the
-    * pin saves a narrow rescan only, and whether it still pays has not
-    * been re-measured. Flipped to true by r14 measurement (interleaved floors;
-    * OPTIMIZATION_r14 §7): with pruneSingletons, q116 at g100
-    * 123.5 → 101.8 s (and 449.6 → 134.7 s in the cold-cache window),
-    * q123 at g100 558.7/353.4 → 331.1/241.9 s (1.69×/1.46×, both
-    * paired windows), q35 at g100 104.8/32.4 → 96.9/27.2 s; at g10
-    * declared 14.7-15.8 → 12.1-13.2 s floors; at sf0.1 a ≤0.1 s wash.
-    * The standalone signature stage measured 0.53 s of q116's 1.40 s at
-    * sf0.1 (q116_sims arm) — the pin halves exactly that term. */
-  @volatile private[graft] var DefaultPinSims = true
-
-  /** Default for the `pruneSingletons` dial: drop (table, key) buckets
-    * with fewer than 2 rows BEFORE the salted self-join. A singleton
-    * bucket cannot produce a pair, and with 27-36-bit keys almost every
-    * bucket is a singleton at any real corpus size (the keyed join's
-    * whole point is making chance collisions rare) — so the salted join,
-    * whose side B replicates every row saltBuckets times, shuffles
-    * ~3·saltBuckets× more keyed rows than can ever meet. The prune costs
-    * one narrow (idx, key, count) aggregate (map-side combinable) plus a
-    * left-semi attach; the non-singleton key set is small enough that
-    * AQE broadcasts it at every measured scale. Guide §2.3 (shuffle
-    * fewer bytes) applied to the candidate join. Flipped to true by r14
-    * measurement together with [[DefaultPinSims]] (numbers there);
-    * prune WITHOUT pin measured slower at sf0.1 (the count aggregate
-    * re-derives the signature pipeline a third time), so the two dials
-    * ship as a pair. */
-  @volatile private[graft] var DefaultPruneSingletons = true
-
-  private def pinnedSims(sims: DataFrame, pin: Boolean): DataFrame =
-    if (pin) Pin(sims) else sims
+      "combo_idx", "combo_key", maxDist, saltBuckets, pruneSingletons = true)
 
   /** All C(nBlocks, chooseK) block subsets in lexicographic order — the
     * table index of [[simhashComboKeys]]. Factored (and kept ordered) so
@@ -899,18 +799,15 @@ object Dedup {
     * it, [[simhashPairsCombinatorial]]'s 2^30 keys (1.03 at g100) are
     * the deeper-scale form. Side-B replication is
     * nOuter·nInner·saltBuckets = 32 rows/doc at the defaults (q116 at
-    * salt 2: 40). */
+    * salt 2: 40). Pins and prunes like [[simhashPairsCombinatorial]]. */
   def simhashPairsPermuted(docs: DataFrame, maxDist: Int = 3,
       nOuter: Int = 4, nInner: Int = 4,
       idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 2, n: Int = 3,
-      pinSims: Boolean = DefaultPinSims,
-      pruneSingletons: Boolean = DefaultPruneSingletons): DataFrame =
+      saltBuckets: Int = 2, n: Int = 3): DataFrame =
     simhashKeyedJoin(
-      simhashPermutedKeys(pinnedSims(simhashDocsPortable(docs, idCol, textCol, n),
-          pinSims),
+      simhashPermutedKeys(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
         maxDist, PortableSimHashBits, nOuter, nInner),
-      "tbl_idx", "tbl_key", maxDist, saltBuckets, pruneSingletons)
+      "tbl_idx", "tbl_key", maxDist, saltBuckets, pruneSingletons = true)
 
   /** Bit segments of [[simhashPairsPermuted]]'s nOuter·nInner tables, in
     * table order (i major, j minor): each table is a list of (offset,
@@ -1006,14 +903,23 @@ object Dedup {
   /** Shared salted self-join + Hamming verify over any (id, simhash,
     * table-idx, key) candidate frame — the join body of both the chunk
     * ([[simhashChunkJoin]]) and block-combination
-    * ([[simhashPairsCombinatorial]]) table schemes. */
+    * ([[simhashPairsCombinatorial]]) table schemes.
+    *
+    * `pruneSingletons` drops (table, key) buckets with fewer than 2 rows
+    * BEFORE the salted self-join: a singleton bucket cannot produce a
+    * pair, and with 27-36-bit keys almost every bucket is a singleton at
+    * any real corpus size, so the salted join — whose side B replicates
+    * every row saltBuckets times — would shuffle ~3·saltBuckets× more
+    * keyed rows than can ever meet. The prune costs one narrow (idx,
+    * key, count) aggregate (map-side combinable) plus a left-semi
+    * attach; the non-singleton key set is small enough that AQE
+    * broadcasts it at every measured scale. The table-key entries prune;
+    * the chunk join does not. */
   private def simhashKeyedJoin(keys0: DataFrame, idxCol: String,
       keyCol: String, maxDist: Int, saltBuckets: Int,
       pruneSingletons: Boolean = false): DataFrame = {
-    // drop can't-pair buckets before the fan-out (see
-    // [[DefaultPruneSingletons]]): a (table, key) bucket with one row
-    // contributes nothing downstream — count >= 2 iff >= 2 distinct docs
-    // (each doc emits exactly one row per table index)
+    // count >= 2 iff >= 2 distinct docs (each doc emits exactly one row
+    // per table index)
     val keys = if (!pruneSingletons) keys0 else {
       val multi = keys0.groupBy(idxCol, keyCol).agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") >= 2)
@@ -1346,23 +1252,19 @@ object Dedup {
     * ContextCleaner: its callers are batch queries whose session
     * outlives one query plan.
     *
-    * `viaCheckpoint` picks how the intermediates are pinned. The default
-    * is localCheckpoint, and the choice is MEASURED — with a trap worth
-    * recording. persist() first looked 2-5x faster on repeat runs, but
-    * that was cross-run cache reuse: the CacheManager keys entries by
-    * logical plan, so a second run of the same query in the same session
-    * silently read run 1's cached shingles instead of computing them —
-    * the cross-run analogue of the count()-pruning harness bug. With the
-    * timing harnesses clearing the cache between runs (round 9), the
-    * honest same-session A/B (TimeQuery q35_pin_persist vs q35_pin_ckpt
-    * and the q97 twins, sf0.1) reads checkpoint ≤ persist on every leg:
-    * q35 2.13-2.73 s
-    * ckpt vs 2.56-3.91 s persist; q97 6.93-7.48 ckpt vs 7.39-7.79
-    * persist. The columnar cache encode costs more than the checkpoint's
-    * UnsafeRow store at every shape tried, and the optimizer-visibility
-    * argument for persist never cashed out.
+    * The intermediates are pinned by localCheckpoint, not persist(), by
+    * measurement — with a trap worth recording. persist() first looked
+    * 2-5x faster on repeat runs, but that was cross-run cache reuse: the
+    * CacheManager keys entries by logical plan, so a second run of the
+    * same query in the same session silently read run 1's cached
+    * shingles instead of computing them. With the timing harnesses
+    * clearing the cache between runs (round 9), the honest same-session
+    * A/B at sf0.1 read checkpoint ≤ persist on every leg: q35 2.13-2.73 s
+    * checkpoint vs 2.56-3.91 s persist; q97 6.93-7.48 vs 7.39-7.79 s.
+    * The columnar cache encode costs more than the checkpoint's
+    * UnsafeRow store at every shape tried.
     *
-    * The checkpoint form pins through [[graft.core.Pin]], so the
+    * The intermediates pin through [[graft.core.Pin]], so the
     * candidate ids that restrict `docs` report their real size: when
     * they fit under the broadcast threshold the restriction broadcasts
     * them and `docs` (text included) is only scanned, never shuffled.
@@ -1376,20 +1278,14 @@ object Dedup {
     * double-counting its shingles. */
   private[graft] def verifiedJaccardWithFrees(docs: DataFrame,
       candidates: DataFrame, threshold: Double, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      viaCheckpoint: Boolean = true): (DataFrame, () => Unit) = {
-    def pin(df: DataFrame): DataFrame =
-      if (viaCheckpoint) Pin(df) else df.persist()
-    def free(df: DataFrame): Unit =
-      if (viaCheckpoint) Pin.free(df)
-      else { df.unpersist(blocking = false); () }
+      idCol: String = "doc_id", textCol: String = "text"): (DataFrame, () => Unit) = {
     // Shingle ONLY the docs that appear in a candidate pair, and only
     // ONCE (round 9). The earlier shape shingled the FULL corpus and,
     // because its three consumers partitioned differently (id agg,
     // id_a join, (id_b, shingle) join), Catalyst re-derived the
     // explode+distinct subtree per consumer — six corpus-sized shuffles
-    // per query at the g100 decade. The per-stage wall ladder
-    // (TimeQuery q35_* stages, round 9) measured the verify leg at
+    // per query at the g100 decade. The round-9 per-stage wall ladder
+    // (BENCH_SCALE_r09_q35stages) measured the verify leg at
     // 5.9x for a 3.3x corpus against a candidate volume pinned 1.000:
     // the leg's shuffle footprint outgrew the box's fixed page cache —
     // the third fixed-local-resource trap after shuffle width and heap.
@@ -1401,14 +1297,14 @@ object Dedup {
     // volume (pairs; one shingle array per candidate doc), and
     // they stop the candidate GENERATOR (a full LSH/simhash plan) from
     // re-running once per consumer.
-    val cand = pin(candidates.select("id_a", "id_b"))
+    val cand = Pin(candidates.select("id_a", "id_b"))
     val candIds = cand.select(col("id_a").as(idCol))
       .unionByName(cand.select(col("id_b").as(idCol)))
       .distinct()
     val needed = docs.join(candIds, Seq(idCol), "left_semi")
     // one row per candidate doc: its distinct shingle set as an array
     // (a doc without shingles can share none, so it is dropped)
-    val sh = pin(rowsWhere(needed.select(col(idCol).as("id"),
+    val sh = Pin(rowsWhere(needed.select(col(idCol).as("id"),
       array_distinct(T.shingles(col(textCol), n)).as("sh")), size(col("sh")) > 0))
     // |A∩B| by string equality on the two arrays: exact, and no
     // (pair × shingle) rows or pair group-by. Zero-overlap pairs are
@@ -1426,7 +1322,7 @@ object Dedup {
       .select("id_a", "id_b", "n_common", "jaccard")
     val out = rowsWhere(scored,
       col("n_common") > 0 && col("jaccard") >= threshold)
-    (out, () => { free(cand); free(sh) })
+    (out, () => { Pin.free(cand); Pin.free(sh) })
   }
 
   /** Prefix-filtering candidate generation (the SSJoin/AllPairs family:
@@ -1469,18 +1365,13 @@ object Dedup {
     * tripled q97's benched p50). */
   def prefixCandidates(docs: DataFrame, threshold: Double, n: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      guard: Boolean = true, pinPrefix: Boolean = false): DataFrame = {
+      guard: Boolean = true): DataFrame = {
     if (guard) prefixFilterWarning(docs, n, idCol = idCol, textCol = textCol)
       .foreach(log.warn(_))
-    // pinPrefix (r14 A/B dial): the prefix frame feeds BOTH sides of the
-    // candidate self-join, and each side re-derives the full
-    // shingle-df + per-doc rank pipeline (the frame's two window shuffles
-    // run twice). One eager localCheckpoint of the narrow
-    // (id, shingle, rk, n_sh) frame halves that — at the price of a
-    // corpus-prefix-sized block store (the same trade as the shingle
-    // "pin" form, so it stays a dial, not the default).
-    val prefix0 = prefixKeys(docs, threshold, n, idCol, textCol)
-    val prefix = if (pinPrefix) Pin(prefix0) else prefix0
+    // the prefix frame feeds BOTH sides of the candidate self-join and
+    // each side re-derives it; pinning it would keep a corpus-prefix-
+    // sized block store, the trade the shingle frame declines too
+    val prefix = prefixKeys(docs, threshold, n, idCol, textCol)
     val tEff = threshold - 5e-5 // see prefixKeys' recall note
     // PPJoin positional filter (Xiao et al., WWW'08): when a pair first
     // meets at prefix positions (i, j), its overlap can't exceed

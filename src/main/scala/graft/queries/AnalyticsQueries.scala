@@ -268,47 +268,31 @@ object AnalyticsQueries {
     * completeness (C(n,2) edges) where full triangle enumeration is
     * cubic — ranking edges first turns "triangles in a 100 TB-derived
     * graph" into a constant-size broadcast-joinable problem, and the
-    * deterministic total order keeps the DuckDB twin exact. */
-  def q74Triangles(s: SparkSession, d: String): DataFrame =
-    q74WithPin(s, d, pinTop = PinTriTop)
-
-  /** [[q74Triangles]] with an explicit top-edge materialization dial —
-    * the round-13 A/B (TimeQuery q74_pin / q74_rescan). The wedge-close
-    * enumeration reads its edge input THREE times (ab/ac/bc), and
-    * without pinning each read re-derives the ENTIRE CoOccur pipeline
-    * (lineitem scan + distinct + hot-key bound + self-join + aggregate
-    * + TakeOrdered): the round-13 plan audit counted 12 parquet scans /
-    * 21 exchanges in the declared plan. `top` is ≤ [[TriEdges]] = 100
-    * rows by construction (deterministic total order, so the limit is
-    * stable), so one eager localCheckpoint collapses the three
-    * derivations into one and the joins read a 100-row leaf. Output
-    * identical by construction (the checkpoint is a plan cut, not a
-    * value change); the q74 oracle re-verified post-flip. Checkpoint
-    * blocks are swept by the bench/TimeQuery per-run persistent-RDD
-    * sweep (the CC-internal-checkpoint precedent). */
-  private[graft] def q74WithPin(s: SparkSession, d: String,
-      pinTop: Boolean): DataFrame = {
-    val top0 = CoOccur.pairs(Tables.lineitem(s, d), "l_partkey", "l_suppkey",
+    * deterministic total order keeps the DuckDB twin exact.
+    *
+    * The top-edge frame is PINNED before the wedge-close enumeration,
+    * which reads its edge input THREE times (ab/ac/bc): without the pin
+    * each read re-derives the ENTIRE CoOccur pipeline (lineitem scan +
+    * distinct + hot-key bound + self-join + aggregate + TakeOrdered; the
+    * round-13 plan audit counted 12 parquet scans / 21 exchanges).
+    * `top` is ≤ [[TriEdges]] rows by construction (deterministic total
+    * order, so the limit is stable), so one eager localCheckpoint
+    * collapses the three derivations into one and the joins read a small
+    * leaf; output identical, since the checkpoint is a plan cut. Measured
+    * in round 13: two interleaved sessions at sf0.1 (order swapped), pin
+    * faster in 7 of 8 same-weather pairs, floors 2.34 vs 2.52 and 1.92
+    * vs 2.15 s. Checkpoint blocks are swept by the bench's per-run
+    * persistent-RDD sweep (the CC-internal-checkpoint precedent). */
+  def q74Triangles(s: SparkSession, d: String): DataFrame = {
+    val top = Pin(CoOccur.pairs(Tables.lineitem(s, d), "l_partkey", "l_suppkey",
         minShared = 2L, maxItemsPerKey = 64L)
       .orderBy(col("shared_keys").desc, col("item_a"), col("item_b"))
       .limit(TriEdges)
-      .select(col("item_a").as("a"), col("item_b").as("b"))
-    val top = if (pinTop) Pin(top0) else top0
+      .select(col("item_a").as("a"), col("item_b").as("b")))
     Triangles.perVertex(broadcast(top))
       .withColumnRenamed("node", "l_suppkey")
       .orderBy("l_suppkey")
   }
-
-  /** Materialize q74's 100-row top-edge frame before the triple-read
-    * wedge join (see [[q74WithPin]]). Flipped ON by round-13
-    * measurement: two interleaved TimeQuery sessions at sf0.1 (order
-    * swapped), pin faster in 7 of 8 same-weather pairs, floors 2.34 vs
-    * 2.52 and 1.92 vs 2.15 s (~8-10%). The delta is smaller than the
-    * plan-audit scan count suggested (12 scans) because physical-plan
-    * exchange reuse already collapses the identical broadcast subtrees
-    * at execution; what the pin removes is the residual re-derivation
-    * plus the 3x analysis/planning of the full pipeline subtree. */
-  private[graft] val PinTriTop = true
 
   /** Incremental aggregate maintenance: per-priority order counts and
     * revenue from MERGED partial aggregates (base half + delta half)

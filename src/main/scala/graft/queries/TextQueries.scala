@@ -353,54 +353,28 @@ object TextQueries {
     * counts. Every stage reuses the battery's machinery (q31, q33, q34,
     * q44, q48 semantics) and stays a pure function of document identity
     * and content, so the whole pipeline is reproducible on any cluster —
-    * and DuckDB-verifiable as ONE query. */
-  def q100PipelineE2e(s: SparkSession, d: String): DataFrame =
-    q100WithExact(s, d, minAgg = true)
-
-  /** [[q100PipelineE2e]] with an explicit exact-dedup shape — the r14
-    * A/B arm behind TimeQuery's q100_window/q100_minagg.
+    * and DuckDB-verifiable as ONE query.
     *
-    * `minAgg = false` (the pre-r14 shape): a `min(doc_id) over
-    * (partition by fp)` window — the FULL corpus (text included) is
-    * shuffled by fingerprint, sorted, windowed, then shuffled AGAIN by
-    * doc_id for the component join: two corpus-sized text shuffles.
-    *
-    * `minAgg = true` (guide §2.3/§8 — decide with small rows, move big
-    * rows once): the survivor set {min(doc_id) per fp} is computed on a
-    * NARROW (fp, doc_id) projection with a map-side-combinable min, then
-    * attached by left-semi join on doc_id. The text pays one extra
-    * columnar scan but shuffles only ONCE (by doc_id), and that
-    * exchange+sort is shared with the downstream component join (both
-    * key on doc_id). Output identical: ids are unique, so doc_id ∈
-    * {min(doc_id) per fp over quality docs} selects exactly the rows the
-    * window form keeps. */
-  private[graft] def q100WithExact(s: SparkSession, d: String,
-      minAgg: Boolean): DataFrame = {
+    * Exact dedup decides with small rows and moves big rows once: the
+    * survivor set {min(doc_id) per fp} is computed on a NARROW (fp,
+    * doc_id) projection with a map-side-combinable min, then attached by
+    * left-semi join on doc_id. The text pays one extra columnar scan but
+    * shuffles only ONCE (by doc_id), and that exchange+sort is shared
+    * with the downstream component join (both key on doc_id). A
+    * `min(doc_id) over (partition by fp)` window — the pre-r14 shape —
+    * shuffled the full corpus text twice (by fp, then by doc_id). */
+  def q100PipelineE2e(s: SparkSession, d: String): DataFrame = {
     val quality = Tables.documents(s, d)
       .filter(T.nTokens(col("text")) >= MinTokensE2e)
-    val exactKept =
-      if (minAgg) {
-        val minIds = quality
-          .select(T.contentFingerprint(col("text")).as("fp"), col("doc_id"))
-          .groupBy("fp").agg(min("doc_id").as("doc_id"))
-          .select("doc_id")
-        quality.join(minIds, Seq("doc_id"), "left_semi")
-      } else {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-        quality
-          .withColumn("fp", T.contentFingerprint(col("text")))
-          .withColumn("min_id", min("doc_id").over(w))
-          .filter(col("doc_id") === col("min_id"))
-          .drop("fp", "min_id")
-      }
-    val (pairsAll, shFree) = Dedup.ngramJaccardForm(exactKept, n = 3,
-      threshold = 0.5, idCol = "doc_id", textCol = "text",
-      maxDocFreq = MaxShingleDf, form = Dedup.DefaultShingleForm)
+    val minIds = quality
+      .select(T.contentFingerprint(col("text")).as("fp"), col("doc_id"))
+      .groupBy("fp").agg(min("doc_id").as("doc_id"))
+      .select("doc_id")
+    val exactKept = quality.join(minIds, Seq("doc_id"), "left_semi")
+    val pairsAll = Dedup.ngramJaccard(exactKept, n = 3, threshold = 0.5,
+      maxDocFreq = MaxShingleDf)
     val comp = ConnectedComponents.resolve(pairsAll.select("id_a", "id_b"))
       .withColumnRenamed("id", "doc_id")
-    // resolve materialized the pair lineage eagerly; the shingle frame's
-    // pinned blocks (pin form) are dead weight from here on
-    shFree()
     exactKept.join(comp, Seq("doc_id"), "left")
       .filter(coalesce(col("component"), col("doc_id")) === col("doc_id"))
       .withColumn("split", T.splitLabel(col("doc_id")))
@@ -459,19 +433,18 @@ object TextQueries {
     * iff doc_id == component". Oracle: DuckDB recursive CTE computing
     * min-reachable-id over the same exact-Jaccard edges. */
   def q44DedupClusters(s: SparkSession, d: String): DataFrame =
-    q44WithForm(s, d, Dedup.DefaultShingleForm)
+    q44WithForm(s, d, "rescan")
 
-  /** [[q44DedupClusters]] with an explicit shingle-frame form — the
-    * round-12 A/B arm behind TimeQuery's q44_rescan/q44_pin/q44_distinct
-    * (the r11 docShingles trade-off left the family's mid-scale rescan
-    * cost unmeasured; output is form-independent, DedupSpec pins it).
-    * The pin form's checkpoint blocks are freed as soon as
+  /** [[q44DedupClusters]] with an explicit shingle-frame form and
+    * candidate join ([[Dedup.ngramJaccardForm]]) — the arms behind
+    * TimeQuery's q44_stage / q44_groups / q44_stage_groups, which decide
+    * q44's form at depth; output is form-independent (DedupSpec pins
+    * it). The staged directory is deleted as soon as
     * [[ConnectedComponents.resolve]] returns: resolve materializes the
     * pair lineage eagerly into its own localCheckpoint, so nothing
-    * re-executes the shingle frame afterwards. */
+    * re-reads the shingle frame afterwards. */
   private[graft] def q44WithForm(s: SparkSession, d: String,
-      form: String,
-      joinForm: String = Dedup.DefaultCandJoinForm): DataFrame = {
+      form: String, joinForm: String = "selfjoin"): DataFrame = {
     val docs = Tables.documents(s, d)
     val (pairsAll, free) = Dedup.ngramJaccardForm(docs, n = 3,
       threshold = 0.5, idCol = "doc_id", textCol = "text",
@@ -493,12 +466,10 @@ object TextQueries {
     * pipeline user actually runs; q33-q44 are its pieces. */
   def q56DedupCorpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val (pairsAll, shFree) = Dedup.ngramJaccardForm(docs, n = 3,
-      threshold = 0.5, idCol = "doc_id", textCol = "text",
-      maxDocFreq = MaxShingleDf, form = Dedup.DefaultShingleForm)
+    val pairsAll = Dedup.ngramJaccard(docs, n = 3, threshold = 0.5,
+      maxDocFreq = MaxShingleDf)
     val comp = ConnectedComponents.resolve(pairsAll.select("id_a", "id_b"))
       .withColumnRenamed("id", "doc_id")
-    shFree()
     docs.join(comp, Seq("doc_id"), "left")
       .withColumn("component", coalesce(col("component"), col("doc_id")))
       .withColumn("kept", col("component") === col("doc_id"))

@@ -398,8 +398,8 @@ object VectorQueries {
       (col("ccid") * k2 + col("fid")).cast("int").as("cid")), free)
   }
 
-  /** The checkpoint-backed coarse assignment both [[semanticClusters]]
-    * and [[fitProbe]] build on — (vec_id, qv, ccid) with truncated
+  /** The checkpoint-backed coarse assignment [[semanticClusters]]
+    * builds on — (vec_id, qv, ccid) with truncated
     * lineage, so every fine-level pass reads stored rows instead of
     * re-running scan+quantize.
     *
@@ -487,10 +487,8 @@ object VectorQueries {
       .map { case (c, rs) => c -> rs.map(t => (t._2, t._3)).sortBy(_._1).toSeq }
 
   /** Fine-level seed centroids: each coarse cell's k2 lowest vec_ids
-    * (cells smaller than k2 get one centroid per member). Factored from
-    * [[lloydFine]] so the round-11 fit decomposition ([[fitProbe]])
-    * times the EXACT seed collect the operator runs. */
-  private[graft] def fineSeeds(coarse: DataFrame,
+    * (cells smaller than k2 get one centroid per member). */
+  private def fineSeeds(coarse: DataFrame,
       k2: Int): Map[Int, Seq[(Int, Array[Long])]] = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("ccid").orderBy("vec_id")
@@ -507,9 +505,8 @@ object VectorQueries {
     * fid, component) integer mean — the posexplode fans each row into
     * dim component rows, the first groupBy's map-side partial
     * aggregation collapses them to ≤ cells·k2·dim partials per
-    * partition before the shuffle, and the driver collect is ≤ k rows.
-    * Factored from [[lloydFine]] for [[fitProbe]]. */
-  private[graft] def fineUpdate(coarse: DataFrame,
+    * partition before the shuffle, and the driver collect is ≤ k rows. */
+  private def fineUpdate(coarse: DataFrame,
       cents: Map[Int, Seq[(Int, Array[Long])]],
       viaVecSum: Boolean = VecSumUpdates): Map[Int, Seq[(Int, Array[Long])]] =
     if (viaVecSum)
@@ -540,71 +537,6 @@ object VectorQueries {
       cents = fineUpdate(coarse, cents, viaVecSum)
     }
     assignedFine(coarse, cents)
-  }
-
-  /** Stage probes for the q115 fit decomposition (round-11 VERDICT #3:
-    * the two-level Lloyd fit is 86–89% of q115's deep-decade wall at
-    * measured exponent ~1.06 — NAME the linear machinery before any
-    * redesign). Each stage is a PREFIX of [[semanticClusters]] built
-    * from the operator's own factored building blocks, so TimeQuery
-    * deltas isolate the terms:
-    *
-    *   quant            = parquet scan + int8 quantize (narrow map)
-    *   coarse − quant   = coarse k1-Lloyd fit (3 iters) + assign + ckpt
-    *   seeds − coarse   = fine seed window/collect
-    *   assign1 − seeds  = ONE fine distance pass (n·k2 NearestCentroid)
-    *   update1 − assign1= ONE centroid-update agg (posexplode n·dim →
-    *                      partial-agg → k-row collect)
-    *   q115_clusters    = coarse + seeds + 3×(assign+update) + final
-    *                      assign — NOTE (ADVICE r12): the plain stages
-    *                      above decompose the PLAIN-strategy fit (the
-    *                      A/B baseline: interpreted quantize, Column
-    *                      assign, posexplode updates); since the
-    *                      round-12 default flips, the SHIPPED
-    *                      q115_clusters runs all three fused strategies,
-    *                      so the plain-stage sum no longer equals the
-    *                      production query — cross-check it against
-    *                      TimeQuery's q115_clusters_fast (≡ default) or
-    *                      decompose the shipped path with quantexpr /
-    *                      coarsenc / update1agg prefixes
-    *   coarseagg / update1agg (round 12) = the same coarse / update1
-    *                      prefixes with centroid updates via the
-    *                      [[graft.functions.VecSum]] whole-vector
-    *                      aggregate instead of posexplode — interleave
-    *                      each with its plain twin for the
-    *                      update-strategy A/B (update1agg keeps the
-    *                      plain coarse prefix so the delta isolates
-    *                      the update step)
-    *
-    * Stages whose work terminates in a driver collect return a 1-row
-    * frame derived from the collected result (the work already happened
-    * inside the timed body; the sink materialization adds nothing). */
-  private[graft] def fitProbe(e: DataFrame, stage: String): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val k = semKFor(e.count())
-    val k1 = semK1For(k)
-    val k2 = (k + k1 - 1) / k1
-    val q = quantizedFrame(e, viaExpr = stage == "quantexpr")
-    if (stage == "quant" || stage == "quantexpr") return q
-    // "*agg"/"*nc" stages (round 12): same prefix, one strategy swapped —
-    // coarseagg = VecSum updates, coarsenc = NearestCentroidExpr assign —
-    // so each interleaved pair isolates one term. update1agg keeps the
-    // STANDARD coarse prefix so its delta vs update1 isolates the update
-    // step alone (coarse output is bit-identical under every strategy,
-    // but its cost is not).
-    val coarse = coarseAssigned(q, k1,
-      viaVecSum = stage == "coarseagg", viaNc = stage == "coarsenc")
-    if (stage == "coarsenc") return coarse
-    if (stage == "coarse" || stage == "coarseagg") return coarse
-    val seeds = fineSeeds(coarse, k2)
-    stage match {
-      case "seeds"   => Seq(seeds.size).toDF("cells")
-      case "assign1" => assignedFine(coarse, seeds)
-      case "update1" => Seq(fineUpdate(coarse, seeds, viaVecSum = false).size).toDF("cells")
-      case "update1agg" => Seq(fineUpdate(coarse, seeds, viaVecSum = true).size).toDF("cells")
-      case other     => sys.error(s"unknown fit stage: $other")
-    }
   }
 
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023,

@@ -62,16 +62,8 @@ object ScaleBench {
     // SPARK_GRAFT_SHUFFLE_PARTS so per-partition shuffle volume stays
     // roughly constant across the two dirs; the value is recorded in the
     // output record ("parts") so eras never get compared blind.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt, "scalebench")
+    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions")
 
     // warm the machinery so JIT/codegen init isn't charged to the first query
     spark.range(1000000).selectExpr("id % 97 AS k").groupBy("k").count().count()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -35,12 +36,40 @@ class DedupSpec extends SparkSpec {
     assert(j == 0.8333)
   }
 
+  /** n-gram Jaccard over the FRAME-LEVEL distinct shingle frame (explode,
+    * then one corpus-wide `distinct()`, then the hot-df cap) — the
+    * round-10 shingle frame, kept here as the reference the per-row
+    * `array_distinct` frame is checked against. Sorted by pair. */
+  private def distinctJaccard(df: DataFrame, threshold: Double,
+      cap: Long): Seq[Row] = {
+    val all = df.select(col("doc_id").as("id"),
+      explode(graft.functions.TextFunctions.shingles(col("text"), 3)).as("shingle"))
+      .distinct()
+    val sh = if (cap <= 0) all else all.join(
+      all.groupBy("shingle").agg(count(lit(1)).as("df"))
+        .filter(col("df") > cap).select("shingle"),
+      Seq("shingle"), "left_anti")
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    sh.select(col("shingle"), col("id").as("id_a"))
+      .join(sh.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
+      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
+      .withColumn("jaccard",
+        round(col("n_common") / (col("sa") + col("sb") - col("n_common")), 4))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "n_common", "jaccard")
+      .orderBy("id_a", "id_b").collect().toSeq
+  }
+
   test("shingle-frame forms (rescan/pin/distinct) agree on a corpus with in-doc repeats") {
-    // repeated phrases INSIDE each doc: the per-row array_distinct forms
-    // equal the frame-level distinct() exactly when ids are unique — the
+    // repeated phrases INSIDE each doc: the per-row array_distinct frame
+    // equals the frame-level distinct() exactly when ids are unique — the
     // precondition ngramJaccardForm's scaladoc states; this corpus makes
     // the repeat case load-bearing (docs 0/1 repeat their own trigrams),
-    // and the capped run exercises the hot-df consumer under each form
+    // and the capped run exercises the hot-df consumer under each form.
+    // The frame-level distinct form is the reference (distinctJaccard).
     val rep = Seq(
       (0L, "alpha beta gamma alpha beta gamma alpha beta gamma delta epsilon zeta"),
       (1L, "alpha beta gamma alpha beta gamma alpha beta gamma delta epsilon eta"),
@@ -48,9 +77,9 @@ class DedupSpec extends SparkSpec {
       (3L, "totally unrelated words about catalyst plans and shuffle partitions"),
     ).toDF("doc_id", "text")
     for (cap <- Seq(0L, 2L)) {
-      val ref = Dedup.ngramJaccardForm(rep, 3, 0.2, "doc_id", "text", cap,
-        "distinct")._1.orderBy("id_a", "id_b").collect().toSeq
-      for (form <- Seq("rescan", "pin", "stage")) {
+      val ref = distinctJaccard(rep, 0.2, cap)
+      assert(ref.nonEmpty, s"cap=$cap: vacuous reference")
+      for (form <- Seq("rescan", "stage")) {
         val (df, free) = Dedup.ngramJaccardForm(rep, 3, 0.2, "doc_id", "text",
           cap, form)
         val got = df.orderBy("id_a", "id_b").collect().toSeq
@@ -89,8 +118,7 @@ class DedupSpec extends SparkSpec {
       .crossJoin(rep.select(col("doc_id").as("id_b")))
       .filter(col("id_a") < col("id_b"))
     for (t <- Seq(0.0, 0.5)) {
-      val ref = Dedup.ngramJaccardForm(rep, 3, t, "doc_id", "text", 0L,
-        "distinct")._1.orderBy("id_a", "id_b").collect().toSeq
+      val ref = distinctJaccard(rep, t, 0L)
       val got = Dedup.verifiedJaccard(rep, allPairs, t)
         .orderBy("id_a", "id_b").collect().toSeq
       assert(ref.nonEmpty, s"threshold $t: vacuous reference")
@@ -111,6 +139,30 @@ class DedupSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got.contains((2L, 3L)))
     assert(!got.contains((0L, 4L)))
+  }
+
+  test("q35's candidate plan counts signature agreement once, outside the band-join condition") {
+    // a plain filter on est_jaccard is pushed into the band join's
+    // condition with the eq_count expression substituted, so every
+    // band-join row counted its signature agreement twice; the rowsWhere
+    // filter keeps the count in the projection, computed once
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val cands = Dedup.minhashLsh(docs, k = 16, bands = 4, minEstimate = 0.5)
+    // executing the frame itself makes its adaptive plan final, so the
+    // plan holds the code-generated stages that actually ran
+    assert(cands.collect().map(r => (r.getLong(0), r.getLong(1))).contains((2L, 3L)))
+    val plan = cands.queryExecution.executedPlan
+    val conditions = helper.collect(plan) {
+      case j: BaseJoinExec => j.condition.map(_.sql).getOrElse("")
+    }
+    assert(conditions.nonEmpty, plan.treeString)
+    assert(conditions.forall(!_.contains("eq_count")), conditions.mkString("\n"))
+    val code = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+      .map(_._2).mkString("\n")
+    assert("EqCountUtil.eqCount".r.findAllMatchIn(code).size == 1,
+      s"eqCount calls in the generated code:\n$code")
   }
 
   test("cross-corpus near-dup finds only corpus-x-probe pairs, correctly oriented") {
@@ -198,43 +250,6 @@ class DedupSpec extends SparkSpec {
         .select("id_a", "id_b", "hamming")
         .as[(Long, Long, Int)].collect().toSet
       assert(perm == chunk, s"maxDist=$maxDist nOuter=$nOuter nInner=$nInner")
-    }
-  }
-
-  test("pinSims/pruneSingletons dials are output-invariant (r14)") {
-    // pin = one localCheckpoint of the (id, simhash) frame instead of
-    // re-deriving the signature pipeline per join side; prune = drop
-    // singleton (table, key) buckets before the salted self-join (a
-    // 1-row bucket can't produce a pair). Both must be pure plan
-    // re-shapes: identical verified sets on every scheme.
-    val base = Dedup.simhashPairsCombinatorial(docs, maxDist = 3,
-      pinSims = false, pruneSingletons = false)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-    val basePerm = Dedup.simhashPairsPermuted(docs, maxDist = 3,
-      pinSims = false, pruneSingletons = false)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-    assert(basePerm == base) // schemes agree (pigeonhole), dials aside
-    for (pin <- Seq(true, false); prune <- Seq(true, false)
-        if pin || prune) {
-      val combo = Dedup.simhashPairsCombinatorial(docs, maxDist = 3,
-        pinSims = pin, pruneSingletons = prune)
-        .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-      assert(combo == base, s"combo pin=$pin prune=$prune")
-      val perm = Dedup.simhashPairsPermuted(docs, maxDist = 3,
-        pinSims = pin, pruneSingletons = prune)
-        .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-      assert(perm == base, s"permuted pin=$pin prune=$prune")
-    }
-    // same dials on the minhash band join (a singleton band bucket can't
-    // hold a candidate pair; pinning the signature frame is a pure reuse)
-    val lshBase = Dedup.minhashLsh(docs, pinSigs = false,
-      pruneSingletons = false)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    for (pin <- Seq(true, false); prune <- Seq(true, false) if pin || prune) {
-      val lsh = Dedup.minhashLsh(docs, pinSigs = pin,
-        pruneSingletons = prune)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(lsh == lshBase, s"minhash pin=$pin prune=$prune")
     }
   }
 
@@ -738,15 +753,6 @@ class DedupSpec extends SparkSpec {
       assert(viaPrefix == exact,
         s"trial $trial t=$t: prefix join lost ${(exact -- viaPrefix).size} / " +
           s"invented ${(viaPrefix -- exact).size} pairs")
-    }
-  }
-
-  test("the public n-gram entries refuse the stage form, which needs its free thunk") {
-    for (run <- Seq[() => Unit](
-        () => Dedup.ngramJaccard(docs, shingleForm = "stage"),
-        () => Dedup.ngramContainment(docs, shingleForm = "stage"))) {
-      val e = intercept[IllegalArgumentException](run())
-      assert(e.getMessage.contains("ngramJaccardForm"), e.getMessage)
     }
   }
 

@@ -28,10 +28,9 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("deep runs cross the plan-depth rebase and stay reference-exact") {
-    // 12 iterations crosses two RebaseEvery=5 boundaries on the persist
-    // path (the round-12 deep-run fix) and must equal both the in-memory
-    // reference and the flat-plan checkpoint path — the rebase is a plan
-    // transformation, never a value change
+    // 12 iterations crosses two RebaseEvery=5 boundaries (the round-12
+    // deep-run fix) and must equal the in-memory reference — the rebase
+    // is a plan transformation, never a value change
     val rnd = new scala.util.Random(31)
     val n = 12
     val edges = (0 until 40).map(_ =>
@@ -40,34 +39,7 @@ class PageRankSpec extends SparkSpec {
     val df = edges.toDF("src", "dst")
     val got = PageRank.ranks(spark, df, 12).as[(Long, Long)].collect().toMap
     assert(got == PageRankReference.ranks(edges, 12), "vs reference")
-    val ck = PageRank.ranks(spark, df, 12, truncViaCheckpoint = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == ck, "persist+rebase path vs checkpoint path")
-  }
-
-  test("hoisted e⋈deg path is bit-identical to the per-iteration-join path") {
-    // the round-13 loop-invariant hoist is a plan transformation over
-    // identical rows (`rank div outdeg` sees the same (src, dst, outdeg,
-    // rank) tuples either way) — both forms must equal the in-memory
-    // reference and each other on random graphs
-    val rnd = new scala.util.Random(37)
-    (1 to 4).foreach { trial =>
-      val n = 4 + rnd.nextInt(16)
-      val edges = (0 until 3 * n).map(_ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2).distinct
-      if (edges.nonEmpty) {
-        val df = edges.toDF("src", "dst")
-        val iters = 2 + rnd.nextInt(3)
-        val hoisted = PageRank.ranks(spark, df, iters, hoistDeg = true)
-          .as[(Long, Long)].collect().toMap
-        val plain = PageRank.ranks(spark, df, iters, hoistDeg = false)
-          .as[(Long, Long)].collect().toMap
-        assert(hoisted == plain, s"trial $trial hoist vs plain")
-        assert(hoisted == PageRankReference.ranks(edges, iters),
-          s"trial $trial vs reference")
-      }
-    }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("a source-only node keeps its damping base; a chain never goes extinct") {
@@ -95,44 +67,6 @@ class PageRankSpec extends SparkSpec {
     // the degree-3 hub must outrank the pendant leaf
     val rank = got.toMap
     assert(rank(3L) > rank(4L))
-  }
-
-  test("lazy truncation path is bit-identical to the eager path (incl. deep rebase)") {
-    // the round-14 lazy-truncation arm registers each iteration's cache
-    // without materializing it (all pending builds fold into the next
-    // materializing action) — a SCHEDULING change, never a value change.
-    // 12 iterations crosses two RebaseEvery=5 windows on the lazy path.
-    val rnd = new scala.util.Random(43)
-    (1 to 4).foreach { trial =>
-      val n = 4 + rnd.nextInt(16)
-      val edges = (0 until 3 * n).map(_ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2).distinct
-      if (edges.nonEmpty) {
-        val df = edges.toDF("src", "dst")
-        val iters = if (trial == 1) 12 else 2 + rnd.nextInt(4)
-        val lazyR = PageRank.ranks(spark, df, iters, eagerTrunc = false)
-          .as[(Long, Long)].collect().toMap
-        val eagerR = PageRank.ranks(spark, df, iters, eagerTrunc = true)
-          .as[(Long, Long)].collect().toMap
-        assert(lazyR == eagerR, s"trial $trial lazy vs eager")
-        assert(lazyR == PageRankReference.ranks(edges, iters),
-          s"trial $trial vs reference")
-      }
-    }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
-
-  test("q74 top-edge pin is output-identical to the rescan form") {
-    // the round-13 pin is a plan cut (eager localCheckpoint of the
-    // deterministic 100-row top frame), never a value change
-    val d = "/root/testdata/sf0.001"
-    val pin = graft.queries.AnalyticsQueries.q74WithPin(spark, d, pinTop = true)
-      .collect().toSeq
-    val rescan = graft.queries.AnalyticsQueries.q74WithPin(spark, d, pinTop = false)
-      .collect().toSeq
-    assert(pin == rescan)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   test("triangle enumeration matches brute force on random canonical graphs") {

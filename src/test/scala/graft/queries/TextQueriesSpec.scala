@@ -55,18 +55,6 @@ class TextQueriesSpec extends SparkSpec {
     }
   }
 
-  test("q100 exact-dedup shapes agree: min-agg semi-join == fp window (r14)") {
-    // the r14 re-shape replaces the full-text window over fp with a
-    // narrow groupBy(fp).min + left-semi attach; ids are unique, so the
-    // kept row set — and every downstream aggregate — must be identical
-    val window = TextQueries.q100WithExact(spark, d, minAgg = false)
-      .as[(String, String, Long, Long, String)].collect().toSeq
-    val minAgg = TextQueries.q100WithExact(spark, d, minAgg = true)
-      .as[(String, String, Long, Long, String)].collect().toSeq
-    assert(minAgg == window, "q100 exact-dedup shapes must be row-identical")
-    assert(minAgg.nonEmpty)
-  }
-
   test("q98 plan shape counts repeated occurrences and 1-based offsets") {
     val df = Seq(
       (1L, "data table scan data table scan"),

@@ -113,32 +113,6 @@ class CandVolSpec extends SparkSpec {
     }
   }
 
-  test("BlockDial recall counts exactly the planted pairs that remain candidates") {
-    import spark.implicits._
-    // 100 vectors; ids (2i, 2i+1) for i < 4 are IDENTICAL (planted per
-    // GenScale's convention nPlanted = n/25 = 4); the rest random
-    val rnd = new scala.util.Random(3)
-    val vecs = (0 until 100).map { id =>
-      val base =
-        if (id < 8) Array.fill(64)(new scala.util.Random(500 + id / 2).nextGaussian().toFloat)
-        else Array.fill(64)(rnd.nextGaussian().toFloat)
-      (id.toLong, base, 0)
-    }
-    val embs = vecs.toDF("vec_id", "embedding", "label")
-    val (vol, found, total) = BlockDial.measure(embs, 10000L, Int.MaxValue)
-    assert(total === 4L)
-    // identical vectors share the same bucket, so all planted pairs are
-    // candidates and the volume matches the enumerated multiprobe join
-    assert(found === 4L)
-    val (bounded, scheme) = Dedup.adaptiveBuckets(embs)
-    val a = bounded.select(col("blk"))
-    val b = bounded.select(explode(Dedup.probeBuckets(col("full"), scheme)).as("blk"))
-    assert(vol === a.join(b, Seq("blk")).count())
-    // a capped probe set can only lose candidates, never invent them
-    val (volCap, foundCap, _) = BlockDial.measure(embs, 10000L, 2)
-    assert(volCap <= vol && foundCap <= found)
-  }
-
   test("even stepping holds bucket populations near target at every n") {
     // synthetic gaussian corpora straddling a power-of-two boundary in
     // bucket count: under round-5 power-of-two stepping the mean pop

@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Run any graft main on a plain JVM (same classpath/opens recipe as
 # bench.sh): tools/run.sh <MainClass> [args...]. Avoids sbt's stdout
-# wrapping and its project lock, so tool mains (TimeQuery, ScaleBench,
-# AuditPlans, CandVol, ...) can run while another sbt task is active.
+# wrapping and its project lock, so tool mains (TimeQuery, ExplainDump,
+# ScaleBench, CandVol, StreamBench, GenScale) can run while another sbt
+# task is active.
 #
 # Usage: SPARK_DRIVER_MEM=24g tools/run.sh graft.tools.TimeQuery <dir> <q>
 set -euo pipefail
