@@ -71,8 +71,14 @@ object Augment {
     * unranked stats frame in one [[GroupOps.pandasAvgRanksDesc]] call. */
   def authorReady(author: DataFrame, authorshipReady: DataFrame,
       articleReady: DataFrame, namesGenders: DataFrame): DataFrame =
-    GroupOps.pandasAvgRanksDesc(
-      authorStats(author, authorshipReady, articleReady, namesGenders), Seq(
+    authorRanked(authorStats(author, authorshipReady, articleReady, namesGenders))
+
+  /** The four ranks over [[authorStats]]' frame, and the author table's
+    * columns. The rank tables and the join base each read `stats`, so
+    * [[ArxivPipeline.run]] persists it first and the stats are computed
+    * once instead of once per copy. */
+  private[arxiv] def authorRanked(stats: DataFrame): DataFrame =
+    GroupOps.pandasAvgRanksDesc(stats, Seq(
         "total_pubs" -> "rank_total_pubs",
         "total_cites" -> "rank_total_cites",
         "avg_cites" -> "rank_avg_cites",

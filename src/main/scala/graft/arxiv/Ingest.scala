@@ -23,15 +23,30 @@ object Ingest {
       .withColumnRenamed("update_date", "date")
 
   /** DOI present, unique id, CS-not-physics, non-trivial title
-    * (`raw_to_tables.py:54-70`). dropDuplicates keeps an arbitrary row
-    * where pandas kept the first in file order — ids are unique in the real
-    * dump, so the difference is theoretical. */
-  def filterArticles(bronze: DataFrame): DataFrame =
+    * (`raw_to_tables.py:54-70`). dropDuplicates keeps an arbitrary copy of
+    * each DOI-bearing id where pandas kept the first in file order — ids
+    * are unique in the real dump, so the difference is theoretical — and
+    * the category/title filter then judges that copy alone: a copy that
+    * fails it drops the id even when another copy would pass.
+    *
+    * Only copies that pass the filter move their columns through the
+    * dedup exchange: each copy travels as its id plus one struct that is
+    * null unless the copy passes, and the ids whose chosen copy is null
+    * are dropped after it. The contract is the one above, unchanged; a
+    * null predicate drops the copy, as a `filter` does. On the benchmark's
+    * arXiv input (29 % of DOI rows pass) the exchange moves 0.21 MB
+    * instead of the 0.59 MB that deduplicating the full rows moved. */
+  def filterArticles(bronze: DataFrame): DataFrame = {
+    val pass = col("categories").contains("cs.") && !col("categories").contains("physics") &&
+      length(col("title")) > 10
+    val rest = Seq("title", "doi", "categories", "date", "authors_parsed")
     bronze
       .filter(col("doi").isNotNull)
+      .select(col("article_id"), when(pass, struct(rest.map(col): _*)).as("r"))
       .dropDuplicates("article_id")
-      .filter(col("categories").contains("cs.") && !col("categories").contains("physics"))
-      .filter(length(col("title")) > 10)
+      .filter(col("r").isNotNull)
+      .select(col("article_id") +: rest.map(c => col(s"r.$c")): _*)
+  }
 
   /** Explode authors_parsed ([last, first middle] pairs) into per-author
     * rows with cleaned names and the synthesized author id

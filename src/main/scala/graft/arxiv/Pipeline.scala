@@ -48,7 +48,15 @@ class ArxivPipeline(spark: SparkSession, stageDir: String) {
     * is parsed. If an executor holding persisted blocks is lost, Spark
     * recomputes those blocks from the JSONL through the lineage, so the
     * stages stay correct (unlike `localCheckpoint`, whose blocks die with
-    * the executor) and only the lost share is parsed again. */
+    * the executor) and only the lost share is parsed again.
+    *
+    * The `author` stage builds its four rank tables and their join base
+    * from one persisted copy of the unranked author stats, so the stats'
+    * joins and aggregations run once, not once per copy in the plan. The
+    * stats are unpersisted as soon as the stage is written, in a `finally`
+    * too, so they live only while that one stage runs; like the silver
+    * inputs they are persisted, not checkpointed, and a lost executor's
+    * blocks are recomputed from the staged Parquet. */
   def run(jsonlPath: String, enricher: Augment.Enricher, cwts: DataFrame,
       namesGenders: DataFrame): ArxivTables = {
     val filtered = Ingest.filterArticles(Ingest.bronze(spark, jsonlPath)).persist()
@@ -70,8 +78,11 @@ class ArxivPipeline(spark: SparkSession, stageDir: String) {
     val journal = stage("journal")(Augment.journalReady(article, cwts))
     val authorship = stage("authorship")(
       Augment.authorshipReady(authorship0, article))
-    val author = stage("author")(
-      Augment.authorReady(author0, authorship, article, namesGenders))
+    val author = {
+      val stats = Augment.authorStats(author0, authorship, article, namesGenders).persist()
+      try stage("author")(Augment.authorRanked(stats))
+      finally stats.unpersist()
+    }
     val articleCategory = stage("article_category")(
       Augment.articleCategoryReady(ac0, article))
     val category = stage("category")(

@@ -85,7 +85,10 @@ object GroupOps {
     * Every rank table is built from the unranked `df` and all of them are
     * joined onto it, so the plan holds 1 + pairs copies of `df`. Chaining
     * single-metric calls instead builds each table from the frame the
-    * previous call ranked: 2^pairs copies. */
+    * previous call ranked: 2^pairs copies. Spark reuses none of those
+    * copies' exchanges, so an expensive `df` should be persisted first:
+    * `ArxivPipeline.run` persists the author stats it ranks, and every
+    * copy then reads the one cached frame. */
   def pandasAvgRanksDesc(df: DataFrame, ranks: Seq[(String, String)]): DataFrame =
     ranks.foldLeft(df) { case (acc, (metric, out)) =>
       val byVal = df.groupBy(metric).agg(count(lit(1)).as("__n"))

@@ -1,7 +1,11 @@
 package graft.arxiv
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{CachedEntries, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -137,11 +141,14 @@ class ArxivPipelineSpec extends SparkSpec {
 
   test("run leaves no persisted RDDs, on success and when the enricher throws") {
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    def leaked = sc.getPersistentRDDs.keySet -- before
+    val (before, entries) = (sc.getPersistentRDDs.keySet, CachedEntries(spark))
+    // a frame still marked persisted is a leak whether or not its blocks
+    // were built: a later plan that matches it would cache it again
+    def leaked = (sc.getPersistentRDDs.keySet -- before, CachedEntries(spark) - entries)
+    def clean = leaked == ((Set.empty[Int], 0))
     new ArxivPipeline(spark, s"$tmp/stages-pins")
       .run(jsonl, new Augment.FixtureEnricher(crossref), cwts, genders)
-    assert(leaked.isEmpty)
+    assert(clean, leaked)
     val failing = new Augment.Enricher {
       def lookup(dois: org.apache.spark.sql.DataFrame) =
         throw new IllegalStateException("enrichment outage")
@@ -151,7 +158,27 @@ class ArxivPipelineSpec extends SparkSpec {
     }
     assert(new java.io.File(s"$tmp/stages-pins-fail/silver_category.parquet/_SUCCESS").isFile,
       "the enricher must fail after the silver stages ran")
-    assert(leaked.isEmpty)
+    assert(clean, leaked)
+    // a gender lookup that throws once evaluated fails the author stage
+    // itself, after its stats were marked persisted: the lookup is read
+    // from files, so it throws in the job that builds the cached stats
+    // (over an in-memory Seq the optimizer would evaluate it while the
+    // stats are being marked)
+    val outage = udf((s: String) => (throw new IllegalStateException("gender outage")): String)
+    genders.write.mode("overwrite").parquet(s"$tmp/genders.parquet")
+    val failingGenders = spark.read.parquet(s"$tmp/genders.parquet")
+      .select(outage(col("first_name")).as("first_name"), col("gender"))
+    val dir = s"$tmp/stages-pins-author-fail"
+    val e = intercept[Exception] {
+      new ArxivPipeline(spark, dir)
+        .run(jsonl, new Augment.FixtureEnricher(crossref), cwts, failingGenders)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("gender outage")), e)
+    assert(new java.io.File(s"$dir/authorship.parquet/_SUCCESS").isFile &&
+      !new java.io.File(s"$dir/author.parquet/_SUCCESS").exists,
+      "the gender lookup must fail inside the author stage")
+    assert(clean, leaked)
   }
 
   test("author ranks add at most one copy of the unranked frame per rank") {
@@ -214,5 +241,123 @@ class ArxivPipelineSpec extends SparkSpec {
       .selectExpr("shared_articles[0].article_id", "shared_articles[0].year")
       .as[(String, Int)].head()
     assert(arts == (("a1", 2019)))
+  }
+
+  /** Two ids whose copies differ: d1 has a physics copy and a cs copy, d2
+    * two cs copies that both pass, with different titles, DOIs, dates and
+    * authors. The copies sit in two files, so they reach the dedup from
+    * different partitions. */
+  private lazy val dupDir: String = {
+    val d = s"$tmp/dup-copies"
+    Files.createDirectories(Paths.get(d))
+    def write(name: String, lines: String*): Unit =
+      Files.write(Paths.get(d, name), lines.mkString("\n").getBytes("UTF-8"))
+    write("part-0.json",
+      """{"id":"d1","title":"Quantum optics survey","doi":"10.1/d1p","categories":"physics.optics cs.LG","update_date":"2018-01-01","authors_parsed":[["Planck","Max",""]]}""",
+      """{"id":"d2","title":"Alpha title for d2","doi":"10.1/d2a","categories":"cs.DB","update_date":"2017-03-03","authors_parsed":[["Hopper","Grace",""]]}""")
+    write("part-1.json",
+      """{"id":"d2","title":"Beta title for the d2 copy","doi":"10.1/d2b","categories":"cs.DS","update_date":"2016-04-04","authors_parsed":[["Knuth","Donald",""],["Lovelace","Ada",""]]}""",
+      """{"id":"d1","title":"Learning to rank papers","doi":"10.1/d1c","categories":"cs.IR","update_date":"2019-02-02","authors_parsed":[["Turing","Alan",""]]}""")
+    d
+  }
+
+  test("a duplicate id keeps one whole copy, chosen before the category filter") {
+    // one copy's fields: (title, doi, n_authors, year), its author ids and
+    // its categories; the gold tables add the copy's distinct n_cites
+    type Copy = (Seq[Any], Set[String], Set[String])
+    val cs1: Copy = (Seq("Learning to rank papers", "10.1/d1c", 1, 2019), Set("TuringA"), Set("cs.IR"))
+    val d2a: Copy = (Seq("Alpha title for d2", "10.1/d2a", 1, 2017), Set("HopperG"), Set("cs.DB"))
+    val d2b: Copy = (Seq("Beta title for the d2 copy", "10.1/d2b", 2, 2016),
+      Set("KnuthD", "LovelaceA"), Set("cs.DS"))
+    val cites = Map("10.1/d1p" -> 1, "10.1/d1c" -> 2, "10.1/d2a" -> 3, "10.1/d2b" -> 4)
+    def copyIn(t: ArxivTables, id: String, gold: Boolean): Option[Copy] = {
+      val cols = Seq("title", "doi", "n_authors", "year") ++ (if (gold) Seq("n_cites") else Nil)
+      val arts = t.article.filter(col("article_id") === id).select(cols.map(col): _*).collect()
+      assert(arts.length <= 1, s"$id: ${arts.toSeq}")
+      def ids(df: DataFrame, c: String) =
+        df.filter(col("article_id") === id).select(c).as[String].collect().toSet
+      val (authors, cats) = (ids(t.authorship, "author_id"), ids(t.articleCategory, "category_id"))
+      arts.headOption match {
+        case None =>
+          assert(authors.isEmpty && cats.isEmpty, s"$id has no article row but $authors / $cats")
+          None
+        case Some(r) =>
+          val fields = r.toSeq
+          if (gold) assert(fields.last == cites(fields(1).toString), s"$id mixes copies: $fields")
+          Some((fields.take(4), authors, cats))
+      }
+    }
+    val crossref = cites.toSeq.map { case (doi, n) => (doi, "journal-article", n, "1111-1111") }
+      .toDF("doi", "type", "n_cites", "journal_issn")
+    val viaSilver = Ingest.silver(Ingest.bronze(spark, dupDir))
+    val viaRun = new ArxivPipeline(spark, s"$tmp/stages-dups")
+      .run(dupDir, new Augment.FixtureEnricher(crossref), cwts, genders)
+    for ((t, isGold) <- Seq(viaSilver -> false, viaRun -> true)) {
+      val d1 = copyIn(t, "d1", isGold)
+      assert(d1.forall(_ == cs1), s"d1 is not its cs copy: $d1")
+      val d2 = copyIn(t, "d2", isGold)
+      assert(d2.contains(d2a) || d2.contains(d2b), s"d2 is not one whole copy: $d2")
+    }
+  }
+
+  /** The id dedup as a wide `dropDuplicates` over every projected column
+    * of every DOI-bearing copy: the row-for-row reference the narrow dedup
+    * must equal. */
+  private def wideFilterArticles(bronze: DataFrame): DataFrame =
+    bronze
+      .filter(col("doi").isNotNull)
+      .dropDuplicates("article_id")
+      .filter(col("categories").contains("cs.") && !col("categories").contains("physics"))
+      .filter(length(col("title")) > 10)
+
+  /** Shuffle bytes written by the tasks of `body` only, and its result. */
+  private def shuffled[T](body: => T): (Long, T) = {
+    val sc = spark.sparkContext
+    val bytes = new AtomicLong
+    val tasks = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(tasks)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (bytes.get, out)
+    } finally sc.removeSparkListener(tasks)
+  }
+
+  test("the id dedup moves full rows only for copies that pass the filter") {
+    // 2,000 records: 9 in 10 carry a DOI, 7 in 10 of those fail the
+    // category filter (physics, math, astro-ph) and 1 in 20 of the rest
+    // has a too-short title; every 25th record is written twice, and each
+    // carries 8 to 27 authors
+    val rnd = new scala.util.Random(7)
+    val lines = (0 until 2000).flatMap { i =>
+      val doi = if (i % 10 == 9) "null" else s""""10.5/r$i""""
+      val cats = rnd.nextInt(10) match {
+        case 0 | 1 | 2 => "cs.LG cs.DB"
+        case 3 | 4 => "physics.optics cs.LG"
+        case 5 | 6 => "math.CO math.PR"
+        case _ => "astro-ph.GA"
+      }
+      val title = if (rnd.nextInt(20) == 0) "Short" else s"Record $i on ${"topic " * (3 + rnd.nextInt(6))}"
+      val authors = (0 until 8 + rnd.nextInt(20))
+        .map(k => s"""["Lastname${rnd.nextInt(5000)}","First$k Middle${k % 7}",""]""")
+      val line = s"""{"id":"r$i","title":"$title","doi":$doi,"categories":"$cats",""" +
+        s""""update_date":"20${10 + i % 12}-01-01","authors_parsed":[${authors.mkString(",")}]}"""
+      if (i % 25 == 0) Seq(line, line) else Seq(line)
+    }
+    val path = s"$tmp/dedup-bound.jsonl"
+    Files.write(Paths.get(path), lines.mkString("\n").getBytes("UTF-8"))
+    val bronze = Ingest.bronze(spark, path)
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getString(0))
+    val (narrowBytes, narrow) = shuffled(rows(Ingest.filterArticles(bronze)))
+    val (wideBytes, wide) = shuffled(rows(wideFilterArticles(bronze)))
+    assert(narrow.nonEmpty && narrow.length < 1800 * 4 / 10, narrow.length)
+    assert(narrow == wide)
+    assert(Ingest.filterArticles(bronze).schema == wideFilterArticles(bronze).schema)
+    assert(wideBytes > 0 && narrowBytes <= wideBytes / 2,
+      s"filterArticles shuffled $narrowBytes B, the wide dedup $wideBytes B")
   }
 }
