@@ -111,10 +111,11 @@ object GraphMirror {
       broadcast(t.journal.filter(col("journal_title") === title)
         .select("journal_issn")), Seq("journal_issn"), "left_semi")
 
-  /** G5: articles in a category subdomain cited > minCites (README.md:329-333). */
+  /** G5: articles in a category subdomain cited > minCites (README.md:329-333).
+    * Belonging to the subdomain implies belonging to some category, so
+    * the one semi-join is the whole membership test. */
   def articlesInSubdomain(t: ArxivTables, subdom: String, minCites: Int): DataFrame =
     t.article.filter(col("n_cites") > minCites)
-      .join(t.articleCategory, Seq("article_id"), "left_semi")
       .join(t.articleCategory.join(
         broadcast(t.category.filter(col("subdom") === subdom)
           .select("category_id")), Seq("category_id"), "left_semi")

@@ -19,9 +19,10 @@ import org.apache.spark.sql.DataFrame
   *    `withEgo=false` replicates cell 59's `WHERE coauthor <> author`
   *    inner-match semantics (a solo-authored article vanishes);
   *  - G4 `(art)-[:PUBLISHED_IN]->(j {title})` — edge + property lookup;
-  *  - G5 `(art)-[:BELONGS_TO]->(c {subdom})` + `art.n_cites >` — kept
-  *    literally as the builder does: the redundant any-category
-  *    membership semi-join is preserved for shape fidelity.
+  *  - G5 `(art)-[:BELONGS_TO]->(c {subdom})` + `art.n_cites >` — one
+  *    membership test against the subdomain's BELONGS_TO edges, as in the
+  *    builder: an article with such an edge belongs to some category, so
+  *    no separate any-category test is made.
   *
   * String arguments are escaped with [[GraphSql.lit]] — callers pass raw
   * ids/titles, never pre-quoted SQL fragments.
@@ -100,7 +101,6 @@ object GraphSql {
   def g5ArticlesInSubdomain(subdom: String, minCites: Int): String =
     s"""SELECT a.* FROM article a
        |WHERE a.n_cites > $minCites
-       |  AND a.article_id IN (SELECT src FROM edges WHERE label = 'BELONGS_TO')
        |  AND a.article_id IN (
        |    SELECT e.src FROM edges e
        |    JOIN category c ON e.dst = c.category_id

@@ -2,6 +2,7 @@ package graft.arxiv
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Pin
 
 /** Sequenced pipeline runner mirroring the reference DAG's semantics
   * (`dags/research_pipeline_dag.py:397-440`): each stage materializes to
@@ -37,40 +38,45 @@ class ArxivPipeline(spark: SparkSession, stageDir: String) {
   /** delete_for_update (`research_pipeline_dag.py:39-54`). */
   def deleteForUpdate(): Unit = fs.delete(new Path(stageDir), true)
 
+  /** The silver stages built from the JSONL, in the order [[run]] writes them. */
+  private val SilverStages =
+    Seq("silver_article", "silver_authorship", "silver_author", "silver_article_category")
+
   /** Full run: bronze JSONL → silver → gold, all stages checkpointed.
     *
-    * The JSONL is parsed once: the filtered articles and the exploded raw
-    * authorships are persisted, the five silver stages are written from
-    * them, and both are unpersisted (in a `finally`, so a failing stage
-    * leaks no pin) before the gold stages, which read the staged Parquet.
-    * `silver_category` is built from the staged `silver_article_category`.
-    * Persisting is lazy: when every silver stage is already done nothing
-    * is parsed. If an executor holding persisted blocks is lost, Spark
-    * recomputes those blocks from the JSONL through the lineage, so the
-    * stages stay correct (unlike `localCheckpoint`, whose blocks die with
-    * the executor) and only the lost share is parsed again.
+    * The JSONL is parsed once, into a persisted frame of its DOI-bearing
+    * copies ([[Ingest.copies]]: `article_id` plus a struct that is null
+    * unless the copy passes the filter). The ids of repeated copies are
+    * pinned through [[graft.core.Pin]], so the planner sees their real
+    * size and broadcasts them to the dedup joins from the first plan. The
+    * filtered articles and the exploded raw authorships are persisted and
+    * the four silver stages are written from them. The copies, the pin and
+    * the two persisted frames are freed in a `finally` once those stages
+    * are written, so a failing stage leaks none of them; the gold stages
+    * read the staged Parquet, and `silver_category` is built from the
+    * staged `silver_article_category`. When every silver stage is already
+    * done nothing is parsed or pinned. If an executor holding persisted
+    * blocks is lost, Spark recomputes them through the lineage and parses
+    * only the lost share again; a lost block of the pinned ids has no
+    * lineage and fails the stage loudly instead.
     *
     * The `author` stage builds its four rank tables and their join base
     * from one persisted copy of the unranked author stats, so the stats'
     * joins and aggregations run once, not once per copy in the plan. The
-    * stats are unpersisted as soon as the stage is written, in a `finally`
-    * too, so they live only while that one stage runs; like the silver
-    * inputs they are persisted, not checkpointed, and a lost executor's
+    * stats are materialized before the stage is planned: the planner then
+    * reads their stored size and broadcasts the four rank tables, so the
+    * stats themselves never cross an exchange. (Planned unmaterialized,
+    * they report the product of their joins' estimates; whether adaptive
+    * execution shuffled them for the first rank join before it learned
+    * their size then depended on which query stage finished first.) They
+    * are unpersisted in a `finally` once the stage is written; like the
+    * silver inputs they are persisted, not pinned, so a lost executor's
     * blocks are recomputed from the staged Parquet. */
   def run(jsonlPath: String, enricher: Augment.Enricher, cwts: DataFrame,
       namesGenders: DataFrame): ArxivTables = {
-    val filtered = Ingest.filterArticles(Ingest.bronze(spark, jsonlPath)).persist()
-    val raw = Ingest.authorshipRaw(filtered).persist()
-    val (article0, authorship0, author0, ac0) = try {
-      val silver = Ingest.silverFrom(filtered, raw)
-      (stage("silver_article")(silver.article),
-        stage("silver_authorship")(silver.authorship),
-        stage("silver_author")(silver.author),
-        stage("silver_article_category")(silver.articleCategory))
-    } finally {
-      raw.unpersist()
-      filtered.unpersist()
-    }
+    val Seq(article0, authorship0, author0, ac0) =
+      if (SilverStages.forall(done)) SilverStages.map(n => spark.read.parquet(path(n)))
+      else silver(jsonlPath)
     val cat0 = stage("silver_category")(Ingest.category(ac0))
 
     val article = stage("article")(
@@ -80,7 +86,7 @@ class ArxivPipeline(spark: SparkSession, stageDir: String) {
       Augment.authorshipReady(authorship0, article))
     val author = {
       val stats = Augment.authorStats(author0, authorship, article, namesGenders).persist()
-      try stage("author")(Augment.authorRanked(stats))
+      try stage("author") { stats.count(); Augment.authorRanked(stats) }
       finally stats.unpersist()
     }
     val articleCategory = stage("article_category")(
@@ -88,6 +94,26 @@ class ArxivPipeline(spark: SparkSession, stageDir: String) {
     val category = stage("category")(
       Augment.categoryReady(cat0, articleCategory))
     ArxivTables(article, author, authorship, articleCategory, category, journal)
+  }
+
+  /** Writes the silver stages that are not done yet from one parse of
+    * `jsonlPath` and returns all four; see [[run]]. */
+  private def silver(jsonlPath: String): Seq[DataFrame] = {
+    val copies = Ingest.copies(Ingest.bronze(spark, jsonlPath)).persist()
+    try {
+      val repeated = Pin(Ingest.repeatedIds(copies))
+      val filtered = Ingest.filterCopies(copies, repeated).persist()
+      val raw = Ingest.authorshipRaw(filtered).persist()
+      try {
+        val t = Ingest.silverFrom(filtered, raw)
+        SilverStages.zip(Seq(t.article, t.authorship, t.author, t.articleCategory))
+          .map { case (name, df) => stage(name)(df) }
+      } finally {
+        raw.unpersist()
+        filtered.unpersist()
+        Pin.free(repeated)
+      }
+    } finally copies.unpersist()
   }
 
   /** Register the gold tables as temp views so the DWH queries also run as

@@ -87,8 +87,9 @@ object GroupOps {
     * single-metric calls instead builds each table from the frame the
     * previous call ranked: 2^pairs copies. Spark reuses none of those
     * copies' exchanges, so an expensive `df` should be persisted first:
-    * `ArxivPipeline.run` persists the author stats it ranks, and every
-    * copy then reads the one cached frame. */
+    * `ArxivPipeline.run` persists the author stats it ranks and
+    * materializes them before planning, so every copy reads the one
+    * cached frame and the rank tables broadcast at the stats' real size. */
   def pandasAvgRanksDesc(df: DataFrame, ranks: Seq[(String, String)]): DataFrame =
     ranks.foldLeft(df) { case (acc, (metric, out)) =>
       val byVal = df.groupBy(metric).agg(count(lit(1)).as("__n"))

@@ -1,13 +1,24 @@
 package graft.arxiv
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{ListenerBusDrain, ShuffleBytes}
 import org.apache.spark.sql.{CachedEntries, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
+import graft.core.Pin
 
 /** End-to-end parity test on a hand-built micro-corpus that exercises every
   * reference edge case: diacritic names, dup article ids, null DOI,
@@ -311,21 +322,7 @@ class ArxivPipelineSpec extends SparkSpec {
       .filter(length(col("title")) > 10)
 
   /** Shuffle bytes written by the tasks of `body` only, and its result. */
-  private def shuffled[T](body: => T): (Long, T) = {
-    val sc = spark.sparkContext
-    val bytes = new AtomicLong
-    val tasks = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(tasks)
-    try {
-      val out = body
-      ListenerBusDrain(sc)
-      (bytes.get, out)
-    } finally sc.removeSparkListener(tasks)
-  }
+  private def shuffled[T](body: => T): (Long, T) = ShuffleBytes(spark.sparkContext)(body)
 
   test("the id dedup moves full rows only for copies that pass the filter") {
     // 2,000 records: 9 in 10 carry a DOI, 7 in 10 of those fail the
@@ -359,5 +356,189 @@ class ArxivPipelineSpec extends SparkSpec {
     assert(Ingest.filterArticles(bronze).schema == wideFilterArticles(bronze).schema)
     assert(wideBytes > 0 && narrowBytes <= wideBytes / 2,
       s"filterArticles shuffled $narrowBytes B, the wide dedup $wideBytes B")
+  }
+
+  /** `n` generated arXiv records in the dump's 14-field shape, spread over
+    * two files: 9 in 10 carry a DOI and about 3 in 10 of those are
+    * cs-not-physics. Every 50th id has a second copy in the other file;
+    * every 100th id's second copy differs from its first in every kept
+    * field, and of those two copies one passes the category filter and
+    * the other fails it. Each record has 1 to 12 authors (3 on average)
+    * drawn from a pool of `pool`, so authors share articles. Returns the
+    * directory and the DOIs. */
+  private def corpus(name: String, n: Int, pool: Int = 300): (String, Seq[String]) = {
+    val dir = Paths.get(tmp, name)
+    Files.createDirectories(dir)
+    def record(i: Int, copy: Int): (String, Option[String]) = {
+      val rnd = new scala.util.Random(31L * i + copy)
+      def words(k: Int) = Seq.fill(k)(s"word${rnd.nextInt(3000)}").mkString(" ")
+      val doi = if (i % 10 == 9) None else Some(s"10.${1000 + rnd.nextInt(9000)}/r$i.$copy")
+      val sub = Seq.fill(1 + rnd.nextInt(3))(Seq("LG", "DB", "AI", "CL", "IR", "DS")(rnd.nextInt(6)))
+      val cs = sub.distinct.map(c => s"cs.$c").mkString(" ")
+      val cats =
+        if (i % 100 == 0) { if ((i / 100 + copy) % 2 == 0) cs else s"physics.optics $cs" }
+        else rnd.nextInt(10) match {
+          case 0 | 1 | 2 => cs
+          case 3 | 4 => s"physics.optics $cs"
+          case 5 | 6 => "math.CO math.PR"
+          case _ => "astro-ph.GA"
+        }
+      val title = if (rnd.nextInt(20) == 0) "Short" else s"Record $i copy $copy ${words(3 + rnd.nextInt(10))}"
+      val authors = Seq.fill(1 + math.min((-math.log(1 - rnd.nextDouble()) / 0.45).toInt, 11))(
+        (s"Lastname${rnd.nextInt(pool)}", s"First${rnd.nextInt(9)} Middle${rnd.nextInt(5)}"))
+      val parsed = authors.map { case (l, f) => s"""["$l","$f",""]""" }.mkString(",")
+      val names = authors.map { case (l, f) => s"$f $l" }.mkString(", ")
+      val json = s"""{"id":"r$i","submitter":"${authors.head._2} ${authors.head._1}",""" +
+        s""""authors":"$names","title":"$title","comments":"${5 + i % 30} pages",""" +
+        s""""journal-ref":null,"doi":${doi.fold("null")(d => s""""$d"""")},"report-no":null,""" +
+        s""""categories":"$cats","license":null,"abstract":"${words(120 + rnd.nextInt(120))}",""" +
+        s""""versions":[{"version":"v1","created":"Mon, 2 Apr 2007 19:18:42 GMT"}],""" +
+        s""""update_date":"20${10 + i % 12}-0${1 + copy}-01","authors_parsed":[$parsed]}"""
+      (json, doi)
+    }
+    val copies = (0 until n).flatMap { i =>
+      val first = (i % 2, record(i, 0))
+      if (i % 50 != 0) Seq(first)
+      else Seq(first, (1 - i % 2, if (i % 100 == 0) record(i, 1) else record(i, 0)))
+    }
+    for ((part, lines) <- copies.groupBy(_._1))
+      Files.write(dir.resolve(s"part-$part.json"),
+        lines.map(_._2._1).mkString("\n").getBytes("UTF-8"))
+    (dir.toString, copies.flatMap(_._2._2).distinct)
+  }
+
+  /** Crossref, CWTS and gender side inputs for [[corpus]]'s DOIs: 4 in 5
+    * are journal articles in one of three journals. */
+  private def sides(dois: Seq[String]): (Augment.Enricher, DataFrame, DataFrame) = {
+    val fixture = dois.zipWithIndex.map { case (d, k) =>
+      (d, if (k % 5 == 4) "posted-content" else "journal-article", k % 37, s"000${k % 3}-0000")
+    }.toDF("doi", "type", "n_cites", "journal_issn")
+    val journals = (0 until 3).map(j => (s"Journal $j", s"000$j-0000", 1.0 + j)).toDF("source_title", "print_issn", "snip")
+    val firstNames = (0 until 9).map(f => (s"First$f", if (f % 2 == 0) "F" else "M")).toDF("first_name", "gender")
+    (new Augment.FixtureEnricher(fixture), journals, firstNames)
+  }
+
+  /** The id dedup that sends every DOI-bearing copy through the exchange
+    * as its id plus a struct of its other columns that is null unless the
+    * copy passes the filter: the row-for-row reference the ids-only dedup
+    * must equal. */
+  private def structFilterArticles(bronze: DataFrame): DataFrame = {
+    val pass = col("categories").contains("cs.") && !col("categories").contains("physics") &&
+      length(col("title")) > 10
+    val rest = Seq("title", "doi", "categories", "date", "authors_parsed")
+    bronze
+      .filter(col("doi").isNotNull)
+      .select(col("article_id"), when(pass, struct(rest.map(col): _*)).as("r"))
+      .dropDuplicates("article_id")
+      .filter(col("r").isNotNull)
+      .select(col("article_id") +: rest.map(c => col(s"r.$c")): _*)
+  }
+
+  test("only ids cross the id-dedup exchange, and only repeated ids move their rows") {
+    val (dir, _) = corpus("ids-only", 2000)
+    val bronze = Ingest.bronze(spark, dir)
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getString(0))
+    val (idBytes, byIds) = shuffled(rows(Ingest.filterArticles(bronze)))
+    val (structBytes, byStructs) = shuffled(rows(structFilterArticles(bronze)))
+    assert(byIds.nonEmpty && byIds == byStructs)
+    assert(byIds.map(_.getString(0)).distinct.size == byIds.size)
+    assert(Ingest.filterArticles(bronze).schema == structFilterArticles(bronze).schema)
+    assert(structBytes > 0 && idBytes <= structBytes / 4,
+      s"filterArticles shuffled $idBytes B, the struct dedup $structBytes B")
+
+    // as run plans it: with the repeated ids pinned at their real size the
+    // planner broadcasts them to both joins from the first plan on, and
+    // the executed plan has one exchange, which carries only the copies of
+    // repeated ids (a join that adaptive execution turned into a broadcast
+    // late would leave both of its sides' exchanges behind)
+    val copies = Ingest.copies(bronze)
+    val repeated = Pin(Ingest.repeatedIds(copies))
+    try {
+      val filtered = Ingest.filterCopies(copies, repeated)
+      assert(rows(filtered) == byIds)
+      val (planned, executed) = filtered.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => (a.inputPlan, a.executedPlan)
+        case p => (p, p)
+      }
+      val joins = planned.collect { case j: BroadcastHashJoinExec => j.joinType }
+      assert(joins.sortBy(_.toString) == Seq(LeftAnti, LeftSemi), planned)
+      assert(planned.collect { case j: SortMergeJoinExec => j }.isEmpty, planned)
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(executed) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1 && exchanges.head.exists {
+        case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, executed)
+    } finally Pin.free(repeated)
+  }
+
+  test("filterArticles(b).exceptAll(filterArticles(b)) is empty under count, isEmpty and collect") {
+    val bronze = Ingest.bronze(spark, corpus("except-all", 400)._1)
+    def diff = Ingest.filterArticles(bronze).exceptAll(Ingest.filterArticles(bronze))
+    assert(Ingest.filterArticles(bronze).count() > 0)
+    assert(diff.count() == 0)
+    assert(diff.isEmpty)
+    assert(diff.collect().isEmpty)
+  }
+
+  test("run parses the JSONL once") {
+    val (dir, dois) = corpus("parse-once", 2000)
+    val (enricher, journals, firstNames) = sides(dois)
+    val jsonBytes = Files.list(Paths.get(dir)).iterator().asScala.map(Files.size).sum
+    // bytes read from files: the task input metric also counts every read
+    // of a persisted block, and run reads its persisted copies back from
+    // memory three times without parsing them again
+    def fileBytesRead: Long = FileSystem.getGlobalStorageStatistics.iterator().asScala
+      .map(s => Option(s.getLong("bytesRead")).fold(0L)(_.longValue)).sum
+    val before = fileBytesRead
+    val t = new ArxivPipeline(spark, s"$tmp/stages-parse-once").run(dir, enricher, journals, firstNames)
+    val read = fileBytesRead - before
+    assert(t.author.count() > 0)
+    assert(read >= jsonBytes && read <= jsonBytes * 12 / 10,
+      s"run read $read B of files for a $jsonBytes B JSONL")
+  }
+
+  test("the author stage broadcasts its rank tables and never shuffles the stats, run after run") {
+    // large enough that the stats' query stages race: stats planned before
+    // they are materialized report their joins' estimates, and then some
+    // rebuilds shuffle every stats row for the first rank join
+    val (dir, dois) = corpus("author-plans", 6000, pool = 3000)
+    val (enricher, journals, firstNames) = sides(dois)
+    val stages = s"$tmp/stages-author-plans"
+    val pipe = new ArxivPipeline(spark, stages)
+    pipe.run(dir, enricher, journals, firstNames)
+    // every other stage is done, so each run rebuilds the author stage alone
+    val author = new Path(s"$stages/author.parquet")
+    val writes = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = writes.add(qe.executedPlan)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try (1 to 4).foreach { _ =>
+      author.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(author, true)
+      pipe.run(dir, enricher, journals, firstNames)
+    } finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    def writesAuthor(p: SparkPlan) = p.exists {
+      case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) =>
+        c.outputPath.getName == "author.parquet"
+      case _ => false
+    }
+    val authorWrites = writes.asScala.toSeq.collect {
+      case a: AdaptiveSparkPlanExec if writesAuthor(a.inputPlan) => a
+    }
+    assert(authorWrites.size == 4, writes.asScala.mkString("\n"))
+    for (w <- authorWrites) {
+      // the four rank joins are broadcasts in the first plan, not a late
+      // adaptive conversion
+      assert(w.inputPlan.collect { case j: BroadcastHashJoinExec => j }.size == 4 &&
+        w.inputPlan.collect { case j: SortMergeJoinExec => j }.isEmpty, w.inputPlan)
+      // only the rank tables' (value, count) pairs cross an exchange
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(w.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.nonEmpty && exchanges.forall(!_.output.exists(_.name == "author_id")), w)
+    }
   }
 }

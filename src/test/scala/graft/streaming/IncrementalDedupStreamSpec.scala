@@ -3,13 +3,11 @@ package graft.streaming
 import java.nio.file.Files
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.{ListenerBusDrain, ShuffleBytes}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -317,29 +315,18 @@ class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper 
     * every finished SQL execution (queries, writes, checkpoints), from
     * `body` only. */
   private def observed(body: => Unit): (Long, Seq[SparkPlan]) = {
-    val sc = spark.sparkContext
-    val bytes = new AtomicLong
     val plans = new ConcurrentLinkedQueue[SparkPlan]
-    val tasks = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-    }
     val queries = new QueryExecutionListener {
       def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
         plans.add(qe.executedPlan)
       def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(tasks)
+    ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(queries)
     try {
-      body
-      ListenerBusDrain(sc)
-      (bytes.get, plans.asScala.toSeq)
-    } finally {
-      sc.removeSparkListener(tasks)
-      spark.listenerManager.unregister(queries)
-    }
+      val (bytes, _) = ShuffleBytes(spark.sparkContext)(body)
+      (bytes, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(queries)
   }
 
   /** processBatch plus its verdict write, the stream wiring's unit of
