@@ -3,100 +3,114 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Co-occurrence pairs: items that share at least `minShared` keys
-  * (suppliers co-supplying parts, authors co-writing articles, docs
-  * sharing shingles — the graph 2-hop self-join J7/G3 generalized).
+/** Items that share a key — the one bucket-pair implementation under
+  * every co-occurrence and near-dup family in the engine (suppliers
+  * co-supplying parts, docs sharing shingles, LSH bands or simhash
+  * tables, vectors sharing a block or a cluster). Three steps, each
+  * written once:
   *
-  * Scale design: the input is reduced to DISTINCT (key, item) before the
-  * self-join, and keys with more than `maxItemsPerKey` distinct items are
-  * dropped first — one key held by S items yields S(S−1)/2 pairs, so a
-  * single pathological key at 100× data is a straight scale-killer (the
-  * same hot-key discipline as `Dedup.docShingles` `maxDocFreq`; see the
-  * r1 verdict on q21). Dropping hot keys is a SEMANTIC choice the caller
-  * opts into: a key shared by "everyone" carries no pairing signal, like
-  * a stopword shingle. `maxItemsPerKey <= 0` disables the bound.
+  *  - [[dropHotKeys]] — bound the worst bucket before pairing;
+  *  - [[dropSingletonKeys]] — drop buckets that cannot pair;
+  *  - [[bucketPairs]] — the symmetric `id_a < id_b` self-join.
+  *
+  * [[pairs]] is the generic co-occurrence count on top of them. Joins of
+  * two DIFFERENT frames (the adaptive multiprobe, the cross-corpus band
+  * join, the streaming history probe) are not bucket pairs and do not
+  * come through here.
+  *
+  * The grouped form (collect the sorted ids per key and emit the
+  * combinations per group) was measured against the self-join twice and
+  * tied it on calm floors (r1, r13 at sf0.1); it was kept only as a
+  * candidate for disk-bound depths this box cannot reach, and is gone.
   */
 object CoOccur {
 
-  /** @return (item_a, item_b, shared_keys) with item_a < item_b. */
+  /** `frame` without the rows whose `keys` tuple is held by more than
+    * `cap` rows; `cap <= 0` keeps every row.
+    *
+    * One key held by S rows yields S(S−1)/2 pairs, so a single
+    * pathological key at 100× data is a straight scale-killer. Dropping
+    * it is a SEMANTIC choice the caller opts into: a key shared by
+    * "everyone" carries no pairing signal, like a stopword shingle. The
+    * measured case is the n-gram shingle cap (BENCH_SCALE_r04
+    * three_point): on the Heaps-vocabulary corpus the uncapped join's
+    * 15k→50k-doc leg exponent reached 1.40 (stopword trigrams dominate
+    * the candidate join), while a cap of 200 measured 0.55 at 3.6× less
+    * wall time — output-identical at 15k docs, 6217/6225 pairs (99.87%)
+    * at 50k. A shingle in hundreds of documents contributes quadratic
+    * candidates but almost never decides a J >= 0.5 verdict.
+    *
+    * The bound is an anti-join against the hot keys, never a size filter
+    * on grouped rows: the hot-key aggregate is map-side combinable and
+    * shares the frame's key partitioning with the anti-join, and no task
+    * ever buffers a hot key's rows. Rows with a null key are kept (they
+    * never pair anyway). Every oracle applies the same cap, so engine and
+    * DuckDB agree at any scale. */
+  def dropHotKeys(frame: DataFrame, keys: Seq[String], cap: Long): DataFrame =
+    if (cap <= 0) frame
+    else {
+      val hot = frame.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") > cap)
+        .select(keys.map(col): _*)
+      frame.join(hot, keys, "left_anti")
+    }
+
+  /** `frame` restricted to the rows whose `keys` tuple is held by at
+    * least 2 rows. A one-row bucket cannot produce a pair, and with wide
+    * keys (27-36-bit simhash tables, hashed LSH bands) almost every
+    * bucket is a singleton at any real corpus size, so the self-join —
+    * which carries each row's payload, and in the salted form replicates
+    * side B `salt` times — would otherwise shuffle mostly rows that can
+    * never meet. The prune costs one narrow map-side-combinable count
+    * plus a left-semi attach; the non-singleton key set is small enough
+    * that the planner broadcasts it at every measured scale. Adopted by
+    * r14 measurement together with the signature pin (OPTIMIZATION_r14
+    * §7): q35 at g100 104.8/32.4 → 96.9/27.2 s, q116 123.5 → 101.8 s,
+    * q123 558.7/353.4 → 331.1/241.9 s in paired windows; at sf0.1 a
+    * ≤0.1 s wash. Rows with a null key are dropped. */
+  def dropSingletonKeys(frame: DataFrame, keys: Seq[String]): DataFrame = {
+    val multi = frame.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") >= 2)
+      .select(keys.map(col): _*)
+    frame.join(multi, keys, "left_semi")
+  }
+
+  /** Every pair of `frame` rows that share all `keys` (null never
+    * matches), with `id_a < id_b`: one output row per shared key tuple,
+    * so a pair sharing three keys appears three times. Output columns:
+    * the `keys`, then `<id>_a`, `<id>_b`, then `<p>_a` and `<p>_b` for
+    * each `payload` column. Two rows with the same id never pair.
+    *
+    * `salt > 1` salts the join: one hot bucket's pair enumeration is a
+    * same-key cartesian inside a single sort-merge task, which AQE's
+    * skew split cannot break up. Side A keys each row by
+    * `hash(id) mod salt`, side B replicates each row to all `salt`
+    * values, so every pair still meets exactly once while a B²-pair
+    * bucket spreads over `salt` tasks. With `salt = 1` the plan has no
+    * salt column. */
+  def bucketPairs(frame: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[String] = Nil, salt: Int = 1): DataFrame = {
+    def side(s: String): DataFrame =
+      frame.select(keys.map(col) ++ (id +: payload).map(c => col(c).as(s"${c}_$s")): _*)
+    val (idA, idB) = (s"${id}_a", s"${id}_b")
+    val joined =
+      if (salt <= 1) side("a").join(side("b"), keys)
+      else side("a").withColumn("salt", pmod(hash(col(idA)), lit(salt)))
+        .join(side("b").withColumn("salt", explode(array((0 until salt).map(lit): _*))),
+          keys :+ "salt")
+    val out = keys ++ Seq(idA, idB) ++ Seq("a", "b").flatMap(s => payload.map(p => s"${p}_$s"))
+    joined.filter(col(idA) < col(idB)).select(out.map(col): _*)
+  }
+
+  /** Co-occurrence pairs: (item_a, item_b, shared_keys) with
+    * item_a < item_b, for items that share at least `minShared` keys.
+    * The input is reduced to DISTINCT (key, item) first, and keys held by
+    * more than `maxItemsPerKey` distinct items are dropped
+    * ([[dropHotKeys]]; `<= 0` disables the bound). */
   def pairs(df: DataFrame, keyCol: String, itemCol: String,
       minShared: Long = 1L, maxItemsPerKey: Long = 0L): DataFrame = {
     val distinctPairs = df.select(col(keyCol).as("key"), col(itemCol).as("item")).distinct()
-    val bounded =
-      if (maxItemsPerKey <= 0) distinctPairs
-      else {
-        val hot = distinctPairs.groupBy("key").agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxItemsPerKey)
-          .select("key")
-        distinctPairs.join(hot, Seq("key"), "left_anti")
-      }
-    val a = bounded.select(col("key"), col("item").as("item_a"))
-    val b = bounded.select(col("key"), col("item").as("item_b"))
-    a.join(b, Seq("key"))
-      .filter(col("item_a") < col("item_b"))
-      .groupBy("item_a", "item_b")
-      .agg(count(lit(1)).as("shared_keys"))
-      .filter(col("shared_keys") >= minShared)
-  }
-
-  /** Same contract as [[pairs]] (with the bound REQUIRED), formulated as
-    * per-key pair explosion instead of a self-join: collect the bounded,
-    * sorted item set per key and emit only the a<b combinations directly
-    * — S(S−1)/2 rows outright instead of the join's S² candidates, and
-    * one fewer exchange.
-    *
-    * The round-1 A/B measured this form SLOWER than [[pairs]] (3.6 s vs
-    * 1.95 s warm p50 on sf0.1 lineitem, 499,500 pairs, identical output)
-    * — but that measurement was taken with the combination emitter as
-    * nested transform/slice/flatten HOFs, which are CodegenFallback
-    * (interpreted, a closure dispatch + slice allocation per element) —
-    * the same expression class whose removal bought 9–25x on shingles
-    * and 42x on quantize. `viaExpr = true` (default) swaps the emitter
-    * for the codegen [[graft.functions.PairCombosExpr]] (output
-    * identical, CoOccurSpec pins all three forms frame-equal); the HOF
-    * emitter stays as the reference CoOccurSpec checks the codegen one
-    * against.
-    *
-    * Round-13 re-measurement (interleaved at sf0.1): the codegen emitter
-    * removes the HOF penalty entirely (HOF floor 6.11 s vs codegen
-    * 3.56-3.67 s), but with the scale-safe pre-bound anti-join in place
-    * the whole form TIES the self-join on calm floors (3.56 vs 3.35 s —
-    * inside this host's noise band). On a tie the incumbent stands:
-    * q21/q74 keep [[pairs]]; this form remains the measured alternative
-    * for inputs that arrive already grouped (where collect_list is free)
-    * or where the S² -> S(S−1)/2 candidate reduction dominates (very
-    * large S near the cap). Whether q21 should switch once singleton
-    * pruning sits in front of both forms is still open (TimeQuery's
-    * q21_join / q21_groups_expr arms). */
-  def pairsViaGroups(df: DataFrame, keyCol: String, itemCol: String,
-      minShared: Long = 1L, maxItemsPerKey: Long = 64L,
-      viaExpr: Boolean = true): DataFrame = {
-    require(maxItemsPerKey > 0, "pairsViaGroups needs a positive maxItemsPerKey " +
-      "(the per-key collect_list is only safe bounded); use pairs() for unbounded")
-    val distinctPairs = df.select(col(keyCol).as("key"), col(itemCol).as("item")).distinct()
-    // drop hot keys BEFORE collect_list, not after: a size filter on the
-    // collected array still buffers the full item list of a pathological
-    // key inside one aggregation task (one key held by 10^8 items is a
-    // task OOM, not a filter) — the same pre-bound anti-join as [[pairs]]
-    // keeps the per-key buffer <= maxItemsPerKey by construction. The
-    // count aggregate and the anti-join share distinctPairs' key
-    // partitioning, so this costs no extra exchange over the size-filter
-    // form.
-    val hot = distinctPairs.groupBy("key").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxItemsPerKey)
-      .select("key")
-    val grouped = distinctPairs.join(hot, Seq("key"), "left_anti")
-      .groupBy("key")
-      .agg(sort_array(collect_list(col("item"))).as("items"))
-    val combos =
-      if (viaExpr) graft.functions.PairCombosFn.pairCombos(col("items"))
-      else expr(
-        """flatten(transform(items, (x, i) ->
-          |  transform(slice(items, i + 2, size(items) - i - 1),
-          |    y -> struct(x AS item_a, y AS item_b))))""".stripMargin)
-    grouped
-      .select(explode(combos).as("p"))
-      .select(col("p.item_a"), col("p.item_b"))
+    bucketPairs(dropHotKeys(distinctPairs, Seq("key"), maxItemsPerKey), Seq("key"), "item")
       .groupBy("item_a", "item_b")
       .agg(count(lit(1)).as("shared_keys"))
       .filter(col("shared_keys") >= minShared)

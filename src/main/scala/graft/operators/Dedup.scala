@@ -31,7 +31,9 @@ object Dedup {
       .groupBy("fp")
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct (id, shingle) pairs with hot-shingle pruning.
+  /** Distinct (id, shingle) pairs with hot-shingle pruning
+    * ([[CoOccur.dropHotKeys]] on the shingle, `maxDocFreq <= 0` keeps
+    * every shingle).
     *
     * Deduplication is PER-ROW (`array_distinct` before the explode),
     * not a frame-level `distinct()`: ids are unique, so the global
@@ -40,166 +42,55 @@ object Dedup {
     * shuffle for it (round 11: the g1000 decade's 2.65B exploded rows
     * overflowed this box's disk through exactly that shuffle; at any
     * scale it was one whole extra shuffle in the q34/q44/q97/q100
-    * family's lineage for a set-identity no-op). Each consumer of the
-    * frame re-derives this narrow scan+explode subtree; see
-    * [[shingleFrame]] for why that rescan is the default. */
+    * family's lineage for a set-identity no-op).
+    *
+    * Nothing is materialized: each consumer re-derives this narrow
+    * scan+explode subtree (Spark reuses only Exchange/Subquery nodes,
+    * not arbitrary subtrees). Once the codegen
+    * [[graft.functions.ShinglesExpr]] made re-shingling near-free, one
+    * shared localCheckpoint measured within 4% of the rescan
+    * (BENCH_SCALE_r13_shform2: q34 sf0.1 3.00 vs 2.98 s, g10 46.71 vs
+    * 47.54 s; q44 sf0.1 4.55 vs 4.61 s, g10 45.17 vs 46.88 s), and on a
+    * tie the form with no corpus-sized block store wins. */
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, maxDocFreq: Long): DataFrame = {
-    val sh = docs
-      .select(col(idCol).as("id"),
-        explode(array_distinct(T.shingles(col(textCol), n))).as("shingle"))
-    if (maxDocFreq <= 0) sh
-    else {
-      val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDocFreq)
-        .select("shingle")
-      sh.join(hot, Seq("shingle"), "left_anti")
-    }
-  }
+      n: Int, maxDocFreq: Long): DataFrame =
+    CoOccur.dropHotKeys(docs.select(col(idCol).as("id"),
+      explode(array_distinct(T.shingles(col(textCol), n))).as("shingle")),
+      Seq("shingle"), maxDocFreq)
 
-  /** How the (id, shingle) frame is produced and SHARED across the
-    * multi-consumer operators' reads ([[ngramJaccardForm]] reads it for
-    * the sizes aggregate plus both sides of the self-join, and the
-    * hot-df aggregate adds a fourth):
-    *
-    *  - `"rescan"` — [[docShingles]] as-is: per-row `array_distinct`,
-    *    nothing materialized. Each consumer re-derives the narrow
-    *    scan+explode subtree (Spark reuses only Exchange/Subquery nodes,
-    *    not arbitrary subtrees). The ONLY form with no corpus-sized
-    *    materialization anywhere — shuffle, cache or checkpoint — and
-    *    therefore the only one that survived the g1000 decade's
-    *    2.65B-row exploded corpus against this box's 62 GB of free disk
-    *    (round 11). The default by measurement: once the codegen
-    *    [[graft.functions.ShinglesExpr]] made re-shingling near-free,
-    *    one shared localCheckpoint measured within 4% of the rescan
-    *    (BENCH_SCALE_r13_shform2: q34 sf0.1 3.00 vs 2.98 s, g10 46.71
-    *    vs 47.54 s; q44 sf0.1 4.55 vs 4.61 s, g10 45.17 vs 46.88 s), and
-    *    on a tie the form with no corpus-sized block store wins.
-    *  - `"stage"` — the disk-bound-depth reuse form (r14, VERDICT r13
-    *    #3): the (capped) frame is written ONCE as zstd parquet to a
-    *    session-local temp directory and every consumer reads that.
-    *    The store is columnar + compressed (text shingles compress
-    *    ~10×), and reads re-stream from disk instead of pinning
-    *    executor storage memory — the form aimed at the g300 regime
-    *    where rescan's 3-4 concurrent corpus-sized shuffles ENOSPC'd
-    *    this box (round 13). The write is an eager job at plan
-    *    construction (inside any timed window).
-    *
-    * Returns the frame plus a free thunk: a no-op for `"rescan"`; for
-    * `"stage"` it deletes the staged directory, and nothing else does,
-    * so a `"stage"` caller must invoke it once nothing reads the frame.
-    * A staging write that throws deletes its directory first.
-    *
-    * The staging write leaves its hot-df and anti-join shuffle files
-    * behind until a driver GC lets the ContextCleaner see them
-    * unreachable; library code never forces that GC, so a tool that
-    * wants them gone before the candidate join's own shuffles peak
-    * requests it after building the frame (TimeQuery's `*_stage`
-    * arms). */
-  private[graft] def shingleFrame(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, maxDocFreq: Long,
-      form: String): (DataFrame, () => Unit) = form match {
-    case "rescan" => (docShingles(docs, idCol, textCol, n, maxDocFreq), () => ())
-    case "stage" =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-shingle-stage")
-      val path = dir.toUri.toString
-      val free = () => {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        finally walk.close()
-        ()
-      }
-      try docShingles(docs, idCol, textCol, n, maxDocFreq)
-        .write.mode("overwrite").option("compression", "zstd").parquet(path)
-      catch { case e: Throwable => free(); throw e }
-      (docs.sparkSession.read.parquet(path), free)
-    case other => sys.error(s"unknown shingle form: $other")
+  /** Candidate overlap shared by [[ngramJaccard]] and
+    * [[ngramContainment]]: every doc pair sharing >= 1 distinct shingle
+    * (after the hot-shingle cap), as (id_a < id_b, n_common, sa, sb) with
+    * sa/sb each doc's distinct-shingle count. PRECONDITION: `idCol`
+    * values are unique. The per-row `array_distinct` frame equals the
+    * frame-level distinct ONLY then (DedupSpec pins it against a
+    * frame-level distinct reference on a corpus with in-doc repeats); a
+    * caller feeding duplicate ids would silently inflate df and n_sh
+    * instead of deduping. Every repo caller passes a primary-key
+    * doc_id. */
+  private def shingleOverlap(docs: DataFrame, n: Int, idCol: String,
+      textCol: String, maxDocFreq: Long): DataFrame = {
+    val sh = docShingles(docs, idCol, textCol, n, maxDocFreq)
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    CoOccur.bucketPairs(sh, Seq("shingle"), "id")
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_common"))
+      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
+      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
   }
 
   /** Pairwise n-gram Jaccard >= threshold among docs sharing >= 1 shingle.
-    * Output: id_a < id_b, n_common, jaccard.
-    *
-    * The `maxDocFreq` hot-shingle cap is the measured scale lever
-    * (BENCH_SCALE_r04 three_point): on the Heaps-vocabulary corpus the
-    * uncapped join's 15k→50k-doc leg exponent reached 1.40 (stopword
-    * trigrams dominate the candidate join), while maxDocFreq=200
-    * measured 0.55 at 3.6× less wall time — and near-losslessly:
-    * output-identical at 15k docs, 6217/6225 pairs (99.87%) at 50k. A
-    * shingle in hundreds of documents contributes quadratic candidates
-    * but almost never decides a J >= 0.5 verdict; cap it.
-    *
-    * The shingle frame is rescanned per consumer ([[shingleFrame]]);
-    * stage it through [[ngramJaccardForm]], which returns the free
-    * thunk the staged directory needs. */
+    * Output: id_a < id_b, n_common, jaccard. `maxDocFreq` is the
+    * hot-shingle cap ([[CoOccur.dropHotKeys]]); `idCol` must be unique
+    * ([[shingleOverlap]]). */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.2,
       idCol: String = "doc_id", textCol: String = "text",
       maxDocFreq: Long = 0L): DataFrame =
-    ngramJaccardForm(docs, n, threshold, idCol, textCol, maxDocFreq,
-      "rescan")._1
-
-  /** [[ngramJaccard]] with an explicit [[shingleFrame]] form, returning
-    * the free thunk. PRECONDITION (all forms): `idCol` values are
-    * unique. The per-row `array_distinct` frame equals the frame-level
-    * distinct ONLY then (ids unique ⇒ the global distinct (id, shingle)
-    * set is the union of each doc's own deduped set — DedupSpec pins the
-    * forms against a frame-level distinct reference on a corpus with
-    * in-doc repeats); a caller feeding duplicate ids would silently
-    * inflate df and n_sh instead of deduping. Every repo caller passes a
-    * primary-key doc_id.
-    *
-    * `joinForm` picks the candidate join:
-    *
-    *  - `"selfjoin"` (default) — the frame joined against itself on
-    *    shingle: TWO corpus-sized shuffles live concurrently (each side
-    *    shuffles the whole frame), one sort-merge pass.
-    *  - `"groups"` — groupBy(shingle) + per-group pair emission
-    *    ([[graft.functions.PairCombosExpr]], codegen): ONE corpus-sized
-    *    shuffle — the disk-shaped form for the decades where the
-    *    self-join's two live shuffles are the binding disk term (the r14
-    *    g300 guard kill burned 66→5 GB in exactly that phase). Requires
-    *    the hot-shingle cap (maxDocFreq > 0): the per-group collect_list
-    *    buffer is only safe bounded — the same precondition as
-    *    [[CoOccur.pairsViaGroups]], here guaranteed by the cap's
-    *    anti-join (no surviving shingle exceeds maxDocFreq docs).
-    *    Output-identical: sorted ids make pairCombos emit exactly the
-    *    id_a < id_b pairs, once per shared shingle, so the per-pair
-    *    count IS n_common (DedupSpec pins it). Which form q44 should run
-    *    at depth is still open (TimeQuery's q44_groups arms). */
-  private[graft] def ngramJaccardForm(docs: DataFrame, n: Int,
-      threshold: Double, idCol: String, textCol: String, maxDocFreq: Long,
-      form: String,
-      joinForm: String = "selfjoin"): (DataFrame, () => Unit) = {
-    val (sh, free) = shingleFrame(docs, idCol, textCol, n, maxDocFreq, form)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = joinForm match {
-      case "selfjoin" =>
-        sh.select(col("shingle"), col("id").as("id_a"))
-          .join(sh.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(count(lit(1)).as("n_common"))
-      case "groups" =>
-        require(maxDocFreq > 0, "groups candidate join needs the " +
-          "hot-shingle cap: the per-group buffer is only safe bounded")
-        sh.groupBy("shingle")
-          .agg(sort_array(collect_list(col("id"))).as("ids"))
-          .select(explode(graft.functions.PairCombosFn.pairCombos(col("ids"))).as("p"))
-          .select(col("p.item_a").as("id_a"), col("p.item_b").as("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(count(lit(1)).as("n_common"))
-      case other => sys.error(s"unknown candidate-join form: $other")
-    }
-    val out = common
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
+    shingleOverlap(docs, n, idCol, textCol, maxDocFreq)
       .withColumn("jaccard",
         round(col("n_common") / (col("sa") + col("sb") - col("n_common")), 4))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_common", "jaccard")
-    (out, free)
-  }
 
   /** Per-document duplicated-span statistics: for each doc, how many of
     * its distinct `windowTokens`-token windows also appear in at least
@@ -256,22 +147,12 @@ object Dedup {
     * Output: id_a < id_b, n_common, containment. */
   def ngramContainment(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text",
-      maxDocFreq: Long = 0L): DataFrame = {
-    val sh = docShingles(docs, idCol, textCol, n, maxDocFreq)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = sh.select(col("shingle"), col("id").as("id_a"))
-      .join(sh.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
+      maxDocFreq: Long = 0L): DataFrame =
+    shingleOverlap(docs, n, idCol, textCol, maxDocFreq)
       .withColumn("containment",
         round(col("n_common") / least(col("sa"), col("sb")).cast("double"), 4))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "n_common", "containment")
-  }
 
   /** MinHash signatures: k independent hashes, min over shingles,
     * computed in the row that carries the doc
@@ -334,26 +215,16 @@ object Dedup {
     * fraction of equal signature components.
     *
     * The signature frame is pinned ([[minhashBandKeys]]' `pinSigs`) and
-    * singleton (band, band_hash) buckets are pruned before the join:
-    * a one-row bucket can't produce a candidate pair, and the band join
-    * carries BOTH 8k-byte signatures per row. Measured together in r14
-    * (OPTIMIZATION_r14 §7): q35 at g100 104.8/32.4 → 96.9/27.2 s in two
-    * paired windows. */
+    * singleton (band, band_hash) buckets are pruned before the join
+    * ([[CoOccur.dropSingletonKeys]]; the band join carries BOTH 8k-byte
+    * signatures per row). */
   def minhashLsh(docs: DataFrame, k: Int = 16, bands: Int = 4, n: Int = 3,
       minEstimate: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val banded0 = minhashBandKeys(docs, k, bands, n, idCol, textCol,
-      pinSigs = true)
-    val multi = banded0.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= 2)
-      .select("band", "band_hash")
-    val banded = banded0.join(multi, Seq("band", "band_hash"), "left_semi")
-    val cands = banded.select(col("band"), col("band_hash"),
-        col("id").as("id_a"), col("sig").as("sig_a"))
-      .join(banded.select(col("band"), col("band_hash"),
-        col("id").as("id_b"), col("sig").as("sig_b")), Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
+    val bandKeys = Seq("band", "band_hash")
+    val banded = CoOccur.dropSingletonKeys(minhashBandKeys(docs, k, bands, n,
+      idCol, textCol, pinSigs = true), bandKeys)
+    val cands = CoOccur.bucketPairs(banded, bandKeys, "id", Seq("sig"))
     // estimate BEFORE dedup (same reasoning as simhashPairs): the
     // signature comparison is per-row arithmetic on columns the join
     // already carries; distinct() then shuffles only surviving
@@ -488,16 +359,13 @@ object Dedup {
     // now arrive as a stable frame from the caller). It is bounded by
     // the BATCH side (candidate id pairs), never by the history — the
     // asymmetry that makes the checkpoint safe at any corpus size.
-    def batchKeys(id: String): DataFrame =
-      batchBands.select(col("band"), col("band_hash"), col("id").as(id))
     val histCands = historyBands
       .select(col("band"), col("band_hash"), col("id").as("id_a"))
-      .join(broadcast(batchKeys("id_b")), Seq("band", "band_hash"))
+      .join(broadcast(batchBands.select(col("band"), col("band_hash"),
+        col("id").as("id_b"))), Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
       .withColumn("src", lit("hist"))
-    val batchCands = batchKeys("id_a")
-      .join(batchKeys("id_b"), Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
+    val batchCands = CoOccur.bucketPairs(batchBands, Seq("band", "band_hash"), "id")
       .select("id_a", "id_b").distinct()
       .withColumn("src", lit("batch"))
     val cands = Pin(histCands.unionByName(batchCands))
@@ -597,12 +465,9 @@ object Dedup {
     *    twelve 4-bit chunks whose 16 buckets each held ~1/16 of the
     *    corpus (worse under simhash bit bias: measured buckets of 2700+
     *    docs at sf0.1, ~40M chance-collision pairs).
-    *  - the bucket self-join is SALTED: one hot bucket's pair
-    *    enumeration is a same-key cartesian inside a single sort-merge
-    *    task, which AQE's skew split cannot break up. Side A keys each
-    *    row by hash(id) mod s, side B replicates each row to all s
-    *    salts, so every pair still meets exactly once while a B²-pair
-    *    bucket spreads over s tasks.
+    *  - the bucket self-join is SALTED ([[CoOccur.bucketPairs]]'
+    *    `salt`): one hot bucket's pairs spread over `saltBuckets`
+    *    tasks.
     *
     * The (id, simhash) frame is pinned, as on every simhash pair entry:
     * see [[simhashPairsCombinatorial]]. */
@@ -704,15 +569,12 @@ object Dedup {
     *    [[simhashPairsPermuted]]) PRUNE singleton (table, key) buckets
     *    before the salted self-join ([[simhashKeyedJoin]]).
     *
-    * Both were adopted together by r14 measurement (interleaved floors,
-    * OPTIMIZATION_r14 §7): q116 at g100 123.5 → 101.8 s (and 449.6 →
-    * 134.7 s in the cold-cache window), q123 at g100 558.7/353.4 →
-    * 331.1/241.9 s in both paired windows; at sf0.1 a ≤0.1 s wash.
-    * Prune without the pin measured slower at sf0.1 (the count
-    * aggregate re-derived the signature a third time). Those numbers
-    * predate the per-row signature, when the signature was an explode
-    * + aggregation with 2 corpus-sized shuffles; the pin now saves a
-    * narrow rescan. */
+    * Both were adopted together by r14 measurement (the numbers are on
+    * [[CoOccur.dropSingletonKeys]]). Prune without the pin measured
+    * slower at sf0.1 (the count aggregate re-derived the signature a
+    * third time). Those numbers predate the per-row signature, when the
+    * signature was an explode + aggregation with 2 corpus-sized
+    * shuffles; the pin now saves a narrow rescan. */
   def simhashPairsCombinatorial(docs: DataFrame, maxDist: Int = 3,
       nBlocks: Int = 6, idCol: String = "doc_id", textCol: String = "text",
       saltBuckets: Int = 2, n: Int = 3): DataFrame =
@@ -903,44 +765,30 @@ object Dedup {
   /** Shared salted self-join + Hamming verify over any (id, simhash,
     * table-idx, key) candidate frame — the join body of both the chunk
     * ([[simhashChunkJoin]]) and block-combination
-    * ([[simhashPairsCombinatorial]]) table schemes.
+    * ([[simhashPairsCombinatorial]]) table schemes: the
+    * [[CoOccur.bucketPairs]] self-join on (table, key), salted
+    * `saltBuckets` ways.
     *
     * `pruneSingletons` drops (table, key) buckets with fewer than 2 rows
-    * BEFORE the salted self-join: a singleton bucket cannot produce a
-    * pair, and with 27-36-bit keys almost every bucket is a singleton at
-    * any real corpus size, so the salted join — whose side B replicates
-    * every row saltBuckets times — would shuffle ~3·saltBuckets× more
-    * keyed rows than can ever meet. The prune costs one narrow (idx,
-    * key, count) aggregate (map-side combinable) plus a left-semi
-    * attach; the non-singleton key set is small enough that AQE
-    * broadcasts it at every measured scale. The table-key entries prune;
-    * the chunk join does not. */
+    * first ([[CoOccur.dropSingletonKeys]]; count >= 2 iff >= 2 distinct
+    * docs, since each doc emits exactly one row per table index). With
+    * 27-36-bit keys almost every bucket is a singleton at any real
+    * corpus size, and side B of the salted join replicates every row
+    * saltBuckets times. The table-key entries prune; the chunk join
+    * does not. */
   private def simhashKeyedJoin(keys0: DataFrame, idxCol: String,
       keyCol: String, maxDist: Int, saltBuckets: Int,
       pruneSingletons: Boolean = false): DataFrame = {
-    // count >= 2 iff >= 2 distinct docs (each doc emits exactly one row
-    // per table index)
-    val keys = if (!pruneSingletons) keys0 else {
-      val multi = keys0.groupBy(idxCol, keyCol).agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= 2)
-        .select(idxCol, keyCol)
-      keys0.join(multi, Seq(idxCol, keyCol), "left_semi")
-    }
-    keys.select(col(idxCol), col(keyCol),
-        col("id").as("id_a"), col("simhash").as("sim_a"),
-        pmod(hash(col("id")), lit(saltBuckets)).as("salt"))
-      .join(keys.select(col(idxCol), col(keyCol),
-          col("id").as("id_b"), col("simhash").as("sim_b"))
-        .withColumn("salt", explode(array((0 until saltBuckets).map(lit): _*))),
-        Seq(idxCol, keyCol, "salt"))
-      .filter(col("id_a") < col("id_b"))
+    val tableKeys = Seq(idxCol, keyCol)
+    val keys = if (pruneSingletons) CoOccur.dropSingletonKeys(keys0, tableKeys) else keys0
+    CoOccur.bucketPairs(keys, tableKeys, "id", Seq("simhash"), saltBuckets)
       // verify BEFORE dedup: hamming is a per-row bit op on columns the
       // join already carries, while distinct() is a shuffle — with ~5-bit
       // chunks the chunk join emits millions of chance collisions and
       // only near-dups survive the filter, so filtering first shrinks the
       // dedup shuffle from O(collisions) to O(true pairs) (measured 21 s
       // -> sub-second on q36 at sf0.1).
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+      .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxDist)
       .select("id_a", "id_b", "hamming")
       .distinct()
@@ -969,9 +817,14 @@ object Dedup {
     * quadratically, so a low-cardinality column makes blocks
     * corpus/|values| wide (the round-2 scale-killer — VERDICT r2 §wrong
     * 3). Either way `maxItemsPerBlock` drops oversized blocks before the
-    * pair join, bounding the worst block at O(maxItemsPerBlock²) — the
-    * same guard shape as [[CoOccur]]'s `maxItemsPerKey`, and applied
-    * identically in the DuckDB oracle so semantics match at every SF. */
+    * pair join ([[CoOccur.dropHotKeys]]), bounding the worst block at
+    * O(maxItemsPerBlock²), and applied identically in the DuckDB oracle
+    * so semantics match at every SF.
+    *
+    * PRECONDITION: `idCol` values are unique. Each row sits in exactly
+    * one block, so a pair of distinct ids meets at most once and the
+    * output needs no dedup; two rows sharing an id never pair. Every
+    * repo caller passes a primary-key vec_id. */
   def embeddingNearDup(embs: DataFrame, threshold: Double = 0.9,
       blockCol: Option[String] = None, maxItemsPerBlock: Long = 10000L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -983,21 +836,12 @@ object Dedup {
     }
     val n = blocked.select(col("blk"), col(idCol).as("id"),
       col(vecCol).as("v"), V.l2Norm(col(vecCol)).as("nrm"))
-    val bounded =
-      if (maxItemsPerBlock <= 0) n
-      else {
-        val hot = n.groupBy("blk").agg(count(lit(1)).as("cnt"))
-          .filter(col("cnt") > maxItemsPerBlock).select("blk")
-        n.join(hot, Seq("blk"), "left_anti")
-      }
-    val a = bounded.select(col("blk"), col("id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
-    val b = bounded.select(col("blk"), col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("blk"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", round(V.cosineFromNorms(col("va"), col("vb"), col("na"), col("nb")), 4))
+    CoOccur.bucketPairs(CoOccur.dropHotKeys(n, Seq("blk"), maxItemsPerBlock),
+        Seq("blk"), "id", Seq("v", "nrm"))
+      .withColumn("cos", round(V.cosineFromNorms(col("v_a"), col("v_b"),
+        col("nrm_a"), col("nrm_b")), 4))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
-      .distinct() // a pair can share >1 block only with blockCol=None+multiprobe; defensive
   }
 
   /** Scale-adaptive embedding near-dup — the asymptotic fix for
@@ -1044,7 +888,12 @@ object Dedup {
     * bucket coarsens the 30-plane bucket's low p+1 bits (Rademacher
     * plane i is seed-deterministic and independent of the family size —
     * asserted by DedupSpec's prefix pin), and the radius-1 multiprobe is
-    * an XOR-bit-flip + coarsen join. */
+    * an XOR-bit-flip + coarsen join.
+    *
+    * PRECONDITION: `idCol` values are unique. Side A sits in one bucket
+    * and side B's probes are deduped per row ([[probeBuckets]]), so a
+    * pair of distinct ids meets at most once and the output needs no
+    * dedup. Every repo caller passes a primary-key vec_id. */
   def embeddingNearDupAdaptive(embs: DataFrame, threshold: Double = 0.9,
       targetPerBucket: Long = 256L, maxItemsPerBlock: Long = 10000L,
       dim: Int = 64, seed: Long = 7L,
@@ -1065,9 +914,6 @@ object Dedup {
       .withColumn("cos", round(V.cosineFromNorms(col("va"), col("vb"), col("na"), col("nb")), 4))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
-      // defensive only: probeBuckets dedups per-row probe targets, so a
-      // pair meets at most once
-      .distinct()
   }
 
   /** Plane-family cap for [[embeddingNearDupAdaptive]]: lshBucket packs
@@ -1152,12 +998,7 @@ object Dedup {
       V.l2Norm(col(vecCol)).as("nrm"),
       V.lshBucket(col(vecCol), planes).as("full"))
       .withColumn("blk", coarsenExpr(col("full"), scheme))
-    val bounded = {
-      val hot = base.groupBy("blk").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > maxItemsPerBlock).select("blk")
-      base.join(hot, Seq("blk"), "left_anti")
-    }
-    (bounded, scheme)
+    (CoOccur.dropHotKeys(base, Seq("blk"), maxItemsPerBlock), scheme)
   }
 
   /** DuckDB twin of [[embeddingNearDupAdaptive]] (default dim/seed): the
@@ -1384,15 +1225,10 @@ object Dedup {
     // exact verifier removes anyway). This is what tames the adversarial
     // small-vocabulary case: high-df prefixes still collide, but almost
     // all collisions fail the positional bound before distinct().
-    val minOverlap =
-      ceil(lit(tEff / (1 + tEff)) * (col("na") + col("nb")) - lit(1e-9))
-    val a = prefix.select(col("shingle"), col("id").as("id_a"),
-      col("rk").as("ra"), col("n_sh").as("na"))
-    val b = prefix.select(col("shingle"), col("id").as("id_b"),
-      col("rk").as("rb"), col("n_sh").as("nb"))
-    a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >= minOverlap)
+    val (na, nb) = (col("n_sh_a"), col("n_sh_b"))
+    val minOverlap = ceil(lit(tEff / (1 + tEff)) * (na + nb) - lit(1e-9))
+    CoOccur.bucketPairs(prefix, Seq("shingle"), "id", Seq("rk", "n_sh"))
+      .filter(lit(1) + least(na - col("rk_a"), nb - col("rk_b")) >= minOverlap)
       .select("id_a", "id_b").distinct()
   }
 

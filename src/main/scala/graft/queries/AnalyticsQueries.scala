@@ -356,10 +356,7 @@ object AnalyticsQueries {
       .select(col("p_name").as("name"),
         element_at(split(col("p_name"), " "), -1).as("block"))
       .distinct()
-    val a = names.select(col("block"), col("name").as("name_a"))
-    val b = names.select(col("block"), col("name").as("name_b"))
-    a.join(b, Seq("block"))
-      .filter(col("name_a") < col("name_b"))
+    CoOccur.bucketPairs(names, Seq("block"), "name")
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= EditMax)
       .select("name_a", "name_b", "dist")

@@ -432,26 +432,12 @@ object TextQueries {
     * step that makes pairwise dedup output usable downstream: "keep row
     * iff doc_id == component". Oracle: DuckDB recursive CTE computing
     * min-reachable-id over the same exact-Jaccard edges. */
-  def q44DedupClusters(s: SparkSession, d: String): DataFrame =
-    q44WithForm(s, d, "rescan")
-
-  /** [[q44DedupClusters]] with an explicit shingle-frame form and
-    * candidate join ([[Dedup.ngramJaccardForm]]) — the arms behind
-    * TimeQuery's q44_stage / q44_groups / q44_stage_groups, which decide
-    * q44's form at depth; output is form-independent (DedupSpec pins
-    * it). The staged directory is deleted as soon as
-    * [[ConnectedComponents.resolve]] returns: resolve materializes the
-    * pair lineage eagerly into its own localCheckpoint, so nothing
-    * re-reads the shingle frame afterwards. */
-  private[graft] def q44WithForm(s: SparkSession, d: String,
-      form: String, joinForm: String = "selfjoin"): DataFrame = {
+  def q44DedupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val (pairsAll, free) = Dedup.ngramJaccardForm(docs, n = 3,
-      threshold = 0.5, idCol = "doc_id", textCol = "text",
-      maxDocFreq = MaxShingleDf, form = form, joinForm = joinForm)
+    val pairsAll = Dedup.ngramJaccard(docs, n = 3, threshold = 0.5,
+      maxDocFreq = MaxShingleDf)
     val comp = ConnectedComponents.resolve(pairsAll.select("id_a", "id_b"))
       .withColumnRenamed("id", "doc_id")
-    free()
     docs.select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Pin, Tables}
 import graft.functions.{VectorFunctions => V}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{CoOccur, Dedup, Similarity}
 
 /** Similarity-search battery over the `embeddings` table (64-dim float
   * vectors). Cosine math folds in double precision left-to-right on both
@@ -581,18 +581,11 @@ object VectorQueries {
       .join(semanticClusters(e), Seq("vec_id"))
       .select(col("cid"), col("vec_id"), col("embedding").as("v"),
         V.l2Norm(col("embedding")).as("nrm"))
-    val ok = base.groupBy("cid").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") <= SemMaxCluster).select("cid")
-    val f = base.join(ok, Seq("cid"))
-    val a = f.select(col("cid"), col("vec_id").as("id_a"),
-      col("v").as("va"), col("nrm").as("na"))
-    val b = f.select(col("cid"), col("vec_id").as("id_b"),
-      col("v").as("vb"), col("nrm").as("nb"))
-    val removed = a.join(b, Seq("cid"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(round(V.cosineFromNorms(col("va"), col("vb"), col("na"), col("nb")), 4)
+    val removed = CoOccur.bucketPairs(CoOccur.dropHotKeys(base, Seq("cid"), SemMaxCluster),
+        Seq("cid"), "vec_id", Seq("v", "nrm"))
+      .filter(round(V.cosineFromNorms(col("v_a"), col("v_b"), col("nrm_a"), col("nrm_b")), 4)
         >= SemTau)
-      .select(col("id_b").as("vec_id")).distinct()
+      .select(col("vec_id_b").as("vec_id")).distinct()
     base.select("vec_id", "cid")
       .join(removed.withColumn("is_dup", lit(1)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"), col("is_dup").isNull.as("kept"))

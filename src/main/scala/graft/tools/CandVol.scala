@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 import graft.core.{Sessions, Tables}
-import graft.operators.Dedup
+import graft.operators.{CoOccur, Dedup}
 
 /** Deterministic scale diagnostic for the WHOLE near-dup family: each
   * blocking scheme's candidate-pair volume is a pure function of the
@@ -55,13 +55,10 @@ object CandVol {
     * cluster, hot clusters (> SemMaxCluster) dropped exactly as the
     * operator drops them before its pair join. [[selfJoinVolume]] on
     * `cid` is then the operator's within-cluster pair count. */
-  def semanticBlockKeys(embs: DataFrame): DataFrame = {
-    val assign = graft.queries.VectorQueries.semanticClusters(embs)
-    val ok = assign.groupBy("cid").agg(count(lit(1)).as("pop"))
-      .filter(col("pop") <= graft.queries.VectorQueries.SemMaxCluster)
-      .select("cid")
-    assign.join(ok, Seq("cid")).select(col("vec_id").as("id"), col("cid"))
-  }
+  def semanticBlockKeys(embs: DataFrame): DataFrame =
+    CoOccur.dropHotKeys(graft.queries.VectorQueries.semanticClusters(embs),
+      Seq("cid"), graft.queries.VectorQueries.SemMaxCluster)
+      .select(col("vec_id").as("id"), col("cid"))
 
   /** q113's asymmetric volume: side A sits in its effective bucket,
     * side B probes the deduped coarsenings of its raw bucket and every

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
 
 class CoOccurSpec extends SparkSpec {
   import spark.implicits._
@@ -37,50 +37,52 @@ class CoOccurSpec extends SparkSpec {
     assert(got == Set((2, 3, 2L)))
   }
 
-  test("pairsViaGroups (HOF and codegen-expr forms) is pair-for-pair identical to the self-join form") {
-    // same fixture, bound active (hot key dropped) and minShared applied:
-    // all three formulations must agree on the exact multiset
-    val expected = Set((1, 2, 1L), (1, 3, 1L), (2, 3, 2L))
-    val join = CoOccur.pairs(df, "k", "item", 1L, 4L)
-      .as[(Int, Int, Long)].collect().toSet
-    val hof = CoOccur.pairsViaGroups(df, "k", "item", 1L, 4L, viaExpr = false)
-      .as[(Int, Int, Long)].collect().toSet
-    val viaExpr = CoOccur.pairsViaGroups(df, "k", "item", 1L, 4L, viaExpr = true)
-      .as[(Int, Int, Long)].collect().toSet
-    assert(join == expected)
-    assert(hof == expected)
-    assert(viaExpr == expected)
-    // unbounded request is a contract violation for the grouped form
-    intercept[IllegalArgumentException] {
-      CoOccur.pairsViaGroups(df, "k", "item", 1L, 0L)
-    }
+  /** Random (k, id, p) frames: few keys so buckets repeat, ids drawn
+    * from a small range so a bucket can hold the same id twice, and
+    * about one row in six with a null key. */
+  private val frames: Gen[Seq[(Option[Int], Int, Long)]] = Gen.choose(0, 24).flatMap(n =>
+    Gen.listOfN(n, for {
+      k <- Gen.frequency(5 -> Gen.choose(0, 4).map(Option(_)), 1 -> Gen.const(None))
+      id <- Gen.choose(0, 9)
+      p <- Gen.choose(-1000L, 1000L)
+    } yield (k, id, p)))
+
+  /** The in-memory model of dropHotKeys, then dropSingletonKeys, then
+    * bucketPairs: every ordered row pair sharing a non-null key with
+    * id_a < id_b, once per such row pair. */
+  private def modelPairs(rows: Seq[(Option[Int], Int, Long)], cap: Long,
+      prune: Boolean): Seq[(Int, Int, Int, Long, Long)] = {
+    def held(rs: Seq[(Option[Int], Int, Long)]) = rs.groupBy(_._1).map { case (k, g) => k -> g.size }
+    val capped =
+      if (cap <= 0) rows
+      else { val n = held(rows); rows.filter(r => r._1.isEmpty || n(r._1) <= cap) }
+    val kept =
+      if (!prune) capped
+      else { val n = held(capped); capped.filter(r => r._1.nonEmpty && n(r._1) >= 2) }
+    for {
+      (a, i) <- kept.zipWithIndex
+      (b, j) <- kept.zipWithIndex
+      if i != j && a._1.nonEmpty && a._1 == b._1 && a._2 < b._2
+    } yield (a._1.get, a._2, b._2, a._3, b._3)
   }
 
-  test("PairCombosExpr equals the HOF emitter element-for-element (order included)") {
-    // the expression's exactness contract: same structs in the same
-    // (i asc, j asc) order as flatten/transform/slice — checked on the
-    // raw arrays (longs and strings), not just the aggregated pairs,
-    // including the n<2 edge cases
-    val arrs = Seq(
-      Seq(1L, 2L, 3L, 4L), Seq(7L), Seq.empty[Long], Seq(5L, 5L), Seq(2L, 9L))
-      .toDF("items")
-    val hofCol = expr(
-      """flatten(transform(items, (x, i) ->
-        |  transform(slice(items, i + 2, size(items) - i - 1),
-        |    y -> struct(x AS item_a, y AS item_b))))""".stripMargin)
-    val got = arrs.select(
-      graft.functions.PairCombosFn.pairCombos(col("items")).as("e"),
-      hofCol.as("h"))
-      .selectExpr("cast(e as string) AS es", "cast(h as string) AS hs")
-      .as[(String, String)].collect()
-    got.foreach { case (e, h) => assert(e == h, s"expr $e != hof $h") }
-    val strs = Seq(Seq("b", "a", "c"), Seq("x")).toDF("items")
-    val gotS = strs.select(
-      graft.functions.PairCombosFn.pairCombos(col("items")).as("e"),
-      hofCol.as("h"))
-      .selectExpr("cast(e as string) AS es", "cast(h as string) AS hs")
-      .as[(String, String)].collect()
-    gotS.foreach { case (e, h) => assert(e == h, s"expr $e != hof $h") }
+  test("bucketPairs after the cap and the prune equals the in-memory same-key pair enumeration") {
+    val prop = Prop.forAllNoShrink(frames) { rows =>
+      val df = rows.toDF("k", "id", "p")
+      val results = for (cap <- Seq(0L, 1L, 2L, 5L); prune <- Seq(false, true);
+          salt <- Seq(1, 2, 16)) yield {
+        val capped = CoOccur.dropHotKeys(df, Seq("k"), cap)
+        val in = if (prune) CoOccur.dropSingletonKeys(capped, Seq("k")) else capped
+        val out = CoOccur.bucketPairs(in, Seq("k"), "id", Seq("p"), salt)
+        assert(out.columns.toSeq == Seq("k", "id_a", "id_b", "p_a", "p_b"))
+        val got = out.as[(Int, Int, Int, Long, Long)].collect().toSeq.sorted
+        val want = modelPairs(rows, cap, prune).sorted
+        Prop(got == want) :| s"cap=$cap prune=$prune salt=$salt rows=$rows"
+      }
+      Prop.all(results: _*)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("q21's cap=64 is inert on the fixture (capped == uncapped)") {

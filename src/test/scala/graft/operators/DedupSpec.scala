@@ -66,10 +66,12 @@ class DedupSpec extends SparkSpec {
   test("shingle-frame forms (rescan/pin/distinct) agree on a corpus with in-doc repeats") {
     // repeated phrases INSIDE each doc: the per-row array_distinct frame
     // equals the frame-level distinct() exactly when ids are unique — the
-    // precondition ngramJaccardForm's scaladoc states; this corpus makes
-    // the repeat case load-bearing (docs 0/1 repeat their own trigrams),
-    // and the capped run exercises the hot-df consumer under each form.
-    // The frame-level distinct form is the reference (distinctJaccard).
+    // precondition ngramJaccard's scaladoc states; this corpus makes the
+    // repeat case load-bearing (docs 0/1 repeat their own trigrams), and
+    // the capped run exercises the hot-df cap. The frame-level distinct
+    // form is the reference (distinctJaccard). Containment shares the
+    // overlap body, so its n_common must equal Jaccard's on every pair
+    // both emit.
     val rep = Seq(
       (0L, "alpha beta gamma alpha beta gamma alpha beta gamma delta epsilon zeta"),
       (1L, "alpha beta gamma alpha beta gamma alpha beta gamma delta epsilon eta"),
@@ -79,22 +81,16 @@ class DedupSpec extends SparkSpec {
     for (cap <- Seq(0L, 2L)) {
       val ref = distinctJaccard(rep, 0.2, cap)
       assert(ref.nonEmpty, s"cap=$cap: vacuous reference")
-      for (form <- Seq("rescan", "stage")) {
-        val (df, free) = Dedup.ngramJaccardForm(rep, 3, 0.2, "doc_id", "text",
-          cap, form)
-        val got = df.orderBy("id_a", "id_b").collect().toSeq
-        free()
-        assert(got == ref, s"form=$form cap=$cap diverged from distinct")
-      }
-      // grouped candidate join (r14): one shuffle + per-group pair
-      // emission must reproduce the self-join's pairs and n_common
-      // exactly (requires the cap, so only the capped arm runs it)
-      if (cap > 0) {
-        val (df, free) = Dedup.ngramJaccardForm(rep, 3, 0.2, "doc_id",
-          "text", cap, "rescan", joinForm = "groups")
-        val got = df.orderBy("id_a", "id_b").collect().toSeq
-        free()
-        assert(got == ref, s"joinForm=groups cap=$cap diverged")
+      val jac = Dedup.ngramJaccard(rep, 3, 0.2, maxDocFreq = cap)
+      assert(jac.orderBy("id_a", "id_b").collect().toSeq == ref,
+        s"cap=$cap diverged from distinct")
+      val common = jac.select(col("id_a"), col("id_b"), col("n_common").as("nj"))
+        .join(Dedup.ngramContainment(rep, 3, 0.2, maxDocFreq = cap)
+          .select(col("id_a"), col("id_b"), col("n_common").as("nc")), Seq("id_a", "id_b"))
+        .as[(Long, Long, Long, Long)].collect()
+      assert(common.nonEmpty, s"cap=$cap: no pair in both outputs")
+      common.foreach { case (a, b, nj, nc) =>
+        assert(nj == nc, s"cap=$cap pair ($a,$b): containment n_common $nc != jaccard $nj")
       }
     }
   }
@@ -754,19 +750,6 @@ class DedupSpec extends SparkSpec {
         s"trial $trial t=$t: prefix join lost ${(exact -- viaPrefix).size} / " +
           s"invented ${(viaPrefix -- exact).size} pairs")
     }
-  }
-
-  test("no graft-shingle-stage dir survives a failed staging write") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def stageDirs(): Set[String] =
-      Option(tmp.list()).map(_.toSet).getOrElse(Set.empty)
-        .filter(_.startsWith("graft-shingle-stage"))
-    val before = stageDirs()
-    val failing = docs.withColumn("text",
-      when(col("doc_id") === 3L, raise_error(lit("boom"))).otherwise(col("text")))
-    intercept[Exception](
-      Dedup.ngramJaccardForm(failing, 3, 0.5, "doc_id", "text", 0L, "stage"))
-    assert(stageDirs() -- before == Set.empty[String])
   }
 
   test("q35 and q97 never shuffle the corpus text (the pinned candidate ids broadcast)") {
