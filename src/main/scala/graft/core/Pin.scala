@@ -43,22 +43,29 @@ object Pin {
     }
   }
 
-  /** Free the executor-storage blocks behind a pinned frame NOW instead
-    * of when the ContextCleaner GCs it.
+  /** Free the executor-storage blocks of every pin `df` reads NOW
+    * instead of when the ContextCleaner GCs them: `df` may be a pin
+    * itself or any frame built on pins (a join of two, a verifier's
+    * output). Every `LogicalRDD` leaf of its logical plan (the node a
+    * checkpoint reads), subqueries included, has its RDD unpersisted.
+    * A pin's own inputs sit behind its lineage cut, so freeing a frame
+    * never reaches them.
     *
     * `Dataset.unpersist` does NOT do this: it only uncaches cache-manager
     * entries (`.cache()`/`.persist()`), and a checkpoint's persisted RDD
     * lives outside the cache manager — so calling unpersist on a
     * checkpointed frame is a silent no-op and the blocks linger until a
-    * driver GC cycle notices the RDD is unreachable. This reaches the
-    * RDD through the checkpoint's LogicalRDD node and unpersists it
-    * directly; the timing tools' `getPersistentRDDs` sweeps reach the
-    * same RDD. Caller contract: nothing may execute the frame's plan
-    * afterwards — the checkpoint truncated its lineage, so re-execution
-    * would fail rather than silently recompute. */
+    * driver GC cycle notices the RDD is unreachable. This reaches each
+    * RDD through its LogicalRDD node and unpersists it directly; the
+    * timing tools' `getPersistentRDDs` sweeps reach the same RDDs.
+    *
+    * Caller contract: the caller owns every pin `df` reads — no other
+    * live frame may still need one of them — and nothing executes those
+    * pins afterwards, through `df` or any other frame: the checkpoint
+    * truncated their lineage, so re-execution would fail rather than
+    * silently recompute. The usual caller materializes a result built on
+    * pins, then frees the result. */
   def free(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    df.queryExecution.logical.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }
+      .distinct.foreach(_.unpersist(blocking = false))
 }

@@ -10,28 +10,29 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Nearest-centroid argmin over a per-cell centroid family — the
-  * assignment step of the two-level Lloyd fit (q115's fine level).
+  * assignment step of both integer Lloyd fits: q115's fine level with
+  * one family per coarse cell, and the flat fit (q99, q115's coarse
+  * level) with a single family under cell 0.
   *
-  * The pure-Column formulation builds `array_min(CASE ccid WHEN ...
-  * array(struct(sq_dist(qv, c), fid), ...))` with one literal struct per
-  * centroid: at gen30 scale that is k1·k2 ≈ 484 sq_dist sub-expressions
-  * in ONE projection — the generated `processNext()` blows janino's
-  * method limits, whole-stage codegen FAILS, and Spark silently falls
-  * back to interpreted evaluation for the hottest map of the fit
-  * (observed in the g30 scale session logs). This expression carries the
-  * whole centroid table as one plan reference and evaluates the argmin
-  * in a tight loop behind a static call — constant-size generated code
-  * at any k.
+  * A Column formulation — `array_min` over one literal
+  * `struct(distance, fid)` per centroid, behind a CASE on the cell —
+  * grows its generated code with k: at gen30 scale that is k1·k2 ≈ 484
+  * distance sub-expressions in ONE projection, the generated
+  * `processNext()` blows janino's method limits, whole-stage codegen
+  * FAILS, and Spark silently falls back to interpreted evaluation for
+  * the hottest map of the fit (observed in the g30 scale session logs).
+  * This expression carries the whole centroid table as one plan
+  * reference and evaluates the argmin in a tight loop behind a static
+  * call — constant-size generated code at any k.
   *
-  * Exactness contract (mirrors the Column form bit-for-bit):
-  *  - distances are the same integer arithmetic as [[SqDistExpr]];
-  *  - the winner is the lexicographic struct-min on (dist, fid): the
-  *    loop iterates fids in ascending order keeping STRICT minima, which
-  *    is exactly array_min's smallest-(dist, fid) element;
-  *  - a ccid with no centroid family → null (the CASE's no-match arm);
-  *    null qv → null; a length-mismatched centroid → null (the old
-  *    sq_dist-null struct would have poisoned array_min's comparison —
-  *    impossible on fixed-dim corpora, nulled explicitly here). */
+  * Exactness contract (the DuckDB oracle's `ORDER BY d, cid` pick):
+  *  - the distance is the squared L2 distance in exact Long arithmetic
+  *    over the int components;
+  *  - the winner is the lexicographic minimum on (dist, fid): the loop
+  *    iterates fids in ascending order keeping STRICT minima;
+  *  - a ccid with no centroid family → null; null qv → null; a
+  *    length-mismatched centroid → null (impossible on fixed-dim
+  *    corpora, nulled explicitly here). */
 object NearestCentroidUtil {
   /** cents: fid-ascending (fid, centroid) per cell. Returns
     * struct(dist, fid) or null. */

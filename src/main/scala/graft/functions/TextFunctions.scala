@@ -29,23 +29,13 @@ object TextFunctions {
 
   /** Token n-gram shingles ("w1 w2 w3"). Empty array for short docs
     * and for null text. The codegen [[ShinglesExpr]] (round 13): the
-    * HOF form below is CodegenFallback — `transform`/`slice` evaluate
-    * interpreted, a closure dispatch + slice allocation per window, at
-    * the head of the whole text-dedup family — and measured 9-25x
-    * slower (BENCH_SCALE_r13_shexpr; see Shingles.scala's scaladoc). */
+    * higher-order-function form (`transform`/`slice` over the tokens)
+    * is CodegenFallback — it evaluates interpreted, a closure dispatch
+    * + slice allocation per window, at the head of the whole text-dedup
+    * family — and measured 9-25x slower (BENCH_SCALE_r13_shexpr; see
+    * Shingles.scala's scaladoc). TextFunctionsSpec keeps that form as
+    * the string-identity reference. */
   def shingles(text: Column, n: Int): Column = ShinglesFn.shinglesVec(text, n)
-
-  /** The interpreted higher-order-function shingle form, kept as the
-    * reference [[shingles]] is tested against: string-identical to
-    * [[ShinglesExpr]] (TextFunctionsSpec pins it). On null text the
-    * `when` predicate is null, so it falls to the otherwise branch and
-    * returns an empty array, as ShinglesExpr does. */
-  private[graft] def shinglesViaHof(text: Column, n: Int): Column = {
-    val t = tokens(text)
-    when(size(t) >= n,
-      transform(sequence(lit(0), size(t) - n), i => concat_ws(" ", slice(t, i + lit(1), lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
 
   /** Stopword hit count for a language profile. */
   def stopwordHits(text: Column, stopwords: Seq[String]): Column =

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions.udaf
   * < 2^53 makes the double quotient exact to within 1 ulp and a
   * rational quotient with denominator n sits at least 1/n from any
   * integer it doesn't equal — VectorQueriesSpec pins the end-to-end
-  * equality of both update forms. */
+  * equality with an in-memory Lloyd twin that divides in double. */
 object VecSum {
 
   /** vecSum(qv): df.groupBy(...).agg(VecSum(col("qv"))) → array<long>. */

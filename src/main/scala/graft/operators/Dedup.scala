@@ -378,7 +378,7 @@ object Dedup {
     val neededHist = historyDocs.join(
       cands.filter(col("src") === "hist").select(col("id_a").as(idCol)),
       Seq(idCol), "left_semi")
-    val (verified, verifyFree) = verifiedJaccardWithFrees(
+    val verified = verifiedJaccard(
       neededHist.unionByName(batch),
       cands.select("id_a", "id_b"), threshold, n, idCol, textCol)
     // ids are disjoint across the two frames (operator contract), so a
@@ -391,11 +391,13 @@ object Dedup {
     // pairs checkpoint — free their blocks now instead of waiting for
     // the ContextCleaner (ADVICE r8: a long-running driver otherwise
     // accumulates them per micro-batch; note Dataset.unpersist would be
-    // a silent no-op on a checkpoint — see Pin.free).
+    // a silent no-op on a checkpoint — see Pin.free). `verified` reads
+    // only the verifier's two pins; the docs handed to it (which read
+    // `cands`) sit behind their cuts, so nothing else is freed.
     // pairs itself backs the returned frame; the streaming wiring sweeps
     // it after the verdict write.
     Pin.free(cands)
-    verifyFree()
+    Pin.free(verified)
     val histBlame = pairs.filter(col("src") === "hist")
       .groupBy(col("id_b").as(idCol)).agg(min("id_a").as("hist_dup"))
     val batchBlame = pairs.filter(col("src") === "batch")
@@ -1077,21 +1079,16 @@ object Dedup {
     * matches [[ngramJaccard]] exactly whenever the candidate set is a
     * superset of the true >= threshold pairs (recall pinned in
     * DedupSpec), which is what makes the engine-specific candidate
-    * generators DuckDB-oracle-verifiable end to end. */
-  def verifiedJaccard(docs: DataFrame, candidates: DataFrame,
-      threshold: Double, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    verifiedJaccardWithFrees(docs, candidates, threshold, n, idCol, textCol)._1
-
-  /** [[verifiedJaccard]] plus a cleanup that frees its two pinned
-    * intermediates (candidate pairs; each candidate doc's distinct
-    * shingles as one array row), so a caller
-    * that materializes the result eagerly — the streaming ingest path
-    * does, via its own pin — can release them
-    * deterministically instead of waiting for the ContextCleaner
-    * (ADVICE r8 hygiene). The public entry leaves the frees to the
-    * ContextCleaner: its callers are batch queries whose session
-    * outlives one query plan.
+    * generators DuckDB-oracle-verifiable end to end.
+    *
+    * The result reads two pinned intermediates (candidate pairs; each
+    * candidate doc's distinct shingles as one array row) and nothing
+    * else: `docs` and the candidate generator sit behind their cuts. A
+    * caller that materializes the result eagerly — the streaming ingest
+    * path does, via its own pin — releases both deterministically with
+    * [[graft.core.Pin.free]] on the result (ADVICE r8 hygiene); batch
+    * queries, whose session outlives one query plan, leave them to the
+    * ContextCleaner.
     *
     * The intermediates are pinned by localCheckpoint, not persist(), by
     * measurement — with a trap worth recording. persist() first looked
@@ -1117,9 +1114,9 @@ object Dedup {
     * that overlaps a compaction, see [[graft.streaming.IncrementalDedup]])
     * duplicates the pair's output row with the SAME Jaccard instead of
     * double-counting its shingles. */
-  private[graft] def verifiedJaccardWithFrees(docs: DataFrame,
-      candidates: DataFrame, threshold: Double, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): (DataFrame, () => Unit) = {
+  def verifiedJaccard(docs: DataFrame, candidates: DataFrame,
+      threshold: Double, n: Int = 3,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // Shingle ONLY the docs that appear in a candidate pair, and only
     // ONCE (round 9). The earlier shape shingled the FULL corpus and,
     // because its three consumers partitioned differently (id agg,
@@ -1161,9 +1158,7 @@ object Dedup {
       .withColumn("jaccard",
         round(col("n_common") / (col("sa") + col("sb") - col("n_common")), 4))
       .select("id_a", "id_b", "n_common", "jaccard")
-    val out = rowsWhere(scored,
-      col("n_common") > 0 && col("jaccard") >= threshold)
-    (out, () => { Pin.free(cand); Pin.free(sh) })
+    rowsWhere(scored, col("n_common") > 0 && col("jaccard") >= threshold)
   }
 
   /** Prefix-filtering candidate generation (the SSJoin/AllPairs family:

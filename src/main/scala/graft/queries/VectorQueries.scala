@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Pin, Tables}
 import graft.functions.{VectorFunctions => V}
@@ -130,6 +130,42 @@ object VectorQueries {
     * expressions (the Spark side infers it from data). */
   private val KmDim = 64
 
+  /** (vec_id, qv) — the int8-quantized corpus the Lloyd machinery runs
+    * on (shared by q99 and q115), via the fused codegen
+    * [[graft.functions.QuantizeExpr]], bit-identical to q47's
+    * aggregate + transform Column form (QuantizeUtil's scaladoc has the
+    * argument, VectorQueriesSpec the assertion), which evaluates
+    * interpreted and measured 42× slower on the g300 quantize stage
+    * (BENCH_SCALE_r12_q115stages: 45.4/46.7 s against 0.63/1.10 s). */
+  private[graft] def quantizedFrame(e: DataFrame): DataFrame =
+    e.select(col("vec_id"),
+      graft.functions.QuantizeFn.quantizeVec(col("embedding")).as("qv"))
+
+  /** Nearest-centroid assignment (ties toward the lower cid): a narrow
+    * map over the corpus — the centroids ride as one single-cell
+    * [[graft.functions.NearestCentroidExpr]] table, so no join, no
+    * shuffle, and constant-size generated code at any k. The k-literal
+    * `array_min` form it replaced grew its generated code with k and
+    * stopped being JIT-compilable between k=40 and k=70: the g300 coarse
+    * prefix read 330.9/337.5 s that way against 55.9/60.5 s through the
+    * expression (BENCH_SCALE_r12_q115stages). */
+  private def assignedTo(q: DataFrame, cents: Seq[(Int, Array[Long])]): DataFrame = {
+    val table = Map(0 -> cents.sortBy(_._1).toArray)
+    q.withColumn("m",
+        graft.functions.NearestCentroidFn.nearestCentroid(lit(0), col("qv"), table))
+      .select(col("vec_id"), col("qv"),
+        col("m.fid").as("cid"), col("m.dist").as("dist"))
+  }
+
+  /** Sums+count → centroid components, shared by both VecSum update
+    * paths: comp_i = floorDiv(sum_i, n). */
+  private def centsFromSums(sums: Seq[Long], n: Long): Array[Long] = {
+    val out = new Array[Long](sums.length)
+    var i = 0
+    while (i < out.length) { out(i) = Math.floorDiv(sums(i), n); i += 1 }
+    out
+  }
+
   /** Deterministic integer k-means (the q68-PageRank discipline applied
     * to clustering): Lloyd iterations over int8-QUANTIZED vectors with
     * all distance and centroid arithmetic in exact integers — squared-L2
@@ -142,116 +178,16 @@ object VectorQueries {
     *
     * Scale shape: centroids are k×dim numbers — driver-resident between
     * iterations (the documented bounded collect, as in knnIvfSeeded) and
-    * injected as literals, so ASSIGNMENT is a narrow map over the corpus
-    * (no join, no shuffle) and each iteration costs exactly one
-    * (cid, component) aggregate of k×dim rows. The corpus shuffles
-    * nothing but pre-combined partial sums, at any corpus size. */
-  /** (vec_id, qv) — the int8-quantized corpus the Lloyd machinery runs
-    * on (shared by q99 and q115). */
-  /** Quantization strategy: `false` = the Column form (aggregate +
-    * transform higher-order functions — CodegenFallback, interpreted,
-    * per-element BigDecimal in the builtin round); `true` = the fused
-    * codegen [[graft.functions.QuantizeExpr]]. Outputs bit-identical
-    * (QuantizeUtil scaladoc has the argument; FunctionLaws and
-    * VectorQueriesSpec the assertions). DEFAULT TRUE by measurement
-    * (BENCH_SCALE_r12_q115stages, g300 interleaved pair): quant stage
-    * 45.4/46.7 s interpreted vs 0.63/1.10 s fused — 42×; the quantize
-    * pass was the whole fit floor at g100 (~21 of 24.6 s) and the
-    * largest term left in the post-NcAssign coarse fit at g300. */
-  private[graft] val CodegenQuantize = true
-
-  private[graft] def quantizedFrame(e: DataFrame,
-      viaExpr: Boolean = CodegenQuantize): DataFrame =
-    if (viaExpr)
-      e.select(col("vec_id"),
-        graft.functions.QuantizeFn.quantizeVec(col("embedding")).as("qv"))
-    else
-      e.select(col("vec_id"),
-        V.quantize(col("embedding"), V.quantScale(col("embedding"))).as("qv"))
-
-  /** Squared distance to a constant centroid — the codegen expression
-    * ([[graft.functions.SqDistExpr]]); integer-identical to the old
-    * `aggregate(zip_with(...))` fold, which evaluated interpreted and
-    * dominated the flat fit's wall time (n·k of these per iteration). */
-  private def distTo(cv: Array[Long]): Column =
-    graft.functions.SqDistFn.sqDist(col("qv"), cv)
-
-  /** Flat-assignment strategy: `false` = the Column formulation
-    * (array_min over k literal struct(sq_dist, cid) sub-expressions —
-    * generated code GROWS with k, and past a threshold between k=40
-    * and k=70 the hot method stops being JIT-compilable: the round-12
-    * g300 fit decomposition measured the coarse fit at 383 s against
-    * ~2 s of the same work at g100's k1=40, with quantize linear and
-    * the update aggregate ruled out by its own A/B arm — the
-    * k1-literal assign is the residual by elimination, the same
-    * code-size cliff [[assignedFine]] hit at 484 literals and solved
-    * with [[graft.functions.NearestCentroidExpr]]'s constant-size
-    * generated code); `true` = that same expression with a single-cell
-    * table. Outputs bit-identical: the expression's strict-minimum
-    * fid-ascending loop IS array_min's lexicographic (dist, cid)
-    * struct-min (its scaladoc carries the argument; the
-    * VectorQueriesSpec strategy test asserts it end-to-end). DEFAULT
-    * TRUE by measurement (BENCH_SCALE_r12_q115stages, g300 interleaved
-    * pair): coarse prefix 330.9/337.5 s with the k1=70-literal form vs
-    * 55.9/60.5 s via NearestCentroidExpr — and ~46 s of the remainder
-    * is the interpreted quantize, so the assign itself shrank ~20×.
-    * This was the round-11 open residual (g300 fit floor 399.9 vs a
-    * 137 s distance model). */
-  private[graft] val NcAssign = true
-
-  /** Nearest-centroid assignment (ties toward the lower cid): a narrow
-    * map over the corpus — centroids are injected as literals (Column
-    * form) or as one table reference ([[NcAssign]] form), so no join
-    * and no shuffle either way. */
-  private def assignedTo(q: DataFrame, cents: Seq[(Int, Array[Long])],
-      viaNc: Boolean = NcAssign): DataFrame =
-    if (viaNc) {
-      val table = Map(0 -> cents.sortBy(_._1).toArray)
-      q.withColumn("m",
-          graft.functions.NearestCentroidFn.nearestCentroid(lit(0), col("qv"), table))
-        .select(col("vec_id"), col("qv"),
-          col("m.fid").as("cid"), col("m.dist").as("dist"))
-    } else {
-      val scored = cents.map { case (cid, cv) =>
-        struct(distTo(cv).as("dist"), lit(cid).as("cid"))
-      }
-      q.withColumn("m", array_min(array(scored: _*)))
-        .select(col("vec_id"), col("qv"),
-          col("m.cid").as("cid"), col("m.dist").as("dist"))
-    }
-
-  /** `iters` Lloyd iterations from the data-deterministic seed (the
-    * quantized vectors of vec_id 0..k-1); returns the final centroids.
-    * Centroids are k×dim numbers, driver-resident between iterations
-    * (the documented bounded collect); each iteration costs one
-    * (cid, component) aggregate. */
-  /** Centroid-update strategy for the Lloyd fits. `false` = the
-    * original posexplode formulation (fan each row into dim (cid, i, x)
-    * rows, two-level scalar aggregate); `true` = ONE
-    * [[graft.functions.VecSum]] aggregate per group (whole-vector
-    * partial state, no n·dim fan-out, k·parts instead of k·dim·parts
-    * emitted partials). Outputs are bit-identical —
-    * Math.floorDiv(sum, n) == floor(sum.toDouble / n) at these
-    * magnitudes (VecSum scaladoc has the argument, VectorQueriesSpec
-    * the assertion). DEFAULT TRUE by measurement
-    * (BENCH_SCALE_r12_q115stages): full fit 405.5 → 350.2 s at g300
-    * with only this strategy swapped (six update aggregates saved
-    * ~9 s each); at g100 the isolated update1 delta read 3.1/5.5 s
-    * posexplode vs 1.1/2.3 s VecSum on both interleaved runs. */
-  private[graft] val VecSumUpdates = true
-
-  /** Sums+count → centroid components, shared by both VecSum update
-    * paths: comp_i = floorDiv(sum_i, n). */
-  private def centsFromSums(sums: Seq[Long], n: Long): Array[Long] = {
-    val out = new Array[Long](sums.length)
-    var i = 0
-    while (i < out.length) { out(i) = Math.floorDiv(sums(i), n); i += 1 }
-    out
-  }
-
-  private def lloydCentroids(q: DataFrame, k: Int, iters: Int,
-      viaVecSum: Boolean = VecSumUpdates,
-      viaNc: Boolean = NcAssign): Seq[(Int, Array[Long])] = {
+    * injected into the assignment, so ASSIGNMENT is a narrow map over
+    * the corpus (no join, no shuffle) and each iteration costs exactly
+    * one per-cid [[graft.functions.VecSum]] aggregate (whole-vector
+    * partial state, no n·dim fan-out). The corpus shuffles nothing but
+    * pre-combined partial sums, at any corpus size. The posexplode
+    * per-component aggregate VecSum replaced cost about 9 s more per
+    * update at g300 (BENCH_SCALE_r12_q115stages: full fit 405.5 →
+    * 350.2 s over six updates). Returns the centroids after `iters`
+    * updates. */
+  private def lloydCentroids(q: DataFrame, k: Int, iters: Int): Seq[(Int, Array[Long])] = {
     var cents: Seq[(Int, Array[Long])] = q.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cid"), col("qv"))
       .collect()
@@ -260,40 +196,27 @@ object VectorQueries {
     require(cents.size == k,
       s"k-means seeding needs vec_ids 0..${k - 1} present; found ${cents.size}")
     for (_ <- 1 to iters) {
-      cents =
-        if (viaVecSum)
-          assignedTo(q, cents, viaNc)
-            .groupBy("cid")
-            .agg(graft.functions.VecSum(col("qv")).as("sums"),
-              count(lit(1)).as("n"))
-            .collect()
-            .map(r => (r.getInt(0), centsFromSums(r.getSeq[Long](1), r.getLong(2))))
-            .sortBy(_._1).toSeq
-        else
-          assignedTo(q, cents, viaNc)
-            .select(col("cid"), posexplode(col("qv")).as(Seq("i", "x")))
-            .groupBy("cid", "i")
-            .agg(floor(sum(col("x").cast("long")).cast("double") / count(lit(1)))
-              .cast("long").as("comp"))
-            .groupBy("cid")
-            .agg(transform(array_sort(collect_list(struct(col("i"), col("comp")))),
-              _.getField("comp")).as("cv"))
-            .collect()
-            .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
-            .sortBy(_._1).toSeq
+      cents = assignedTo(q, cents)
+        .groupBy("cid")
+        .agg(graft.functions.VecSum(col("qv")).as("sums"),
+          count(lit(1)).as("n"))
+        .collect()
+        .map(r => (r.getInt(0), centsFromSums(r.getSeq[Long](1), r.getLong(2))))
+        .sortBy(_._1).toSeq
     }
     cents
   }
 
   // Deliberately NOT pinned across iterations (round 11, contrast
-  // coarseAssigned): q99's k is the fixed bench-scale KmK=16 and its
+  // coarseAssigned): q99's k is the fixed bench-scale KmK=4 and its
   // declared corpus is sf0.1 (20k vectors), where the fit's wall is
   // session/codegen-bound, not scan-bound — the lineage-pin win that
   // cut q115's corpus-scale fit 1.4-5.5x (BENCH_SCALE_r11_q115stages)
-  // rounds to noise here, and the pin would leave either a persisted
-  // RDD behind a lazily-returned frame or an extra eager checkpoint in
-  // the plan. If q99 is ever declared at corpus scale, route it
-  // through the coarseAssigned pattern instead of re-deriving this.
+  // rounds to noise here, and a pin would leave checkpoint blocks
+  // behind the lazily-returned frame that only the caller's Pin.free
+  // on the result (or the ContextCleaner) releases. If q99 is ever
+  // declared at corpus scale, route it through the coarseAssigned
+  // pattern instead of re-deriving this.
   def q99Kmeans(s: SparkSession, d: String): DataFrame = {
     val q = quantizedFrame(Tables.embeddings(s, d))
     val cents = lloydCentroids(q, KmK, KmIters)
@@ -358,44 +281,19 @@ object VectorQueries {
     * (ccid·k2 + fid) is engine-reproducible and the DuckDB oracle
     * unrolls BOTH levels. Factored out so [[graft.tools.CandVol]]
     * measures the cluster-blocked pair volume from the EXACT blocks the
-    * operator joins, not a reimplementation. */
-  private[graft] def semanticClusters(e: DataFrame,
-      viaVecSum: Boolean = VecSumUpdates,
-      viaNc: Boolean = NcAssign,
-      viaQuantExpr: Boolean = CodegenQuantize): DataFrame = {
+    * operator joins, not a reimplementation.
+    *
+    * The result reads the coarse assignment's pinned checkpoint
+    * ([[coarseAssigned]]); a long-lived caller that has materialized
+    * everything it derives from the result releases those blocks with
+    * [[graft.core.Pin.free]] on it. */
+  private[graft] def semanticClusters(e: DataFrame): DataFrame = {
     val k = semKFor(e.count())
     val k1 = semK1For(k)
     val k2 = (k + k1 - 1) / k1
-    val q = quantizedFrame(e, viaQuantExpr)
-    val coarse = coarseAssigned(q, k1, viaVecSum, viaNc)
-    val fine = lloydFine(coarse, k2, KmIters, viaVecSum)
-    fine.select(col("vec_id"),
+    val coarse = coarseAssigned(quantizedFrame(e), k1)
+    lloydFine(coarse, k2, KmIters).select(col("vec_id"),
       (col("ccid") * k2 + col("fid")).cast("int").as("cid"))
-  }
-
-  /** [[semanticClusters]] plus the checkpoint-release thunk (VERDICT
-    * r12 #8 — the WithFrees pattern [[graft.operators.Dedup
-    * .verifiedJaccardWithFrees]] established): the returned thunk frees
-    * the coarse assignment's pinned checkpoint blocks via
-    * [[graft.core.Pin.free]] (Dataset.unpersist is a
-    * silent no-op on checkpointed frames — the round-9 find). Call it
-    * ONLY after fully materializing everything derived from the
-    * assignment: the checkpoint truncates lineage, so a freed frame
-    * breaks rather than recomputes. Long-lived library sessions calling
-    * q115 repeatedly should use this entry; the declared query keeps
-    * the ContextCleaner default. */
-  private[graft] def semanticClustersWithFree(e: DataFrame,
-      viaVecSum: Boolean = VecSumUpdates,
-      viaNc: Boolean = NcAssign,
-      viaQuantExpr: Boolean = CodegenQuantize): (DataFrame, () => Unit) = {
-    val k = semKFor(e.count())
-    val k1 = semK1For(k)
-    val k2 = (k + k1 - 1) / k1
-    val q = quantizedFrame(e, viaQuantExpr)
-    val (coarse, free) = coarseAssignedWithFree(q, k1, viaVecSum, viaNc)
-    val fine = lloydFine(coarse, k2, KmIters, viaVecSum)
-    (fine.select(col("vec_id"),
-      (col("ccid") * k2 + col("fid")).cast("int").as("cid")), free)
   }
 
   /** The checkpoint-backed coarse assignment [[semanticClusters]]
@@ -428,32 +326,22 @@ object VectorQueries {
     * everything [[semanticClusters]] derives from it read them on every
     * downstream execution, so an eager free would break the caller's
     * plan rather than recompute (localCheckpoint truncates lineage).
-    * They are released when the driver GC collects the frame (the
-    * ContextCleaner pattern [[graft.operators.Dedup.verifiedJaccard]]
+    * By default they are released when the driver GC collects the frame
+    * (the ContextCleaner pattern [[graft.operators.Dedup.verifiedJaccard]]
     * documents); the timing harnesses sweep persistent RDDs between
-    * runs. A long-lived session calling q115 repeatedly accumulates
-    * one quantized-corpus checkpoint per call until a GC cycle —
-    * bounded by n·dim ints each, and on a real cluster spread across
-    * executor storage; long-lived callers release deterministically via
-    * [[semanticClustersWithFree]] (round 13 — the WithFrees entry this
-    * paragraph used to name as the fix-if-it-bites). */
-  private def coarseAssigned(q: DataFrame, k1: Int,
-      viaVecSum: Boolean = VecSumUpdates,
-      viaNc: Boolean = NcAssign): DataFrame =
-    coarseAssignedWithFree(q, k1, viaVecSum, viaNc)._1
-
-  private def coarseAssignedWithFree(q: DataFrame, k1: Int,
-      viaVecSum: Boolean = VecSumUpdates,
-      viaNc: Boolean = NcAssign): (DataFrame, () => Unit) =
-    if (k1 == 1) {
-      val c = Pin(q.withColumn("ccid", lit(0)))
-      (c, () => Pin.free(c))
-    } else {
+    * runs. A long-lived session calling q115 repeatedly would otherwise
+    * accumulate one quantized-corpus checkpoint per call until a GC
+    * cycle, so such a caller materializes the clusters and then calls
+    * [[graft.core.Pin.free]] on [[semanticClusters]]' result, which
+    * reaches this checkpoint through the result's plan. */
+  private def coarseAssigned(q: DataFrame, k1: Int): DataFrame =
+    if (k1 == 1) Pin(q.withColumn("ccid", lit(0)))
+    else {
       q.persist()
-      val c = Pin(assignedTo(q, lloydCentroids(q, k1, KmIters, viaVecSum, viaNc), viaNc)
+      val c = Pin(assignedTo(q, lloydCentroids(q, k1, KmIters))
         .select(col("vec_id"), col("qv"), col("cid").as("ccid")))
       q.unpersist(blocking = false)
-      (c, () => Pin.free(c))
+      c
     }
 
   /** Nearest FINE centroid within each row's own coarse cell, via ONE
@@ -461,11 +349,11 @@ object VectorQueries {
     * table — each row pays k2 distances, not k (the two-level scheme's
     * whole point), and the generated code is constant-size at any k.
     * The previous Column formulation (array_min over a CASE of literal
-    * struct arrays) emitted k1·k2 sq_dist sub-expressions in one
+    * struct arrays) emitted k1·k2 distance sub-expressions in one
     * projection — at gen30 (484 of them) it blew janino's method limits
     * and silently fell back to interpreted evaluation. Ties break
-    * (dist, fid) like [[assignedTo]] — the expression mirrors
-    * array_min's lexicographic struct-min exactly. */
+    * (dist, fid) like [[assignedTo]], which runs the same expression
+    * over a single cell. */
   private def assignedFine(coarse: DataFrame,
       cents: Map[Int, Seq[(Int, Array[Long])]]): DataFrame = {
     val table = cents.map { case (c, cs) => c -> cs.sortBy(_._1).toArray }
@@ -475,11 +363,7 @@ object VectorQueries {
         col("m.fid").as("fid"), col("m.dist").as("dist"))
   }
 
-  /** Per-cell fine Lloyd fit: seeds are each cell's k2 lowest vec_ids
-    * (cells smaller than k2 get one centroid per member), then `iters`
-    * integer Lloyd updates keyed by (ccid, fid). Centroids are at most
-    * k1·k2 ≈ k rows of dim numbers — the same bounded driver collect as
-    * the flat fit. */
+  /** Collected (ccid, fid, …) rows → fid-ascending centroids per cell. */
   private def toCellMap(rows: Array[org.apache.spark.sql.Row],
       cv: org.apache.spark.sql.Row => Array[Long]): Map[Int, Seq[(Int, Array[Long])]] =
     rows.map(r => (r.getInt(0), r.getInt(1), cv(r)))
@@ -502,39 +386,30 @@ object VectorQueries {
 
   /** ONE fine-level Lloyd update: assign every row to its nearest
     * in-cell fine centroid, then recompute centroids as the per-(cell,
-    * fid, component) integer mean — the posexplode fans each row into
-    * dim component rows, the first groupBy's map-side partial
-    * aggregation collapses them to ≤ cells·k2·dim partials per
-    * partition before the shuffle, and the driver collect is ≤ k rows. */
+    * fid) integer mean — one [[graft.functions.VecSum]] aggregate per
+    * (ccid, fid), whose map-side partial aggregation collapses the
+    * corpus to ≤ cells·k2 partials per partition before the shuffle;
+    * the driver collect is ≤ k rows. */
   private def fineUpdate(coarse: DataFrame,
-      cents: Map[Int, Seq[(Int, Array[Long])]],
-      viaVecSum: Boolean = VecSumUpdates): Map[Int, Seq[(Int, Array[Long])]] =
-    if (viaVecSum)
-      toCellMap(
-        assignedFine(coarse, cents)
-          .groupBy("ccid", "fid")
-          .agg(graft.functions.VecSum(col("qv")).as("sums"),
-            count(lit(1)).as("n"))
-          .collect(),
-        r => centsFromSums(r.getSeq[Long](2), r.getLong(3)))
-    else
-      toCellMap(
-        assignedFine(coarse, cents)
-          .select(col("ccid"), col("fid"), posexplode(col("qv")).as(Seq("i", "x")))
-          .groupBy("ccid", "fid", "i")
-          .agg(floor(sum(col("x").cast("long")).cast("double") / count(lit(1)))
-            .cast("long").as("comp"))
-          .groupBy("ccid", "fid")
-          .agg(transform(array_sort(collect_list(struct(col("i"), col("comp")))),
-            _.getField("comp")).as("cv"))
-          .collect(),
-        r => r.getSeq[Long](2).toArray)
+      cents: Map[Int, Seq[(Int, Array[Long])]]): Map[Int, Seq[(Int, Array[Long])]] =
+    toCellMap(
+      assignedFine(coarse, cents)
+        .groupBy("ccid", "fid")
+        .agg(graft.functions.VecSum(col("qv")).as("sums"),
+          count(lit(1)).as("n"))
+        .collect(),
+      r => centsFromSums(r.getSeq[Long](2), r.getLong(3)))
 
-  private def lloydFine(coarse: DataFrame, k2: Int, iters: Int,
-      viaVecSum: Boolean = VecSumUpdates): DataFrame = {
+  /** Per-cell fine Lloyd fit: seeds are each cell's k2 lowest vec_ids
+    * (cells smaller than k2 get one centroid per member), then `iters`
+    * integer Lloyd updates keyed by (ccid, fid). Centroids are at most
+    * k1·k2 ≈ k rows of dim numbers — the same bounded driver collect as
+    * the flat fit. Returns the final (vec_id, qv, ccid, fid, dist)
+    * assignment. */
+  private def lloydFine(coarse: DataFrame, k2: Int, iters: Int): DataFrame = {
     var cents: Map[Int, Seq[(Int, Array[Long])]] = fineSeeds(coarse, k2)
     for (_ <- 1 to iters) {
-      cents = fineUpdate(coarse, cents, viaVecSum)
+      cents = fineUpdate(coarse, cents)
     }
     assignedFine(coarse, cents)
   }
@@ -567,10 +442,10 @@ object VectorQueries {
     * total pair work is ~n · SemTargetCluster — the same linear-in-n
     * contract as q113's adaptive planes, reached through clustering
     * instead of hashing; CandVol measures the blocked pair volume
-    * directly. The Lloyd fit itself costs n·k distances per iteration
+    * directly. The Lloyd fit itself costs n·(k1+k2) distances per pass
     * (the documented cost of SemDeDup's clustering step — the paper
-    * spends it on GPUs); assignment is a narrow map (centroid
-    * literals, no join), and the only shuffles are the per-cluster
+    * spends it on GPUs); assignment is a narrow map (one centroid
+    * table, no join), and the only shuffles are the per-cluster
     * aggregates and the bounded within-cluster pair join.
     *
     * Output: (vec_id, cid, kept) for every vector — the corpus

@@ -409,12 +409,12 @@ object IncrementalDedup {
     * and the index under `indexDir` grows one partition per batch.
     * `compactEvery > 0` triggers compaction after every
     * `compactEvery`-th batch (upTo = the in-flight id, so only committed
-    * history is folded) — OUT-OF-BAND by default (VERDICT r8 #3: the
-    * fold runs on a side thread, deferred deletes run at the next batch
-    * start, so batch latency never pays the fold; set
-    * `compactAsync = false` for the in-band fold, which pauses its
-    * trigger batch but leaves the index fully compacted the moment the
-    * call returns). `keptOnlyHistory` selects the dedup-as-you-go index
+    * history is folded) — OUT-OF-BAND (VERDICT r8 #3: the fold runs on a
+    * side thread via [[compactIndexAsync]], deferred deletes run at the
+    * next batch start, so batch latency never pays the fold; a caller
+    * that needs the index fully compacted drains with
+    * [[awaitCompaction]], or folds in band with [[compactIndex]] outside
+    * the stream). `keptOnlyHistory` selects the dedup-as-you-go index
     * semantics (see [[processBatch]]). */
   def stream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, threshold: Double = 0.5, k: Int = 16,
@@ -422,8 +422,7 @@ object IncrementalDedup {
       textCol: String = "text",
       trigger: Trigger = Trigger.ProcessingTime(0L),
       compactEvery: Int = 0,
-      keptOnlyHistory: Boolean = false,
-      compactAsync: Boolean = true): StreamingQuery =
+      keptOnlyHistory: Boolean = false): StreamingQuery =
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -432,16 +431,14 @@ object IncrementalDedup {
         val spark = b.sparkSession
         // finish any committed out-of-band fold BEFORE this batch's
         // history scan plans its file listing (delete-vs-read safety)
-        if (compactEvery > 0 && compactAsync)
+        if (compactEvery > 0)
           deleteCompactedSources(spark, indexDir)
         val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
         processBatch(spark, b, id, indexDir, threshold, k,
           bands, n, idCol, textCol, keptOnlyHistory)
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-          if (compactAsync) compactIndexAsync(spark, indexDir, id)
-          else compactIndex(spark, indexDir, id)
-        }
+        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
+          compactIndexAsync(spark, indexDir, id)
         // Free this batch's pinned checkpoint blocks deterministically
         // (ADVICE r8): processBatch's intermediates (cands/pairs and
         // keptOnlyHistory's out) are otherwise reclaimed only when the

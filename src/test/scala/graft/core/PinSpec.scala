@@ -50,13 +50,15 @@ class PinSpec extends SparkSpec {
     Pin.free(empty)
   }
 
+  /** `body`'s result and the ids of the RDDs it left persistent. */
+  private def pinnedIds(body: => DataFrame): (DataFrame, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = body
+    (df, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   test("Pin.free leaves none of its RDDs persistent, and so does the tools' sweep") {
     val sc = spark.sparkContext
-    def pinnedIds(body: => DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val df = body
-      (df, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
     val (freed, ids) = pinnedIds(Pin(smallCutOfBigJoin()))
     assert(ids.nonEmpty)
     Pin.free(freed)
@@ -68,5 +70,23 @@ class PinSpec extends SparkSpec {
     sc.getPersistentRDDs.filter { case (id, _) => sweptIds(id) }
       .values.foreach(_.unpersist(true))
     assert(sweptIds.forall(id => StorageBridge.storedBytes(id) == 0))
+  }
+
+  test("Pin.free on a join of two pins frees both RDDs and leaves a third, unrelated pin resident") {
+    val sc = spark.sparkContext
+    val (a, aIds) = pinnedIds(Pin(spark.range(100).select(col("id").as("k"))))
+    val (b, bIds) = pinnedIds(Pin(spark.range(50)
+      .select(col("id").as("k"), (col("id") * 2).as("v"))))
+    val (other, otherIds) = pinnedIds(Pin(spark.range(10).toDF()))
+    assert(aIds.nonEmpty && bIds.nonEmpty && otherIds.nonEmpty)
+    val joined = a.join(b, Seq("k"))
+    assert(joined.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      (0L until 50L).map(k => (k, 2 * k)))
+    Pin.free(joined)
+    val live = sc.getPersistentRDDs.keySet
+    assert((aIds ++ bIds).intersect(live).isEmpty, "a pin the join reads is still persistent")
+    assert(otherIds.subsetOf(live), "a pin the join does not read was freed")
+    assert(other.collect().map(_.getLong(0)).toSeq == (0L until 10L))
+    Pin.free(other)
   }
 }

@@ -7,6 +7,17 @@ import graft.functions.{TextFunctions => T}
 class TextFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The interpreted higher-order-function shingle form, the reference
+    * [[graft.functions.ShinglesExpr]] is tested against. On null text the
+    * `when` predicate is null, so it falls to the otherwise branch and
+    * returns an empty array, as ShinglesExpr does. */
+  private def shinglesViaHof(text: org.apache.spark.sql.Column, n: Int) = {
+    val t = T.tokens(text)
+    when(size(t) >= n,
+      transform(sequence(lit(0), size(t) - n), i => concat_ws(" ", slice(t, i + lit(1), lit(n)))))
+      .otherwise(array().cast("array<string>"))
+  }
+
   test("shingles produces overlapping n-grams and handles short docs") {
     val df = Seq("w1 w2 w3 w4", "a b", "solo").toDF("text")
     val got = df.select(T.shingles(col("text"), 3)).as[Seq[String]].collect()
@@ -29,7 +40,7 @@ class TextFunctionsSpec extends SparkSpec {
     val df = texts.toDF("text")
     for (n <- 1 to 4) {
       val got = df.select(
-        T.shinglesViaHof(col("text"), n).as("hof"),
+        shinglesViaHof(col("text"), n).as("hof"),
         graft.functions.ShinglesFn.shinglesVec(col("text"), n).as("expr"))
         .as[(Seq[String], Seq[String])].collect()
       texts.zip(got).foreach { case (t, (hof, expr)) =>
@@ -38,7 +49,7 @@ class TextFunctionsSpec extends SparkSpec {
     }
     // and the dispatching default agrees with the HOF form too
     val viaDefault = df.select(T.shingles(col("text"), 3)).as[Seq[String]].collect()
-    val viaHof = df.select(T.shinglesViaHof(col("text"), 3)).as[Seq[String]].collect()
+    val viaHof = df.select(shinglesViaHof(col("text"), 3)).as[Seq[String]].collect()
     assert(viaDefault.toSeq == viaHof.toSeq)
   }
 

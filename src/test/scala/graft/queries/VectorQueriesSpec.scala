@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.core.Pin
+import graft.functions.{VectorFunctions => V}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-validation of the deterministic integer k-means against an
@@ -12,8 +15,10 @@ class VectorQueriesSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   private def quantized: Map[Long, Array[Long]] =
-    graft.core.Tables.embeddings(spark, d)
-      .select(col("vec_id"), col("embedding"))
+    quantize(graft.core.Tables.embeddings(spark, d))
+
+  private def quantize(e: DataFrame): Map[Long, Array[Long]] =
+    e.select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect()
       .map { case (id, v) =>
         val sc = math.max(v.map(x => math.abs(x.toDouble)).max, 1e-30) / 127.0
@@ -152,24 +157,17 @@ class VectorQueriesSpec extends SparkSpec {
   }
 
   test("VecSum and posexplode centroid updates produce identical clusters") {
-    // the two update strategies must be BIT-identical (floorDiv(sum, n)
-    // vs floor(sum/count as double) — VecSum's scaladoc argues it, this
-    // asserts it end-to-end), including on clusters whose component sums
-    // are negative: the fixture embeddings carry negative components, and
+    // the engine's VecSum updates (floorDiv(sum, n)) must match the
+    // in-memory twin's posexplode-style per-component floor(sum/count
+    // as double) BIT for bit — VecSum's scaladoc argues it, this asserts
+    // it end-to-end — including on clusters whose component sums are
+    // negative: the fixture embeddings carry negative components, and
     // the singleton check below forces an explicit negative-sum division
     val e = graft.core.Tables.embeddings(spark, d)
-    val base = VectorQueries.semanticClusters(e,
-        viaVecSum = false, viaNc = false, viaQuantExpr = false)
+    val got = VectorQueries.semanticClusters(e)
       .as[(Long, Int)].collect().sorted.toSeq
-    val agg = VectorQueries.semanticClusters(e, viaVecSum = true)
-      .as[(Long, Int)].collect().sorted.toSeq
-    assert(base == agg, "update strategies diverged")
-    // all three round-12 strategies at once (the q115_clusters_fast arm):
-    // VecSum updates + NearestCentroidExpr assign + codegen quantize
-    val fast = VectorQueries.semanticClusters(e,
-        viaVecSum = true, viaNc = true, viaQuantExpr = true)
-      .as[(Long, Int)].collect().sorted.toSeq
-    assert(base == fast, "fast-path strategies diverged")
+    assert(got == twoLevelClusters(quantized).toSeq.sorted,
+      "VecSum updates diverged from the in-memory Lloyd twin")
     // floorDiv-vs-truncation corner: a group with a negative odd sum
     // (sum = -3, n = 2) must floor to -2, not truncate to -1
     val neg = Seq((0L, Seq(-1, 3)), (1L, Seq(-2, 3))).toDF("id", "qv")
@@ -181,33 +179,54 @@ class VectorQueriesSpec extends SparkSpec {
       "floor semantics on negative sums")
   }
 
-  test("semanticClustersWithFree: same assignment, and free() releases the checkpoint blocks") {
+  test("Pin.free on semanticClusters' result releases the checkpoint blocks") {
     val e = graft.core.Tables.embeddings(spark, d)
-    val base = VectorQueries.semanticClusters(e)
-      .as[(Long, Int)].collect().sorted.toSeq
     // start from a clean slate so the block count isolates this call
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    val (df, free) = VectorQueries.semanticClustersWithFree(e)
+    val df = VectorQueries.semanticClusters(e)
     val got = df.as[(Long, Int)].collect().sorted.toSeq
-    assert(got == base, "WithFree entry must return the identical assignment")
+    assert(got == twoLevelClusters(quantized).toSeq.sorted)
     // the coarse assignment's localCheckpoint is resident after execution
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "expected a resident checkpoint RDD before free()")
-    free()
+      "expected a resident checkpoint RDD before Pin.free")
+    Pin.free(df)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "free() must release the checkpoint blocks (Dataset.unpersist is a " +
-        "no-op on checkpointed frames — Pin.free is the real free)")
+      "Pin.free on the result must release the checkpoint blocks it reads " +
+        "(Dataset.unpersist is a no-op on checkpointed frames)")
   }
 
   test("codegen QuantizeExpr equals the aggregate+transform Column form") {
     val e = graft.core.Tables.embeddings(spark, d)
-    val cols = VectorQueries.quantizedFrame(e, viaExpr = false)
+    val cols = e.select(col("vec_id"),
+        V.quantize(col("embedding"), V.quantScale(col("embedding"))).as("qv"))
       .as[(Long, Seq[Int])].collect().sortBy(_._1).toSeq
-    val expr = VectorQueries.quantizedFrame(e, viaExpr = true)
+    val expr = VectorQueries.quantizedFrame(e)
       .as[(Long, Seq[Int])].collect().sortBy(_._1).toSeq
-    assert(cols == expr, "quantization strategies diverged")
+    assert(cols == expr, "quantization forms diverged")
     assert(cols.nonEmpty && cols.exists(_._2.exists(_ < 0)),
       "fixture must exercise negative components")
+  }
+
+  test("k1 > 1 coarse branch equals the in-memory two-level Lloyd twin") {
+    // the fixtures hold 500 vectors (k = 16, k1 = 1); 20,001 vectors give
+    // k = 17, so the coarse fit runs with k1 = 5 cells of k2 = 4
+    val n = 20001
+    val rnd = new scala.util.Random(115)
+    val rows = (0 until n).map(i =>
+      (i.toLong, Seq.fill(64)((rnd.nextGaussian() + (i % 3) - 1).toFloat)))
+    val dir = java.nio.file.Files.createTempDirectory("semclusters").toString
+    try {
+      rows.toDF("vec_id", "embedding").repartition(4)
+        .write.parquet(s"$dir/embeddings")
+      val e = spark.read.parquet(s"$dir/embeddings")
+      assert(VectorQueries.semK1For(VectorQueries.semKFor(n)) > 1)
+      val clusters = VectorQueries.semanticClusters(e)
+      val got = clusters.as[(Long, Int)].collect().sorted.toSeq
+      Pin.free(clusters)
+      val want = twoLevelClusters(quantize(e)).toSeq.sorted
+      assert(got == want, "two-level clusters diverged from the in-memory twin")
+      assert(got.map(_._2).distinct.size > 5, "fine level must split the coarse cells")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("q99 is invariant to shuffle partitioning (the determinism claim)") {

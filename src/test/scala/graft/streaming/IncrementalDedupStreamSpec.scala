@@ -59,9 +59,9 @@ class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper 
     val mem = MemoryStream[Doc]
     // compactEvery = 2: batch 2's foreachBatch triggers the fold of
     // batches 0-1 into generation -2 through the PRODUCTION wiring —
-    // out-of-band by default, so the assert drains via awaitCompaction
-    // (reads THROUGH a generation are covered by the dedicated
-    // compaction test below)
+    // the stream always folds out of band, so the assert drains via
+    // awaitCompaction (reads THROUGH a generation are covered by the
+    // dedicated compaction test below)
     val q = IncrementalDedup.stream(mem.toDF(), indexDir, outDir, ckpt,
       threshold = 0.5, compactEvery = 2)
     try {
