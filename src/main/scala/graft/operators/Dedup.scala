@@ -9,7 +9,8 @@ import graft.functions.{MinHashFn, SimHash, SimHashFn, TextFunctions => T,
 
 /** Document / embedding deduplication operators for the training-data
   * pipeline: exact (hash-groupBy), n-gram Jaccard (shingle join), MinHash+
-  * LSH (banded signatures), SimHash (Hamming chunks), embedding-cosine.
+  * LSH (banded signatures), SimHash (Hamming block tables),
+  * embedding-cosine.
   *
   * Scale design:
   *  - exact dedup is one hash-partitioned groupBy on a 128-bit fingerprint
@@ -20,8 +21,10 @@ import graft.functions.{MinHashFn, SimHash, SimHashFn, TextFunctions => T,
   *    would otherwise quadratically explode the candidate join;
   *  - MinHash/LSH replaces the all-pairs comparison with b bucket joins —
   *    the only formulation that survives 10^9 documents;
-  *  - SimHash pairs use pigeonhole chunking (dist<=k needs one equal chunk
-  *    among k+1) so candidates come from equality joins, not cross joins.
+  *  - SimHash pairs key Manku's block tables (dist<=k leaves some table's
+  *    blocks untouched on both sides; the (k+1)-chunk pigeonhole is the
+  *    one-block case) so candidates come from equality joins, not cross
+  *    joins.
   */
 object Dedup {
 
@@ -188,22 +191,18 @@ object Dedup {
   /** LSH band keys of [[minhashLsh]]'s candidate join — (id, sig, band,
     * band_hash), one row per (doc, band). Factored out so the
     * candidate-volume diagnostic ([[graft.tools.CandVol]]) measures the
-    * EXACT join keys the operator shuffles, not a reimplementation.
-    *
-    * `pinSigs`: one Pin of the (id, sig) frame — the signature (corpus
-    * scan + shingling + k rehashes per shingle, all per row) is
-    * otherwise re-derived by every consumer of the banded frame
-    * ([[minhashLsh]] reads it on both join sides and in the singleton
-    * prune, so it pins; single-consumer callers do not). Narrow:
-    * ~8(k+1) bytes/doc. */
+    * EXACT join keys the operator shuffles, not a reimplementation. */
   private[graft] def minhashBandKeys(docs: DataFrame, k: Int = 16,
       bands: Int = 4, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      pinSigs: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    bandSigs(minhashSignatures(docs, k, n, idCol, textCol), k, bands)
+
+  /** Band an (id, sig) signature frame: `bands` slices of k/bands rows,
+    * each hashed to one band key. `sigs` is by-name so the band check
+    * runs before the caller's frame is built (or pinned). */
+  private def bandSigs(sigs: => DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    val sigs0 = minhashSignatures(docs, k, n, idCol, textCol)
-    val sigs = if (pinSigs) Pin(sigs0) else sigs0
     sigs.select(col("id"), col("sig"),
       posexplode(array((0 until bands).map { b =>
         xxhash64(slice(col("sig"), b * rows + 1, rows))
@@ -214,16 +213,20 @@ object Dedup {
     * groups, bucket-join on (band, bandHash), estimate similarity as the
     * fraction of equal signature components.
     *
-    * The signature frame is pinned ([[minhashBandKeys]]' `pinSigs`) and
-    * singleton (band, band_hash) buckets are pruned before the join
+    * The signature frame is pinned before banding: the signature (corpus
+    * scan + shingling + k rehashes per shingle, all per row) is otherwise
+    * re-derived by every consumer of the banded frame — both join sides
+    * and the singleton prune. Narrow: ~8(k+1) bytes/doc. Singleton
+    * (band, band_hash) buckets are pruned before the join
     * ([[CoOccur.dropSingletonKeys]]; the band join carries BOTH 8k-byte
     * signatures per row). */
   def minhashLsh(docs: DataFrame, k: Int = 16, bands: Int = 4, n: Int = 3,
       minEstimate: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val bandKeys = Seq("band", "band_hash")
-    val banded = CoOccur.dropSingletonKeys(minhashBandKeys(docs, k, bands, n,
-      idCol, textCol, pinSigs = true), bandKeys)
+    val banded = CoOccur.dropSingletonKeys(
+      bandSigs(Pin(minhashSignatures(docs, k, n, idCol, textCol)), k, bands),
+      bandKeys)
     val cands = CoOccur.bucketPairs(banded, bandKeys, "id", Seq("sig"))
     // estimate BEFORE dedup (same reasoning as simhashPairs): the
     // signature comparison is per-row arithmetic on columns the join
@@ -375,29 +378,29 @@ object Dedup {
     // keeps the verify pass candidate-bounded (shingling the WHOLE
     // corpus registry per ingest would be a full-corpus rescan, the
     // thing this operator exists to avoid).
-    val neededHist = historyDocs.join(
-      cands.filter(col("src") === "hist").select(col("id_a").as(idCol)),
-      Seq(idCol), "left_semi")
-    val verified = verifiedJaccard(
-      neededHist.unionByName(batch),
-      cands.select("id_a", "id_b"), threshold, n, idCol, textCol)
     // ids are disjoint across the two frames (operator contract), so a
     // verified pair re-joins to exactly one tagged candidate row; the
-    // pin stops the two blame aggregates below from each re-running the
-    // whole verify subtree (its output is just the surviving pairs — the
-    // smallest frame in the operator)
-    val pairs = Pin(verified.join(cands, Seq("id_a", "id_b")))
-    // cands and the verifier's pinned intermediates fed only the (eager)
-    // pairs checkpoint — free their blocks now instead of waiting for
-    // the ContextCleaner (ADVICE r8: a long-running driver otherwise
-    // accumulates them per micro-batch; note Dataset.unpersist would be
-    // a silent no-op on a checkpoint — see Pin.free). `verified` reads
-    // only the verifier's two pins; the docs handed to it (which read
-    // `cands`) sit behind their cuts, so nothing else is freed.
-    // pairs itself backs the returned frame; the streaming wiring sweeps
-    // it after the verdict write.
-    Pin.free(cands)
-    Pin.free(verified)
+    // `pairs` pin stops the two blame aggregates below from each
+    // re-running the whole verify subtree (its output is just the
+    // surviving pairs — the smallest frame in the operator).
+    // cands and the verifier's pinned intermediates feed only the
+    // (eager) pairs checkpoint — their blocks are freed as soon as it is
+    // built or has failed, instead of waiting for the ContextCleaner
+    // (ADVICE r8: a long-running driver otherwise accumulates them per
+    // micro-batch). `verified` reads only the verifier's two pins; the
+    // docs handed to it (which read `cands`) sit behind their cuts, so
+    // nothing else is freed. pairs itself backs the returned frame; the
+    // streaming wiring frees it after the verdict write.
+    val pairs = try {
+      val neededHist = historyDocs.join(
+        cands.filter(col("src") === "hist").select(col("id_a").as(idCol)),
+        Seq(idCol), "left_semi")
+      val verified = verifiedJaccard(
+        neededHist.unionByName(batch),
+        cands.select("id_a", "id_b"), threshold, n, idCol, textCol)
+      try Pin(verified.join(cands, Seq("id_a", "id_b")))
+      finally Pin.free(verified)
+    } finally Pin.free(cands)
     val histBlame = pairs.filter(col("src") === "hist")
       .groupBy(col("id_b").as(idCol)).agg(min("id_a").as("hist_dup"))
     val batchBlame = pairs.filter(col("src") === "batch")
@@ -438,7 +441,8 @@ object Dedup {
       col("simhash").isNotNull)
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist. Candidates
-    * via (k+1)-chunk pigeonhole equality join, verified with bit_count.
+    * via the (k+1)-chunk pigeonhole equality join — [[hammingPairs]]'
+    * one-block combination tables — verified with bit_count.
     *
     * Scaling contract (measured, BENCH_SCALE_r04): chunk width
     * w = 64/(maxDist+1) bits caps the bucket count at 2^w, so chance
@@ -461,12 +465,13 @@ object Dedup {
     * small-corpus dial.
     *
     * Two further scale decisions, both invisible in the (exact) output:
-    *  - chunk widths are BALANCED (width differs by at most one bit): the
-    *    pigeonhole guarantee holds for any (k+1)-way bit partition, and a
-    *    narrow chunk is a weak pruner — the old floor-width split gave
-    *    twelve 4-bit chunks whose 16 buckets each held ~1/16 of the
-    *    corpus (worse under simhash bit bias: measured buckets of 2700+
-    *    docs at sf0.1, ~40M chance-collision pairs).
+    *  - chunk widths are BALANCED (width differs by at most one bit,
+    *    [[simhashBlockBounds]]): the pigeonhole guarantee holds for any
+    *    (k+1)-way bit partition, and a narrow chunk is a weak pruner —
+    *    the old floor-width split gave twelve 4-bit chunks whose 16
+    *    buckets each held ~1/16 of the corpus (worse under simhash bit
+    *    bias: measured buckets of 2700+ docs at sf0.1, ~40M
+    *    chance-collision pairs).
     *  - the bucket self-join is SALTED ([[CoOccur.bucketPairs]]'
     *    `salt`): one hot bucket's pairs spread over `saltBuckets`
     *    tasks.
@@ -476,7 +481,7 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxDist: Int = 8,
       idCol: String = "doc_id", textCol: String = "text",
       saltBuckets: Int = 16, n: Int = 3): DataFrame =
-    simhashChunkJoin(Pin(simhashDocs(docs, idCol, textCol, n)),
+    hammingPairs(Pin(simhashDocs(docs, idCol, textCol, n)),
       maxDist, SimHash.Bits, saltBuckets)
 
   /** Signature width of the [[simhashDocsPortable]] family: 60 bits (15
@@ -508,15 +513,16 @@ object Dedup {
     * looser corpora through [[minhashLsh]] + [[verifiedJaccard]].
     * Portable signatures make the whole operator — signature bits,
     * chunking, candidate join, Hamming filter — reproducible in SQL
-    * (declared as q114 with a full DuckDB mirror). The single-chunk
-    * keys still admit ~n²/2^15 chance agreements per table (measured
-    * exponent 1.95-1.99 over g1→g30); corpora past ~10^6 docs should
-    * use [[simhashPairsCombinatorial]] (q116), whose combination keys
-    * hold the volume linear at the same exact output. */
+    * (declared as q114 with a full DuckDB mirror). The chunks are the
+    * one-block tables of [[hammingPairs]]; a one-block key still admits
+    * ~n²/2^15 chance agreements per table (measured exponent 1.95-1.99
+    * over g1→g30); corpora past ~10^6 docs should use
+    * [[simhashPairsCombinatorial]] (q116), whose (nBlocks − maxDist)-block
+    * keys hold the volume linear at the same exact output. */
   def simhashPairsPortable(docs: DataFrame, maxDist: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
       saltBuckets: Int = 16, n: Int = 3): DataFrame =
-    simhashChunkJoin(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
+    hammingPairs(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
       maxDist, PortableSimHashBits, saltBuckets)
 
   /** SimHash candidates via Manku's BLOCK-COMBINATION tables — **the
@@ -585,17 +591,10 @@ object Dedup {
         maxDist, PortableSimHashBits, nBlocks),
       "combo_idx", "combo_key", maxDist, saltBuckets, pruneSingletons = true)
 
-  /** All C(nBlocks, chooseK) block subsets in lexicographic order — the
-    * table index of [[simhashComboKeys]]. Factored (and kept ordered) so
-    * the q116 oracle generates the SAME tables from the same
-    * enumeration. */
-  private[graft] def simhashCombos(nBlocks: Int, chooseK: Int): Seq[Seq[Int]] =
-    (0 until nBlocks).combinations(chooseK).map(_.toSeq).toSeq
-
   /** Balanced block boundaries of the low `bits` signature bits split
     * `nBlocks` ways: block b covers [offset(b), offset(b)+width(b)) with
     * widths differing by at most one (first `bits % nBlocks` blocks get
-    * the extra bit) — the same balancing rule as [[simhashChunkKeys]]. */
+    * the extra bit). */
   private[graft] def simhashBlockBounds(bits: Int, nBlocks: Int): Seq[(Int, Int)] = {
     val base = bits / nBlocks
     val extra = bits % nBlocks
@@ -603,30 +602,52 @@ object Dedup {
       base + (if (b < extra) 1 else 0)))
   }
 
-  /** Combination-table keys of [[simhashPairsCombinatorial]] — (id,
-    * simhash, combo_idx, combo_key): for each of the C(nBlocks,
-    * nBlocks−maxDist) block subsets, the chosen blocks' bits packed
-    * consecutively into one Long. Factored out so
-    * [[graft.tools.CandVol]] measures the exact join keys shuffled. */
-  private[graft] def simhashComboKeys(sims: DataFrame, maxDist: Int,
-      bits: Int, nBlocks: Int): DataFrame = {
+  /** The combination tables as (offset, width) runs: one run per chosen
+    * block of each C(nBlocks, nBlocks − maxDist) block subset, subsets in
+    * lexicographic order (the table index). `nBlocks = maxDist + 1`
+    * gives the (maxDist+1)-chunk pigeonhole: one single-block table per
+    * chunk. Shared by [[simhashComboKeys]] and the q116/q123 oracle SQL,
+    * so both build the SAME tables. */
+  private[graft] def simhashComboTables(bits: Int, nBlocks: Int,
+      maxDist: Int): Seq[Seq[(Int, Int)]] = {
     require(nBlocks > maxDist,
       s"need nBlocks > maxDist for the pigeonhole (got $nBlocks <= $maxDist)")
     require(nBlocks <= bits, s"nBlocks $nBlocks exceeds signature bits $bits")
     val bounds = simhashBlockBounds(bits, nBlocks)
-    val combos = simhashCombos(nBlocks, nBlocks - maxDist)
-    val keyWidth = bounds.map(_._2).max * (nBlocks - maxDist)
-    require(keyWidth <= 62, s"packed combo key would need $keyWidth bits")
-    val keyExprs = combos.map { bs =>
-      bs.foldLeft((lit(0L), 0)) { case ((acc, shift), b) =>
-        val (off, width) = bounds(b)
-        val block = shiftrightunsigned(col("simhash"), off)
-          .bitwiseAND(lit((1L << width) - 1))
-        (acc.bitwiseOR(shiftleft(block, shift)), shift + width)
+    (0 until nBlocks).combinations(nBlocks - maxDist).map(_.map(bounds)).toSeq
+  }
+
+  /** Combination-table keys of [[simhashPairsCombinatorial]] and
+    * [[hammingPairs]] — (id, simhash, combo_idx, combo_key): for each
+    * table of [[simhashComboTables]], the chosen blocks' bits packed
+    * consecutively into one Long. Factored out so
+    * [[graft.tools.CandVol]] measures the exact join keys shuffled. */
+  private[graft] def simhashComboKeys(sims: DataFrame, maxDist: Int,
+      bits: Int, nBlocks: Int): DataFrame =
+    tableKeys(sims, simhashComboTables(bits, nBlocks, maxDist),
+      "combo_idx", "combo_key")
+
+  /** (id, simhash, `idxCol`, `keyCol`), one row per (doc, table): each
+    * table's (offset, width) runs of the signature packed consecutively
+    * into one Long, starting from the first run, so a one-run table's
+    * key is the bare masked shift. The mask is `-1L >>> (64 − w)`:
+    * `(1L << 64) − 1` is 0, because the JVM takes a long shift mod 64,
+    * and a 64-bit run (maxDist = 0 at 64 bits) must keep every bit. */
+  private def tableKeys(sims: DataFrame, tables: Seq[Seq[(Int, Int)]],
+      idxCol: String, keyCol: String): DataFrame = {
+    def run(off: Int, w: Int): Column =
+      shiftrightunsigned(col("simhash"), off).bitwiseAND(lit(-1L >>> (64 - w)))
+    val keyExprs = tables.map { runs =>
+      val width = runs.map(_._2).sum
+      require(runs.nonEmpty && runs.forall(_._2 > 0) && width <= 64,
+        s"packed table key would need $width bits in runs $runs")
+      val (off0, w0) = runs.head
+      runs.tail.foldLeft((run(off0, w0), w0)) { case ((acc, shift), (off, w)) =>
+        (acc.bitwiseOR(shiftleft(run(off, w), shift)), shift + w)
       }._1
     }
     sims.select(col("id"), col("simhash"),
-      posexplode(array(keyExprs: _*)).as(Seq("combo_idx", "combo_key")))
+      posexplode(array(keyExprs: _*)).as(Seq(idxCol, keyCol)))
   }
 
   /** SimHash candidates via Manku's RECURSIVE permuted-table scheme
@@ -713,71 +734,38 @@ object Dedup {
     require(nOuter > maxDist && nInner > maxDist,
       s"double pigeonhole needs nOuter and nInner > maxDist " +
         s"(got $nOuter/$nInner vs $maxDist)")
-    val tables = simhashPermutedSegments(bits, nOuter, nInner)
-    val keyWidth = tables.map(_.map(_._2).sum).max
-    require(keyWidth <= 62, s"packed table key would need $keyWidth bits")
-    val keyExprs = tables.map { segs =>
-      segs.foldLeft((lit(0L), 0)) { case ((acc, shift), (off, w)) =>
-        val run = shiftrightunsigned(col("simhash"), off)
-          .bitwiseAND(lit((1L << w) - 1))
-        (acc.bitwiseOR(shiftleft(run, shift)), shift + w)
-      }._1
-    }
-    sims.select(col("id"), col("simhash"),
-      posexplode(array(keyExprs: _*)).as(Seq("tbl_idx", "tbl_key")))
+    tableKeys(sims, simhashPermutedSegments(bits, nOuter, nInner),
+      "tbl_idx", "tbl_key")
   }
-
-  /** Pigeonhole chunk keys of the simhash candidate join — (id, simhash,
-    * chunk_idx, chunk), the balanced (maxDist+1)-way bit partition of the
-    * low `bits` signature bits. Factored out so [[graft.tools.CandVol]]
-    * measures the exact join keys [[simhashChunkJoin]] shuffles. */
-  private[graft] def simhashChunkKeys(sims: DataFrame, maxDist: Int,
-      bits: Int): DataFrame = {
-    val nChunks = maxDist + 1
-    val base = bits / nChunks
-    val extra = bits % nChunks // first `extra` chunks get +1 bit
-    def off(c: Int): Int = c * base + math.min(c, extra)
-    sims.select(col("id"), col("simhash"),
-      posexplode(array((0 until nChunks).map { c =>
-        val width = base + (if (c < extra) 1 else 0)
-        shiftrightunsigned(col("simhash"), off(c))
-          .bitwiseAND(lit((1L << width) - 1))
-      }: _*)).as(Seq("chunk_idx", "chunk")))
-  }
-
-  /** Shared pigeonhole chunk join over (id, simhash) signatures: balanced
-    * (k+1)-chunk split of the low `bits` bits, salted bucket self-join,
-    * Hamming verify before distinct. See [[simhashPairs]] for the scale
-    * rationale of each step. */
-  private def simhashChunkJoin(sims: DataFrame, maxDist: Int, bits: Int,
-      saltBuckets: Int): DataFrame =
-    simhashKeyedJoin(simhashChunkKeys(sims, maxDist, bits),
-      "chunk_idx", "chunk", maxDist, saltBuckets)
 
   /** Hamming near-dup pairs over any PRECOMPUTED (id, simhash) signature
-    * frame — the pigeonhole chunk-table machinery behind
-    * [[simhashPairs]] exposed for signatures that don't come from text
-    * shingles (e.g. [[Multimodal.imageNearDup]]'s perceptual dHash).
-    * Same contract: exactly the Hamming ≤ maxDist pairs, salted against
-    * hot buckets. */
+    * frame through the (maxDist+1)-chunk pigeonhole: the one-block
+    * combination tables ([[simhashComboKeys]] with nBlocks = maxDist + 1),
+    * balanced chunk widths, salted self-join, Hamming verify. The
+    * machinery behind [[simhashPairs]] and [[simhashPairsPortable]],
+    * exposed for signatures that don't come from text shingles (e.g.
+    * [[Multimodal.imageNearDup]]'s perceptual dHash). Same contract:
+    * exactly the Hamming ≤ maxDist pairs, salted against hot buckets.
+    * maxDist = 0 keys on the whole signature (one `bits`-wide chunk). */
   def hammingPairs(sims: DataFrame, maxDist: Int, bits: Int = 64,
       saltBuckets: Int = 16): DataFrame =
-    simhashChunkJoin(sims, maxDist, bits, saltBuckets)
+    simhashKeyedJoin(simhashComboKeys(sims, maxDist, bits, maxDist + 1),
+      "combo_idx", "combo_key", maxDist, saltBuckets)
 
   /** Shared salted self-join + Hamming verify over any (id, simhash,
-    * table-idx, key) candidate frame — the join body of both the chunk
-    * ([[simhashChunkJoin]]) and block-combination
-    * ([[simhashPairsCombinatorial]]) table schemes: the
-    * [[CoOccur.bucketPairs]] self-join on (table, key), salted
-    * `saltBuckets` ways.
+    * table-idx, key) candidate frame — the join body of every simhash
+    * table scheme (the one-block chunk tables of [[hammingPairs]], the
+    * combination tables of [[simhashPairsCombinatorial]], the permuted
+    * tables of [[simhashPairsPermuted]]): the [[CoOccur.bucketPairs]]
+    * self-join on (table, key), salted `saltBuckets` ways.
     *
     * `pruneSingletons` drops (table, key) buckets with fewer than 2 rows
     * first ([[CoOccur.dropSingletonKeys]]; count >= 2 iff >= 2 distinct
     * docs, since each doc emits exactly one row per table index). With
     * 27-36-bit keys almost every bucket is a singleton at any real
     * corpus size, and side B of the salted join replicates every row
-    * saltBuckets times. The table-key entries prune; the chunk join
-    * does not. */
+    * saltBuckets times. The multi-block entries prune; [[hammingPairs]]'
+    * chunk tables do not. */
   private def simhashKeyedJoin(keys0: DataFrame, idxCol: String,
       keyCol: String, maxDist: Int, saltBuckets: Int,
       pruneSingletons: Boolean = false): DataFrame = {

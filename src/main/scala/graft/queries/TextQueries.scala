@@ -131,7 +131,10 @@ object TextQueries {
     * join, and the Hamming filter bit-for-bit — the hash match proves
     * the ENGINE's candidate machinery, not just recall on a lucky
     * corpus (recall at Hamming 3 is the documented trade: only the
-    * tightest near-dups qualify). Honest-wall note: with the noop-sink
+    * tightest near-dups qualify). The engine keys its chunks as the
+    * one-block combination tables ([[Dedup.hammingPairs]]); the oracle's
+    * chunk SQL is written by hand, an independent reference for that
+    * shared key builder. Honest-wall note: with the noop-sink
     * harness the ratio-3 WALL exponent reads ~1.65, agreeing with the
     * volume (the old count()-based harness under-measured this query);
     * q116 reads 0.87 on the same legs. */
@@ -160,11 +163,13 @@ object TextQueries {
     * 15-bit chunk tables each admit ~n²/2^15 chance collisions (CandVol
     * reads exponent ~2.0 on that term), while a 30-bit combination key
     * drops the constant 32768× at a 5× key fan-out (Manku et al. WWW'07
-    * §3.1.1). Same exact output as q114 — both find exactly the
+    * §3.1.1). q114's chunks are the one-block case of the same key
+    * builder ([[Dedup.simhashComboKeys]] with nBlocks = maxDist + 1).
+    * Same exact output as q114 — both find exactly the
     * Hamming≤3 pairs (pigeonhole, pinned in DedupSpec), then verify with
     * exact Jaccard — but the oracle mirrors THIS machinery: DuckDB
     * rebuilds the 20 combination tables from the same block enumeration
-    * ([[Dedup.simhashCombos]] generates both sides), joins on
+    * ([[Dedup.simhashComboTables]] generates both sides), joins on
     * (table, packed-key), Hamming-filters, and verifies. */
   def q116SimhashCombos(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -188,8 +193,8 @@ object TextQueries {
     * blocks, so some 4-subset is clean on both sides; DedupSpec's
     * scheme-equivalence test covers this form), and the oracle mirrors
     * THIS machinery: the 35 keyed SELECTs are generated from the same
-    * [[Dedup.simhashCombos]]/[[Dedup.simhashBlockBounds]] enumeration
-    * the operator packs. Volume at depth MEASURED
+    * [[Dedup.simhashComboTables]] enumeration the operator packs.
+    * Volume at depth MEASURED
     * (CANDVOL_r13_simonly): g300→g1000 exponent **1.017** where q116
     * reads 1.204 in the same artifact — the extra key width restores
     * near-linearity at the seventh decade. Absolute volumes: 32.0M at
@@ -858,15 +863,6 @@ object TextQueries {
       |WHERE round(n_common / (sa.n + sb.n - n_common), 4) >= 0.5
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** q114's oracle: a FULL mirror of the portable Manku-width simhash —
-    * DuckDB recomputes each 60-bit signature from the same md5 feature
-    * hashes (sign of the per-bit ±1 sums), splits it into the same four
-    * 15-bit chunks, joins chunks for candidates, applies the Hamming<=3
-    * filter, then verifies with exact Jaccard — so the hash compare
-    * proves the candidate machinery itself, independent of recall.
-    * (By pigeonhole the chunk join finds exactly the Hamming<=3 pairs,
-    * but the oracle mirrors the mechanism rather than assuming the
-    * theorem.) */
   /** Shared oracle CTE chain rebuilding the portable 60-bit simhash
     * signatures (docs → distinct shingles → md5-derived 60-bit feature
     * hashes → per-bit ±1 sums → packed signature) — the common head of
@@ -901,6 +897,16 @@ object TextQueries {
        |WHERE round(n_common / (sa.n + sb.n - n_common), 4) >= 0.5
        |ORDER BY id_a, id_b""".stripMargin
 
+  /** q114's oracle: a FULL mirror of the portable Manku-width simhash —
+    * DuckDB recomputes each 60-bit signature from the same md5 feature
+    * hashes (sign of the per-bit ±1 sums), splits it into the same four
+    * 15-bit chunks, joins chunks for candidates, applies the Hamming<=3
+    * filter, then verifies with exact Jaccard — so the hash compare
+    * proves the candidate machinery itself, independent of recall.
+    * (By pigeonhole the chunk join finds exactly the Hamming<=3 pairs,
+    * but the oracle mirrors the mechanism rather than assuming the
+    * theorem.) The chunk SQL is hand-written, not generated from the
+    * operator's table enumeration, so it checks that enumeration too. */
   private lazy val simhashMankuSql: String =
     s"""WITH $portableSigCtes,
        |ch AS (SELECT doc_id, sig, c, (sig >> CAST(15 * c AS INTEGER)) & 32767 AS chunk
@@ -910,25 +916,20 @@ object TextQueries {
        |  WHERE bit_count(xor(a.sig, b.sig)) <= 3),
        |$verifyJaccardTail""".stripMargin
 
-  /** q116's oracle: the same signature mirror as q114's, but candidates
-    * come from Manku's block-COMBINATION tables — DuckDB packs, for each
-    * of the C(6,3) = 20 block subsets [[Dedup.simhashCombos]] enumerates
-    * (the SQL below is GENERATED from that same enumeration, so operator
-    * and oracle cannot drift), the chosen 10-bit blocks into one 30-bit
-    * key, unions the 20 keyed tables, joins on (table, key), and applies
-    * the Hamming≤3 filter before exact-Jaccard verification. */
-  private def combosSqlFor(nBlocks: Int): String = {
-    val D = graft.operators.Dedup
-    val bounds = D.simhashBlockBounds(D.PortableSimHashBits, nBlocks)
-    val keyed = D.simhashCombos(nBlocks, nBlocks - 3).zipWithIndex.map {
-      case (bs, ci) =>
-        val (keyExpr, _) = bs.foldLeft(("CAST(0 AS BIGINT)", 0)) {
-          case ((acc, shift), b) =>
-            val (off, width) = bounds(b)
-            (s"($acc | (((sig >> $off) & ${(1L << width) - 1}) << $shift))",
-              shift + width)
-        }
-        s"SELECT doc_id, sig, $ci AS ci, $keyExpr AS k FROM sig"
+  /** Table-keyed Hamming≤3 oracle over the portable signature mirror:
+    * one keyed SELECT per table, each table's (offset, width) runs packed
+    * consecutively from the first run — the operator's own packing — then
+    * UNION ALL, the (table, key) candidate join, the Hamming≤3 filter and
+    * exact-Jaccard verification. The run lists come from the operator's
+    * own enumeration, so operator and oracle cannot drift. */
+  private def tableKeyedSql(tables: Seq[Seq[(Int, Int)]]): String = {
+    def run(off: Int, w: Int): String = s"((sig >> $off) & ${-1L >>> (64 - w)})"
+    val keyed = tables.zipWithIndex.map { case (runs, ti) =>
+      val (off0, w0) = runs.head
+      val (keyExpr, _) = runs.tail.foldLeft((run(off0, w0), w0)) {
+        case ((acc, shift), (off, w)) => (s"($acc | (${run(off, w)} << $shift))", shift + w)
+      }
+      s"SELECT doc_id, sig, $ti AS ci, $keyExpr AS k FROM sig"
     }.mkString("\n  UNION ALL ")
     s"""WITH $portableSigCtes,
        |keyed AS (
@@ -939,37 +940,24 @@ object TextQueries {
        |$verifyJaccardTail""".stripMargin
   }
 
-  private lazy val simhashCombosSql: String = combosSqlFor(6)
+  /** q116's oracle: the same signature mirror as q114's, but candidates
+    * come from Manku's block-COMBINATION tables — DuckDB packs, for each
+    * of the C(6,3) = 20 block subsets [[Dedup.simhashComboTables]]
+    * enumerates, the chosen 10-bit blocks into one 30-bit key
+    * ([[tableKeyedSql]]). */
+  private lazy val simhashCombosSql: String =
+    tableKeyedSql(Dedup.simhashComboTables(Dedup.PortableSimHashBits, 6, 3))
 
   /** q123's oracle: [[simhashCombosSql]] one rung up the ladder — the 35
-    * keyed SELECTs generated from the SAME simhashCombos/BlockBounds
-    * enumeration the 7-block operator packs. */
-  private lazy val simhashCombos7Sql: String = combosSqlFor(7)
+    * keyed SELECTs of the 7-block tables. */
+  private lazy val simhashCombos7Sql: String =
+    tableKeyedSql(Dedup.simhashComboTables(Dedup.PortableSimHashBits, 7, 3))
 
   /** q122's oracle: the same signature mirror as q114/q116's, with
-    * candidates from the recursive permuted tables — the SQL's 16 keyed
-    * SELECTs are GENERATED from [[Dedup.simhashPermutedSegments]]'s
-    * (offset, width) runs, the same enumeration the operator packs, so
-    * operator and oracle cannot drift. */
-  private lazy val simhashPermutedSql: String = {
-    val D = graft.operators.Dedup
-    val keyed = D.simhashPermutedSegments(D.PortableSimHashBits, 4, 4)
-      .zipWithIndex.map { case (segs, ti) =>
-        val (keyExpr, _) = segs.foldLeft(("CAST(0 AS BIGINT)", 0)) {
-          case ((acc, shift), (off, w)) =>
-            (s"($acc | (((sig >> $off) & ${(1L << w) - 1}) << $shift))",
-              shift + w)
-        }
-        s"SELECT doc_id, sig, $ti AS ci, $keyExpr AS k FROM sig"
-      }.mkString("\n  UNION ALL ")
-    s"""WITH $portableSigCtes,
-       |keyed AS (
-       |  $keyed),
-       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM keyed a JOIN keyed b ON a.ci = b.ci AND a.k = b.k AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.sig, b.sig)) <= 3),
-       |$verifyJaccardTail""".stripMargin
-  }
+    * candidates from the 16 recursive permuted tables of
+    * [[Dedup.simhashPermutedSegments]] ([[tableKeyedSql]]). */
+  private lazy val simhashPermutedSql: String =
+    tableKeyedSql(Dedup.simhashPermutedSegments(Dedup.PortableSimHashBits, 4, 4))
 
   /** q34's oracle: identical to [[exactJaccardSql]] plus the
     * [[MaxShingleDf]] cap CTEs — mirrors the declared query exactly. */

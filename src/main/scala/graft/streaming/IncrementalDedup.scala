@@ -184,6 +184,9 @@ object IncrementalDedup {
       // a candidate but never as a verified pair (no shingles to
       // match), which is exactly kept-only semantics.
       val out = Pin(verdicts)
+      // `out` cuts the lineage, so freeing it later would not reach the
+      // operator's `pairs` pin that `verdicts` reads: free that one now
+      Pin.free(verdicts)
       val keptIds = out.filter(col("status") === "kept").select(col(idCol))
       val keptDocs = Pin(pinned.join(keptIds, Seq(idCol), "left_semi"))
       keptDocs.write.mode("overwrite").parquet(s"$docsDir/batch_id=$batchId")
@@ -433,24 +436,18 @@ object IncrementalDedup {
         // history scan plans its file listing (delete-vs-read safety)
         if (compactEvery > 0)
           deleteCompactedSources(spark, indexDir)
-        val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-        processBatch(spark, b, id, indexDir, threshold, k,
+        val verdicts = processBatch(spark, b, id, indexDir, threshold, k,
           bands, n, idCol, textCol, keptOnlyHistory)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+        // Free the pins the verdicts read (the operator's `pairs`, or
+        // keptOnlyHistory's `out`) as soon as the write ends, failed or
+        // not (ADVICE r8): otherwise they wait for the ContextCleaner to
+        // GC the DataFrames — on a long-running low-heap-pressure driver
+        // that can be thousands of micro-batches of executor storage.
+        // Nothing re-reads them once the verdicts are on disk.
+        try verdicts.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+        finally Pin.free(verdicts)
         if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
           compactIndexAsync(spark, indexDir, id)
-        // Free this batch's pinned checkpoint blocks deterministically
-        // (ADVICE r8): processBatch's intermediates (cands/pairs and
-        // keptOnlyHistory's out) are otherwise reclaimed only when the
-        // ContextCleaner GCs the DataFrames — on a long-running
-        // low-heap-pressure driver that can be thousands of micro-batches
-        // of executor storage. The verdicts are on disk; nothing re-reads
-        // these. (Snapshot-diff scope: assumes one stream per session
-        // batch-at-a-time, which foreachBatch serializes per query.)
-        val persisted = spark.sparkContext.getPersistentRDDs
-        persisted.foreach { case (rddId, rdd) =>
-          if (!persistedBefore.contains(rddId)) rdd.unpersist(blocking = false)
-        }
         ()
       }
       .start()

@@ -16,9 +16,11 @@ import graft.operators.{CoOccur, Dedup}
   * wall-clock leg read 1.43; the volume reads the true growth, 1.08).
   *
   * Every volume is computed from the SAME key frames the operators
-  * shuffle (Dedup.minhashBandKeys / simhashChunkKeys / prefixKeys /
-  * adaptiveBuckets — factored, not reimplemented; CandVolSpec pins each
-  * aggregate equal to the enumerated join count on the fixture corpus).
+  * shuffle (Dedup.minhashBandKeys / simhashComboKeys / simhashPermutedKeys
+  * / prefixKeys / adaptiveBuckets — factored, not reimplemented; q36's
+  * and q114's chunks are the one-block combination tables; CandVolSpec
+  * pins each aggregate equal to the enumerated join count on the fixture
+  * corpus).
   * Declared-query configurations throughout: q34/q44/q100's df cap,
   * q35's 16×4 bands, q36's maxDist=12, q114's Manku maxDist=3, q97's
   * t=0.5 prefixes, q113's targetPerBucket=256 with radius-1 multiprobe.
@@ -92,40 +94,8 @@ object CandVol {
     (vol, nVec, meanPop, if (popsEff.isEmpty) 0L else popsEff.valuesIterator.max)
   }
 
-  /** All volumes for one corpus directory, keyed by metric name.
-    * `familyOnly` (round 11, `--family`): compute only the DECLARED
-    * at-scale family — q34-capped, q35, q116, q123, q119, q120, q115 — and
-    * skip the documented dials (q36/q114/q122 chunk/permuted simhash,
-    * q113 adaptive, q97 prefix), whose key fan-outs are the expensive
-    * terms at the g1000 decade and whose envelopes are already
-    * measured through g300. */
-  /** `--simonly` (round 13): ONLY the q116 vs q123 combination-scheme
-    * volumes (plus n_docs) — the focused pair the q123 envelope claim
-    * needs at g300/g1000, without re-running the whole family sweep
-    * (the r12 --family g1000 session cost ~3 h; the two combo
-    * selfJoinVolumes + one portable-signature pass are its small
-    * minority). */
-  def simVolumes(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val docs = Tables.documents(s, dir)
-    val nDocs = docs.count()
-    val simsPortable = Dedup.simhashDocsPortable(docs)
-    simsPortable.persist()
-    val sim116 = selfJoinVolume(
-      Dedup.simhashComboKeys(simsPortable, maxDist = 3,
-        bits = Dedup.PortableSimHashBits, nBlocks = 6),
-      Seq("combo_idx", "combo_key"))
-    val sim123 = selfJoinVolume(
-      Dedup.simhashComboKeys(simsPortable, maxDist = 3,
-        bits = Dedup.PortableSimHashBits, nBlocks = 7),
-      Seq("combo_idx", "combo_key"))
-    simsPortable.unpersist()
-    Seq(("n_docs", nDocs.toDouble),
-      ("q116_simhash_combo", sim116.toDouble),
-      ("q123_simhash_combo7", sim123.toDouble))
-  }
-
-  def volumes(s: SparkSession, dir: String,
-      familyOnly: Boolean = false): Seq[(String, Double)] = {
+  /** All volumes for one corpus directory, keyed by metric name. */
+  def volumes(s: SparkSession, dir: String): Seq[(String, Double)] = {
     val docs = Tables.documents(s, dir)
     val embs = Tables.embeddings(s, dir)
     val cap = graft.queries.TextQueries.MaxShingleDf
@@ -152,40 +122,37 @@ object CandVol {
     val minhash = selfJoinVolume(
       Dedup.minhashBandKeys(docs, k = 16, bands = 4, n = 3),
       Seq("band", "band_hash"))
-    val sim36 = if (familyOnly) None else Some(selfJoinVolume(
-      Dedup.simhashChunkKeys(Dedup.simhashDocs(docs), maxDist = 12,
-        bits = graft.functions.SimHash.Bits),
-      Seq("chunk_idx", "chunk")))
+    val comboCols = Seq("combo_idx", "combo_key")
+    // q36/q114: the (maxDist+1)-chunk pigeonhole, i.e. the one-block
+    // combination tables
+    val sim36 = selfJoinVolume(
+      Dedup.simhashComboKeys(Dedup.simhashDocs(docs), maxDist = 12,
+        bits = graft.functions.SimHash.Bits, nBlocks = 13), comboCols)
     val simsPortable = Dedup.simhashDocsPortable(docs)
     simsPortable.persist()
-    val sim114 = if (familyOnly) None else Some(selfJoinVolume(
-      Dedup.simhashChunkKeys(simsPortable, maxDist = 3,
-        bits = Dedup.PortableSimHashBits),
-      Seq("chunk_idx", "chunk")))
+    val sim114 = selfJoinVolume(
+      Dedup.simhashComboKeys(simsPortable, maxDist = 3,
+        bits = Dedup.PortableSimHashBits, nBlocks = 4), comboCols)
     // q116: Manku block-combination tables — the chance-collision term's
     // fix; its volume should stay ~linear where sim114's n²/2^15 term
     // has taken over
     val sim116 = selfJoinVolume(
       Dedup.simhashComboKeys(simsPortable, maxDist = 3,
-        bits = Dedup.PortableSimHashBits, nBlocks = 6),
-      Seq("combo_idx", "combo_key"))
+        bits = Dedup.PortableSimHashBits, nBlocks = 6), comboCols)
     // q123: the 7-block rung (C(7,4)=35 tables on 32-36-bit keys) — the
-    // answer to q116's measured 2^30 envelope (volume 1.204 at g1000);
-    // in the at-scale family because its deep-decade volume IS the
-    // claim it exists to carry
+    // answer to q116's measured 2^30 envelope (volume 1.204 at g1000)
     val sim123 = selfJoinVolume(
       Dedup.simhashComboKeys(simsPortable, maxDist = 3,
-        bits = Dedup.PortableSimHashBits, nBlocks = 7),
-      Seq("combo_idx", "combo_key"))
+        bits = Dedup.PortableSimHashBits, nBlocks = 7), comboCols)
     // q122: recursive permuted tables — 16 tables on 26-27-bit keys;
     // volume should track q116's ~1.0 at 20% less fan-out
-    val sim122 = if (familyOnly) None else Some(selfJoinVolume(
+    val sim122 = selfJoinVolume(
       Dedup.simhashPermutedKeys(simsPortable, maxDist = 3,
         bits = Dedup.PortableSimHashBits, nOuter = 4, nInner = 4),
-      Seq("tbl_idx", "tbl_key")))
+      Seq("tbl_idx", "tbl_key"))
     simsPortable.unpersist()
-    val prefix = if (familyOnly) None else Some(selfJoinVolume(
-      Dedup.prefixKeys(docs, threshold = 0.5), Seq("shingle")))
+    val prefix = selfJoinVolume(
+      Dedup.prefixKeys(docs, threshold = 0.5), Seq("shingle"))
     // q119: corpus × probe band join — the decontamination shape; the
     // probe slice is the declared query's own doc_id % mod split
     val dmod = graft.queries.TextQueries.DecontamMod
@@ -206,24 +173,19 @@ object CandVol {
     // cluster assignment (semanticClusters — factored, not reimplemented)
     val semVol = selfJoinVolume(semanticBlockKeys(embs), Seq("cid"))
 
-    val ad = if (familyOnly) None else {
-      val (bounded, scheme) = Dedup.adaptiveBuckets(embs)
-      val (adVol, nVecs, adMean, adMax) = adaptiveProbeVolume(bounded, scheme)
-      // the probe-plane cap dial (Dedup.probeBuckets maxProbePlanes=8):
-      // volume with the probe-growth term frozen — the <=1.1-exponent
-      // configuration, at the documented recall cost on deep corpora
-      val (adVolCap, _, _, _) = adaptiveProbeVolume(bounded, scheme, 8)
-      System.err.println(
-        f"[candvol] $dir q113: planes=${scheme.planesUsed} buckets=${scheme.nBuckets} " +
-          f"mean_pop=$adMean%.1f max_pop=$adMax")
-      Some((adVol, nVecs, adMean, adMax, adVolCap, scheme))
-    }
-    // n_vecs is ALWAYS the full table count (ADVICE r11): the bounded
-    // frame's count excludes vectors in blocks dropped by the
-    // maxItemsPerBlock left_anti, so using it as the exponent base in
-    // full mode while --family used embs.count() would give q113/q115
-    // exponents computed across modes different denominators. The
-    // bounded count stays available as its own q113 metric below.
+    val (bounded, scheme) = Dedup.adaptiveBuckets(embs)
+    val (adVol, boundedVecs, adMean, adMax) = adaptiveProbeVolume(bounded, scheme)
+    // the probe-plane cap dial (Dedup.probeBuckets maxProbePlanes=8):
+    // volume with the probe-growth term frozen — the <=1.1-exponent
+    // configuration, at the documented recall cost on deep corpora
+    val (adVolCap, _, _, _) = adaptiveProbeVolume(bounded, scheme, 8)
+    System.err.println(
+      f"[candvol] $dir q113: planes=${scheme.planesUsed} buckets=${scheme.nBuckets} " +
+        f"mean_pop=$adMean%.1f max_pop=$adMax")
+    // n_vecs is the full table count (ADVICE r11): the bounded frame's
+    // count excludes vectors in blocks dropped by the maxItemsPerBlock
+    // left_anti, so it is reported as its own q113 metric, never as the
+    // exponent base
     val nVecs = embs.count()
     Seq(
       ("n_docs", nDocs.toDouble),
@@ -233,28 +195,24 @@ object CandVol {
       ("q34_cand_uncapped", ng.getLong(2).toDouble),
       ("postings_kept", ng.getLong(3).toDouble),
       ("hot_shingles_pruned", ng.getLong(4).toDouble),
-      ("q35_minhash_bands", minhash.toDouble)) ++
-      sim36.map(v => ("q36_simhash_d12", v.toDouble)) ++
-      sim114.map(v => ("q114_simhash_manku", v.toDouble)) ++
-      Seq(("q116_simhash_combo", sim116.toDouble),
-        ("q123_simhash_combo7", sim123.toDouble)) ++
-      sim122.map(v => ("q122_simhash_permuted", v.toDouble)) ++
-      prefix.map(v => ("q97_prefix", v.toDouble)) ++
-      Seq(
-        ("q119_cross_bands", cross.toDouble),
-        ("q120_hist_probe", ingestCross.toDouble),
-        ("q120_within_batch", ingestWithin.toDouble)) ++
-      ad.toSeq.flatMap { case (adVol, boundedVecs, adMean, adMax, adVolCap, scheme) =>
-        Seq(
-          ("q113_bounded_vecs", boundedVecs.toDouble),
-          ("q113_adaptive_probe", adVol.toDouble),
-          ("q113_probe_cap8", adVolCap.toDouble),
-          ("q113_n_planes", scheme.planesUsed.toDouble),
-          ("q113_n_buckets", scheme.nBuckets.toDouble),
-          ("q113_mean_bucket_pop", adMean),
-          ("q113_max_bucket_pop", adMax.toDouble))
-      } ++
-      Seq(("q115_semantic_blocks", semVol.toDouble))
+      ("q35_minhash_bands", minhash.toDouble),
+      ("q36_simhash_d12", sim36.toDouble),
+      ("q114_simhash_manku", sim114.toDouble),
+      ("q116_simhash_combo", sim116.toDouble),
+      ("q123_simhash_combo7", sim123.toDouble),
+      ("q122_simhash_permuted", sim122.toDouble),
+      ("q97_prefix", prefix.toDouble),
+      ("q119_cross_bands", cross.toDouble),
+      ("q120_hist_probe", ingestCross.toDouble),
+      ("q120_within_batch", ingestWithin.toDouble),
+      ("q113_bounded_vecs", boundedVecs.toDouble),
+      ("q113_adaptive_probe", adVol.toDouble),
+      ("q113_probe_cap8", adVolCap.toDouble),
+      ("q113_n_planes", scheme.planesUsed.toDouble),
+      ("q113_n_buckets", scheme.nBuckets.toDouble),
+      ("q113_mean_bucket_pop", adMean),
+      ("q113_max_bucket_pop", adMax.toDouble),
+      ("q115_semantic_blocks", semVol.toDouble))
   }
 
   private def fmt(v: Double): String =
@@ -263,15 +221,11 @@ object CandVol {
 
   def main(args: Array[String]): Unit = {
     val out = args.collectFirst { case a if a.startsWith("--out=") => a.drop(6) }
-    val familyOnly = args.contains("--family")
-    val simOnly = args.contains("--simonly")
     val dirs = args.filterNot(_.startsWith("--")).toSeq
-    require(dirs.nonEmpty,
-      "usage: CandVol [--out=path.json] [--family|--simonly] <dir> [dir...]")
+    require(dirs.nonEmpty, "usage: CandVol [--out=path.json] <dir> [dir...]")
     val s = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "candvol")
-    val perDir = dirs.map(d => d ->
-      (if (simOnly) simVolumes(s, d) else volumes(s, d, familyOnly)))
+    val perDir = dirs.map(d => d -> volumes(s, d))
     perDir.foreach { case (d, vs) =>
       println(s"$d " + vs.map { case (k, v) => s"$k=${fmt(v)}" }.mkString(" "))
     }
@@ -289,10 +243,6 @@ object CandVol {
       val m1 = v1.toMap; val m2 = v2.toMap
       val exps = volKeys.flatMap { k =>
         val base = if (k.startsWith("q113") || k.startsWith("q115")) "n_vecs" else "n_docs"
-        // look the base up lazily INSIDE the guard: a focused mode
-        // (--simonly) emits no n_vecs, and an eager m2(base) here threw
-        // AFTER the volumes printed (round 13 — counts were recovered
-        // from stdout, but the exponent lines never ran)
         for {
           a <- m1.get(k); b <- m2.get(k)
           r1 <- m1.get(base); r2 <- m2.get(base)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.Sessions
+import graft.core.{Pin, Sessions}
 import graft.streaming.EventStreams
 
 /** Streaming throughput/state evidence (VERDICT r4 #7): the functional
@@ -137,8 +137,9 @@ object StreamBench {
     *   - `dedup_sec`: the history band probe + candidate verification +
     *     verdict write (the term that could grow with the corpus: its
     *     only corpus-dependent cost is the columnar index scan);
-    *   - `compact_sec`: [[graft.streaming.IncrementalDedup.compactIndex]]
-    *     when `compactEvery` > 0 (amortized; 0 on non-compacting
+    *   - `compact_sec`: the out-of-band compaction's share of the batch
+    *     path when `compactEvery` > 0 — the deferred source deletes at
+    *     batch start plus the fold submission (0 on non-compacting
     *     batches);
     * plus `pre_band_files`, the band-index parquet file count each batch
     * probes — the many-small-files growth compaction exists to stop.
@@ -146,21 +147,17 @@ object StreamBench {
     * Batch completions are counted by the instrumented foreachBatch
     * itself (ADVICE r7: `recentProgress` is a bounded ring buffer —
     * default 100 — so polling it undercounts past the retention limit
-    * and silently measures "last N" instead of "first N"). With
-    * `compactAsync = true` the body mirrors
-    * [[graft.streaming.IncrementalDedup.stream]]'s wiring exactly (same
-    * writes, same compaction trigger, same checkpoint unpersist sweep),
-    * adding only timestamps; `false` folds in band through
-    * [[graft.streaming.IncrementalDedup.compactIndex]], the longrun's
-    * baseline, which the stream itself no longer offers. Under the
-    * out-of-band fold (VERDICT r8 #3) `compact_sec` measures
-    * only what stays ON the batch path — the deferred source deletes at
-    * batch start plus the fold submission — so a flat `batch_sec +
-    * compact_sec` with no multi-second spikes at the trigger batches IS
-    * the done-criterion evidence. */
+    * and silently measures "last N" instead of "first N"). The body
+    * mirrors [[graft.streaming.IncrementalDedup.stream]]'s wiring exactly
+    * (same writes, same compaction trigger, same release of the
+    * verdicts' pins), adding only timestamps, so a flat `batch_sec +
+    * compact_sec` with no multi-second spikes at the trigger batches
+    * shows the fold stays off the batch path. The in-band fold it
+    * replaced measured 400 s against 367 s out of band over 120 batches
+    * (STREAM_r09). */
   def incrementalDedupRun(spark: SparkSession, docsPerBatch: Long,
       nBatches: Int, compactEvery: Int, label: String,
-      timeoutMs: Long = 3600000L, compactAsync: Boolean = false): String = {
+      timeoutMs: Long = 3600000L): String = {
     val tmp = java.nio.file.Files.createTempDirectory(s"sb_$label").toString
     val (indexDir, outDir) = (s"$tmp/index", s"$tmp/out")
     val recs = scala.collection.mutable.ArrayBuffer.empty[BatchRec]
@@ -173,32 +170,22 @@ object StreamBench {
         val enough = recs.synchronized { recs.length >= nBatches }
         if (!enough) {
           val td0 = System.nanoTime()
-          if (compactAsync && compactEvery > 0)
+          if (compactEvery > 0)
             graft.streaming.IncrementalDedup.deleteCompactedSources(
               b.sparkSession, indexDir)
           val deleteSec = (System.nanoTime() - td0) / 1e9
           val pre = countParquetFiles(b.sparkSession, s"$indexDir/bands")
-          val persistedBefore =
-            b.sparkSession.sparkContext.getPersistentRDDs.keySet
           val t0 = System.nanoTime()
           val v = graft.streaming.IncrementalDedup.processBatch(
             b.sparkSession, b, id, indexDir, threshold = 0.5)
           val t1 = System.nanoTime()
-          v.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+          try v.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+          finally Pin.free(v)
           val t2 = System.nanoTime()
-          if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-            if (compactAsync)
-              graft.streaming.IncrementalDedup.compactIndexAsync(
-                b.sparkSession, indexDir, id)
-            else
-              graft.streaming.IncrementalDedup.compactIndex(
-                b.sparkSession, indexDir, id)
-          }
+          if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
+            graft.streaming.IncrementalDedup.compactIndexAsync(
+              b.sparkSession, indexDir, id)
           val t3 = System.nanoTime()
-          b.sparkSession.sparkContext.getPersistentRDDs.foreach {
-            case (rddId, rdd) =>
-              if (!persistedBefore.contains(rddId)) rdd.unpersist(blocking = false)
-          }
           recs.synchronized {
             recs += BatchRec(id, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
               (t3 - t2) / 1e9 + deleteSec, pre)
@@ -212,8 +199,8 @@ object StreamBench {
     q.stop(); q.awaitTermination()
     require(finished, s"only ${recs.length}/$nBatches batches within $timeoutMs ms")
     // drain any in-flight out-of-band fold so the closing file/row counts
-    // report the post-compaction index, same as the in-band legs
-    if (compactAsync && compactEvery > 0)
+    // report the post-compaction index
+    if (compactEvery > 0)
       graft.streaming.IncrementalDedup.awaitCompaction(spark, indexDir)
     val rs = recs.synchronized { recs.sortBy(_.id).take(nBatches).toSeq }
     val batchSec = rs.map(r => r.ingestSec + r.dedupSec)
@@ -265,7 +252,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     // long-run mode (VERDICT r7 #2): the incremental-dedup path alone,
-    // 100+ batches, with and without compaction, per-batch decomposition
+    // 100+ batches, with and without (out-of-band) compaction, per-batch
+    // decomposition
     if (args.headOption.contains("longrun")) {
       val docsPerBatch = args.lift(1).map(_.toLong).getOrElse(2000L)
       val nBatches = args.lift(2).map(_.toInt).getOrElse(120)
@@ -275,12 +263,9 @@ object StreamBench {
       val noCompact = incrementalDedupRun(spark, docsPerBatch, nBatches,
         compactEvery = 0, label = "longrun_nocompact")
       val withCompact = incrementalDedupRun(spark, docsPerBatch, nBatches,
-        compactEvery = compactEvery, label = "longrun_compact")
-      val withAsync = incrementalDedupRun(spark, docsPerBatch, nBatches,
-        compactEvery = compactEvery, label = "longrun_compact_async",
-        compactAsync = true)
+        compactEvery = compactEvery, label = "longrun_compact_async")
       val json =
-        s"""{"metric":"stream_longrun",$noCompact,$withCompact,$withAsync}"""
+        s"""{"metric":"stream_longrun",$noCompact,$withCompact}"""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("streambench_longrun_out.json"), json + "\n")
       spark.stop()

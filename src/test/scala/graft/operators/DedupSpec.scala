@@ -315,7 +315,7 @@ class DedupSpec extends SparkSpec {
 
   test("q123 adversarial fixture: hand-written 7-block layout + 35 combos on a 5-sig corpus") {
     // VERDICT r13 #4/#7: q123's oracle SQL is GENERATED from the same
-    // simhashCombos/simhashBlockBounds enumeration the operator packs,
+    // simhashComboTables enumeration the operator packs,
     // so a bug in that shared enumeration would escape both sides. This
     // fixture is independent of it: the 9/9/9/9/8/8/8 block layout and
     // all 35 lexicographic 4-subsets are hand-written literals, and the
@@ -384,9 +384,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("pigeonhole laws hold on 360 random signatures for both table schemes") {
-    // drive the REAL key frames (simhashChunkKeys / simhashComboKeys)
-    // with seeded random 60-bit signatures plus planted <=3-flip pairs,
-    // and check the laws over all ~65k pairs:
+    // drive the REAL key frames (simhashComboKeys with one-block chunk
+    // tables, nBlocks = maxDist + 1, and with the 6-block combination
+    // tables) with seeded random 60-bit signatures plus planted <=3-flip
+    // pairs, and check the laws over all ~65k pairs:
     //   completeness: every Hamming<=3 pair shares a chunk AND a combo
     //   exactness:    candidates filtered to Hamming<=3 = the brute set
     //   packing:      a combo key matches iff all 3 chosen blocks match
@@ -418,9 +419,9 @@ class DedupSpec extends SparkSpec {
           yield (ids(i), ids(j))
       }.toSet
     }
-    val chunkCand = candidates(Dedup.simhashChunkKeys(
+    val chunkCand = candidates(Dedup.simhashComboKeys(
       df.select(col("id"), col("simhash")), maxDist = 3,
-      bits = Dedup.PortableSimHashBits), "chunk_idx", "chunk")
+      bits = Dedup.PortableSimHashBits, nBlocks = 4), "combo_idx", "combo_key")
     val comboCand = candidates(Dedup.simhashComboKeys(
       df.select(col("id"), col("simhash")), maxDist = 3,
       bits = Dedup.PortableSimHashBits, nBlocks = 6), "combo_idx", "combo_key")
@@ -437,6 +438,59 @@ class DedupSpec extends SparkSpec {
         t.forall(bi => blocks(sa)(bi) == blocks(sb)(bi)))
     } yield (a, b)).toSet
     assert(comboCand == tripleMatch, "combo key equality == block-triple equality")
+
+    // q36's setting: 64-bit signatures, maxDist 12, so 13 one-block
+    // chunk tables. Keys are checked against a split computed here
+    // (twelve 5-bit chunks, then one 4-bit chunk), and the candidates
+    // against the brute-force Hamming<=12 pairs.
+    val widths = Seq.fill(12)(5) :+ 4
+    val offsets = widths.scanLeft(0)(_ + _)
+    def chunkKeys(s: Long): Seq[Long] = widths.indices.map(c =>
+      (s >>> offsets(c)) & ((1L << widths(c)) - 1))
+    val base64 = Seq.tabulate(200)(i => (i.toLong, rnd.nextLong()))
+    val planted64 = (0 until 40).map { i =>
+      var s2 = base64(i)._2
+      val r = new scala.util.Random(500 + i)
+      (0 until (i % 13)).foreach(_ => s2 ^= 1L << r.nextInt(64))
+      (1000L + i, s2)
+    }
+    val all64 = base64 ++ planted64
+    val sig64 = all64.toMap
+    val brute64 = (for {
+      (a, sa) <- all64; (b, sb) <- all64 if a < b && ham(sa, sb) <= 12
+    } yield (a, b)).toSet
+    assert(brute64.size >= 40, "planted pairs must make the q36 law non-vacuous")
+    val keys64 = Dedup.simhashComboKeys(all64.toDF("id", "simhash"),
+      maxDist = 12, bits = 64, nBlocks = 13)
+    val got64 = keys64.select(col("id"), col("combo_idx"), col("combo_key"))
+      .as[(Long, Int, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
+    for ((id, s) <- all64)
+      assert(got64(id) == chunkKeys(s), s"q36 chunk keys of sig id=$id")
+    val cand64 = candidates(keys64, "combo_idx", "combo_key")
+    assert(brute64.subsetOf(cand64), "q36 chunk pigeonhole completeness")
+    assert(cand64.filter { case (a, b) => ham(sig64(a), sig64(b)) <= 12 } == brute64)
+  }
+
+  test("maxDist 0 at 64 bits keys on the whole signature") {
+    // one 64-bit chunk: the mask must keep every bit ((1L << 64) - 1 is
+    // 0 on the JVM, which would key every signature to 0 and pair the
+    // whole frame in one bucket)
+    val rnd = new scala.util.Random(17)
+    val sigs = Seq.tabulate(50)(i => (i.toLong, rnd.nextLong())) ++
+      Seq((100L, Long.MinValue), (101L, -1L), (102L, -1L))
+    val withCopies = sigs ++ sigs.take(5).map { case (i, s) => (i + 200L, s) }
+    val df = withCopies.toDF("id", "simhash")
+    val keys = Dedup.simhashComboKeys(df, maxDist = 0, bits = 64, nBlocks = 1)
+      .select("id", "combo_idx", "combo_key").as[(Long, Int, Long)].collect()
+    assert(keys.forall { case (id, idx, key) =>
+      idx == 0 && key == withCopies.toMap.apply(id) })
+    val got = Dedup.hammingPairs(df, maxDist = 0, bits = 64)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
+    val want = (for {
+      (a, sa) <- withCopies; (b, sb) <- withCopies if a < b && sa == sb
+    } yield (a, b, 0)).toSet
+    assert(want.size == 6 && got == want)
   }
 
   test("radius-1 multiprobe completeness law on random plane signatures") {

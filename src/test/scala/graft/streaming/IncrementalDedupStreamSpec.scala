@@ -14,10 +14,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
-import graft.core.{Sessions, Tables}
+import graft.core.{Pin, Sessions, Tables}
 import graft.functions.MinHashExpr
 import graft.operators.Dedup
 
@@ -330,15 +331,32 @@ class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper 
   }
 
   /** processBatch plus its verdict write, the stream wiring's unit of
-    * work, then the wiring's sweep of the batch's checkpoints. */
+    * work, then the wiring's release of the pins the verdicts read. */
   private def runBatch(indexDir: String, outDir: String, i: Int,
       docs: DataFrame): Unit = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    IncrementalDedup.processBatch(spark, docs, i.toLong, indexDir)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$i")
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = false)
+    val verdicts = IncrementalDedup.processBatch(spark, docs, i.toLong, indexDir)
+    try verdicts.write.mode("overwrite").parquet(s"$outDir/batch_id=$i")
+    finally Pin.free(verdicts)
+  }
+
+  test("a failed verdict write leaves no persistent RDD the batch created") {
+    // outDir is a regular file, so the verdict write of batch 0 fails
+    // after processBatch has pinned its intermediates; the wiring must
+    // free them on that path too
+    implicit val sqlCtx = spark.sqlContext
+    for (keptOnly <- Seq(false, true)) {
+      val tmp = Files.createTempDirectory(s"incdedup_failwrite_$keptOnly").toString
+      val outFile = Files.createFile(java.nio.file.Paths.get(tmp, "out")).toString
+      val mem = MemoryStream[Doc]
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val q = IncrementalDedup.stream(mem.toDF(), s"$tmp/index", outFile,
+        s"$tmp/ckpt", keptOnlyHistory = keptOnly)
+      try {
+        mem.addData(streamBatch(0, 100).as[Doc].collect().toSeq: _*)
+        intercept[StreamingQueryException](q.processAllAvailable())
+      } finally q.stop()
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"keptOnlyHistory=$keptOnly: persistent RDDs $leaked")
     }
   }
 

@@ -32,14 +32,14 @@ class CandVolSpec extends SparkSpec {
   }
 
   test("simhash chunk volumes equal the enumerated chunk joins (q36 + q114 widths)") {
-    val k36 = Dedup.simhashChunkKeys(Dedup.simhashDocs(docs), maxDist = 12,
-      bits = graft.functions.SimHash.Bits)
-    assert(CandVol.selfJoinVolume(k36, Seq("chunk_idx", "chunk")) ===
-      enumerated(k36, Seq("chunk_idx", "chunk")))
-    val k114 = Dedup.simhashChunkKeys(Dedup.simhashDocsPortable(docs),
-      maxDist = 3, bits = Dedup.PortableSimHashBits)
-    assert(CandVol.selfJoinVolume(k114, Seq("chunk_idx", "chunk")) ===
-      enumerated(k114, Seq("chunk_idx", "chunk")))
+    // the (maxDist+1)-chunk pigeonhole: one-block combination tables
+    val cols = Seq("combo_idx", "combo_key")
+    val k36 = Dedup.simhashComboKeys(Dedup.simhashDocs(docs), maxDist = 12,
+      bits = graft.functions.SimHash.Bits, nBlocks = 13)
+    assert(CandVol.selfJoinVolume(k36, cols) === enumerated(k36, cols))
+    val k114 = Dedup.simhashComboKeys(Dedup.simhashDocsPortable(docs),
+      maxDist = 3, bits = Dedup.PortableSimHashBits, nBlocks = 4)
+    assert(CandVol.selfJoinVolume(k114, cols) === enumerated(k114, cols))
   }
 
   test("simhash combo volume equals the enumerated combination-table join (q116)") {
