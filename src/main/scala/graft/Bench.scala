@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import java.util.Locale
+
+import graft.tools.Timing
+import graft.tools.Timing.fmt
 
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR.
   *
@@ -32,24 +34,16 @@ import java.util.Locale
   * two eras.
   */
 object Bench {
-  /** Locale-pinned formatting: a comma decimal separator from the host
-    * locale would corrupt the JSON (ADVICE r2). */
-  private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Sessions.local(cpus.toInt, "bench")
+    val queries = Timing.lookup(SparkEntry.headline)
+    val spark = Timing.session("bench")
     val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // Warm up shuffle/codegen machinery and the parquet reader path so
-    // one-time infra init isn't charged to the first measured query. Each
-    // warm-up is individually guarded: a missing table must not prevent
-    // the measured loop from running and emitting the JSON (ADVICE r2 —
-    // the failure then shows up as ok:false on the queries that need it).
-    try {
-      spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")
-        .groupBy("k").count().count()
-    } catch { case e: Throwable => System.err.println(s"[bench] warmup shuffle FAILED: ${e.getMessage}") }
+    Timing.warmUp(spark)
+    // Warm up the parquet reader path too. Each table warm-up is
+    // individually guarded: a missing table must not prevent the
+    // measured loop from running and emitting the JSON (ADVICE r2 — the
+    // failure then shows up as ok:false on the queries that need it).
     Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
       "region" -> graft.core.Tables.region, "nation" -> graft.core.Tables.nation,
       "customer" -> graft.core.Tables.customer, "supplier" -> graft.core.Tables.supplier,
@@ -82,49 +76,20 @@ object Bench {
       math.min(once(), once())
     }
     sentinel() // warm the sentinel's own codegen path before recording
-    val names = SparkEntry.headline.filter(SparkEntry.queries.contains)
     val nRuns = 3
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
+    val results = queries.map { case (name, fn) =>
       val runs = (1 to nRuns).map { _ =>
         val s = sentinel()
-        val t0 = System.nanoTime()
-        val ok =
-          // full materialization, not count(): see Sessions.materialize —
-          // count()'s column pruning can delete prunable join subtrees
-          // from the measured plan (q120 benched 13x fast-but-wrong)
-          try { graft.core.Sessions.materialize(fn(spark, sfDir)); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop cache entries OUTSIDE the timed window (round 9): the
-        // CacheManager keys entries by logical plan, so a repeat run of
-        // the same query in the same session silently REUSES run 1's
-        // persist()ed intermediates and reports cache-read speed, not
-        // compute speed (the cross-run analogue of the count()-pruning
-        // trap). The reuse source here is any internal persist() —
-        // PageRank's edge/degree/rank caches most visibly (q68 read ~3 s
-        // cached vs 10-25 s honest pre-round-10; ~8 s after the r10
-        // truncation fix). The verify family pins via
-        // localCheckpoint, whose blocks live OUTSIDE the CacheManager:
-        // clearCache() does not free them (Pin.free or
-        // ContextCleaner-on-GC do), and it never made them reusable
-        // across runs in the first place — each run's checkpoint is a
-        // fresh RDD, so the verify legs were honest all along. They DO
-        // accumulate: each run's checkpoint blocks linger until driver
-        // GC, so the persistent-RDD sweep below frees them too, keeping
-        // executor storage flat across the 28-query battery.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        (ok, dt, s)
+        // Timing.run resets between runs: cache entries are keyed by
+        // logical plan, so without the reset a repeat run would report
+        // cache-read speed (round 9), and pinned checkpoint blocks
+        // would pile up across the 28-query battery
+        val run = Timing.run(spark)(fn(spark, sfDir))
+        run.failure.foreach(e => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+        (run.ok, run.seconds, s)
       }
-      val okTimes = runs.filter(_._1).map(_._2).sorted
-      val anyOk = okTimes.nonEmpty
-      // p50: middle of the sorted ok runs (lower middle for even counts)
-      val p50 = if (anyOk) okTimes((okTimes.size - 1) / 2) else -1.0
-      (name, anyOk, p50, runs.map(_._2), runs.map(_._3))
+      val okTimes = runs.filter(_._1).map(_._2)
+      (name, okTimes.nonEmpty, Timing.p50(okTimes), runs.map(_._2), runs.map(_._3))
     }
     // one trailing sentinel so the LAST measured run is bracketed too —
     // a stall confined to it would otherwise be structurally invisible
@@ -168,7 +133,7 @@ object Bench {
     // BENCH_HISTORY without them — the same blind-comparison hazard
     // ScaleBench's parts/driver_mem_gb stamps fixed.
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","harness":"noop","cache_cleared":true,"cpus":$cpus,"shuffle_partitions":$shuffleParts,"queries":$qs,"raw":$raws,"ok":$oks,"all_ok":$allOk,"sentinel_floor":${fmt(sentFloor)},"sentinel_max":$sents,"stall_suspect":$suspectJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","harness":"noop","cache_cleared":true,"cpus":${Timing.cpus},"shuffle_partitions":$shuffleParts,"queries":$qs,"raw":$raws,"ok":$oks,"all_ok":$allOk,"sentinel_floor":${fmt(sentFloor)},"sentinel_max":$sents,"stall_suspect":$suspectJson,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench_out.json"), json + "\n")
     // Durable history (ADVICE r5): bench_out.json is overwritten every
     // run and the driver's archived artifact stays unparsed on rc!=0 —
@@ -185,7 +150,7 @@ object Bench {
     val failing = results.filterNot(_._2).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","harness":"noop","cache_cleared":true,"cpus":$cpus,"queries":$qs,"all_ok":$allOk,"failed":$failing,"sentinel_floor":${fmt(sentFloor)},"stall_suspect":$suspectJson,"sf":"$sfDir","full_record":"bench_out.json"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","harness":"noop","cache_cleared":true,"cpus":${Timing.cpus},"queries":$qs,"all_ok":$allOk,"failed":$failing,"sentinel_floor":${fmt(sentFloor)},"stall_suspect":$suspectJson,"sf":"$sfDir","full_record":"bench_out.json"}""")
     if (!allOk) sys.exit(1)
   }
 }

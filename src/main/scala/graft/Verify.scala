@@ -6,15 +6,15 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional 3rd arg (local dev only): comma-separated query-name filter
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg (local dev only): comma-separated query names;
+    // a misspelled one fails here rather than dumping nothing for it
+    val queries =
+      if (args.length > 2) graft.tools.Timing.lookup(args(2).split(",").toSeq)
+      else SparkEntry.queries.toSeq
     val spark = graft.core.Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -142,15 +142,4 @@ object Augment {
   def categoryReady(category: DataFrame, articleCategoryReady: DataFrame): DataFrame =
     category.join(articleCategoryReady.select("category_id").distinct(),
       Seq("category_id"), "left_semi")
-
-  /** Full augment: silver tables → the six gold tables. */
-  def gold(t: ArxivTables, enricher: Enricher, cwts: DataFrame,
-      namesGenders: DataFrame): ArxivTables = {
-    val art = articleReady(t.article, enricher)
-    val auth = authorshipReady(t.authorship, art)
-    val au = authorReady(t.author, auth, art, namesGenders)
-    val ac = articleCategoryReady(t.articleCategory, art)
-    ArxivTables(art, au, auth, ac, categoryReady(t.category, ac),
-      journalReady(art, cwts))
-  }
 }

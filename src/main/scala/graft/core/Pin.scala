@@ -29,8 +29,8 @@ object Pin {
   /** Eager local checkpoint of `df`, sized by its stored blocks. The
     * size is at least 1 byte: a join's size estimate is the product of
     * its children's, so a 0 would zero every join above an empty frame.
-    * The result reads the checkpoint's RDD, so [[free]] and the tools'
-    * `getPersistentRDDs` sweeps reach its blocks. */
+    * The result reads the checkpoint's RDD, so [[free]] and the timing
+    * tools' reset ([[graft.tools.Timing.reset]]) reach its blocks. */
   def apply(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint()
     cp.queryExecution.logical match {
@@ -57,7 +57,8 @@ object Pin {
     * checkpointed frame is a silent no-op and the blocks linger until a
     * driver GC cycle notices the RDD is unreachable. This reaches each
     * RDD through its LogicalRDD node and unpersists it directly; the
-    * timing tools' `getPersistentRDDs` sweeps reach the same RDDs.
+    * timing tools' reset ([[graft.tools.Timing.reset]]), a
+    * `getPersistentRDDs` sweep, reaches the same RDDs.
     *
     * Caller contract: the caller owns every pin `df` reads — no other
     * live frame may still need one of them — and nothing executes those

@@ -1176,22 +1176,12 @@ object Dedup {
     * Output: (id_a, id_b) candidates — a provable superset of the
     * >= t pairs; verify with [[verifiedJaccard]] to make it exact.
     *
-    * `guard = true` (default) runs the [[prefixFilterWarning]]
-    * diagnostic first and logs its message when the corpus looks too
-    * uniform for prefix filtering — the measured failure mode this
-    * operator has (exponent 1.08 on the fixed-vocabulary corpus vs 0.60
-    * realistic). The guard never changes the output, but it DOES make
-    * construction eager and costs two driver-blocking jobs (a distinct
-    * id count and a full shingle-explode + df aggregate — work the
-    * lazy plan will do again); pass false where the corpus shape is
-    * already known — the declared q97 does, since the fixture corpus's
-    * df distribution is known-good (round-5 measurement: the eager guard
-    * tripled q97's benched p50). */
+    * Construction is lazy. On a corpus too uniform for prefix filtering
+    * (exponent 1.08 on the fixed-vocabulary corpus vs 0.60 realistic),
+    * [[prefixFilterWarning]] says so, at the cost of two jobs of its
+    * own. */
   def prefixCandidates(docs: DataFrame, threshold: Double, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
-      guard: Boolean = true): DataFrame = {
-    if (guard) prefixFilterWarning(docs, n, idCol = idCol, textCol = textCol)
-      .foreach(log.warn(_))
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // the prefix frame feeds BOTH sides of the candidate self-join and
     // each side re-derives it; pinning it would keep a corpus-prefix-
     // sized block store, the trade the shingle frame declines too
@@ -1238,8 +1228,6 @@ object Dedup {
       .filter(col("rk") <= col("n_sh") - ceil(lit(tEff) * col("n_sh") - lit(1e-9)) + lit(1))
       .select("id", "shingle", "rk", "n_sh")
   }
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
 
   /** One-row shingle document-frequency profile — the distribution that
     * decides whether prefix filtering can work: (n_docs, vocab,

@@ -613,7 +613,7 @@ object AnalyticsQueries {
     * only one pre-combined row per entity per partition reaches the
     * shuffle, the shape you want when replaying a 100 TB changelog
     * (vs row_number, which shuffles every change row). The file-level
-    * twin of this query is `PartitionedWrite.upsertByKey`. */
+    * twin of this query is `PartitionedWrite.upsertPartitions`. */
   def q90CdcApply(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
       .select(

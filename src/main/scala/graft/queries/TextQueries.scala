@@ -241,14 +241,10 @@ object TextQueries {
     * exact all-pairs Jaccard, so the hash-match is simultaneously a
     * correctness proof of the prefix bound on this corpus.
     *
-    * `guard = false`: the fixture corpus's Heaps-style df distribution is
-    * known-good for prefix filtering, and the guard's two driver-blocking
-    * diagnostic jobs (distinct-id count + full shingle-df aggregate) run at
-    * plan CONSTRUCTION — inside any timed window — then the lazy plan
-    * repeats that work (measured 3.8 s → 12.9 s p50 at sf0.1 in round 5).
-    * The guard stays the library default for unknown corpora; a declared
-    * battery query on a known corpus is exactly the "shape already known"
-    * case its scaladoc carves out.
+    * `prefixCandidates` runs no diagnostic job: an eager df check at
+    * construction would run inside any timed window and the lazy plan
+    * would then repeat its work (measured 3.8 s → 12.9 s p50 at sf0.1 in
+    * round 5); that check is [[Dedup.prefixFilterWarning]], called apart.
     *
     * Small-scale price, DECIDED (VERDICT r9 #5): the candidate-restricted
     * verify (round 9) adds a checkpoint + left-semi pin whose fixed cost
@@ -257,13 +253,13 @@ object TextQueries {
     * BENCH_SCALE_r09_q35fix). The declared query keeps the pin at every
     * size rather than adding a corpus-size threshold: the dial would need
     * its own eager count to decide (a driver-blocking job inside the
-    * timed window — the exact guard trap above), and a 100 TB engine's
+    * timed window — the eager-diagnostic trap above), and a 100 TB engine's
     * declared form should be the shape that survives the deep decades.
     * The sf0.1 number IS the documented price. */
   def q97PrefixJoin(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     Dedup.verifiedJaccard(docs,
-      Dedup.prefixCandidates(docs, threshold = 0.5, guard = false),
+      Dedup.prefixCandidates(docs, threshold = 0.5),
       threshold = 0.5)
       .orderBy("id_a", "id_b")
   }

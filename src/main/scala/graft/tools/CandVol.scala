@@ -3,8 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
-import java.util.Locale
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.operators.{CoOccur, Dedup}
 
 /** Deterministic scale diagnostic for the WHOLE near-dup family: each
@@ -217,14 +216,13 @@ object CandVol {
 
   private def fmt(v: Double): String =
     if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
-    else String.format(Locale.ROOT, "%.3f", Double.box(v))
+    else Timing.fmt(v)
 
   def main(args: Array[String]): Unit = {
     val out = args.collectFirst { case a if a.startsWith("--out=") => a.drop(6) }
     val dirs = args.filterNot(_.startsWith("--")).toSeq
     require(dirs.nonEmpty, "usage: CandVol [--out=path.json] <dir> [dir...]")
-    val s = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "candvol")
+    val s = Timing.session("candvol")
     val perDir = dirs.map(d => d -> volumes(s, d))
     perDir.foreach { case (d, vs) =>
       println(s"$d " + vs.map { case (k, v) => s"$k=${fmt(v)}" }.mkString(" "))

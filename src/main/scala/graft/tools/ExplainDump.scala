@@ -23,26 +23,22 @@ object ExplainDump {
     require(args.length >= 3,
       "usage: ExplainDump <sfDir> <outDir> <suffix> [names]")
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val names: Seq[String] =
+    val queries = Timing.lookup(
       if (args.length > 3) args(3).split(",").toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted
+      else graft.SparkEntry.queries.keys.toSeq.sorted)
     val spark = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
-      val df = fn(spark, sfDir)
-      val txt = df.queryExecution.explainString(
+    queries.foreach { case (name, fn) =>
+      val txt = fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
       println(s"[explaindump] wrote $outDir/${name}_$suffix.txt (${txt.length} chars)")
       // free anything a query pinned at BUILD time (the dedup family's
       // verify checkpoints etc.) so successive dumps don't accumulate
       // blocks
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Timing.reset(spark)
     }
     spark.stop()
   }

@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
-import java.util.Locale
 
 /** Scaling-exponent measurement (VERDICT r3 "next round" #1): run the
   * pair-producing query family at two scales generated by [[GenScale]]
@@ -27,32 +26,21 @@ import java.util.Locale
   *   runMain graft.tools.ScaleBench <smallDir> <bigDir> <ratio> <outJson> [q,...]
   */
 object ScaleBench {
+  import Timing.{fmt, p50}
 
-  private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
-
-  /** The pair-producing family from the verdict, in measurement order. */
+  /** The pair-producing family from the verdict, in measurement order;
+    * q113 and q114 are the scale-safe forms of q40 and q36. */
   val Family: Seq[String] = Seq(
     "q34_ngram_jaccard", "q35_minhash_lsh", "q36_simhash_pairs",
     "q97_prefix_join", "q40_embed_neardup", "q44_dedup_clusters",
-    "q21_cosupply_pairs", "q68_pagerank", "q100_pipeline_e2e")
-
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private def p50(runs: Seq[Double]): Double = {
-    val s = runs.sorted
-    s((s.size - 1) / 2)
-  }
+    "q21_cosupply_pairs", "q68_pagerank", "q100_pipeline_e2e",
+    "q113_embed_neardup_adaptive", "q114_simhash_manku")
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: ScaleBench <smallDir> <bigDir> <ratio> <outJson> [q,...]")
     val (smallDir, bigDir, ratio, outJson) =
       (args(0), args(1), args(2).toDouble, args(3))
-    val family = if (args.length > 4) args(4).split(",").toSeq else Family
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val queries = Timing.lookup(if (args.length > 4) args(4).split(",").toSeq else Family)
     // Shuffle width: defaults to the core count (the era every
     // BENCH_SCALE_r* artifact through r08 was measured under). On a real
     // cluster shuffle partitions scale with the data; at the g100 decade
@@ -62,64 +50,18 @@ object ScaleBench {
     // SPARK_GRAFT_SHUFFLE_PARTS so per-partition shuffle volume stays
     // roughly constant across the two dirs; the value is recorded in the
     // output record ("parts") so eras never get compared blind.
-    val spark = graft.core.Sessions.local(cpus.toInt, "scalebench")
+    val spark = Timing.session("scalebench")
     val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions")
+    Timing.warmUp(spark)
 
-    // warm the machinery so JIT/codegen init isn't charged to the first query
-    spark.range(1000000).selectExpr("id % 97 AS k").groupBy("k").count().count()
-
-    // non-declared operators measured alongside the battery: the
-    // scale-adaptive near-dup (plane count grows with log n) vs q40's
-    // fixed-plane variant
-    val extras: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "adaptive_embed_neardup" -> ((s: SparkSession, d: String) =>
-        graft.operators.Dedup.embeddingNearDupAdaptive(
-          graft.core.Tables.embeddings(s, d), threshold = 0.9)),
-      // the simhash chunk-width dial at its Manku WWW'07 setting:
-      // maxDist=3 -> 4 chunks of 16 bits -> 65k buckets, the production
-      // configuration whose chance-collision term is n^2/2^16 instead of
-      // q36's n^2/2^5 (recall trade-off documented in the Dedup scaladoc)
-      "simhash_maxdist3" -> ((s: SparkSession, d: String) => {
-        val docs = graft.core.Tables.documents(s, d)
-        graft.operators.Dedup.verifiedJaccard(docs,
-          graft.operators.Dedup.simhashPairs(docs, maxDist = 3), threshold = 0.5)
-      }),
-      // q34's documented mitigation, measured: the hot-shingle df cap
-      // prunes stopword-trigram join keys before the candidate self-join
-      "ngram_dfcap" -> ((s: SparkSession, d: String) =>
-        graft.operators.Dedup.ngramJaccard(
-          graft.core.Tables.documents(s, d), n = 3, threshold = 0.5,
-          maxDocFreq = 200L)))
-    val queries = graft.SparkEntry.queries ++ extras
-    // an explicit family list means "measure exactly these" (the
-    // formerly-extra scale-safe variants are now declared queries:
-    // q113/q114); without one, the default family plus the extras run
-    val toRun =
-      if (args.length > 4) family
-      else family ++ extras.keys.filterNot(family.contains)
-    val results = toRun.filter(queries.contains).map { name =>
-      val fn = queries(name)
+    val results = queries.map { case (name, fn) =>
       // SAME run count and statistic on both sides: p50-of-3 each.
       // An asymmetric min-of-2 on the big side would systematically
       // deflate t_big — and with this VM's documented 17-70 s stalls,
       // bias every exponent optimistic.
-      // noop-sink materialization (Sessions.materialize): count() lets
-      // the optimizer prune work out of the timed plan
       def runAt(dir: String, n: Int): Seq[Double] =
         (1 to n).map { _ =>
-          val dt = time(graft.core.Sessions.materialize(fn(spark, dir)))
-          // outside the timed window: cache entries are keyed by logical
-          // plan, so without this a repeat run reuses the previous run's
-          // persisted verify intermediates and reports cache-read speed —
-          // at a decade leg that would measure cache-scan scaling, not
-          // compute scaling
-          spark.catalog.clearCache()
-          // Bench/TimeQuery parity (r9): localCheckpoint blocks live
-          // outside the CacheManager and accumulate across runs.
-          // BLOCKING (ADVICE r13): unpersist(false) returns before the
-          // blocks are gone, so removal of a 25-30 GB working set could
-          // overlap — and contend with — the NEXT timed run's I/O.
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+          val dt = Timing.run(spark)(fn(spark, dir)).get
           // Shuffle files are released by ContextCleaner only after the
           // driver GCs the ShuffleDependency objects; at deep decades a
           // 48-64g heap may not GC for several runs, so each run's
@@ -216,10 +158,11 @@ object ScaleBench {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       }
     }
-    def run(body: => Long): Double = {
-      val runs = (1 to 2).map(_ => time(body))
-      p50(runs)
-    }
+    def run(body: => Long): Double = p50((1 to 2).map { _ =>
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    })
     // row-count parity first (cheap, AQE on): salted == plain
     val nPlain = fact.join(dim, Seq("k")).count()
     val nSalted = graft.operators.SkewJoin.saltedInner(fact, dim, Seq("k")).count()

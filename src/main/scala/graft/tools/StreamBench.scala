@@ -1,12 +1,10 @@
 package graft.tools
 
-import java.util.Locale
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{Pin, Sessions}
+import graft.core.Pin
 import graft.streaming.EventStreams
 
 /** Streaming throughput/state evidence (VERDICT r4 #7): the functional
@@ -35,8 +33,7 @@ import graft.streaming.EventStreams
   * — prints one JSON line (saved as STREAM_r{N}.json by the round). */
 object StreamBench {
 
-  private def fmt(v: Double): String =
-    String.format(Locale.ROOT, "%.3f", Double.box(v))
+  import Timing.{fmt, p50}
 
   case class Metrics(rows: Long, seconds: Double, rowsPerSec: Double,
       peakStateRows: Long, finalStateRows: Long, stateBytes: Long,
@@ -206,8 +203,6 @@ object StreamBench {
     val batchSec = rs.map(r => r.ingestSec + r.dedupSec)
     val rows = docsPerBatch * rs.length
     val secs = batchSec.sum + rs.map(_.compactSec).sum
-    def p50(xs: Seq[Double]): Double =
-      if (xs.isEmpty) -1.0 else xs.sorted.apply((xs.size - 1) / 2)
     // growth statistic: p50 per-batch wall of the 2nd vs 1st half
     // (warm-up batches 0-1 excluded) — ~1.0 means flat per-batch cost
     val steady = batchSec.drop(2)
@@ -258,8 +253,7 @@ object StreamBench {
       val docsPerBatch = args.lift(1).map(_.toLong).getOrElse(2000L)
       val nBatches = args.lift(2).map(_.toInt).getOrElse(120)
       val compactEvery = args.lift(3).map(_.toInt).getOrElse(20)
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-streambench")
+      val spark = Timing.session("graft-streambench")
       val noCompact = incrementalDedupRun(spark, docsPerBatch, nBatches,
         compactEvery = 0, label = "longrun_nocompact")
       val withCompact = incrementalDedupRun(spark, docsPerBatch, nBatches,
@@ -274,8 +268,7 @@ object StreamBench {
     }
     val rowsPerBatch = args.headOption.map(_.toLong).getOrElse(200000L)
     val nBatches = args.lift(1).map(_.toInt).getOrElse(25)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-streambench")
+    val spark = Timing.session("graft-streambench")
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       (nBatches + 10).toString)
     EventStreams.rocksDbStateStoreConf.foreach { case (k, v) => spark.conf.set(k, v) }

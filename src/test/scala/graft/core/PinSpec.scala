@@ -63,12 +63,11 @@ class PinSpec extends SparkSpec {
     assert(ids.nonEmpty)
     Pin.free(freed)
     assert(ids.intersect(sc.getPersistentRDDs.keySet).isEmpty)
-    // TimeQuery/ScaleBench/Bench sweep every persistent RDD between runs;
-    // the pinned frame's LogicalRDD is a copy over the same RDD, so the
-    // sweep reaches its blocks too
+    // the timing tools reset between runs by sweeping every persistent
+    // RDD; the pinned frame's LogicalRDD is a copy over the same RDD, so
+    // the sweep reaches its blocks too
     val (_, sweptIds) = pinnedIds(Pin(smallCutOfBigJoin()))
-    sc.getPersistentRDDs.filter { case (id, _) => sweptIds(id) }
-      .values.foreach(_.unpersist(true))
+    graft.tools.Timing.reset(spark)
     assert(sweptIds.forall(id => StorageBridge.storedBytes(id) == 0))
   }
 

@@ -728,12 +728,11 @@ class DedupSpec extends SparkSpec {
     val diverse = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     assert(Dedup.prefixFilterWarning(diverse).isEmpty,
       "realistic corpus must not trigger the guard")
-    // the guard is diagnostic only: candidates identical with and without
-    val withGuard = Dedup.prefixCandidates(uniform, threshold = 0.5)
-      .as[(Long, Long)].collect().toSet
-    val without = Dedup.prefixCandidates(uniform, threshold = 0.5, guard = false)
-      .as[(Long, Long)].collect().toSet
-    assert(withGuard == without)
+    // the guard is a separate call: building the candidates runs no job,
+    // so a text column that throws when evaluated is never read
+    val poisoned = uniform.select(col("doc_id"),
+      raise_error(lit("text evaluated")).cast("string").as("text"))
+    Dedup.prefixCandidates(poisoned, threshold = 0.5)
   }
 
   test("incrementalNearDup: priorities, blame ids, and degenerate frames") {

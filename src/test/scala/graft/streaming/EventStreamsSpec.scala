@@ -467,6 +467,31 @@ class EventStreamsSpec extends SparkSpec {
     assert(got == want, "streaming tumbling output must equal batch q25 at sf0.1")
   }
 
+  test("streaming sliding averages equal batch q26 on the sf0.1 fixture") {
+    implicit val sqlCtx = spark.sqlContext
+    val fixture = sf01Events
+    val mem = MemoryStream[Event]
+    val q = EventStreams.slidingAvg(mem.toDF(), watermark = "0 seconds")
+      .writeStream.outputMode("append").format("memory").queryName("sliding_sf01")
+      .start()
+    tsChunks(fixture, 10).foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+    // the flush row's own windows end after the advanced watermark, so
+    // they stay open and never reach the sink
+    val last = fixture.last.ts.getTime
+    mem.addData(Event(-1, new Timestamp(last + 24L * 3600 * 1000), -9, "__flush", 0.0))
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.table("sliding_sf01")
+      .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+        col("n"), col("avg_value"))
+      .orderBy("window_start")
+      .as[(String, Long, Double)].collect().toSeq
+    val want = graft.queries.Relational.q26Sliding(spark, "/root/testdata/sf0.1")
+      .as[(String, Long, Double)].collect().toSeq
+    assert(got.size == want.size, s"${got.size} windows vs batch ${want.size}")
+    assert(got == want, "streaming sliding output must equal batch q26 at sf0.1")
+  }
+
   test("streaming sessionize equals batch q27 on the sf0.1 fixture") {
     implicit val sqlCtx = spark.sqlContext
     val fixture = sf01Events

@@ -1,36 +1,5 @@
 #!/usr/bin/env bash
-# Run graft.Bench on a plain JVM so the bare JSON line is the GENUINE last
-# line of stdout. Two rounds of the driver seeing "parsed": null came from
-# sbt wrapping stdout as "[info] {...}" with a "[success]" line after it —
-# exec'ing java directly removes sbt from the stdout path entirely.
-#
+# graft.Bench on run.sh's plain JVM, so the bare JSON is the last stdout
+# line (sbt would wrap it as "[info] {...}"); also writes bench_out.json.
 # Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 tools/bench.sh
-# Also writes bench_out.json to the repo root as a fallback artifact.
-set -euo pipefail
-cd "$(dirname "$0")/.."
-
-CLASSES=target/scala-2.13/classes
-# Compile (quietly, stderr only) if the classes dir is missing or stale.
-if [ ! -d "$CLASSES" ] || [ -n "$(find src/main -name '*.scala' -newer "$CLASSES" -print -quit 2>/dev/null)" ]; then
-  sbt -error compile 1>&2
-fi
-
-# JDK17 module opens: same list as build.sbt / spark-submit injects.
-ADD_OPENS=(
-  java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect
-  java.base/java.io java.base/java.net java.base/java.nio
-  java.base/java.util java.base/java.util.concurrent
-  java.base/java.util.concurrent.atomic
-  java.base/sun.nio.ch java.base/sun.nio.cs
-  java.base/sun.security.action java.base/sun.util.calendar
-)
-OPENS_ARGS=()
-for p in "${ADD_OPENS[@]}"; do OPENS_ARGS+=(--add-opens "$p=ALL-UNNAMED"); done
-
-exec java \
-  "${OPENS_ARGS[@]}" \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.Bench "$@"
+exec "$(dirname "$0")/run.sh" graft.Bench "$@"

@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
-# Run any graft main on a plain JVM (same classpath/opens recipe as
-# bench.sh): tools/run.sh <MainClass> [args...]. Avoids sbt's stdout
-# wrapping and its project lock, so tool mains (TimeQuery, ExplainDump,
-# ScaleBench, CandVol, StreamBench, GenScale) can run while another sbt
-# task is active.
+# Run any graft main on a plain JVM: tools/run.sh <MainClass> [args...].
+# The one launch recipe in tools/ (bench.sh execs it). Avoids sbt's stdout
+# wrapping and its project lock, so graft.Bench and the tool mains
+# (TimeQuery, ExplainDump, ScaleBench, CandVol, StreamBench, GenScale)
+# can run while another sbt task is active.
 #
 # Usage: SPARK_DRIVER_MEM=24g tools/run.sh graft.tools.TimeQuery <dir> <q>
 set -euo pipefail
@@ -13,7 +13,10 @@ CLASSES=target/scala-2.13/classes
 # Staleness sentinel (ADVICE r6): the classes DIRECTORY mtime only moves
 # when a direct child is added/removed, not when nested .class files are
 # recompiled — compare sources against the newest .class file instead.
-NEWEST_CLASS="$(find "$CLASSES" -name '*.class' -printf '%T@ %p\n' 2>/dev/null | sort -rn | head -1 | cut -d' ' -f2-)"
+# awk reads the whole listing: `sort | head -1` under pipefail exited 141
+# whenever head closed the pipe before sort finished writing.
+NEWEST_CLASS="$( { find "$CLASSES" -name '*.class' -printf '%T@ %p\n' 2>/dev/null || true; } |
+  awk '$1 > m { m = $1; p = substr($0, index($0, " ") + 1) } END { print p }')"
 if [ -z "$NEWEST_CLASS" ] || [ -n "$(find src/main -name '*.scala' -newer "$NEWEST_CLASS" -print -quit 2>/dev/null)" ]; then
   sbt -error compile 1>&2
 fi
