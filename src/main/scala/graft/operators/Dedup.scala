@@ -58,8 +58,13 @@ object Dedup {
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxDocFreq: Long): DataFrame =
     CoOccur.dropHotKeys(docs.select(col(idCol).as("id"),
-      explode(array_distinct(T.shingles(col(textCol), n))).as("shingle")),
+      explode(distinctShingles(textCol, n)).as("shingle")),
       Seq("shingle"), maxDocFreq)
+
+  /** A row's distinct `n`-token shingles as one array: the per-row
+    * deduplication every shingle frame here starts from. */
+  private def distinctShingles(textCol: String, n: Int): Column =
+    array_distinct(T.shingles(col(textCol), n))
 
   /** Candidate overlap shared by [[ngramJaccard]] and
     * [[ngramContainment]]: every doc pair sharing >= 1 distinct shingle
@@ -121,7 +126,7 @@ object Dedup {
   def spanDupStats(docs: DataFrame, windowTokens: Int = 8,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val w = docs.select(col(idCol).as("id"),
-      explode(array_distinct(T.shingles(col(textCol), windowTokens))).as("w"))
+      explode(distinctShingles(textCol, windowTokens)).as("w"))
     // nd = number of distinct docs containing the window ((id, w) is
     // already distinct, so a plain count is a distinct-doc count)
     val docFreq = w.groupBy("w").agg(count(lit(1)).as("nd"))
@@ -1131,7 +1136,7 @@ object Dedup {
     // one row per candidate doc: its distinct shingle set as an array
     // (a doc without shingles can share none, so it is dropped)
     val sh = Pin(rowsWhere(needed.select(col(idCol).as("id"),
-      array_distinct(T.shingles(col(textCol), n)).as("sh")), size(col("sh")) > 0))
+      distinctShingles(textCol, n).as("sh")), size(col("sh")) > 0))
     // |A∩B| by string equality on the two arrays: exact, and no
     // (pair × shingle) rows or pair group-by. Zero-overlap pairs are
     // dropped: like [[ngramJaccard]], the output holds only pairs that
@@ -1162,16 +1167,17 @@ object Dedup {
     * rare-shingle prefixes are near-disjoint, so the candidate join
     * stays sparse — the df-ascending order is precisely what makes the
     * join keys unpopular. Scale notes: the df table is
-    * shingle-vocabulary-sized; ranking is a per-doc window (one shuffle
-    * on doc id); the candidate join inherits ngramJaccard's hot-key
-    * exposure ONLY for shingles that land in many prefixes, which the
-    * ordering makes rare by construction. Measured (BENCH_SCALE_r04):
-    * exponent 0.60 on a Heaps-vocabulary corpus; 1.08 on the degenerate
-    * fixed-vocabulary corpus (the positional first-meeting bound prunes
-    * even there) — and where the corpus is too uniform for any exact
-    * prefix bound, [[minhashLsh]] + [[verifiedJaccard]] (measured 0.44
-    * on the same corpus) is the at-scale substitute with identical
-    * exact output.
+    * shingle-vocabulary-sized; only shareable rows (df >= 2) move — the
+    * per-doc rank window shuffles them on doc id, and a doc's singletons
+    * are only counted ([[prefixKeys]]); the candidate join inherits
+    * ngramJaccard's hot-key exposure ONLY for shingles that land in many
+    * prefixes, which the ordering makes rare by construction. Measured
+    * (BENCH_SCALE_r04): exponent 0.60 on a Heaps-vocabulary corpus; 1.08
+    * on the degenerate fixed-vocabulary corpus (the positional
+    * first-meeting bound prunes even there) — and where the corpus is
+    * too uniform for any exact prefix bound, [[minhashLsh]] +
+    * [[verifiedJaccard]] (measured 0.44 on the same corpus) is the
+    * at-scale substitute with identical exact output.
     *
     * Output: (id_a, id_b) candidates — a provable superset of the
     * >= t pairs; verify with [[verifiedJaccard]] to make it exact.
@@ -1206,25 +1212,52 @@ object Dedup {
   }
 
   /** Prefix join keys of [[prefixCandidates]] — (id, shingle, rk, n_sh),
-    * one row per shingle that survives the df-ascending prefix cut.
-    * Factored out so [[graft.tools.CandVol]] measures the exact join
-    * keys the operator shuffles. The downstream verifier
-    * ([[verifiedJaccard]] and the q34/q97 oracles) qualifies pairs by
-    * round(J, 4) >= t, which admits true J down to t - 5e-5; candidate
-    * pruning must therefore guarantee recall for the EFFECTIVE threshold
-    * t - 5e-5, not t — otherwise a pair with true J in [t - 5e-5, t)
-    * passes the verifier but could be pruned here. (The 1e-9 only guards
-    * FP ceil, not rounding.) */
+    * one row per SHAREABLE shingle (df >= 2) that survives the
+    * df-ascending prefix cut. `rk` is the shingle's 1-based rank in its
+    * doc's full (df, shingle) order and `n_sh` the doc's distinct-shingle
+    * count; both count the doc's singletons (df = 1), which are never
+    * rows here. A shingle only one doc holds can never be a join key, so
+    * it is counted, not moved: `n_sh` is the size of the row's distinct
+    * shingle array, taken before the explode, and because a doc's
+    * singletons rank first in df-ascending order, a shareable row's rank
+    * is n_sh − (the doc's shareable count) + its rank among its doc's
+    * shareable rows. The per-doc rank exchange thus carries only
+    * shareable rows (a GenScale realistic corpus of 500 docs: 8,666 of
+    * 27,262, 0.13 of 0.41 MB), and a doc whose whole prefix is singletons
+    * emits no row. Factored out so [[graft.tools.CandVol]] measures the
+    * exact join keys the operator shuffles; a singleton row would add
+    * C(1, 2) = 0 pairs there.
+    *
+    * Recall: the downstream verifier ([[verifiedJaccard]] and the
+    * q34/q97 oracles) qualifies pairs by round(J, 4) >= t, which admits
+    * true J down to t - 5e-5; candidate pruning must therefore guarantee
+    * recall for the EFFECTIVE threshold t - 5e-5, not t — otherwise a
+    * pair with true J in [t - 5e-5, t) passes the verifier but could be
+    * pruned here. (The 1e-9 only guards FP ceil, not rounding.)
+    * PRECONDITION, as [[shingleOverlap]]: `idCol` values are unique. */
   private[graft] def prefixKeys(docs: DataFrame, threshold: Double,
       n: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val tEff = threshold - 5e-5
-    val sh = docShingles(docs, idCol, textCol, n, 0L)
-    val dfs = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    // n_sh is taken from the array before the explode; rowsWhere keeps
+    // the explode's inferred size(sh) > 0 filter from being pushed below
+    // the projection, where it would shingle every doc a second time
+    val sh = rowsWhere(docs.select(col(idCol).as("id"),
+      distinctShingles(textCol, n).as("sh"))
+      .withColumn("n_sh", size(col("sh")).cast("long")), col("n_sh") > 0)
+      .select(col("id"), col("n_sh"), explode(col("sh")).as("shingle"))
+    // df is counted over docShingles, not `sh`: counted over `sh` its size
+    // estimate exceeds the exploded side's, and the planner broadcasts
+    // the exploded docs instead of the df table
+    val shareable = docShingles(docs, idCol, textCol, n, 0L)
+      .groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2)
     val byDoc = Window.partitionBy("id")
-    sh.join(dfs, Seq("shingle"))
+    // the ordered window first: its sort on (id, df, shingle) also
+    // serves the per-doc count, so the exchanged rows are sorted once
+    sh.join(shareable, Seq("shingle"))
       .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("shingle"))))
-      .withColumn("n_sh", count(lit(1)).over(byDoc))
+      .withColumn("rk", (col("n_sh") - count(lit(1)).over(byDoc) + col("rk")).cast("int"))
       .filter(col("rk") <= col("n_sh") - ceil(lit(tEff) * col("n_sh") - lit(1e-9)) + lit(1))
       .select("id", "shingle", "rk", "n_sh")
   }

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.core.{Pin, Tables}
 import graft.functions.{TextFunctions => T}
 import graft.operators.{CoOccur, DataQuality, PageRank, Triangles}
@@ -135,19 +136,28 @@ object AnalyticsQueries {
 
   /** Frequency-ranked vocabulary over the document corpus: token ->
     * (freq, id), id dense from 1 in (freq desc, token) order — the
-    * "build the tokenizer vocab" step. The corpus-scale work is one
-    * explode + count aggregation (map-side combinable); the global
-    * row_number window then ranks only |vocab| rows, which Heaps' law
-    * keeps orders of magnitude below corpus size (Web-scale corpora:
-    * ~10^6-10^7 types vs 10^12 tokens), so the single-partition window
-    * is dictionary-scale, same as q11's documented rank. */
+    * "build the tokenizer vocab" step. See [[vocabIds]]. */
   def q69Vocab(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+    vocabIds(s, d).orderBy("id")
+
+  /** [[q69Vocab]]'s rows, unordered. The corpus-scale work is one explode
+    * + count aggregation (map-side combinable). The ids are ranked
+    * distributed: the vocabulary is range-sorted on (freq desc, token),
+    * a total order since tokens are unique, and `zipWithIndex` numbers
+    * each sorted partition from the sizes of the partitions before it. A
+    * global `row_number()` window, the earlier form, ranked the whole
+    * vocabulary in one task. Building the frame runs the sort and a
+    * partition-size job; the final plan reads the numbered rows. */
+  private def vocabIds(s: SparkSession, d: String): DataFrame = {
+    val sorted = Tables.documents(s, d)
       .select(explode(T.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("freq"))
-      .withColumn("id",
-        row_number().over(Window.orderBy(col("freq").desc, col("token"))))
-      .orderBy("id")
+      .orderBy(col("freq").desc, col("token"))
+    val numbered = sorted.rdd.zipWithIndex.map { case (r, i) =>
+      Row(r.getString(0), r.getLong(1), Math.toIntExact(i + 1))
+    }
+    s.createDataFrame(numbered, sorted.schema.add("id", IntegerType, nullable = false))
+  }
 
   /** Token-id encoding: each document's first [[EncodePrefix]] tokens
     * mapped through the [[q69Vocab]] dictionary, emitted as a
@@ -156,7 +166,7 @@ object AnalyticsQueries {
     * never shuffle for the lookup; per-doc order is restored by sorting
     * the collected (pos, id) structs, not by assuming shuffle order. */
   def q70Encode(s: SparkSession, d: String): DataFrame = {
-    val vocab = q69Vocab(s, d).select("token", "id")
+    val vocab = vocabIds(s, d).select("token", "id")
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
         posexplode(slice(T.tokens(col("text")), 1, EncodePrefix)))

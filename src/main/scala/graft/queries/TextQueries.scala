@@ -241,6 +241,12 @@ object TextQueries {
     * exact all-pairs Jaccard, so the hash-match is simultaneously a
     * correctness proof of the prefix bound on this corpus.
     *
+    * Of those prefix shingles only the shareable ones (df >= 2) are
+    * ranked and moved: a shingle one doc holds is counted into its doc's
+    * size and rank offset, never exchanged ([[Dedup.prefixKeys]]). On a
+    * 500-doc realistic corpus that cut the query's shuffle writes from
+    * 0.74 to 0.46 MB, with the same candidates.
+    *
     * `prefixCandidates` runs no diagnostic job: an eager df check at
     * construction would run inside any timed window and the lazy plan
     * would then repeat its work (measured 3.8 s → 12.9 s p50 at sf0.1 in

@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.{ListenerBusDrain, ShuffleBytes}
+import org.apache.spark.ShuffleBytes
 import org.apache.spark.sql.{CachedEntries, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -16,6 +16,7 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.core.Pin
@@ -513,13 +514,13 @@ class ArxivPipelineSpec extends SparkSpec {
       def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = writes.add(qe.executedPlan)
       def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    ListenerBusDrain(spark.sparkContext)
+    ListenerBridge.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try (1 to 4).foreach { _ =>
       author.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(author, true)
       pipe.run(dir, enricher, journals, firstNames)
     } finally {
-      ListenerBusDrain(spark.sparkContext)
+      ListenerBridge.drain(spark.sparkContext)
       spark.listenerManager.unregister(listener)
     }
     def writesAuthor(p: SparkPlan) = p.exists {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
@@ -805,6 +806,82 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Prefix keys in the full-window form: every (id, shingle) row
+    * ranked by (df, shingle) in its doc and cut to the df-ascending
+    * prefix, singletons included — the reference [[Dedup.prefixKeys]]'
+    * shareable-rows-only form is checked against. (id, shingle, rk,
+    * n_sh, df); `cut = false` keeps every ranked row. */
+  private def fullWindowPrefixKeys(corpus: DataFrame, threshold: Double,
+      cut: Boolean = true): DataFrame = {
+    val tEff = threshold - 5e-5
+    val sh = corpus.select(col("doc_id").as("id"), explode(array_distinct(
+      graft.functions.TextFunctions.shingles(col("text"), 3))).as("shingle"))
+    val dfs = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("id")
+    val ranked = sh.join(dfs, Seq("shingle"))
+      .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("shingle"))))
+      .withColumn("n_sh", count(lit(1)).over(byDoc))
+    (if (cut) ranked.filter(col("rk") <=
+      col("n_sh") - ceil(lit(tEff) * col("n_sh") - lit(1e-9)) + lit(1)) else ranked)
+      .select("id", "shingle", "rk", "n_sh", "df")
+  }
+
+  // singletons beside shared shingles, in-doc repeats (docs 0 and 1), a
+  // doc whose every prefix shingle is a singleton (2: nine unique
+  // trigrams, then one shared), a doc too short for a trigram (3) and a
+  // near-dup pair (5/6, so that even t = 0.8 prefixes hold shared rows;
+  // doc 5 has no singleton at all)
+  private lazy val prefixCorpus = Seq(
+    (0L, "alpha beta gamma alpha beta gamma delta epsilon zeta eta"),
+    (1L, "alpha beta gamma delta epsilon zeta theta iota alpha beta gamma"),
+    (2L, "u1 u2 u3 u4 u5 u6 u7 u8 u9 alpha beta gamma"),
+    (3L, "too short"),
+    (4L, "beta gamma delta epsilon zeta kappa lambda mu"),
+    (5L, "kappa lambda mu nu xi omicron delta epsilon zeta"),
+    (6L, "kappa lambda mu nu xi omicron delta epsilon eta"),
+  ).toDF("doc_id", "text")
+
+  test("prefix keys are the full-window prefix rows whose shingle two docs share") {
+    val keysSchema = Dedup.prefixKeys(prefixCorpus, threshold = 0.5).schema
+    assert(keysSchema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("id" -> "bigint", "shingle" -> "string", "rk" -> "int", "n_sh" -> "bigint"))
+    for (t <- Seq(0.2, 0.5, 0.8)) {
+      val ref = fullWindowPrefixKeys(prefixCorpus, t)
+      val want = ref.filter(col("df") >= 2).drop("df")
+        .as[(Long, String, Int, Long)].collect().toSet
+      val got = Dedup.prefixKeys(prefixCorpus, threshold = t)
+        .as[(Long, String, Int, Long)].collect().toSet
+      assert(got == want, s"t=$t: missing ${want -- got}, extra ${got -- want}")
+      // the corpus exercises what it claims: doc 2 has a prefix, all of
+      // it singletons, and the cut drops singleton rows elsewhere too
+      val refIds = ref.filter(col("df") === 1).select("id").as[Long].collect().toSet
+      assert(ref.filter(col("id") === 2L).count() > 0 && !got.exists(_._1 == 2L),
+        s"t=$t: doc 2's all-singleton prefix must emit no row")
+      assert((refIds - 2L).nonEmpty, s"t=$t: no other doc has a singleton prefix row")
+      assert(got.nonEmpty && !got.exists(_._1 == 3L))
+    }
+  }
+
+  test("prefix keys' rank exchange carries exactly the shareable rows") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val keys = Dedup.prefixKeys(prefixCorpus, threshold = 0.5)
+    keys.collect()
+    val byId = new AdaptiveSparkPlanHelper {}.collect(keys.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "id"
+        case _ => false
+      }) => e.metrics("shuffleRecordsWritten").value
+    }
+    val all = fullWindowPrefixKeys(prefixCorpus, 0.5, cut = false)
+    val shareable = all.filter(col("df") >= 2).count()
+    assert(shareable > 0 && shareable < all.count())
+    assert(byId == Seq(shareable),
+      s"exchanges on id wrote $byId records; want one of $shareable of ${all.count()} rows")
+  }
+
   test("q35 and q97 never shuffle the corpus text (the pinned candidate ids broadcast)") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -832,11 +909,11 @@ class DedupSpec extends SparkSpec {
           plans.add(qe.executedPlan)
         def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
       }
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      ListenerBridge.drain(spark.sparkContext)
       spark.listenerManager.register(listener)
       val rows = try {
         val n = q().collect().length
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        ListenerBridge.drain(spark.sparkContext)
         n
       } finally spark.listenerManager.unregister(listener)
       assert(rows > 0, s"$name found no pairs")

@@ -7,13 +7,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{ListenerBusDrain, ShuffleBytes}
+import org.apache.spark.ShuffleBytes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -322,7 +323,7 @@ class IncrementalDedupStreamSpec extends SparkSpec with AdaptiveSparkPlanHelper 
         plans.add(qe.executedPlan)
       def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    ListenerBusDrain(spark.sparkContext)
+    ListenerBridge.drain(spark.sparkContext)
     spark.listenerManager.register(queries)
     try {
       val (bytes, _) = ShuffleBytes(spark.sparkContext)(body)

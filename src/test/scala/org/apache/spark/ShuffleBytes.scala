@@ -3,6 +3,7 @@ package org.apache.spark
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Shuffle bytes written by the tasks of one block of work, for specs
   * that bound what a plan moves. */
@@ -17,11 +18,11 @@ object ShuffleBytes {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
-    ListenerBusDrain(sc)
+    ListenerBridge.drain(sc)
     sc.addSparkListener(tasks)
     try {
       val out = body
-      ListenerBusDrain(sc)
+      ListenerBridge.drain(sc)
       (bytes.get, out)
     } finally sc.removeSparkListener(tasks)
   }

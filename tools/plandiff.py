@@ -7,7 +7,8 @@ Each directory holds `<query>_<suffix>.txt` files written by
 `tools/run.sh graft.tools.ExplainDump <sfDir> <dir> <suffix>`; the suffix
 may differ between the two directories. Before comparing, the run-specific
 parts of a plan are normalized away: expression ids (`#123`), `plan_id=N`,
-object hashes (`@1a2b3c`), RDD ids and lambda class names. Prints one line
+object hashes (`@1a2b3c`), RDD ids, lambda class names and the source
+line of an RDD's call site (`at AnalyticsQueries.scala:159`). Prints one line
 per query, `identical` or `differs` (with `-v`, a unified diff of the
 normalized plans follows each `differs`), and a summary line. Queries
 present on one side only are reported as `missing in A|B`.
@@ -33,6 +34,7 @@ _RULES = [
     (re.compile(r"@[0-9a-f]{4,}\b"), "@"),
     (re.compile(r"\$\$?Lambda[$/][\w$./]*"), "$Lambda"),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\.scala:\d+"), ".scala:"),
 ]
 
 
