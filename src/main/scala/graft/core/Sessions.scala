@@ -3,11 +3,10 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: tests, Verify, Bench and the tool
-  * mains build their session here (GenScale, the benchmark's corpus
-  * generator, keeps its own), so tests behave like the Verify and Bench
-  * runs: UTC session time zone (oracle parity), AQE on (runtime re-plan
-  * / skew handling at scale), shuffle partitions sized to the local core
-  * count rather than the 200 default.
+  * mains build their session here, so tests behave like the Verify and
+  * Bench runs: UTC session time zone (oracle parity), AQE on (runtime
+  * re-plan / skew handling at scale), shuffle partitions sized to the
+  * local core count rather than the 200 default.
   */
 object Sessions {
 

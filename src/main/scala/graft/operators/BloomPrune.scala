@@ -53,16 +53,20 @@ object BloomPrune {
 
   /** Exact semi-join with a bloom-pruned shuffle: semantically identical
     * to `big.join(small, keys, "left_semi")`, but the big side is cut to
-    * bloom survivors before any exchange. `expectedItems` sizes the
-    * sketch — overestimate freely (bits are cheap: 0.01 fpp ≈ 1.2 MB per
-    * million keys). */
+    * bloom survivors before any exchange. The sketch is sized from the
+    * data — one counting job over the small side's non-null keys, then a
+    * filter for that many items at 0.01 fpp (≈ 1.2 MB per million keys) —
+    * so it neither saturates nor inlines a mostly-empty literal into the
+    * plan. */
   def semiJoin(big: DataFrame, small: DataFrame,
-      bigKey: String, smallKey: String,
-      expectedItems: Long, fpp: Double = 0.01): DataFrame =
-    keyFilterBytes(small.select(smallKey), smallKey, expectedItems, fpp) match {
+      bigKey: String, smallKey: String): DataFrame = {
+    val keys = small.select(smallKey)
+    val nKeys = keys.agg(count(col(smallKey))).head().getLong(0)
+    keyFilterBytes(keys, smallKey, nKeys) match {
       case None => big.limit(0) // no keys — a semi-join matches nothing
       case Some(bytes) =>
         big.filter(mightContain(bytes, col(bigKey)))
           .join(small.select(col(smallKey).as(bigKey)).distinct(), Seq(bigKey), "left_semi")
     }
+  }
 }

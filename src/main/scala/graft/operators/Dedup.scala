@@ -28,15 +28,22 @@ import graft.functions.{MinHashFn, SimHash, SimHashFn, TextFunctions => T,
   */
 object Dedup {
 
+  // the documents and embeddings schemas (FIXTURES.md)
+  private val DocId = "doc_id"
+  private val Text = "text"
+  private val VecId = "vec_id"
+  private val Vec = "embedding"
+
   /** Exact dedup: group by content fingerprint, keep the smallest id. */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), T.contentFingerprint(col(textCol)).as("fp"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.select(col(DocId), T.contentFingerprint(col(Text)).as("fp"))
       .groupBy("fp")
-      .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_copies"))
+      .agg(min(DocId).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** Distinct (id, shingle) pairs with hot-shingle pruning
     * ([[CoOccur.dropHotKeys]] on the shingle, `maxDocFreq <= 0` keeps
-    * every shingle).
+    * every shingle). [[graft.tools.CandVol]] reads it uncapped for the
+    * q34-family volumes.
     *
     * Deduplication is PER-ROW (`array_distinct` before the explode),
     * not a frame-level `distinct()`: ids are unique, so the global
@@ -55,30 +62,28 @@ object Dedup {
     * (BENCH_SCALE_r13_shform2: q34 sf0.1 3.00 vs 2.98 s, g10 46.71 vs
     * 47.54 s; q44 sf0.1 4.55 vs 4.61 s, g10 45.17 vs 46.88 s), and on a
     * tie the form with no corpus-sized block store wins. */
-  private def docShingles(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, maxDocFreq: Long): DataFrame =
-    CoOccur.dropHotKeys(docs.select(col(idCol).as("id"),
-      explode(distinctShingles(textCol, n)).as("shingle")),
+  private[graft] def docShingles(docs: DataFrame, n: Int, maxDocFreq: Long): DataFrame =
+    CoOccur.dropHotKeys(docs.select(col(DocId).as("id"),
+      explode(distinctShingles(n)).as("shingle")),
       Seq("shingle"), maxDocFreq)
 
   /** A row's distinct `n`-token shingles as one array: the per-row
     * deduplication every shingle frame here starts from. */
-  private def distinctShingles(textCol: String, n: Int): Column =
-    array_distinct(T.shingles(col(textCol), n))
+  private def distinctShingles(n: Int): Column =
+    array_distinct(T.shingles(col(Text), n))
 
   /** Candidate overlap shared by [[ngramJaccard]] and
     * [[ngramContainment]]: every doc pair sharing >= 1 distinct shingle
     * (after the hot-shingle cap), as (id_a < id_b, n_common, sa, sb) with
-    * sa/sb each doc's distinct-shingle count. PRECONDITION: `idCol`
+    * sa/sb each doc's distinct-shingle count. PRECONDITION: `doc_id`
     * values are unique. The per-row `array_distinct` frame equals the
     * frame-level distinct ONLY then (DedupSpec pins it against a
     * frame-level distinct reference on a corpus with in-doc repeats); a
     * caller feeding duplicate ids would silently inflate df and n_sh
     * instead of deduping. Every repo caller passes a primary-key
     * doc_id. */
-  private def shingleOverlap(docs: DataFrame, n: Int, idCol: String,
-      textCol: String, maxDocFreq: Long): DataFrame = {
-    val sh = docShingles(docs, idCol, textCol, n, maxDocFreq)
+  private def shingleOverlap(docs: DataFrame, n: Int, maxDocFreq: Long): DataFrame = {
+    val sh = docShingles(docs, n, maxDocFreq)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     CoOccur.bucketPairs(sh, Seq("shingle"), "id")
       .groupBy("id_a", "id_b")
@@ -89,12 +94,11 @@ object Dedup {
 
   /** Pairwise n-gram Jaccard >= threshold among docs sharing >= 1 shingle.
     * Output: id_a < id_b, n_common, jaccard. `maxDocFreq` is the
-    * hot-shingle cap ([[CoOccur.dropHotKeys]]); `idCol` must be unique
+    * hot-shingle cap ([[CoOccur.dropHotKeys]]); `doc_id` must be unique
     * ([[shingleOverlap]]). */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.2,
-      idCol: String = "doc_id", textCol: String = "text",
       maxDocFreq: Long = 0L): DataFrame =
-    shingleOverlap(docs, n, idCol, textCol, maxDocFreq)
+    shingleOverlap(docs, n, maxDocFreq)
       .withColumn("jaccard",
         round(col("n_common") / (col("sa") + col("sb") - col("n_common")), 4))
       .filter(col("jaccard") >= threshold)
@@ -115,7 +119,7 @@ object Dedup {
     * self-join). That makes per-doc span stats the dedup diagnostic that
     * still runs on the full corpus when pair enumeration can't.
     *
-    * Output: (idCol, n_windows, n_dup_windows, dup_ratio), one row per
+    * Output: (doc_id, n_windows, n_dup_windows, dup_ratio), one row per
     * input doc; docs shorter than `windowTokens` tokens report 0/0/0.0.
     *
     * The window frame is read twice (df aggregate + join side) and
@@ -123,10 +127,9 @@ object Dedup {
     * (BENCH_SCALE_r13_census, sf0.1 interleaved, 3 runs: floors rescan
     * 1.30 s vs pin 1.31 s), and the rescan keeps no corpus-sized block
     * store. */
-  def spanDupStats(docs: DataFrame, windowTokens: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val w = docs.select(col(idCol).as("id"),
-      explode(distinctShingles(textCol, windowTokens)).as("w"))
+  def spanDupStats(docs: DataFrame, windowTokens: Int = 8): DataFrame = {
+    val w = docs.select(col(DocId).as("id"),
+      explode(distinctShingles(windowTokens)).as("w"))
     // nd = number of distinct docs containing the window ((id, w) is
     // already distinct, so a plain count is a distinct-doc count)
     val docFreq = w.groupBy("w").agg(count(lit(1)).as("nd"))
@@ -134,9 +137,9 @@ object Dedup {
       .groupBy("id")
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup_windows"))
-    docs.select(col(idCol).as("id"))
+    docs.select(col(DocId).as("id"))
       .join(perDoc, Seq("id"), "left")
-      .select(col("id").as(idCol),
+      .select(col("id").as(DocId),
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
         coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
         when(coalesce(col("n_windows"), lit(0L)) === 0, lit(0.0))
@@ -150,13 +153,12 @@ object Dedup {
     * a larger one, which Jaccard structurally misses: J = |∩|/|∪| decays
     * toward 0 as the larger doc grows even when the smaller doc is
     * copied verbatim, while containment stays 1. Same candidate
-    * machinery, hot-shingle bound and unique-`idCol` precondition as
+    * machinery, hot-shingle bound and unique-`doc_id` precondition as
     * [[ngramJaccard]]; only the normalizer differs.
     * Output: id_a < id_b, n_common, containment. */
   def ngramContainment(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text",
       maxDocFreq: Long = 0L): DataFrame =
-    shingleOverlap(docs, n, idCol, textCol, maxDocFreq)
+    shingleOverlap(docs, n, maxDocFreq)
       .withColumn("containment",
         round(col("n_common") / least(col("sa"), col("sb")).cast("double"), 4))
       .filter(col("containment") >= threshold)
@@ -170,15 +172,14 @@ object Dedup {
     * shingle instead of k string passes. A doc with no shingles (null
     * text, fewer than `n` tokens) gets no row.
     *
-    * PRECONDITION: `idCol` values are unique. The signature is per row,
+    * PRECONDITION: `doc_id` values are unique. The signature is per row,
     * so two rows sharing an id get two rows here (the earlier group-by
     * form silently merged them into one signature over both texts).
     * Every repo caller passes a primary-key doc_id.
     * Output: id, sig array<long> of length k. */
-  def minhashSignatures(docs: DataFrame, k: Int = 16, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    rowsWhere(docs.select(col(idCol).as("id"),
-      MinHashFn.minhash(T.shingles(col(textCol), n), k).as("sig")), col("sig").isNotNull)
+  def minhashSignatures(docs: DataFrame, k: Int = 16, n: Int = 3): DataFrame =
+    rowsWhere(docs.select(col(DocId).as("id"),
+      MinHashFn.minhash(T.shingles(col(Text), n), k).as("sig")), col("sig").isNotNull)
 
   /** The rows of `df` where `keep` holds, each column of `df` computed
     * ONCE per row. A plain `filter` on a computed column is pushed below
@@ -198,9 +199,8 @@ object Dedup {
     * candidate-volume diagnostic ([[graft.tools.CandVol]]) measures the
     * EXACT join keys the operator shuffles, not a reimplementation. */
   private[graft] def minhashBandKeys(docs: DataFrame, k: Int = 16,
-      bands: Int = 4, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    bandSigs(minhashSignatures(docs, k, n, idCol, textCol), k, bands)
+      bands: Int = 4, n: Int = 3): DataFrame =
+    bandSigs(minhashSignatures(docs, k, n), k, bands)
 
   /** Band an (id, sig) signature frame: `bands` slices of k/bands rows,
     * each hashed to one band key. `sigs` is by-name so the band check
@@ -226,11 +226,10 @@ object Dedup {
     * ([[CoOccur.dropSingletonKeys]]; the band join carries BOTH 8k-byte
     * signatures per row). */
   def minhashLsh(docs: DataFrame, k: Int = 16, bands: Int = 4, n: Int = 3,
-      minEstimate: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      minEstimate: Double = 0.5): DataFrame = {
     val bandKeys = Seq("band", "band_hash")
     val banded = CoOccur.dropSingletonKeys(
-      bandSigs(Pin(minhashSignatures(docs, k, n, idCol, textCol)), k, bands),
+      bandSigs(Pin(minhashSignatures(docs, k, n)), k, bands),
       bandKeys)
     val cands = CoOccur.bucketPairs(banded, bandKeys, "id", Seq("sig"))
     // estimate BEFORE dedup (same reasoning as simhashPairs): the
@@ -265,16 +264,14 @@ object Dedup {
     * id_b = probe doc, n_common, jaccard). Ids must be distinct across
     * the two frames (they are two slices of one id space in q119). */
   def crossCorpusNearDup(corpus: DataFrame, probe: DataFrame,
-      threshold: Double = 0.5, k: Int = 16, bands: Int = 4, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val bc = minhashBandKeys(corpus, k, bands, n, idCol, textCol)
+      threshold: Double = 0.5, k: Int = 16, bands: Int = 4, n: Int = 3): DataFrame = {
+    val bc = minhashBandKeys(corpus, k, bands, n)
       .select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val bp = minhashBandKeys(probe, k, bands, n, idCol, textCol)
+    val bp = minhashBandKeys(probe, k, bands, n)
       .select(col("band"), col("band_hash"), col("id").as("id_b"))
     val cands = bc.join(bp, Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
-    verifiedJaccard(corpus.unionByName(probe), cands, threshold, n,
-      idCol, textCol)
+    verifiedJaccard(corpus.unionByName(probe), cands, threshold, n)
   }
 
   /** Incremental-ingest dedup — the shape every production corpus update
@@ -305,14 +302,13 @@ object Dedup {
     * returning: the returned frame reads only the `pairs` checkpoint of
     * [[incrementalNearDupIndexed]], never the keys. */
   def incrementalNearDup(history: DataFrame, batch: DataFrame,
-      threshold: Double = 0.5, k: Int = 16, bands: Int = 4, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      threshold: Double = 0.5, k: Int = 16, bands: Int = 4, n: Int = 3): DataFrame = {
     def keys(docs: DataFrame): DataFrame =
-      minhashBandKeys(docs, k, bands, n, idCol, textCol)
+      minhashBandKeys(docs, k, bands, n)
         .select(col("band"), col("band_hash"), col("id"))
     val bb = Pin(keys(batch))
     try incrementalNearDupIndexed(keys(history), history, batch, bb,
-      threshold, n, idCol, textCol)
+      threshold, n)
     finally Pin.free(bb)
   }
 
@@ -356,8 +352,7 @@ object Dedup {
     * rewrites its partitions and recomputes the same verdicts. */
   def incrementalNearDupIndexed(historyBands: DataFrame,
       historyDocs: DataFrame, batch: DataFrame, batchBands: DataFrame,
-      threshold: Double = 0.5, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      threshold: Double = 0.5, n: Int = 3): DataFrame = {
     // Both candidate legs join the same batch keys, and ONE verify pass
     // over the union serves both legs. `cands` is pinned
     // (the ConnectedComponents.resolve pattern): it is referenced by 3
@@ -398,22 +393,22 @@ object Dedup {
     // streaming wiring frees it after the verdict write.
     val pairs = try {
       val neededHist = historyDocs.join(
-        cands.filter(col("src") === "hist").select(col("id_a").as(idCol)),
-        Seq(idCol), "left_semi")
+        cands.filter(col("src") === "hist").select(col("id_a").as(DocId)),
+        Seq(DocId), "left_semi")
       val verified = verifiedJaccard(
         neededHist.unionByName(batch),
-        cands.select("id_a", "id_b"), threshold, n, idCol, textCol)
+        cands.select("id_a", "id_b"), threshold, n)
       try Pin(verified.join(cands, Seq("id_a", "id_b")))
       finally Pin.free(verified)
     } finally Pin.free(cands)
     val histBlame = pairs.filter(col("src") === "hist")
-      .groupBy(col("id_b").as(idCol)).agg(min("id_a").as("hist_dup"))
+      .groupBy(col("id_b").as(DocId)).agg(min("id_a").as("hist_dup"))
     val batchBlame = pairs.filter(col("src") === "batch")
-      .groupBy(col("id_b").as(idCol)).agg(min("id_a").as("batch_dup"))
-    batch.select(col(idCol))
-      .join(histBlame, Seq(idCol), "left")
-      .join(batchBlame, Seq(idCol), "left")
-      .select(col(idCol),
+      .groupBy(col("id_b").as(DocId)).agg(min("id_a").as("batch_dup"))
+    batch.select(col(DocId))
+      .join(histBlame, Seq(DocId), "left")
+      .join(batchBlame, Seq(DocId), "left")
+      .select(col(DocId),
         when(col("hist_dup").isNotNull, lit("dup_history"))
           .when(col("batch_dup").isNotNull, lit("dup_batch"))
           .otherwise(lit("kept")).as("status"),
@@ -434,15 +429,13 @@ object Dedup {
     *
     * Computed in the row ([[graft.functions.SimHashExpr]] over xxhash64
     * features): no per-shingle rows, no shuffle. A doc with no shingles
-    * gets no row; `idCol` must be unique, as for [[minhashSignatures]]. */
-  def simhashDocs(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3): DataFrame =
-    simhashFrame(docs, idCol, textCol, n, md5 = false)
+    * gets no row; `doc_id` must be unique, as for [[minhashSignatures]]. */
+  def simhashDocs(docs: DataFrame, n: Int = 3): DataFrame =
+    simhashFrame(docs, n, md5 = false)
 
-  private def simhashFrame(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, md5: Boolean): DataFrame =
-    rowsWhere(docs.select(col(idCol).as("id"),
-      SimHashFn.simhash(T.shingles(col(textCol), n), md5).as("simhash")),
+  private def simhashFrame(docs: DataFrame, n: Int, md5: Boolean): DataFrame =
+    rowsWhere(docs.select(col(DocId).as("id"),
+      SimHashFn.simhash(T.shingles(col(Text), n), md5).as("simhash")),
       col("simhash").isNotNull)
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist. Candidates
@@ -484,9 +477,8 @@ object Dedup {
     * The (id, simhash) frame is pinned, as on every simhash pair entry:
     * see [[simhashPairsCombinatorial]]. */
   def simhashPairs(docs: DataFrame, maxDist: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text",
       saltBuckets: Int = 16, n: Int = 3): DataFrame =
-    hammingPairs(Pin(simhashDocs(docs, idCol, textCol, n)),
+    hammingPairs(Pin(simhashDocs(docs, n)),
       maxDist, SimHash.Bits, saltBuckets)
 
   /** Signature width of the [[simhashDocsPortable]] family: 60 bits (15
@@ -501,9 +493,8 @@ object Dedup {
     * q39/q40 recompute-the-buckets oracle pattern applied to simhash.
     * (Bits 60-63 of the signature are structurally 0: every feature
     * hash is < 2^60, so those counters only ever decrement.) */
-  def simhashDocsPortable(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3): DataFrame =
-    simhashFrame(docs, idCol, textCol, n, md5 = true)
+  def simhashDocsPortable(docs: DataFrame, n: Int = 3): DataFrame =
+    simhashFrame(docs, n, md5 = true)
 
   /** SimHash near-dup candidates at the Manku chunk width — the
     * MID-CORPUS dial (fine to ~10^6 docs; the at-scale simhash is
@@ -525,9 +516,8 @@ object Dedup {
     * [[simhashPairsCombinatorial]] (q116), whose (nBlocks − maxDist)-block
     * keys hold the volume linear at the same exact output. */
   def simhashPairsPortable(docs: DataFrame, maxDist: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text",
       saltBuckets: Int = 16, n: Int = 3): DataFrame =
-    hammingPairs(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
+    hammingPairs(Pin(simhashDocsPortable(docs, n)),
       maxDist, PortableSimHashBits, saltBuckets)
 
   /** SimHash candidates via Manku's BLOCK-COMBINATION tables — **the
@@ -589,10 +579,9 @@ object Dedup {
     * signature was an explode + aggregation with 2 corpus-sized
     * shuffles; the pin now saves a narrow rescan. */
   def simhashPairsCombinatorial(docs: DataFrame, maxDist: Int = 3,
-      nBlocks: Int = 6, idCol: String = "doc_id", textCol: String = "text",
-      saltBuckets: Int = 2, n: Int = 3): DataFrame =
+      nBlocks: Int = 6, saltBuckets: Int = 2, n: Int = 3): DataFrame =
     simhashKeyedJoin(
-      simhashComboKeys(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
+      simhashComboKeys(Pin(simhashDocsPortable(docs, n)),
         maxDist, PortableSimHashBits, nBlocks),
       "combo_idx", "combo_key", maxDist, saltBuckets, pruneSingletons = true)
 
@@ -692,10 +681,9 @@ object Dedup {
     * salt 2: 40). Pins and prunes like [[simhashPairsCombinatorial]]. */
   def simhashPairsPermuted(docs: DataFrame, maxDist: Int = 3,
       nOuter: Int = 4, nInner: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text",
       saltBuckets: Int = 2, n: Int = 3): DataFrame =
     simhashKeyedJoin(
-      simhashPermutedKeys(Pin(simhashDocsPortable(docs, idCol, textCol, n)),
+      simhashPermutedKeys(Pin(simhashDocsPortable(docs, n)),
         maxDist, PortableSimHashBits, nOuter, nInner),
       "tbl_idx", "tbl_key", maxDist, saltBuckets, pruneSingletons = true)
 
@@ -816,21 +804,20 @@ object Dedup {
     * O(maxItemsPerBlock²), and applied identically in the DuckDB oracle
     * so semantics match at every SF.
     *
-    * PRECONDITION: `idCol` values are unique. Each row sits in exactly
+    * PRECONDITION: `vec_id` values are unique. Each row sits in exactly
     * one block, so a pair of distinct ids meets at most once and the
     * output needs no dedup; two rows sharing an id never pair. Every
     * repo caller passes a primary-key vec_id. */
   def embeddingNearDup(embs: DataFrame, threshold: Double = 0.9,
-      blockCol: Option[String] = None, maxItemsPerBlock: Long = 10000L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      blockCol: Option[String] = None, maxItemsPerBlock: Long = 10000L): DataFrame = {
     // norms computed once per row, pre-join: each candidate pair then
     // costs a single dot product (see VectorFunctions.cosineFromNorms)
     val blocked = blockCol match {
       case Some(c) => embs.withColumn("blk", col(c))
-      case None    => embs.withColumn("blk", V.lshBucket(col(vecCol), nearDupPlanes))
+      case None    => embs.withColumn("blk", V.lshBucket(col(Vec), nearDupPlanes))
     }
-    val n = blocked.select(col("blk"), col(idCol).as("id"),
-      col(vecCol).as("v"), V.l2Norm(col(vecCol)).as("nrm"))
+    val n = blocked.select(col("blk"), col(VecId).as("id"),
+      col(Vec).as("v"), V.l2Norm(col(Vec)).as("nrm"))
     CoOccur.bucketPairs(CoOccur.dropHotKeys(n, Seq("blk"), maxItemsPerBlock),
         Seq("blk"), "id", Seq("v", "nrm"))
       .withColumn("cos", round(V.cosineFromNorms(col("v_a"), col("v_b"),
@@ -885,17 +872,16 @@ object Dedup {
     * asserted by DedupSpec's prefix pin), and the radius-1 multiprobe is
     * an XOR-bit-flip + coarsen join.
     *
-    * PRECONDITION: `idCol` values are unique. Side A sits in one bucket
+    * PRECONDITION: `vec_id` values are unique. Side A sits in one bucket
     * and side B's probes are deduped per row ([[probeBuckets]]), so a
     * pair of distinct ids meets at most once and the output needs no
     * dedup. Every repo caller passes a primary-key vec_id. */
   def embeddingNearDupAdaptive(embs: DataFrame, threshold: Double = 0.9,
       targetPerBucket: Long = 256L, maxItemsPerBlock: Long = 10000L,
       dim: Int = 64, seed: Long = 7L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       maxProbePlanes: Int = Int.MaxValue): DataFrame = {
     val (bounded, scheme) = adaptiveBuckets(embs, targetPerBucket,
-      maxItemsPerBlock, dim, seed, idCol, vecCol)
+      maxItemsPerBlock, dim, seed)
     // side A sits in its effective bucket; side B multiprobes radius 1 —
     // a pair meets iff their p+1 plane signs differ in at most one plane
     // (in a probed plane, under the maxProbePlanes volume/recall dial)
@@ -969,8 +955,7 @@ object Dedup {
     * planesUsed-bit bucket side B's probes flip. */
   private[graft] def adaptiveBuckets(embs: DataFrame,
       targetPerBucket: Long = 256L, maxItemsPerBlock: Long = 10000L,
-      dim: Int = 64, seed: Long = 7L, idCol: String = "vec_id",
-      vecCol: String = "embedding"): (DataFrame, AdaptiveScheme) = {
+      dim: Int = 64, seed: Long = 7L): (DataFrame, AdaptiveScheme) = {
     require(targetPerBucket > 0, "targetPerBucket must be positive")
     val n = embs.count() // bounded driver scalar; sizes the bucket count
     // exact integer ceil(n / target), floored at 16 buckets (4 planes) —
@@ -989,9 +974,9 @@ object Dedup {
         s"(corpus $n rows / targetPerBucket $targetPerBucket); raise targetPerBucket")
     val scheme = AdaptiveScheme(p, (nBuckets - (1L << p)).toInt)
     val planes = V.rademacherPlanes(scheme.planesUsed, dim, seed)
-    val base = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
-      V.l2Norm(col(vecCol)).as("nrm"),
-      V.lshBucket(col(vecCol), planes).as("full"))
+    val base = embs.select(col(VecId).as("id"), col(Vec).as("v"),
+      V.l2Norm(col(Vec)).as("nrm"),
+      V.lshBucket(col(Vec), planes).as("full"))
       .withColumn("blk", coarsenExpr(col("full"), scheme))
     (CoOccur.dropHotKeys(base, Seq("blk"), maxItemsPerBlock), scheme)
   }
@@ -1108,8 +1093,7 @@ object Dedup {
     * duplicates the pair's output row with the SAME Jaccard instead of
     * double-counting its shingles. */
   def verifiedJaccard(docs: DataFrame, candidates: DataFrame,
-      threshold: Double, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      threshold: Double, n: Int = 3): DataFrame = {
     // Shingle ONLY the docs that appear in a candidate pair, and only
     // ONCE (round 9). The earlier shape shingled the FULL corpus and,
     // because its three consumers partitioned differently (id agg,
@@ -1129,14 +1113,14 @@ object Dedup {
     // they stop the candidate GENERATOR (a full LSH/simhash plan) from
     // re-running once per consumer.
     val cand = Pin(candidates.select("id_a", "id_b"))
-    val candIds = cand.select(col("id_a").as(idCol))
-      .unionByName(cand.select(col("id_b").as(idCol)))
+    val candIds = cand.select(col("id_a").as(DocId))
+      .unionByName(cand.select(col("id_b").as(DocId)))
       .distinct()
-    val needed = docs.join(candIds, Seq(idCol), "left_semi")
+    val needed = docs.join(candIds, Seq(DocId), "left_semi")
     // one row per candidate doc: its distinct shingle set as an array
     // (a doc without shingles can share none, so it is dropped)
-    val sh = Pin(rowsWhere(needed.select(col(idCol).as("id"),
-      distinctShingles(textCol, n).as("sh")), size(col("sh")) > 0))
+    val sh = Pin(rowsWhere(needed.select(col(DocId).as("id"),
+      distinctShingles(n).as("sh")), size(col("sh")) > 0))
     // |A∩B| by string equality on the two arrays: exact, and no
     // (pair × shingle) rows or pair group-by. Zero-overlap pairs are
     // dropped: like [[ngramJaccard]], the output holds only pairs that
@@ -1186,12 +1170,11 @@ object Dedup {
     * (exponent 1.08 on the fixed-vocabulary corpus vs 0.60 realistic),
     * [[prefixFilterWarning]] says so, at the cost of two jobs of its
     * own. */
-  def prefixCandidates(docs: DataFrame, threshold: Double, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def prefixCandidates(docs: DataFrame, threshold: Double, n: Int = 3): DataFrame = {
     // the prefix frame feeds BOTH sides of the candidate self-join and
     // each side re-derives it; pinning it would keep a corpus-prefix-
     // sized block store, the trade the shingle frame declines too
-    val prefix = prefixKeys(docs, threshold, n, idCol, textCol)
+    val prefix = prefixKeys(docs, threshold, n)
     val tEff = threshold - 5e-5 // see prefixKeys' recall note
     // PPJoin positional filter (Xiao et al., WWW'08): when a pair first
     // meets at prefix positions (i, j), its overlap can't exceed
@@ -1234,22 +1217,21 @@ object Dedup {
     * recall for the EFFECTIVE threshold t - 5e-5, not t — otherwise a
     * pair with true J in [t - 5e-5, t) passes the verifier but could be
     * pruned here. (The 1e-9 only guards FP ceil, not rounding.)
-    * PRECONDITION, as [[shingleOverlap]]: `idCol` values are unique. */
+    * PRECONDITION, as [[shingleOverlap]]: `doc_id` values are unique. */
   private[graft] def prefixKeys(docs: DataFrame, threshold: Double,
-      n: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      n: Int = 3): DataFrame = {
     val tEff = threshold - 5e-5
     // n_sh is taken from the array before the explode; rowsWhere keeps
     // the explode's inferred size(sh) > 0 filter from being pushed below
     // the projection, where it would shingle every doc a second time
-    val sh = rowsWhere(docs.select(col(idCol).as("id"),
-      distinctShingles(textCol, n).as("sh"))
+    val sh = rowsWhere(docs.select(col(DocId).as("id"),
+      distinctShingles(n).as("sh"))
       .withColumn("n_sh", size(col("sh")).cast("long")), col("n_sh") > 0)
       .select(col("id"), col("n_sh"), explode(col("sh")).as("shingle"))
     // df is counted over docShingles, not `sh`: counted over `sh` its size
     // estimate exceeds the exploded side's, and the planner broadcasts
     // the exploded docs instead of the df table
-    val shareable = docShingles(docs, idCol, textCol, n, 0L)
+    val shareable = docShingles(docs, n, 0L)
       .groupBy("shingle").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2)
     val byDoc = Window.partitionBy("id")
@@ -1267,10 +1249,9 @@ object Dedup {
     * p50_df, p99_df, max_df). The df aggregate is vocabulary-sized
     * (mergeable, map-side combined); percentiles are approximate
     * (diagnostic, not output). */
-  def shingleDfProfile(docs: DataFrame, n: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = docShingles(docs, idCol, textCol, n, 0L)
-    val nDocs = docs.select(col(idCol)).distinct().count()
+  def shingleDfProfile(docs: DataFrame, n: Int = 3): DataFrame = {
+    val sh = docShingles(docs, n, 0L)
+    val nDocs = docs.select(col(DocId)).distinct().count()
     sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .agg(lit(nDocs).as("n_docs"),
         count(lit(1)).as("vocab"),
@@ -1293,9 +1274,8 @@ object Dedup {
     * count over `docs` plus a shingle-explode feeding the
     * vocabulary-sized df aggregate — and a one-row collect. */
   def prefixFilterWarning(docs: DataFrame, n: Int = 3,
-      maxP99Fraction: Double = 0.05,
-      idCol: String = "doc_id", textCol: String = "text"): Option[String] = {
-    val r = shingleDfProfile(docs, n, idCol, textCol).head()
+      maxP99Fraction: Double = 0.05): Option[String] = {
+    val r = shingleDfProfile(docs, n).head()
     val nDocs = math.max(r.getLong(0), 1L)
     val p99 = r.getLong(3)
     if (p99.toDouble / nDocs > maxP99Fraction)

@@ -23,38 +23,52 @@ import graft.functions.{VectorFunctions => V}
   */
 object Similarity {
 
-  /** Exact cosine top-k: for each query vector, the k nearest corpus
-    * vectors (excluding itself). Query side is broadcast. */
-  def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      V.l2Norm(col(vecCol)).as("qn")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      V.l2Norm(col(vecCol)).as("cn"))
+  // the embeddings schema (FIXTURES.md): the id and the vector column
+  private val VecId = "vec_id"
+  private val Vec = "embedding"
+
+  /** Output names of one join side's id, vector and norm. */
+  private case class Side(id: String, v: String, n: String)
+  private val Query = Side("query_id", "qv", "qn")
+  private val Neighbor = Side("neighbor_id", "cv", "cn")
+
+  /** The normed side projection: id, vector and `norm` (by default the
+    * vector's l2 norm) under `side`'s names. */
+  private def normed(side: Side, norm: Column = V.l2Norm(col(Vec))): Seq[Column] =
+    Seq(col(VecId).as(side.id), col(Vec).as(side.v), norm.as(side.n))
+
+  /** The ranking tail every kNN entry runs after its candidate join:
+    * rounded cosine, the k best neighbors per query by (cos desc,
+    * neighbor_id). */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
-    q.join(c, col("query_id") =!= col("neighbor_id"))
+    pairs
       .withColumn("cos", round(V.cosineFromNorms(col("qv"), col("cv"), col("qn"), col("cn")), 4))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select("query_id", "neighbor_id", "cos", "rn")
   }
 
+  /** Exact cosine top-k: for each query vector, the k nearest corpus
+    * vectors (excluding itself). Query side is broadcast. */
+  def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int = 3): DataFrame =
+    topK(broadcast(queries.select(normed(Query): _*))
+      .join(corpus.select(normed(Neighbor): _*), col("query_id") =!= col("neighbor_id")), k)
+
   /** Corpus bucketed by sign-LSH over explicit hyperplanes
     * ([[V.rademacherPlanes]] for SQL-reproducible buckets,
     * [[V.hyperplanes]] for seeded Gaussian ones). */
-  def lshBucketsWith(corpus: DataFrame, planes: Array[Array[Double]],
-      vecCol: String = "embedding"): DataFrame =
-    corpus.withColumn("bucket", V.lshBucket(col(vecCol), planes))
+  def lshBucketsWith(corpus: DataFrame, planes: Array[Array[Double]]): DataFrame =
+    corpus.withColumn("bucket", V.lshBucket(col(Vec), planes))
 
   /** IVF coarse quantizer: KMeans centroids over a (sampled) corpus; each
     * vector is assigned to its nearest centroid's cell. At 100 TB the model
     * fits on the driver (k × dim doubles) and the assignment is a narrow
     * map — one pass, no shuffle. */
-  def ivfAssign(corpus: DataFrame, k: Int = 16, seed: Long = 42L,
-      vecCol: String = "embedding"): DataFrame = {
+  def ivfAssign(corpus: DataFrame, k: Int = 16, seed: Long = 42L): DataFrame = {
     val featurized = corpus.withColumn("__features",
-      org.apache.spark.ml.functions.array_to_vector(col(vecCol)))
+      org.apache.spark.ml.functions.array_to_vector(col(Vec)))
     val model = new org.apache.spark.ml.clustering.KMeans()
       .setK(k).setSeed(seed).setFeaturesCol("__features").setPredictionCol("cell")
       .fit(featurized)
@@ -66,22 +80,11 @@ object Similarity {
     * by SimilaritySpec against [[knnBruteForce]]; the hash-verifiable
     * variant is [[knnIvfSeeded]]. */
   def knnIvf(corpus: DataFrame, queryIds: DataFrame => DataFrame, k: Int = 3,
-      nCells: Int = 16, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val assigned = ivfAssign(corpus, nCells, vecCol = vecCol)
-    val c = assigned.select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      V.l2Norm(col(vecCol)).as("cn"))
-    val q = broadcast(queryIds(assigned)
-      .select(col("cell"), col(idCol).as("query_id"), col(vecCol).as("qv"),
-        V.l2Norm(col(vecCol)).as("qn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(V.cosineFromNorms(col("qv"), col("cv"), col("qn"), col("cn")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "cos", "rn")
+      nCells: Int = 16): DataFrame = {
+    val assigned = ivfAssign(corpus, nCells)
+    val c = assigned.select(col("cell") +: normed(Neighbor): _*)
+    val q = broadcast(queryIds(assigned).select(col("cell") +: normed(Query): _*))
+    topK(q.join(c, Seq("cell")).filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** IVF with data-seeded centroids and multi-cell probing: the centroids
@@ -98,12 +101,11 @@ object Similarity {
     * set. nprobe trades recall for candidate volume at a 1/nCells
     * granularity. */
   def knnIvfSeeded(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-      nCells: Int = 8, nprobe: Int = 2, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      nCells: Int = 8, nprobe: Int = 2): DataFrame = {
     // driver-resident centroids, in centroid-id order; norms are folded
     // left-to-right like V.dot so SQL twins reproduce them bit-for-bit
-    val cents: Array[(Int, Seq[Double])] = corpus.filter(col(idCol) < nCells)
-      .select(col(idCol).cast("int"), col(vecCol))
+    val cents: Array[(Int, Seq[Double])] = corpus.filter(col(VecId) < nCells)
+      .select(col(VecId).cast("int"), col(Vec))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble)))
       .sortBy(_._1)
@@ -121,22 +123,15 @@ object Similarity {
     }
 
     val c = corpus
-      .withColumn("__n", V.l2Norm(col(vecCol)))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("__n").as("cn"),
-        element_at(cellRank(col(vecCol), col("__n")), 1).getField("cid").as("cell"))
+      .withColumn("__n", V.l2Norm(col(Vec)))
+      .select(normed(Neighbor, col("__n")) :+
+        element_at(cellRank(col(Vec), col("__n")), 1).getField("cid").as("cell"): _*)
     val q = broadcast(queries
-      .withColumn("__n", V.l2Norm(col(vecCol)))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"), col("__n").as("qn"),
-        explode(transform(slice(cellRank(col(vecCol), col("__n")), 1, nprobe),
-          s => s.getField("cid"))).as("cell")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(V.cosineFromNorms(col("qv"), col("cv"), col("qn"), col("cn")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "cos", "rn")
+      .withColumn("__n", V.l2Norm(col(Vec)))
+      .select(normed(Query, col("__n")) :+
+        explode(transform(slice(cellRank(col(Vec), col("__n")), 1, nprobe),
+          s => s.getField("cid"))).as("cell"): _*))
+    topK(q.join(c, Seq("cell")).filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Approximate top-k: candidates restricted to the query's LSH bucket
@@ -147,21 +142,9 @@ object Similarity {
     * DuckDB-oracle-verifiable; [[V.hyperplanes]] gives the classic
     * seeded Gaussian family. */
   def knnLshWith(corpus: DataFrame, queries: DataFrame,
-      planes: Array[Array[Double]], k: Int = 3,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cb = lshBucketsWith(corpus, planes, vecCol)
-      .select(col("bucket"), col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        V.l2Norm(col(vecCol)).as("cn"))
-    val qb = broadcast(lshBucketsWith(queries, planes, vecCol)
-      .select(col("bucket"), col(idCol).as("query_id"), col(vecCol).as("qv"),
-        V.l2Norm(col(vecCol)).as("qn")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    qb.join(cb, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(V.cosineFromNorms(col("qv"), col("cv"), col("qn"), col("cn")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "cos", "rn")
+      planes: Array[Array[Double]], k: Int = 3): DataFrame = {
+    val cb = lshBucketsWith(corpus, planes).select(col("bucket") +: normed(Neighbor): _*)
+    val qb = broadcast(lshBucketsWith(queries, planes).select(col("bucket") +: normed(Query): _*))
+    topK(qb.join(cb, Seq("bucket")).filter(col("query_id") =!= col("neighbor_id")), k)
   }
 }

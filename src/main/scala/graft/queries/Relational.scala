@@ -524,8 +524,7 @@ object Relational {
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
     graft.operators.BloomPrune.semiJoin(
-      Tables.lineitem(s, d), urgent, "l_orderkey", "o_orderkey",
-      expectedItems = 1000000L)
+      Tables.lineitem(s, d), urgent, "l_orderkey", "o_orderkey")
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_items"),
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)

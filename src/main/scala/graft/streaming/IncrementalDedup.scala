@@ -18,7 +18,7 @@ import graft.operators.Dedup
   * Index layout under `indexDir` (both partitioned by ingest batch):
   *   - `bands/batch_id=N/`  (band INT, band_hash LONG, id LONG) — the
   *     MinHash band keys of batch N, schema = [[Dedup.minhashBandKeys]];
-  *   - `docs/batch_id=N/`   (idCol LONG, textCol STRING) — the corpus
+  *   - `docs/batch_id=N/`   (doc_id LONG, text STRING) — the corpus
   *     registry, read back only for exact verification of candidates.
   *   - `batch_id=-W/` (either side) — a COMPACTED GENERATION holding the
   *     consolidated rows of every batch before W (see [[compactIndex]]).
@@ -63,6 +63,10 @@ import graft.operators.Dedup
   * history).
   */
 object IncrementalDedup {
+
+  // the documents schema (FIXTURES.md): the batch's id and text columns
+  private val DocId = "doc_id"
+  private val Text = "text"
 
   /** Hadoop filesystem + path of `dir` under the session's configuration
     * — resolves local paths and HDFS/S3A/ABFS URIs alike. */
@@ -150,15 +154,14 @@ object IncrementalDedup {
     */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       indexDir: String, threshold: Double = 0.5, k: Int = 16,
-      bands: Int = 4, n: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text",
+      bands: Int = 4, n: Int = 3,
       keptOnlyHistory: Boolean = false): DataFrame = {
     val bandsDir = s"$indexDir/bands"
     val docsDir = s"$indexDir/docs"
-    batch.select(col(idCol), col(textCol))
+    batch.select(col(DocId), col(Text))
       .write.mode("overwrite").parquet(s"$docsDir/batch_id=$batchId")
     val pinned = spark.read.parquet(s"$docsDir/batch_id=$batchId")
-    Dedup.minhashBandKeys(pinned, k, bands, n, idCol, textCol)
+    Dedup.minhashBandKeys(pinned, k, bands, n)
       .select(col("band"), col("band_hash"), col("id"))
       .write.mode("overwrite").parquet(s"$bandsDir/batch_id=$batchId")
     val batchBands = spark.read.parquet(s"$bandsDir/batch_id=$batchId")
@@ -167,7 +170,7 @@ object IncrementalDedup {
     val verdicts = Dedup.incrementalNearDupIndexed(
       readIndexSide(spark, bandsDir, batchId).getOrElse(batchBands.limit(0)),
       readIndexSide(spark, docsDir, batchId).getOrElse(pinned.limit(0)),
-      pinned, batchBands, threshold, n, idCol, textCol)
+      pinned, batchBands, threshold, n)
     if (!keptOnlyHistory) verdicts
     else {
       // Materialize the verdicts BEFORE rewriting the partitions their
@@ -187,11 +190,11 @@ object IncrementalDedup {
       // `out` cuts the lineage, so freeing it later would not reach the
       // operator's `pairs` pin that `verdicts` reads: free that one now
       Pin.free(verdicts)
-      val keptIds = out.filter(col("status") === "kept").select(col(idCol))
-      val keptDocs = Pin(pinned.join(keptIds, Seq(idCol), "left_semi"))
+      val keptIds = out.filter(col("status") === "kept").select(col(DocId))
+      val keptDocs = Pin(pinned.join(keptIds, Seq(DocId), "left_semi"))
       keptDocs.write.mode("overwrite").parquet(s"$docsDir/batch_id=$batchId")
       val keptBands = Pin(batchBands
-        .join(keptIds.withColumnRenamed(idCol, "id"), Seq("id"), "left_semi")
+        .join(keptIds.withColumnRenamed(DocId, "id"), Seq("id"), "left_semi")
         .select(col("band"), col("band_hash"), col("id")))
       keptBands.write.mode("overwrite").parquet(s"$bandsDir/batch_id=$batchId")
       // real frees (Dataset.unpersist is a no-op on checkpoints)
@@ -406,7 +409,7 @@ object IncrementalDedup {
     deleteCompactedSources(spark, indexDir)
   }
 
-  /** Wire a streaming (idCol, textCol) document frame through
+  /** Wire a streaming (doc_id, text) document frame through
     * [[processBatch]]: verdicts for micro-batch N land in
     * `outDir/batch_id=N` (overwrite → exactly-once observable output),
     * and the index under `indexDir` grows one partition per batch.
@@ -421,8 +424,7 @@ object IncrementalDedup {
     * semantics (see [[processBatch]]). */
   def stream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, threshold: Double = 0.5, k: Int = 16,
-      bands: Int = 4, n: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text",
+      bands: Int = 4, n: Int = 3,
       trigger: Trigger = Trigger.ProcessingTime(0L),
       compactEvery: Int = 0,
       keptOnlyHistory: Boolean = false): StreamingQuery =
@@ -437,7 +439,7 @@ object IncrementalDedup {
         if (compactEvery > 0)
           deleteCompactedSources(spark, indexDir)
         val verdicts = processBatch(spark, b, id, indexDir, threshold, k,
-          bands, n, idCol, textCol, keptOnlyHistory)
+          bands, n, keptOnlyHistory)
         // Free the pins the verdicts read (the operator's `pairs`, or
         // keptOnlyHistory's `out`) as soon as the write ends, failed or
         // not (ADVICE r8): otherwise they wait for the ContextCleaner to

@@ -15,9 +15,10 @@ import graft.operators.{CoOccur, Dedup}
   * wall-clock leg read 1.43; the volume reads the true growth, 1.08).
   *
   * Every volume is computed from the SAME key frames the operators
-  * shuffle (Dedup.minhashBandKeys / simhashComboKeys / simhashPermutedKeys
-  * / prefixKeys / adaptiveBuckets — factored, not reimplemented; q36's
-  * and q114's chunks are the one-block combination tables; CandVolSpec
+  * shuffle (Dedup.docShingles / minhashBandKeys / simhashComboKeys /
+  * simhashPermutedKeys / prefixKeys / adaptiveBuckets — factored, not
+  * reimplemented; q36's and q114's chunks are the one-block combination
+  * tables; CandVolSpec
   * pins each aggregate equal to the enumerated join count on the fixture
   * corpus).
   * Declared-query configurations throughout: q34/q44/q100's df cap,
@@ -99,13 +100,9 @@ object CandVol {
     val embs = Tables.embeddings(s, dir)
     val cap = graft.queries.TextQueries.MaxShingleDf
 
-    // q34/q44/q100 family: distinct doc-shingle postings, df cap —
-    // per-row array_distinct, the operator's own shuffle-free form
-    // (round 11: the frame-level distinct() was a corpus-sized shuffle
-    // that overflowed disk at g1000; see Dedup.docShingles)
-    val sh = docs.select(col("doc_id").as("id"),
-      explode(array_distinct(
-        graft.functions.TextFunctions.shingles(col("text"), 3))).as("shingle"))
+    // q34/q44/q100 family: the operator's own distinct doc-shingle
+    // postings, uncapped here so the cap's effect is measured below
+    val sh = Dedup.docShingles(docs, n = 3, maxDocFreq = 0L)
     val ng = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .agg(
         count(lit(1)).as("vocab"),

@@ -181,14 +181,7 @@ object GenScale {
     val (outDir, sf) = (args(0), args(1).toDouble)
     val seed = if (args.length > 2) args(2).toLong else 42L
     val fixedVocab = if (args.length > 3) Some(args(3).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Timing.session("GenScale")
     val tables = sys.env.get("GRAFT_GEN_TABLES")
       .map(_.split(",").toSet)
       .getOrElse(Set("documents", "embeddings", "lineitem"))

@@ -11,8 +11,8 @@ import graft.core.Sessions
 /** The timing harness shared by Bench, ScaleBench and TimeQuery: the
   * tool session, the cold-JVM warm-up, the query-name lookup and one
   * timed run of a declared query with its reset. ExplainDump and Verify
-  * use the lookup and ExplainDump the reset; CandVol and StreamBench
-  * build their session here too.
+  * use the lookup and ExplainDump the reset; CandVol, StreamBench
+  * and GenScale build their session here too.
   */
 object Timing {
 

@@ -14,7 +14,7 @@ class BloomPruneSpec extends SparkSpec {
     // small side: a sparse key subset, with duplicates and a null
     val small = (Seq.fill(3)(7L) ++ Seq(13L, 99L, 250L, 499L)).map(Option(_))
       .appended(None).toDF("sk")
-    val got = BloomPrune.semiJoin(big, small, "k", "sk", expectedItems = 100L)
+    val got = BloomPrune.semiJoin(big, small, "k", "sk")
       .orderBy("row_id").collect().toSeq
     val want = big.join(small.select(col("sk").as("k")).distinct(), Seq("k"), "left_semi")
       .orderBy("row_id").collect().toSeq
@@ -30,24 +30,24 @@ class BloomPruneSpec extends SparkSpec {
     // 3 true matches + ~1% fp of 9997; allow generous slack
     assert(survivors >= 3 && survivors <= 3 + 500, s"survivors=$survivors")
     // and the final exact join removes every false positive
-    assert(BloomPrune.semiJoin(big, small, "k", "sk", 1000L)
+    assert(BloomPrune.semiJoin(big, small, "k", "sk")
       .as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
   test("empty or all-null small side matches nothing") {
     val big = (0L until 10L).toDF("k")
-    assert(BloomPrune.semiJoin(big, Seq.empty[Long].toDF("sk"), "k", "sk", 10L).count() == 0L)
-    assert(BloomPrune.semiJoin(big, Seq[Option[Long]](None, None).toDF("sk"), "k", "sk", 10L).count() == 0L)
+    assert(BloomPrune.semiJoin(big, Seq.empty[Long].toDF("sk"), "k", "sk").count() == 0L)
+    assert(BloomPrune.semiJoin(big, Seq[Option[Long]](None, None).toDF("sk"), "k", "sk").count() == 0L)
     // null keys on the big side never match
     val bigWithNull = Seq(Some(1L), None).toDF("k")
-    assert(BloomPrune.semiJoin(bigWithNull, Seq(1L).toDF("sk"), "k", "sk", 10L)
+    assert(BloomPrune.semiJoin(bigWithNull, Seq(1L).toDF("sk"), "k", "sk")
       .collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("string keys work through the same xxhash64 path") {
     val big = Seq("a", "b", "c", "d").toDF("k")
     val small = Seq("b", "d", "zz").toDF("sk")
-    assert(BloomPrune.semiJoin(big, small, "k", "sk", 10L)
+    assert(BloomPrune.semiJoin(big, small, "k", "sk")
       .as[String].collect().toSet == Set("b", "d"))
   }
 }

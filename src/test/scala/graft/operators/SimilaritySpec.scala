@@ -85,6 +85,36 @@ class SimilaritySpec extends SparkSpec {
     assert(run() == run())
   }
 
+  test("every kNN entry ranks exact cosine ties by neighbor_id") {
+    import spark.implicits._
+    val k = 3
+    val rnd = new scala.util.Random(5L)
+    val qs = Array.fill(4)(Array.fill(16)(rnd.nextGaussian().toFloat))
+    // five identical copies of each query (cos exactly 1, more ties than
+    // k), listed in descending id order, and 30 unrelated vectors
+    val copies = for (i <- qs.indices; j <- 4 to 0 by -1)
+      yield ((100 + 10 * i + j).toLong, qs(i))
+    val others = (0 until 30).map(i => ((200 + i).toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))
+    val corpus = (qs.indices.map(i => (i.toLong, qs(i))) ++ copies ++ others)
+      .toDF("vec_id", "embedding")
+    val queries = corpus.filter(col("vec_id") < 4)
+    val entries = Seq(
+      "brute force" -> Similarity.knnBruteForce(corpus, queries, k),
+      "KMeans IVF" -> Similarity.knnIvf(corpus, _.filter(col("vec_id") < 4), k, nCells = 2),
+      "seeded IVF" -> Similarity.knnIvfSeeded(corpus, queries, k, nCells = 4, nprobe = 2),
+      "LSH" -> Similarity.knnLshWith(corpus, queries, V.rademacherPlanes(4, 16), k))
+    for ((name, df) <- entries) {
+      val byQuery = df.collect().toSeq
+        .groupBy(_.getAs[Long]("query_id"))
+        .map { case (q, rows) =>
+          q -> rows.map(r => (r.getAs[Int]("rn"), r.getAs[Long]("neighbor_id"))).sortBy(_._1) }
+      // the k smallest copy ids, rn 1..k in id order
+      assert(byQuery == qs.indices.map(i =>
+        i.toLong -> (1 to k).map(j => (j, (100 + 10 * i + j - 1).toLong))).toMap, name)
+      assert(df.filter(col("cos") =!= 1.0).isEmpty, name)
+    }
+  }
+
   test("Rademacher LSH is deterministic across runs") {
     val planes = V.rademacherPlanes(8, 64)
     def run() = Similarity.knnLshWith(embs, queries, planes, k = 3)
