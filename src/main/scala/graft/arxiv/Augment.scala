@@ -91,9 +91,10 @@ object Augment {
   /** [[authorReady]] before the ranks: names, gender and the stats. */
   private[arxiv] def authorStats(author: DataFrame, authorshipReady: DataFrame,
       articleReady: DataFrame, namesGenders: DataFrame): DataFrame = {
-    // only authors present in the surviving authorship set
+    // only authors present in the surviving authorship set: the inner
+    // join with `pubs` below keeps exactly those (its keys are the
+    // authorship author ids, and a null key never joins)
     val base = author
-      .join(authorshipReady.select("author_id").distinct(), Seq("author_id"), "left_semi")
       .join(broadcast(namesGenders.select("first_name", "gender")
         .dropDuplicates("first_name")), Seq("first_name"), "left")
 

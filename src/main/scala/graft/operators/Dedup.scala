@@ -16,9 +16,12 @@ import graft.functions.{MinHashFn, SimHash, SimHashFn, TextFunctions => T,
   *  - exact dedup is one hash-partitioned groupBy on a 128-bit fingerprint
   *    (never on the raw text — shuffling full documents at 100 TB is the
   *    classic mistake; only the fingerprint + id move);
-  *  - n-gram Jaccard joins on *distinct* shingles and filters hot shingles
-  *    (df > maxDocFreq) — a stopword-shingle appearing in every document
-  *    would otherwise quadratically explode the candidate join;
+  *  - n-gram Jaccard joins only each document's df-ascending prefix of
+  *    its distinct shingles (the AllPairs/PPJoin bound), with hot
+  *    shingles (df > maxDocFreq) dropped first — a stopword-shingle
+  *    appearing in every document would otherwise quadratically explode
+  *    the candidate join — and verifies the candidates exactly by array
+  *    intersection, so no (pair × shingle) row is ever counted;
   *  - MinHash/LSH replaces the all-pairs comparison with b bucket joins —
   *    the only formulation that survives 10^9 documents;
   *  - SimHash pairs key Manku's block tables (dist<=k leaves some table's
@@ -43,7 +46,7 @@ object Dedup {
   /** Distinct (id, shingle) pairs with hot-shingle pruning
     * ([[CoOccur.dropHotKeys]] on the shingle, `maxDocFreq <= 0` keeps
     * every shingle). [[graft.tools.CandVol]] reads it uncapped for the
-    * q34-family volumes.
+    * shingle-posting volumes.
     *
     * Deduplication is PER-ROW (`array_distinct` before the explode),
     * not a frame-level `distinct()`: ids are unique, so the global
@@ -72,37 +75,43 @@ object Dedup {
   private def distinctShingles(n: Int): Column =
     array_distinct(T.shingles(col(Text), n))
 
-  /** Candidate overlap shared by [[ngramJaccard]] and
-    * [[ngramContainment]]: every doc pair sharing >= 1 distinct shingle
-    * (after the hot-shingle cap), as (id_a < id_b, n_common, sa, sb) with
-    * sa/sb each doc's distinct-shingle count. PRECONDITION: `doc_id`
-    * values are unique. The per-row `array_distinct` frame equals the
-    * frame-level distinct ONLY then (DedupSpec pins it against a
-    * frame-level distinct reference on a corpus with in-doc repeats); a
-    * caller feeding duplicate ids would silently inflate df and n_sh
-    * instead of deduping. Every repo caller passes a primary-key
-    * doc_id. */
-  private def shingleOverlap(docs: DataFrame, n: Int, maxDocFreq: Long): DataFrame = {
-    val sh = docShingles(docs, n, maxDocFreq)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    CoOccur.bucketPairs(sh, Seq("shingle"), "id")
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_common"))
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
-  }
-
-  /** Pairwise n-gram Jaccard >= threshold among docs sharing >= 1 shingle.
-    * Output: id_a < id_b, n_common, jaccard. `maxDocFreq` is the
-    * hot-shingle cap ([[CoOccur.dropHotKeys]]); `doc_id` must be unique
-    * ([[shingleOverlap]]). */
+  /** Pairwise n-gram Jaccard >= threshold among docs sharing >= 1
+    * shingle. Output: id_a < id_b, n_common, jaccard. `maxDocFreq` is the
+    * hot-shingle cap: a shingle held by more than `maxDocFreq` docs is
+    * dropped from every doc's set before sizes, overlaps and Jaccard are
+    * taken (`<= 0` keeps every shingle). PRECONDITION: `doc_id` values are
+    * unique (see [[prefixKeys]]); every repo caller passes a primary-key
+    * doc_id.
+    *
+    * Candidates come from the prefix filter ([[prefixCandidates]]) over
+    * the capped sets, and [[verifiedJaccard]]'s array intersection makes
+    * them exact, so the only pair-keyed exchange is the candidates'
+    * dedup — not a count over every (pair, shared shingle) row. On a
+    * 500-doc realistic corpus (GenScale, local[4], 4 shuffle partitions)
+    * at cap 200 that cut the shuffle writes from 626 to 469 KB, in 14
+    * jobs instead of 7: the pair count (32,734 rows, 293 KB) became a
+    * rank exchange of the shareable rows, and the df count stayed.
+    *
+    * With a cap, the shareable (df >= 2) shingle counts are counted ONCE
+    * and pinned: the prefix ranking reads them for the df order and the
+    * cap, and the verify leg reads the hot ones (df > cap) to drop them
+    * from the candidate docs' arrays through a broadcast anti-join. The
+    * two run in separate jobs, so without the pin each would count the
+    * corpus's shingles again. The hot set is small by construction: its
+    * shingles each hold more than `maxDocFreq` postings. The pin is freed
+    * once the verify leg's own pins are built. Without a cap this is
+    * exactly `verifiedJaccard(docs, prefixCandidates(docs, threshold, n),
+    * threshold, n)`. */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.2,
       maxDocFreq: Long = 0L): DataFrame =
-    shingleOverlap(docs, n, maxDocFreq)
-      .withColumn("jaccard",
-        round(col("n_common") / (col("sa") + col("sb") - col("n_common")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "n_common", "jaccard")
+    if (maxDocFreq <= 0) verifiedJaccard(docs, prefixCandidates(docs, threshold, n), threshold, n)
+    else {
+      val shareable = Pin(shareableDf(docs, n))
+      try verify(docs,
+        prefixJoin(prefixKeysOver(docs, threshold, n, shareable, maxDocFreq), threshold),
+        threshold, n, Some(shareable.filter(col("df") > maxDocFreq).select("shingle")))
+      finally Pin.free(shareable)
+    }
 
   /** Per-document duplicated-span statistics: for each doc, how many of
     * its distinct `windowTokens`-token windows also appear in at least
@@ -152,17 +161,33 @@ object Dedup {
     * near-dup signal. Detects a document embedded in (or truncated from)
     * a larger one, which Jaccard structurally misses: J = |∩|/|∪| decays
     * toward 0 as the larger doc grows even when the smaller doc is
-    * copied verbatim, while containment stays 1. Same candidate
-    * machinery, hot-shingle bound and unique-`doc_id` precondition as
-    * [[ngramJaccard]]; only the normalizer differs.
+    * copied verbatim, while containment stays 1. Same hot-shingle cap and
+    * unique-`doc_id` precondition as [[ngramJaccard]].
+    *
+    * Containment has no symmetric prefix bound (a small doc contained in
+    * a large one may share nothing with the large doc's prefix), so this
+    * keeps the shingle-keyed pair join: every doc pair sharing a capped
+    * distinct shingle, counted per pair, with sa/sb each doc's capped
+    * distinct-shingle count. The per-row `array_distinct` frame equals
+    * the frame-level distinct ONLY when ids are unique (DedupSpec pins it
+    * against a frame-level distinct reference on a corpus with in-doc
+    * repeats); a caller feeding duplicate ids would silently inflate df
+    * and n_sh instead of deduping.
     * Output: id_a < id_b, n_common, containment. */
   def ngramContainment(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      maxDocFreq: Long = 0L): DataFrame =
-    shingleOverlap(docs, n, maxDocFreq)
+      maxDocFreq: Long = 0L): DataFrame = {
+    val sh = docShingles(docs, n, maxDocFreq)
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    CoOccur.bucketPairs(sh, Seq("shingle"), "id")
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_common"))
+      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sa")), Seq("id_a"))
+      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sb")), Seq("id_b"))
       .withColumn("containment",
         round(col("n_common") / least(col("sa"), col("sb")).cast("double"), 4))
       .filter(col("containment") >= threshold)
       .select("id_a", "id_b", "n_common", "containment")
+  }
 
   /** MinHash signatures: k independent hashes, min over shingles,
     * computed in the row that carries the doc
@@ -1093,7 +1118,17 @@ object Dedup {
     * duplicates the pair's output row with the SAME Jaccard instead of
     * double-counting its shingles. */
   def verifiedJaccard(docs: DataFrame, candidates: DataFrame,
-      threshold: Double, n: Int = 3): DataFrame = {
+      threshold: Double, n: Int = 3): DataFrame =
+    verify(docs, candidates, threshold, n, None)
+
+  /** [[verifiedJaccard]] over each candidate doc's distinct shingles
+    * minus the `hot` ones (a one-column `shingle` frame), when given: the
+    * capped sets of [[ngramJaccard]]. The hot shingles leave by a
+    * broadcast anti-join on the candidate docs' exploded shingles, which
+    * are then regrouped into one array per doc, so the regroup exchange
+    * carries candidate docs' shingles only. */
+  private def verify(docs: DataFrame, candidates: DataFrame,
+      threshold: Double, n: Int, hot: Option[DataFrame]): DataFrame = {
     // Shingle ONLY the docs that appear in a candidate pair, and only
     // ONCE (round 9). The earlier shape shingled the FULL corpus and,
     // because its three consumers partitioned differently (id agg,
@@ -1119,8 +1154,13 @@ object Dedup {
     val needed = docs.join(candIds, Seq(DocId), "left_semi")
     // one row per candidate doc: its distinct shingle set as an array
     // (a doc without shingles can share none, so it is dropped)
-    val sh = Pin(rowsWhere(needed.select(col(DocId).as("id"),
-      distinctShingles(n).as("sh")), size(col("sh")) > 0))
+    val sh = Pin(hot match {
+      case None => rowsWhere(needed.select(col(DocId).as("id"),
+        distinctShingles(n).as("sh")), size(col("sh")) > 0)
+      case Some(h) => docShingles(needed, n, 0L)
+        .join(broadcast(h), Seq("shingle"), "left_anti")
+        .groupBy("id").agg(collect_list("shingle").as("sh"))
+    })
     // |A∩B| by string equality on the two arrays: exact, and no
     // (pair × shingle) rows or pair group-by. Zero-overlap pairs are
     // dropped: like [[ngramJaccard]], the output holds only pairs that
@@ -1153,9 +1193,9 @@ object Dedup {
     * join keys unpopular. Scale notes: the df table is
     * shingle-vocabulary-sized; only shareable rows (df >= 2) move — the
     * per-doc rank window shuffles them on doc id, and a doc's singletons
-    * are only counted ([[prefixKeys]]); the candidate join inherits
-    * ngramJaccard's hot-key exposure ONLY for shingles that land in many
-    * prefixes, which the ordering makes rare by construction. Measured
+    * are only counted ([[prefixKeys]]); the candidate join is exposed to
+    * a hot key ONLY for shingles that land in many prefixes, which the
+    * ordering makes rare by construction. Measured
     * (BENCH_SCALE_r04): exponent 0.60 on a Heaps-vocabulary corpus; 1.08
     * on the degenerate fixed-vocabulary corpus (the positional
     * first-meeting bound prunes even there) — and where the corpus is
@@ -1164,17 +1204,22 @@ object Dedup {
     * at-scale substitute with identical exact output.
     *
     * Output: (id_a, id_b) candidates — a provable superset of the
-    * >= t pairs; verify with [[verifiedJaccard]] to make it exact.
+    * >= t pairs; verify with [[verifiedJaccard]] to make it exact
+    * ([[ngramJaccard]] is that pair, plus the hot-shingle cap).
     *
     * Construction is lazy. On a corpus too uniform for prefix filtering
     * (exponent 1.08 on the fixed-vocabulary corpus vs 0.60 realistic),
     * [[prefixFilterWarning]] says so, at the cost of two jobs of its
     * own. */
-  def prefixCandidates(docs: DataFrame, threshold: Double, n: Int = 3): DataFrame = {
+  def prefixCandidates(docs: DataFrame, threshold: Double, n: Int = 3): DataFrame =
+    prefixJoin(prefixKeys(docs, threshold, n), threshold)
+
+  /** The candidate self-join of [[prefixCandidates]] over a
+    * [[prefixKeys]] frame. */
+  private def prefixJoin(prefix: DataFrame, threshold: Double): DataFrame = {
     // the prefix frame feeds BOTH sides of the candidate self-join and
     // each side re-derives it; pinning it would keep a corpus-prefix-
     // sized block store, the trade the shingle frame declines too
-    val prefix = prefixKeys(docs, threshold, n)
     val tEff = threshold - 5e-5 // see prefixKeys' recall note
     // PPJoin positional filter (Xiao et al., WWW'08): when a pair first
     // meets at prefix positions (i, j), its overlap can't exceed
@@ -1217,9 +1262,36 @@ object Dedup {
     * recall for the EFFECTIVE threshold t - 5e-5, not t — otherwise a
     * pair with true J in [t - 5e-5, t) passes the verifier but could be
     * pruned here. (The 1e-9 only guards FP ceil, not rounding.)
-    * PRECONDITION, as [[shingleOverlap]]: `doc_id` values are unique. */
+    *
+    * `maxDocFreq > 0` keys the capped sets of [[ngramJaccard]]: a hot
+    * shingle (df > maxDocFreq) sorts after every other in the df order,
+    * so dropping it leaves every other row's rank as it was. The rank
+    * window, which sees each doc's shareable rows anyway, also counts
+    * its hot ones; `n_sh` is then the capped size (distinct shingles
+    * minus hot ones), the prefix cut is taken on it, and hot rows are
+    * never keys. [[graft.tools.CandVol]] measures these keys for q34's
+    * family.
+    *
+    * PRECONDITION: `doc_id` values are unique. `n_sh` is one row's
+    * array size and the df counts one row per (id, shingle), so two rows
+    * sharing an id would count as two docs. */
   private[graft] def prefixKeys(docs: DataFrame, threshold: Double,
-      n: Int = 3): DataFrame = {
+      n: Int = 3, maxDocFreq: Long = 0L): DataFrame =
+    prefixKeysOver(docs, threshold, n, shareableDf(docs, n), maxDocFreq)
+
+  /** The (shingle, df) counts of the shingles at least two docs hold.
+    * Counted over [[docShingles]], not over [[prefixKeys]]' exploded
+    * arrays: counted over those, its size estimate exceeds the exploded
+    * side's, and the planner broadcasts the exploded docs instead of
+    * the df table. */
+  private def shareableDf(docs: DataFrame, n: Int): DataFrame =
+    docShingles(docs, n, 0L)
+      .groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2)
+
+  /** [[prefixKeys]] over a given [[shareableDf]] frame. */
+  private def prefixKeysOver(docs: DataFrame, threshold: Double, n: Int,
+      shareable: DataFrame, maxDocFreq: Long): DataFrame = {
     val tEff = threshold - 5e-5
     // n_sh is taken from the array before the explode; rowsWhere keeps
     // the explode's inferred size(sh) > 0 filter from being pushed below
@@ -1228,18 +1300,16 @@ object Dedup {
       distinctShingles(n).as("sh"))
       .withColumn("n_sh", size(col("sh")).cast("long")), col("n_sh") > 0)
       .select(col("id"), col("n_sh"), explode(col("sh")).as("shingle"))
-    // df is counted over docShingles, not `sh`: counted over `sh` its size
-    // estimate exceeds the exploded side's, and the planner broadcasts
-    // the exploded docs instead of the df table
-    val shareable = docShingles(docs, n, 0L)
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2)
     val byDoc = Window.partitionBy("id")
     // the ordered window first: its sort on (id, df, shingle) also
-    // serves the per-doc count, so the exchanged rows are sorted once
-    sh.join(shareable, Seq("shingle"))
+    // serves the per-doc counts, so the exchanged rows are sorted once
+    val ranked = sh.join(shareable, Seq("shingle"))
       .withColumn("rk", row_number().over(byDoc.orderBy(col("df"), col("shingle"))))
       .withColumn("rk", (col("n_sh") - count(lit(1)).over(byDoc) + col("rk")).cast("int"))
+    val capped = if (maxDocFreq <= 0) ranked else ranked
+      .withColumn("n_sh", col("n_sh") - count(when(col("df") > maxDocFreq, 1)).over(byDoc))
+      .filter(col("df") <= maxDocFreq)
+    capped
       .filter(col("rk") <= col("n_sh") - ceil(lit(tEff) * col("n_sh") - lit(1e-9)) + lit(1))
       .select("id", "shingle", "rk", "n_sh")
   }

@@ -71,18 +71,22 @@ object TextQueries {
 
   /** Hot-shingle document-frequency cap for the declared ngram-Jaccard
     * family (q34/q44/q56/q100) — the MEASURED sub-linear configuration
-    * (BENCH_SCALE_r04 legs.ngram_dfcap: leg exponent 1.40 → 0.55, 3.6×
-    * less wall time, 99.87% recall at 50k docs, output-identical at
-    * 15k). Inert by construction on the driver fixtures (max shingle df
-    * is 7 at sf0.01 and 25 at sf0.1 — far under the cap), and mirrored
-    * IDENTICALLY in every oracle (the `df <= cap` CTE), so engine and
-    * DuckDB agree at any scale, including corpora where the cap bites
-    * (hash-checked on the generated g0.3 corpus, where 68 shingles
-    * exceed it). */
+    * (BENCH_SCALE_r04 legs.ngram_dfcap, measured on the shingle pair
+    * join the family ran then: leg exponent 1.40 → 0.55, 3.6× less wall
+    * time, 99.87% recall at 50k docs, output-identical at 15k). The
+    * family now joins df-ascending prefixes ([[Dedup.ngramJaccard]]),
+    * where hot shingles sort last and rarely reach a prefix; the cap
+    * still defines the capped sets the Jaccard is taken over. Inert by
+    * construction on the sf fixtures (max shingle df is 7 at sf0.01
+    * and 25 at sf0.1 — far under the cap), and mirrored IDENTICALLY in
+    * every oracle (the `df <= cap` CTE), so engine and DuckDB agree at
+    * any scale, including corpora where the cap bites (hash-checked on
+    * the generated g0.3 corpus, where 68 shingles exceed it). */
   val MaxShingleDf = 200L
 
-  /** n-gram Jaccard near-dup pairs (shingle join, τ=0.5, hot-shingle
-    * cap [[MaxShingleDf]]). */
+  /** n-gram Jaccard near-dup pairs (τ=0.5, hot-shingle cap
+    * [[MaxShingleDf]]): the prefix-filter join over the capped shingle
+    * sets, verified exactly ([[Dedup.ngramJaccard]]). */
   def q34NgramJaccard(s: SparkSession, d: String): DataFrame =
     Dedup.ngramJaccard(Tables.documents(s, d), n = 3, threshold = 0.5,
         maxDocFreq = MaxShingleDf)
@@ -239,7 +243,9 @@ object TextQueries {
     * candidates come from joining only each doc's rarest
     * |d| - ceil(0.5|d|) + 1 shingles under the global df order. Oracle =
     * exact all-pairs Jaccard, so the hash-match is simultaneously a
-    * correctness proof of the prefix bound on this corpus.
+    * correctness proof of the prefix bound on this corpus. This is
+    * [[Dedup.ngramJaccard]] without the hot-shingle cap; q34 is the
+    * same join over the capped sets.
     *
     * Of those prefix shingles only the shareable ones (df >= 2) are
     * ranked and moved: a shingle one doc holds is counted into its doc's
@@ -262,13 +268,9 @@ object TextQueries {
     * timed window — the eager-diagnostic trap above), and a 100 TB engine's
     * declared form should be the shape that survives the deep decades.
     * The sf0.1 number IS the documented price. */
-  def q97PrefixJoin(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    Dedup.verifiedJaccard(docs,
-      Dedup.prefixCandidates(docs, threshold = 0.5),
-      threshold = 0.5)
+  def q97PrefixJoin(s: SparkSession, d: String): DataFrame =
+    Dedup.ngramJaccard(Tables.documents(s, d), n = 3, threshold = 0.5)
       .orderBy("id_a", "id_b")
-  }
 
   /** q119's probe-set slice: documents with doc_id ≡ 0 (mod 7) play the
     * eval/benchmark side, the rest are the training corpus — dense
@@ -816,7 +818,7 @@ object TextQueries {
 
   /** The hot-shingle cap as oracle CTEs: `sh0` (distinct doc-shingle) →
     * `hot` (df > cap) → `sh` (anti-joined away) — the EXACT mirror of
-    * [[graft.operators.Dedup]]'s docShingles(maxDocFreq): the cap is
+    * [[graft.operators.Dedup.ngramJaccard]]'s capped sets: the cap is
     * applied on distinct (doc, shingle) pairs and sizes are computed
     * AFTER pruning, so Jaccard denominators shrink identically in both
     * engines when the cap bites. */

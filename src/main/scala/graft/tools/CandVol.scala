@@ -15,15 +15,17 @@ import graft.operators.{CoOccur, Dedup}
   * wall-clock leg read 1.43; the volume reads the true growth, 1.08).
   *
   * Every volume is computed from the SAME key frames the operators
-  * shuffle (Dedup.docShingles / minhashBandKeys / simhashComboKeys /
-  * simhashPermutedKeys / prefixKeys / adaptiveBuckets — factored, not
-  * reimplemented; q36's and q114's chunks are the one-block combination
-  * tables; CandVolSpec
+  * shuffle (minhashBandKeys / simhashComboKeys / simhashPermutedKeys /
+  * prefixKeys / adaptiveBuckets — factored, not reimplemented; q36's and
+  * q114's chunks are the one-block combination tables; CandVolSpec
   * pins each aggregate equal to the enumerated join count on the fixture
-  * corpus).
-  * Declared-query configurations throughout: q34/q44/q100's df cap,
-  * q35's 16×4 bands, q36's maxDist=12, q114's Manku maxDist=3, q97's
-  * t=0.5 prefixes, q113's targetPerBucket=256 with radius-1 multiprobe.
+  * corpus). The shingle-posting volumes (q34_cand_capped/uncapped, from
+  * Dedup.docShingles) are the pair join ngramContainment runs; q34's
+  * family joins its capped prefix keys (q34_prefix_capped).
+  * Declared-query configurations throughout: q34/q44/q56/q100's df cap
+  * and t=0.5 prefixes, q35's 16×4 bands, q36's maxDist=12, q114's Manku
+  * maxDist=3, q97's t=0.5 prefixes, q113's targetPerBucket=256 with
+  * radius-1 multiprobe.
   *
   * Per-directory output also carries the q113 bucket stats (planes,
   * bucket count, mean/max pop) — the direct witness that the round-6
@@ -100,8 +102,11 @@ object CandVol {
     val embs = Tables.embeddings(s, dir)
     val cap = graft.queries.TextQueries.MaxShingleDf
 
-    // q34/q44/q100 family: the operator's own distinct doc-shingle
-    // postings, uncapped here so the cap's effect is measured below
+    // shingle-posting volumes: the pairs a shingle-keyed join over the
+    // distinct doc-shingle postings would feed its pair count, capped and
+    // uncapped (ngramContainment's join; the q34/q44/q56/q100 family's
+    // before it joined prefixes). The family's own keys are
+    // q34_prefix_capped below.
     val sh = Dedup.docShingles(docs, n = 3, maxDocFreq = 0L)
     val ng = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       .agg(
@@ -149,6 +154,9 @@ object CandVol {
     simsPortable.unpersist()
     val prefix = selfJoinVolume(
       Dedup.prefixKeys(docs, threshold = 0.5), Seq("shingle"))
+    // q34/q44/q56/q100: the same prefix join over the capped sets
+    val prefixCapped = selfJoinVolume(
+      Dedup.prefixKeys(docs, threshold = 0.5, maxDocFreq = cap), Seq("shingle"))
     // q119: corpus × probe band join — the decontamination shape; the
     // probe slice is the declared query's own doc_id % mod split
     val dmod = graft.queries.TextQueries.DecontamMod
@@ -198,6 +206,7 @@ object CandVol {
       ("q123_simhash_combo7", sim123.toDouble),
       ("q122_simhash_permuted", sim122.toDouble),
       ("q97_prefix", prefix.toDouble),
+      ("q34_prefix_capped", prefixCapped.toDouble),
       ("q119_cross_bands", cross.toDouble),
       ("q120_hist_probe", ingestCross.toDouble),
       ("q120_within_batch", ingestWithin.toDouble),
@@ -230,7 +239,7 @@ object CandVol {
     val volKeys = Seq("q34_cand_capped", "q34_cand_uncapped",
       "q35_minhash_bands", "q36_simhash_d12", "q114_simhash_manku",
       "q116_simhash_combo", "q123_simhash_combo7",
-      "q122_simhash_permuted", "q97_prefix",
+      "q122_simhash_permuted", "q97_prefix", "q34_prefix_capped",
       "q119_cross_bands",
       "q120_hist_probe", "q120_within_batch",
       "q113_adaptive_probe", "q113_probe_cap8", "q115_semantic_blocks")

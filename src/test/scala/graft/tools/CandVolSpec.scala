@@ -68,6 +68,16 @@ class CandVolSpec extends SparkSpec {
       enumerated(keys, Seq("shingle")))
   }
 
+  test("capped prefix volume equals the enumerated capped prefix join (q34 family)") {
+    // the declared cap and one that bites on the fixture
+    for (cap <- Seq(graft.queries.TextQueries.MaxShingleDf, 2L)) {
+      val keys = Dedup.prefixKeys(docs, threshold = 0.5, maxDocFreq = cap)
+      assert(CandVol.selfJoinVolume(keys, Seq("shingle")) ===
+        enumerated(keys, Seq("shingle")), s"cap=$cap")
+    }
+    assert(Dedup.shingleDfProfile(docs).head().getLong(4) > 2L, "cap 2 does not bite")
+  }
+
   test("adaptive probe volume equals the enumerated multiprobe join") {
     val (bounded, scheme) = Dedup.adaptiveBuckets(embs)
     val (vol, nVec, _, maxPop) = CandVol.adaptiveProbeVolume(bounded, scheme)
